@@ -88,14 +88,16 @@ FAN_OUT_MAX_BYTES = int(os.environ.get("SPARK_GRAFT_FANOUT_MAX_BYTES", 8 * 1024*
 FAN_OUT_MIN_ROWS = int(os.environ.get("SPARK_GRAFT_FANOUT_MIN_ROWS", 64))
 FAN_OUT_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_FANOUT_MIN_BYTES", 4 * 1024**2))
 
-#: (path, mtime_ns, size) -> (row groups, rows, bytes) from parquet
+#: path -> ((mtime_ns, size), (row groups, rows, bytes)) from parquet
 #: footers; pure file-layout metadata (never row data), probed once
 #: per path like the _has_nanos_timestamp footer check. The stat pair
-#: in the key (r15 ADVICE fix) invalidates the entry when the path is
-#: rewritten within a session — a Spark overwrite replaces the part
-#: files, changing the file's (or directory's) mtime — so fan-out
-#: decisions track the current layout instead of the first one seen.
-_LAYOUT_CACHE: dict[tuple[str, int, int], tuple[int, int, int]] = {}
+#: invalidates the entry when the path is rewritten within a session —
+#: a Spark overwrite replaces the part files, changing the file's (or
+#: directory's) mtime — so fan-out decisions track the current layout
+#: instead of the first one seen. One entry per path: a rewrite
+#: replaces it, so a long session's cache stays bounded by the paths
+#: it reads.
+_LAYOUT_CACHE: dict[str, tuple[tuple[int, int], tuple[int, int, int]]] = {}
 
 
 def _parquet_layout(path: str) -> tuple[int, int, int] | None:
@@ -103,11 +105,12 @@ def _parquet_layout(path: str) -> tuple[int, int, int] | None:
     path's parquet files, from footer metadata only."""
     try:
         st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
+        sig = (st.st_mtime_ns, st.st_size)
     except OSError:
         return None
-    if key in _LAYOUT_CACHE:
-        return _LAYOUT_CACHE[key]
+    cached = _LAYOUT_CACHE.get(path)
+    if cached is not None and cached[0] == sig:
+        return cached[1]
     try:
         import pyarrow.parquet as pq
 
@@ -123,7 +126,7 @@ def _parquet_layout(path: str) -> tuple[int, int, int] | None:
         total_bytes = sum(os.path.getsize(f) for f in files)
     except Exception:
         return None
-    _LAYOUT_CACHE[key] = (row_groups, rows, total_bytes)
+    _LAYOUT_CACHE[path] = (sig, (row_groups, rows, total_bytes))
     return row_groups, rows, total_bytes
 
 

@@ -738,7 +738,9 @@ def _parse_size_bytes(text: str | None, default: int = 64 * 1024 * 1024) -> int:
     suffixed value, so a user-RAISED advisory size — where AQE
     coalesces harder and the rescore rescue is needed most — silently
     fell back to the 64 MiB default and overestimated ``aqe_parts``.
-    The default covers only unset/unparseable values."""
+    The default covers only unset/unparseable values; an unparseable
+    one warns (once per value, by ``warnings``' default filter) naming
+    what it could not read."""
     if text is None:
         return default
     s = str(text).strip().lower()
@@ -750,6 +752,13 @@ def _parse_size_bytes(text: str | None, default: int = 64 * 1024 * 1024) -> int:
 
     m = re.fullmatch(r"(\d+)\s*([kmgtp])?b?", s)
     if not m:
+        import warnings
+
+        warnings.warn(
+            f"could not parse size conf value {text!r}; using the default "
+            f"{default} bytes",
+            stacklevel=2,
+        )
         return default
     scale = {None: 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}[m.group(2)]
     return int(m.group(1)) << scale

@@ -22,7 +22,6 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from . import writers
 from .config import TenantSpec
@@ -73,9 +72,9 @@ class TenantPipeline:
 
         incremental = t.mode == "incremental" and bool(t.incremental_column)
         if incremental and t.columns and t.incremental_column not in t.columns:
-            # validate BEFORE any data lands: the watermark is read
-            # back from the loaded table, so a projection that drops
-            # the cursor column would fail only after the load
+            # validate BEFORE any data lands: the watermark is taken
+            # from the written table, so a projection that drops the
+            # cursor column would fail only after the load
             raise ValueError(
                 f"table {t.name!r}: incremental_column "
                 f"{t.incremental_column!r} must be included in the "
@@ -88,34 +87,30 @@ class TenantPipeline:
         df = extract_table(spark, self.spec.source, t, tenant_value, last_value)
 
         if not incremental:
-            n = writers.full_replace(spark, df, target)
+            n = writers.full_replace(spark, df, target).num_rows
             return IngestResult(t.name, target, "full", n)
 
+        # the writer reports max(incremental_column) over the table it
+        # leaves behind, from the write itself: only data that actually
+        # landed can advance the cursor
+        wm_col = t.incremental_column if self.cursor_store is not None else None
         if last_value is None:
             # first run (or no cursor store): the reference's observed
             # truncate-and-reload (_tenant_factory.py:290-299)
-            n = writers.truncate_reload(spark, df, target)
+            written = writers.truncate_reload(spark, df, target, watermark_col=wm_col)
             strategy = "truncate_reload"
         elif t.primary_key:
-            n = writers.merge_upsert(spark, df, target, t.primary_key)
+            written = writers.merge_upsert(
+                spark, df, target, t.primary_key, watermark_col=wm_col
+            )
             strategy = "merge_upsert"
         else:
-            n = writers.append(spark, df, target)
+            written = writers.append(spark, df, target, watermark_col=wm_col)
             strategy = "append"
 
-        new_wm = None
-        if self.cursor_store is not None:
-            # watermark from the loaded table, not the extract plan —
-            # only data that actually landed can advance the cursor
-            row = (
-                spark.table(target)
-                .agg(F.max(t.incremental_column).alias("wm"))
-                .collect()[0]
-            )
-            new_wm = row["wm"]
-            if new_wm is not None:
-                self.cursor_store.set(self.spec.tenant_id, t.name, new_wm)
-        return IngestResult(t.name, target, strategy, n, new_wm)
+        if written.watermark is not None:
+            self.cursor_store.set(self.spec.tenant_id, t.name, written.watermark)
+        return IngestResult(t.name, target, strategy, written.num_rows, written.watermark)
 
     def ingest(self, spark: SparkSession) -> list[IngestResult]:
         return [self._ingest_one(spark, i) for i in range(len(self.spec.tables))]

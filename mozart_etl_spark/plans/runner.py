@@ -130,22 +130,25 @@ class ModelRunner:
             self._drop_conflicting(target, model.materialized)
             if model.materialized == "view":
                 self.spark.sql(f"CREATE OR REPLACE VIEW {target} AS {model.sql}")
+                # nothing is written for a view, so counting is a query
+                num_rows = self.spark.table(target).count()
             elif model.materialized == "incremental" and incremental_run:
                 # delta-only: merge on unique_key when configured
                 # (dbt's incremental+unique_key), plain append otherwise
                 unique_key = model.config.get("unique_key")
                 if unique_key:
                     keys = (unique_key,) if isinstance(unique_key, str) else tuple(unique_key)
-                    writers.merge_upsert(self.spark, df, target, keys)
+                    num_rows = writers.merge_upsert(self.spark, df, target, keys).num_rows
                 else:
-                    writers.append(self.spark, df, target)
+                    num_rows = writers.append(self.spark, df, target).num_rows
             else:
-                writers.full_replace(self.spark, df, target)
-            out = self.spark.table(target)
+                num_rows = writers.full_replace(self.spark, df, target).num_rows
             preview = (
-                [row.asDict() for row in out.limit(5).collect()] if self.collect_previews else []
+                [row.asDict() for row in self.spark.table(target).limit(5).collect()]
+                if self.collect_previews
+                else []
             )
             results.append(
-                RunResult(model=name, target=target, num_rows=out.count(), preview=preview)
+                RunResult(model=name, target=target, num_rows=num_rows, preview=preview)
             )
         return results

@@ -67,12 +67,9 @@ def stream_merge_to_table(
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        # return_count=False: the per-batch count is unused, and paying
-        # an O(table) scan per micro-batch would dominate drain time
-        writers.merge_upsert(
-            batch_df.sparkSession, batch_df, table_ident, primary_key,
-            return_count=False,
-        )
+        # the merge's count is observed by its own write job, so the
+        # unused per-batch result costs no extra scan
+        writers.merge_upsert(batch_df.sparkSession, batch_df, table_ident, primary_key)
 
     spark_session = stream.sparkSession
     prev = spark_session.conf.get("spark.sql.shuffle.partitions")

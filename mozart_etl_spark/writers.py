@@ -21,14 +21,31 @@ key, union, swap). The strategy API is identical either way;
 ``lakehouse_available`` detects whether the session can actually
 write the requested format (this container ships no lakehouse jars,
 so those tests skip).
+
+Single pass: a write reports what its callers need from the job that
+writes, through ``DataFrame.observe`` on the DataFrame being written,
+instead of re-reading the table afterwards.
+
+- ``full_replace``, ``truncate_reload`` and the parquet
+  ``merge_upsert`` write the whole new table, so the write job's
+  observed row count (and ``max(watermark_col)``) IS the table's. The
+  merge also observes the largest number of incoming rows sharing one
+  key: that is its duplicate-key check, with no pre-scan.
+- ``append`` and the native ``MERGE INTO`` see only the new rows, so
+  they run one aggregate over the table after writing: row count and
+  watermark together.
+- ``scd2_upsert``, ``bucketed_write`` and ``zorder_write`` rewrite the
+  whole table and report the observed count; ``partitioned_write``
+  may replace only some partitions and counts the table.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from typing import Any, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 #: Table formats the write strategies can target. ``parquet`` is the
@@ -109,21 +126,75 @@ def _drop_stale_location(spark: SparkSession, table_ident: str) -> None:
         shutil.rmtree(stale)
 
 
+class WriteResult(NamedTuple):
+    """What a load strategy reports about the table it leaves behind."""
+
+    #: rows in the table after the write
+    num_rows: int
+    #: ``max(watermark_col)`` over the table after the write; None when
+    #: no column was asked for or the table is empty
+    watermark: Any = None
+
+
+def _stats_columns(watermark_col: str | None) -> list:
+    cols = [F.count(F.lit(1)).alias("rows")]
+    if watermark_col:
+        cols.append(F.max(watermark_col).alias("watermark"))
+    return cols
+
+
+def _observed(df: DataFrame, watermark_col: str | None) -> tuple[DataFrame, Observation]:
+    """``df`` with its row count (and watermark) observed: the job that
+    writes it fills the metrics, so they cost no job of their own."""
+    obs = Observation()
+    return df.observe(obs, *_stats_columns(watermark_col)), obs
+
+
+def _result(obs: Observation) -> WriteResult:
+    metrics = obs.get
+    return WriteResult(int(metrics["rows"]), metrics.get("watermark"))
+
+
+def _table_stats(spark: SparkSession, table_ident: str, watermark_col: str | None) -> WriteResult:
+    """One aggregate job over the whole table, for writes that see only
+    the rows they add."""
+    row = spark.table(table_ident).agg(*_stats_columns(watermark_col)).collect()[0]
+    return WriteResult(int(row["rows"]), row["watermark"] if watermark_col else None)
+
+
+def _create(
+    spark: SparkSession, df: DataFrame, table_ident: str, fmt: str, watermark_col: str | None
+) -> WriteResult:
+    out, obs = _observed(df, watermark_col)
+    out.write.format(fmt).saveAsTable(table_ident)
+    return _result(obs)
+
+
 def full_replace(
-    spark: SparkSession, df: DataFrame, table_ident: str, fmt: str | None = None
-) -> int:
-    """DROP + CTAS semantics (``_tenant_factory.py:300-307``)."""
+    spark: SparkSession,
+    df: DataFrame,
+    table_ident: str,
+    fmt: str | None = None,
+    watermark_col: str | None = None,
+) -> WriteResult:
+    """DROP + CTAS semantics (``_tenant_factory.py:300-307``). Count and
+    watermark are observed by the write job."""
     fmt = resolve_format(fmt)
     _ensure_namespace(spark, table_ident)
-    df.write.mode("overwrite").option("overwriteSchema", "true").format(fmt).saveAsTable(
+    out, obs = _observed(df, watermark_col)
+    out.write.mode("overwrite").option("overwriteSchema", "true").format(fmt).saveAsTable(
         table_ident
     )
-    return spark.table(table_ident).count()
+    return _result(obs)
 
 
 def truncate_reload(
-    spark: SparkSession, df: DataFrame, table_ident: str, fmt: str | None = None
-) -> int:
+    spark: SparkSession,
+    df: DataFrame,
+    table_ident: str,
+    fmt: str | None = None,
+    watermark_col: str | None = None,
+) -> WriteResult:
     """Empty-clone + truncate + insert (``_tenant_factory.py:290-299``).
 
     Preserves the existing table's schema contract: the INSERT fails on
@@ -132,36 +203,41 @@ def truncate_reload(
     intentional parity (SURVEY.md §7.4 schema-drift row). Columns are
     aligned BY NAME to the target's order first: a reordered-but-
     compatible incoming schema must not silently write values into the
-    wrong columns through a positional insert. Creates the table when
-    absent (``CREATE TABLE IF NOT EXISTS … WHERE 1=0`` clone, ``:296``).
+    wrong columns through the positional ``insertInto``. Creates the
+    table from ``df`` when absent. Count and watermark are observed by
+    the write job.
     """
     fmt = resolve_format(fmt)
     _ensure_namespace(spark, table_ident)
     if not spark.catalog.tableExists(table_ident):
-        df.limit(0).write.format(fmt).saveAsTable(table_ident)
+        return _create(spark, df, table_ident, fmt, watermark_col)
     target_cols = spark.table(table_ident).columns
     if set(df.columns) != set(target_cols):
         raise ValueError(
             f"schema drift loading {table_ident}: incoming columns "
             f"{sorted(df.columns)} != table columns {sorted(target_cols)}"
         )
-    df.select(*target_cols).createOrReplaceTempView("_truncate_reload_src")
-    try:
-        spark.sql(f"INSERT OVERWRITE TABLE {table_ident} SELECT * FROM _truncate_reload_src")
-    finally:
-        spark.catalog.dropTempView("_truncate_reload_src")
-    return spark.table(table_ident).count()
+    out, obs = _observed(df.select(*target_cols), watermark_col)
+    out.write.insertInto(table_ident, overwrite=True)
+    return _result(obs)
 
 
-def append(spark: SparkSession, df: DataFrame, table_ident: str, fmt: str | None = None) -> int:
-    """Append-only incremental load (new rows past the cursor)."""
+def append(
+    spark: SparkSession,
+    df: DataFrame,
+    table_ident: str,
+    fmt: str | None = None,
+    watermark_col: str | None = None,
+) -> WriteResult:
+    """Append-only incremental load (new rows past the cursor). The
+    write sees only the new rows, so count and watermark come from one
+    aggregate over the table afterwards."""
     fmt = resolve_format(fmt)
     _ensure_namespace(spark, table_ident)
     if not spark.catalog.tableExists(table_ident):
-        df.write.format(fmt).saveAsTable(table_ident)
-    else:
-        df.write.mode("append").format(fmt).saveAsTable(table_ident)
-    return spark.table(table_ident).count()
+        return _create(spark, df, table_ident, fmt, watermark_col)
+    df.write.mode("append").format(fmt).saveAsTable(table_ident)
+    return _table_stats(spark, table_ident, watermark_col)
 
 
 def merge_upsert(
@@ -170,8 +246,8 @@ def merge_upsert(
     table_ident: str,
     primary_key: tuple[str, ...],
     fmt: str | None = None,
-    return_count: bool = True,
-) -> int:
+    watermark_col: str | None = None,
+) -> WriteResult:
     """Keyed upsert: incoming rows replace target rows with the same
     primary key; unmatched target rows are kept. A batch carrying the
     same key twice raises — that is native ``MERGE INTO``'s multiple-
@@ -187,20 +263,23 @@ def merge_upsert(
     MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`` — same
     observable result, done in-place.)
 
+    The staged write is the only job: it observes the new table's count
+    and watermark, and ``count(*) over (partition by key)`` on the
+    incoming rows. A key seen more than once drops the staging table
+    and raises before the swap, so the target is untouched; only that
+    error path queries again, to name the key. The native path counts
+    the table after its ``MERGE INTO``.
+
     The incoming key set is NOT hinted for broadcast: a large
     incremental batch would OOM the driver under a forced hint, while
     AQE broadcasts it at runtime whenever it actually is small.
-    ``return_count=False`` skips the final full-table count scan and
-    returns -1 — per-micro-batch callers (streaming sinks) don't use
-    the count and shouldn't pay an O(table) scan per batch for it.
     """
     if not primary_key:
         raise ValueError("merge_upsert requires a primary_key")
     fmt = resolve_format(fmt)
     _ensure_namespace(spark, table_ident)
     if not spark.catalog.tableExists(table_ident):
-        df.write.format(fmt).saveAsTable(table_ident)
-        return spark.table(table_ident).count() if return_count else -1
+        return _create(spark, df, table_ident, fmt, watermark_col)
     if fmt in _MERGE_NATIVE:
         # transactional in-place MERGE — no staging table, no swap
         # window, concurrent readers see old-or-new atomically
@@ -215,40 +294,55 @@ def merge_upsert(
             )
         finally:
             spark.catalog.dropTempView(src)
-        return spark.table(table_ident).count() if return_count else -1
+        return _table_stats(spark, table_ident, watermark_col)
+    keys = list(primary_key)
+    target = spark.table(table_ident)
+    kept = target.join(df.select(*keys).dropDuplicates(), keys, "left_anti")
+    dup = Observation()
+    incoming = (
+        df.select(*target.columns)
+        .withColumn("_key_rows", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
+        .observe(dup, F.max("_key_rows").alias("key_rows"))
+        .drop("_key_rows")
+    )
+    merged, obs = _observed(kept.unionByName(incoming), watermark_col)
+    staged = _stage(spark, merged, table_ident)
+    if (dup.get["key_rows"] or 0) > 1:
+        spark.sql(f"DROP TABLE IF EXISTS {staged}")
+        raise _duplicate_key_error(df, table_ident, keys)
+    _swap(spark, staged, table_ident)
+    return _result(obs)
+
+
+def _duplicate_key_error(df: DataFrame, table_ident: str, keys: list[str]) -> ValueError:
     dup = (
-        df.groupBy(*primary_key)
+        df.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("_n"))
         .filter(F.col("_n") > 1)
         .limit(1)
         .collect()
     )
-    if dup:
-        key_vals = {k: dup[0][k] for k in primary_key}
-        raise ValueError(
-            f"merge_upsert into {table_ident}: incoming batch has multiple "
-            f"rows for primary key {key_vals} (native MERGE would fail the "
-            "same way); dedupe the batch first (e.g. latest-version-wins "
-            "window) or use scd2_upsert for versioned history"
-        )
-    target = spark.table(table_ident)
-    keys_df = df.select(*primary_key).dropDuplicates()
-    kept = target.join(keys_df, list(primary_key), "left_anti")
-    merged = kept.unionByName(df.select(*target.columns))
-    _overwrite_swap(spark, merged, table_ident)
-    return spark.table(table_ident).count() if return_count else -1
+    key_vals = {k: dup[0][k] for k in keys} if dup else keys
+    return ValueError(
+        f"merge_upsert into {table_ident}: incoming batch has multiple "
+        f"rows for primary key {key_vals} (native MERGE would fail the "
+        "same way); dedupe the batch first (e.g. latest-version-wins "
+        "window) or use scd2_upsert for versioned history"
+    )
 
 
-def _overwrite_swap(spark: SparkSession, df: DataFrame, table_ident: str) -> None:
-    """Replace ``table_ident`` with ``df`` when ``df`` reads from it.
-
-    Parquet tables can't be read and overwritten in one job — stage
-    the result, rename the old table aside, rename the staging table
-    in, restore on failure. The target exists at every instant."""
+def _stage(spark: SparkSession, df: DataFrame, table_ident: str) -> str:
+    """Write ``df`` to the staging table of ``table_ident``; returns its name."""
     staged = f"{table_ident}__merge_staging"
-    backup = f"{table_ident}__merge_backup"
     _ensure_namespace(spark, staged)
     df.write.mode("overwrite").format("parquet").saveAsTable(staged)
+    return staged
+
+
+def _swap(spark: SparkSession, staged: str, table_ident: str) -> None:
+    """Rename the old table aside, rename ``staged`` in, restore on
+    failure. The target exists at every instant."""
+    backup = f"{table_ident}__merge_backup"
     spark.sql(f"DROP TABLE IF EXISTS {backup}")
     _drop_stale_location(spark, backup)
     spark.sql(f"ALTER TABLE {table_ident} RENAME TO {backup}")
@@ -262,6 +356,14 @@ def _overwrite_swap(spark: SparkSession, df: DataFrame, table_ident: str) -> Non
     # sessions sharing this catalog (e.g. the main session while a
     # foreachBatch clone merges) would otherwise scan the pre-swap files
     spark.catalog.refreshTable(table_ident)
+
+
+def _overwrite_swap(spark: SparkSession, df: DataFrame, table_ident: str) -> None:
+    """Replace ``table_ident`` with ``df`` when ``df`` reads from it.
+
+    Parquet tables can't be read and overwritten in one job — stage
+    the result, then swap it in."""
+    _swap(spark, _stage(spark, df, table_ident), table_ident)
 
 
 def scd2_upsert(
@@ -295,7 +397,6 @@ def scd2_upsert(
     """
     if not primary_key:
         raise ValueError("scd2_upsert requires a primary_key")
-    from pyspark.sql import Window
 
     keys = list(primary_key)
     payload_cols = [c for c in df.columns if c != effective_col]
@@ -319,8 +420,7 @@ def scd2_upsert(
             F.lit(None).cast(inc.schema["valid_from"].dataType).alias("valid_to"),
             F.lit(True).alias("is_current"),
         )
-        first.write.format("parquet").saveAsTable(table_ident)
-        return spark.table(table_ident).count()
+        return _create(spark, first, table_ident, "parquet", None).num_rows
 
     target = spark.table(table_ident)
     history = target.filter(~F.col("is_current"))
@@ -361,9 +461,11 @@ def scd2_upsert(
         .select(*target.columns)
     )
 
-    result = history.unionByName(unchanged).unionByName(closed).unionByName(fresh)
+    result, obs = _observed(
+        history.unionByName(unchanged).unionByName(closed).unionByName(fresh), None
+    )
     _overwrite_swap(spark, result, table_ident)
-    return spark.table(table_ident).count()
+    return _result(obs).num_rows
 
 
 def partitioned_write(
@@ -380,7 +482,8 @@ def partitioned_write(
     ``.explain`` shows the predicate under PartitionFilters and
     untouched partitions are never listed. Backfill = re-run with the
     bounded extract; dynamic overwrite replaces only the partitions
-    present in ``df``.
+    present in ``df``, so the count is one job over the table after
+    the write.
     """
     _ensure_namespace(spark, table_ident)
     # dynamic mode only for THIS write: leaking it onto the session
@@ -426,14 +529,15 @@ def bucketed_write(
     joined on the same key repeatedly (fact-to-fact joins at 100 TB).
     """
     _ensure_namespace(spark, table_ident)
+    out, obs = _observed(df, None)
     (
-        df.write.mode("overwrite")
+        out.write.mode("overwrite")
         .format("parquet")
         .bucketBy(n_buckets, *bucket_cols)
         .sortBy(*bucket_cols)
         .saveAsTable(table_ident)
     )
-    return spark.table(table_ident).count()
+    return _result(obs).num_rows
 
 
 def _zvalue(cols: list, mins: list, maxs: list, bits: int = 16) -> "F.Column":
@@ -513,8 +617,9 @@ def zorder_write(
         .drop("_z", *[f"_lo{i}" for i in range(len(cols))], *[f"_hi{i}" for i in range(len(cols))])
     )
     _ensure_namespace(spark, table_ident)
-    laid_out.write.mode("overwrite").format("parquet").saveAsTable(table_ident)
-    return spark.table(table_ident).count()
+    out, obs = _observed(laid_out, None)
+    out.write.mode("overwrite").format("parquet").saveAsTable(table_ident)
+    return _result(obs).num_rows
 
 
 def compact_table(

@@ -159,11 +159,24 @@ def test_merge_upsert_rejects_duplicate_incoming_keys(spark):
     writers.merge_upsert(
         spark, spark.createDataFrame([(1, "a")], "pk INT, v STRING"), tbl, ("pk",)
     )
-    dup = spark.createDataFrame([(2, "b"), (2, "B")], "pk INT, v STRING")
-    with pytest.raises(ValueError, match="multiple"):
+    def files(t):
+        return {
+            f: open(f.removeprefix("file:"), "rb").read()
+            for f in spark.table(t).inputFiles()
+        }
+
+    before = files(tbl)
+    dup = spark.createDataFrame([(2, "b"), (2, "B"), (3, "c")], "pk INT, v STRING")
+    with pytest.raises(ValueError, match=r"multiple rows for primary key \{'pk': 2\}"):
         writers.merge_upsert(spark, dup, tbl, ("pk",))
-    # target untouched by the failed merge
+    # target untouched by the failed merge, down to its files
+    assert files(tbl) == before
     assert [(r["pk"], r["v"]) for r in spark.table(tbl).collect()] == [(1, "a")]
+    # the check rides the staged write: the staging table it wrote is
+    # dropped, and no swap began
+    names = {t.name for t in spark.catalog.listTables("default")}
+    assert "merge_dup_check__merge_staging" not in names
+    assert "merge_dup_check__merge_backup" not in names
     spark.sql(f"DROP TABLE {tbl}")
 
 

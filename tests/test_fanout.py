@@ -128,3 +128,17 @@ def test_layout_probe_counts_directory_files(tmp_path):
     assert rg == 4
     assert rows == 20
     assert nbytes == os.path.getsize(d / "a.parquet") + os.path.getsize(d / "b.parquet")
+
+
+def test_layout_cache_keeps_one_entry_per_path(tmp_path):
+    """A rewritten path replaces its cache entry instead of adding one,
+    so a long session that rewrites tables keeps the cache bounded."""
+    f = str(tmp_path / "t.parquet")
+    _write_parquet(f, 10, rows_per_group=5)
+    assert mio._parquet_layout(f)[:2] == (2, 10)
+    for n in (20, 30):
+        # a different size changes the stat signature even when the
+        # rewrite lands within the filesystem's mtime granularity
+        _write_parquet(f, n, rows_per_group=5)
+        assert mio._parquet_layout(f)[:2] == (n // 5, n)
+    assert [k for k in mio._LAYOUT_CACHE if k.startswith(str(tmp_path))] == [f]

@@ -18,6 +18,7 @@ does not control).
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from mozart_etl_spark.operators import similarity as S
@@ -279,7 +280,9 @@ def test_parse_size_bytes_accepts_spark_suffixes(spark):
     assert p("128b") == 128
     assert p("64 MB") == 64 * 1024 * 1024
     assert p(None) == 64 * 1024 * 1024
-    assert p("garbage") == 64 * 1024 * 1024
+    # an unparseable value still falls back, but not silently
+    with pytest.warns(UserWarning, match="'garbage'"):
+        assert p("garbage") == 64 * 1024 * 1024
 
     key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     prev = spark.conf.get(key)

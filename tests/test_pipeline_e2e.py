@@ -147,14 +147,63 @@ def test_incremental_append_without_pk(spark, tmp_path):
     assert r2.num_rows == r1.num_rows  # nothing past the watermark
 
 
+def test_writer_counts_and_cursor_match_landed_tables(spark, tmp_path):
+    """Writers report the row count and watermark their own write job
+    observed (append: one aggregate after writing). After a
+    truncate_reload, a merge_upsert, an append and a cycle with zero
+    new rows, each equals a fresh aggregate over the landed table."""
+    import datetime as dt
+
+    spec = _tenant(
+        tmp_path,
+        tables=[
+            {
+                "name": "orders",
+                "mode": "incremental",
+                "incremental_column": "o_orderdate",
+                "primary_key": ["o_orderkey"],
+            },
+            {"name": "customer", "mode": "incremental", "incremental_column": "c_custkey"},
+        ],
+    )
+    store = CursorStore(str(tmp_path / "cursors.json"))
+    pipe = TenantPipeline(spec=spec, cursor_store=store)
+    wm_cols = {"orders": "o_orderdate", "customer": "c_custkey"}
+
+    def check(results, strategies):
+        assert [r.strategy for r in results] == strategies
+        for r in results:
+            fresh = (
+                spark.table(r.target)
+                .agg(F.max(wm_cols[r.table]).alias("wm"), F.count(F.lit(1)).alias("n"))
+                .collect()[0]
+            )
+            assert r.num_rows == fresh["n"]
+            assert r.new_watermark == fresh["wm"]
+            assert store.get(spec.tenant_id, r.table) == fresh["wm"]
+        return {r.table: r.num_rows for r in results}
+
+    check(pipe.ingest(spark), ["truncate_reload", "truncate_reload"])
+    # move both cursors back so the next cycle lands rows: the merge
+    # re-writes a year of orders in place, the append adds customers
+    # a second time
+    tid = spec.tenant_id
+    store.set(tid, "orders", store.get(tid, "orders") - dt.timedelta(days=365))
+    store.set(tid, "customer", store.get(tid, "customer") - 10)
+    landed = check(pipe.ingest(spark), ["merge_upsert", "append"])
+    # zero new rows: nothing past either cursor
+    assert check(pipe.ingest(spark), ["merge_upsert", "append"]) == landed
+
+
 def test_writers_truncate_reload_and_merge(spark, tmp_path):
     ns = f"w{uuid.uuid4().hex[:8]}"
     nation = spark.read.parquet(f"{SF}/nation.parquet")
     t = f"{ns}.nation"
 
-    assert writers.truncate_reload(spark, nation, t) == 25
-    # reload is idempotent, not additive
-    assert writers.truncate_reload(spark, nation, t) == 25
+    assert writers.truncate_reload(spark, nation, t).num_rows == 25
+    # reload is idempotent, not additive; the reload into the existing
+    # table reports the watermark its write observed
+    assert writers.truncate_reload(spark, nation, t, watermark_col="n_nationkey") == (25, 24)
 
     # upsert: change one row's name, add a new key
     changed = nation.filter(F.col("n_nationkey") == 0).withColumn("n_name", F.lit("X"))
@@ -162,7 +211,7 @@ def test_writers_truncate_reload_and_merge(spark, tmp_path):
         "n_nationkey", F.lit(99).cast("bigint")
     )
     inc = changed.unionByName(added)
-    assert writers.merge_upsert(spark, inc, t, ("n_nationkey",)) == 26
+    assert writers.merge_upsert(spark, inc, t, ("n_nationkey",)).num_rows == 26
     out = {r["n_nationkey"]: r["n_name"] for r in spark.table(t).collect()}
     assert out[0] == "X" and 99 in out
 
