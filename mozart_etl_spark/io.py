@@ -16,14 +16,37 @@ deterministic and portable:
    ``ts_us`` (epoch **microseconds**, BIGINT) — truncation matches
    DuckDB's ``CAST(ts AS TIMESTAMP)``. Working in integer epoch space
    also keeps every time computation timezone-proof.
+
+**Parquet metadata cache.** Every local parquet read goes through
+:func:`read_parquet` / :func:`parquet_schema`. A bare
+``spark.read.parquet`` runs a footer-inference Spark job each time;
+the cache keeps, per session and per local path, the ``StructType``
+Spark itself inferred there, and reads again with
+``spark.read.schema(cached)`` (no job). Contract:
+
+- the key is the path, the ``(inode, mtime_ns, size)`` of every file
+  under it (so adding, removing or rewriting any part file is a
+  miss), and the session confs that change what Spark infers
+  (:data:`SCHEMA_CONFS`); both halves must match for a hit;
+- one entry per path: a changed key replaces it, so a long session's
+  cache stays bounded by the paths it reads. The same entry holds the
+  footer layout (:func:`fan_out_target`) and the nanos flag;
+- local paths only: URI paths (``s3a://``, ``file://`` …) always take
+  the bare read, and a listing that fails takes it with a warning;
+- the cached schema is Spark's own inference from the miss's bare
+  read, so a hit's schema is identical to a bare read's by
+  construction.
 """
 
 from __future__ import annotations
 
 import os
+import warnings
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -46,7 +69,8 @@ def table(
     """Load one testdata table as a DataFrame (lazy parquet scan).
 
     Column pruning and predicate pushdown reach the parquet scan
-    because this is a plain ``spark.read.parquet`` — callers should
+    because this is a plain parquet scan (:func:`read_parquet`; a
+    supplied schema changes nothing downstream) — callers should
     ``select``/``filter`` on the result and let Catalyst push down
     (both pass through the ``fan_out`` repartition untouched).
 
@@ -65,7 +89,7 @@ def table(
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = _read_events(spark, path) if name == "events" else spark.read.parquet(path)
+    df = _read_events(spark, path) if name == "events" else read_parquet(spark, path)
     if fan_out:
         df = fan_out_scan(spark, df, path)
     return df
@@ -88,46 +112,131 @@ FAN_OUT_MAX_BYTES = int(os.environ.get("SPARK_GRAFT_FANOUT_MAX_BYTES", 8 * 1024*
 FAN_OUT_MIN_ROWS = int(os.environ.get("SPARK_GRAFT_FANOUT_MIN_ROWS", 64))
 FAN_OUT_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_FANOUT_MIN_BYTES", 4 * 1024**2))
 
-#: path -> ((mtime_ns, size), (row groups, rows, bytes)) from parquet
-#: footers; pure file-layout metadata (never row data), probed once
-#: per path like the _has_nanos_timestamp footer check. The stat pair
-#: invalidates the entry when the path is rewritten within a session —
-#: a Spark overwrite replaces the part files, changing the file's (or
-#: directory's) mtime — so fan-out decisions track the current layout
-#: instead of the first one seen. One entry per path: a rewrite
-#: replaces it, so a long session's cache stays bounded by the paths
-#: it reads.
-_LAYOUT_CACHE: dict[str, tuple[tuple[int, int], tuple[int, int, int]]] = {}
+#: session confs that change the schema Spark infers for a parquet
+#: path (the last two for hive-partitioned ``k=v/`` directories); part
+#: of every schema-cache key
+SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.timestampType",
+)
+
+
+@dataclass
+class _PathMeta:
+    """What the session knows about one local parquet path while its
+    files stay as ``files`` says. Each field is filled on first use."""
+
+    #: ((file, inode, mtime_ns, size), ...) for every file under the path
+    files: tuple[tuple[str, int, int, int], ...]
+    #: (row groups, rows, bytes) summed over the path's parquet files
+    layout: tuple[int, int, int] | None = None
+    has_nanos: bool | None = None
+    #: (SCHEMA_CONFS values, the schema Spark inferred under them)
+    schema: tuple[tuple[str, ...], StructType] | None = None
+
+
+#: local path -> its metadata. One entry per path: a changed file
+#: signature replaces the entry, a changed conf its schema.
+_PARQUET_CACHE: dict[str, _PathMeta] = {}
+
+
+def _raise(err: OSError) -> None:
+    raise err
+
+
+def _file_signature(path: str) -> tuple[tuple[str, int, int, int], ...]:
+    """(file, inode, mtime_ns, size) of every file under ``path``
+    (``path`` itself when it is a file); raises OSError."""
+    if os.path.isdir(path):
+        files = sorted(
+            os.path.join(root, n)
+            for root, _dirs, names in os.walk(path, onerror=_raise)
+            for n in names
+        )
+    else:
+        files = [path]
+    sig = []
+    for f in files:
+        st = os.stat(f)
+        sig.append((f, st.st_ino, st.st_mtime_ns, st.st_size))
+    return tuple(sig)
+
+
+def _path_meta(path: str) -> _PathMeta | None:
+    """The cache entry for a local ``path``, current with its files;
+    None for URI paths, and (with a warning) when listing fails."""
+    if "://" in path:
+        return None
+    try:
+        files = _file_signature(path)
+    except OSError as e:
+        warnings.warn(f"cannot list parquet path {path!r} ({e}); its metadata is not cached",
+                      stacklevel=3)
+        return None
+    meta = _PARQUET_CACHE.get(path)
+    if meta is None or meta.files != files:
+        meta = _PARQUET_CACHE[path] = _PathMeta(files)
+    return meta
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that runs no schema-inference job
+    once the session has inferred the path's schema (module
+    docstring: key, one entry per path, local paths only)."""
+    meta = _path_meta(path)
+    if meta is None:
+        return spark.read.parquet(path)
+    confs = _schema_confs(spark)
+    if meta.schema is not None and meta.schema[0] == confs:
+        return spark.read.schema(meta.schema[1]).parquet(path)
+    df = spark.read.parquet(path)
+    meta.schema = (confs, df.schema)
+    return df
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema a bare ``spark.read.parquet(path)`` gives; a hit
+    builds no DataFrame."""
+    meta = _path_meta(path)
+    if meta is not None and meta.schema is not None and meta.schema[0] == _schema_confs(spark):
+        return meta.schema[1]
+    return read_parquet(spark, path).schema
+
+
+def _schema_confs(spark: SparkSession) -> tuple[str, ...]:
+    return tuple(spark.conf.get(k) for k in SCHEMA_CONFS)
 
 
 def _parquet_layout(path: str) -> tuple[int, int, int] | None:
     """(sum of row groups, sum of rows, sum of bytes) across the
     path's parquet files, from footer metadata only."""
-    try:
-        st = os.stat(path)
-        sig = (st.st_mtime_ns, st.st_size)
-    except OSError:
+    meta = _path_meta(path)
+    if meta is None:
         return None
-    cached = _LAYOUT_CACHE.get(path)
-    if cached is not None and cached[0] == sig:
-        return cached[1]
-    try:
+    if meta.layout is None:
+        parts = [(f, size) for f, _ino, _mtime, size in meta.files
+                 if f == path or f.endswith(".parquet")]
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        files = []
-        if os.path.isdir(path):
-            for root, _dirs, names in os.walk(path):
-                files += [os.path.join(root, n) for n in names if n.endswith(".parquet")]
-        else:
-            files = [path]
-        metas = [pq.ParquetFile(f).metadata for f in files]
-        row_groups = sum(m.num_row_groups for m in metas)
-        rows = sum(m.num_rows for m in metas)
-        total_bytes = sum(os.path.getsize(f) for f in files)
-    except Exception:
-        return None
-    _LAYOUT_CACHE[path] = (sig, (row_groups, rows, total_bytes))
-    return row_groups, rows, total_bytes
+        try:
+            metas = [pq.ParquetFile(f).metadata for f, _size in parts]
+        except (OSError, pa.ArrowException) as e:
+            warnings.warn(f"cannot read parquet footers under {path!r} ({e}); "
+                          "the scan is not fanned out", stacklevel=2)
+            return None
+        meta.layout = (
+            sum(m.num_row_groups for m in metas),
+            sum(m.num_rows for m in metas),
+            sum(size for _f, size in parts),
+        )
+    return meta.layout
 
 
 def fan_out_target(spark: SparkSession, path: str) -> int:
@@ -175,21 +284,44 @@ def fan_out_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
 
 def _has_nanos_timestamp(path: str) -> bool:
     """Cheap parquet-footer check (no Spark job, no noisy task failure)."""
+    meta = _path_meta(path)
+    if meta is not None and meta.has_nanos is not None:
+        return meta.has_nanos
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
     try:
-        import pyarrow.dataset as ds
-
         schema = ds.dataset(path, format="parquet").schema
-        return any(str(f.type) == "timestamp[ns]" for f in schema)
-    except Exception:
+    except (OSError, pa.ArrowException) as e:
+        warnings.warn(f"cannot read the parquet schema of {path!r} ({e}); "
+                      "reading it without nanosAsLong", stacklevel=2)
         return False
+    has_nanos = any(str(f.type) == "timestamp[ns]" for f in schema)
+    if meta is not None:
+        meta.has_nanos = has_nanos
+    return has_nanos
 
 
-def _read_events(spark: SparkSession, path: str) -> DataFrame:
+def events_raw_schema(spark: SparkSession, path: str) -> StructType:
+    """Set the session's read mode for an events parquet (UTC session
+    timezone; ``nanosAsLong`` when ``ts`` is TIMESTAMP(NANOS)) and
+    return the file's raw schema under it — what a file-source stream
+    over the same files must declare."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _nanos_read_mode(spark, path)
+    return parquet_schema(spark, path)
+
+
+def _nanos_read_mode(spark: SparkSession, path: str) -> None:
     if _has_nanos_timestamp(path):
         # Spark's parquet reader rejects TIMESTAMP(NANOS) outright;
         # nanosAsLong (dynamic conf) reads it as epoch-ns BIGINT.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+
+
+def _read_events(spark: SparkSession, path: str) -> DataFrame:
+    _nanos_read_mode(spark, path)
+    df = read_parquet(spark, path)
     df = normalize_ts_us(df)
     # stable column order: event_id, ts_us, user_id, event_type, value, props
     cols = [c for c in ("event_id", "ts_us", "user_id", "event_type", "value", "props") if c in df.columns]

@@ -18,6 +18,7 @@ point but harmless on local[N]:
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -119,9 +120,12 @@ def get_spark(
 
 def apply_runtime_confs(spark: SparkSession) -> None:
     """Apply dynamic confs to any session (e.g. one handed to us by a
-    harness). All keys in RUNTIME_CONFS are runtime-settable."""
+    harness). All keys in RUNTIME_CONFS are runtime-settable; a build
+    where one is not keeps the session's value, with a warning naming
+    the key."""
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:  # pragma: no cover - conf may be static in exotic builds
-            pass
+        except Exception as e:
+            warnings.warn(f"cannot set {k}={v} on this session ({e}); it keeps its own value",
+                          stacklevel=2)

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import SourceConfig, TableSpec
+from ..io import read_parquet
 
 _DEFAULT_PORTS = {"postgresql": 5432, "mysql": 3306, "oracle": 1521}
 
@@ -170,7 +171,7 @@ def parquet_path(base: str, name: str) -> str:
 
 def _base_scan(spark: SparkSession, source: SourceConfig, spec: TableSpec) -> DataFrame:
     if source.type == "parquet":
-        return spark.read.parquet(parquet_path(source.path, spec.name))
+        return read_parquet(spark, parquet_path(source.path, spec.name))
     dbtable = f"{spec.schema}.{spec.name}" if spec.schema else spec.name
     # Parallel range read only when explicitly configured: Spark
     # requires a numeric/date/timestamp partitionColumn, and the first

@@ -40,7 +40,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import normalize_ts_us, table as batch_table
+from ..io import events_raw_schema, normalize_ts_us
 
 
 def events_stream(
@@ -59,10 +59,9 @@ def events_stream(
     batch loader's epoch-us normalization is then applied on top —
     one normalization rule, two execution modes.
     """
-    # force the same nanosAsLong conf + raw schema the batch path uses
-    batch_table(spark, sf_dir, "events")
+    # the same read mode (nanosAsLong) and raw schema the batch path uses
     path = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = events_raw_schema(spark, path)
     if os.path.isdir(path):
         # directory layout (normal Spark write: events.parquet/part-*):
         # stream the directory itself — a basename glob filter would

@@ -141,4 +141,4 @@ def test_layout_cache_keeps_one_entry_per_path(tmp_path):
         # rewrite lands within the filesystem's mtime granularity
         _write_parquet(f, n, rows_per_group=5)
         assert mio._parquet_layout(f)[:2] == (n // 5, n)
-    assert [k for k in mio._LAYOUT_CACHE if k.startswith(str(tmp_path))] == [f]
+    assert [k for k in mio._PARQUET_CACHE if k.startswith(str(tmp_path))] == [f]

@@ -114,3 +114,45 @@ def test_observe_fires_on_staged_merge_write(spark, ns, kind):
     ).saveAsTable(f"{ns}.staged")
     assert tuple(_metrics(obs).values()) == (20, 19)
     assert _metrics(dup)["key_rows"] == (1 if kind == "rows" else None)
+
+
+# --- parquet reads with a supplied schema ----------------------------
+#
+# ``io.read_parquet`` caches the StructType a bare ``spark.read.parquet``
+# inferred and reads the path again with ``spark.read.schema(cached)``.
+# That is only a win, and only correct, while Spark (a) runs a
+# footer-inference job for the bare read, (b) runs none when the schema
+# is supplied, and (c) gives back exactly the supplied schema and the
+# same rows, partition columns included.
+
+
+def _write_layout(spark, root, layout: str) -> str:
+    rows = spark.range(30).selectExpr(
+        "id", "id % 3 AS k", "CAST(id * 1.5 AS DOUBLE) AS x", "CAST(id AS STRING) AS s"
+    )
+    path = str(root / f"{layout}.parquet")
+    if layout == "single_file":
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        pq.write_table(pa.Table.from_pandas(rows.toPandas(), preserve_index=False), path)
+    elif layout == "parts_dir":
+        rows.repartition(3).write.parquet(path)
+    else:  # hive-partitioned k=v/ directories
+        rows.write.partitionBy("k").parquet(path)
+    return path
+
+
+@pytest.mark.parametrize("layout", ["single_file", "parts_dir", "hive_partitioned"])
+def test_supplied_parquet_schema_skips_inference(spark, spark_jobs, tmp_path, layout):
+    path = _write_layout(spark, tmp_path, layout)
+    bare, bare_jobs = spark_jobs(lambda: spark.read.parquet(path))
+    supplied, supplied_jobs = spark_jobs(lambda: spark.read.schema(bare.schema).parquet(path))
+    assert bare_jobs >= 1
+    assert supplied_jobs == 0
+    # StructType equality covers names, order, types, nullability and
+    # field metadata, partition columns included
+    assert supplied.schema == bare.schema
+    if layout == "hive_partitioned":
+        assert supplied.schema.names[-1] == "k"
+    assert sorted(map(repr, supplied.collect())) == sorted(map(repr, bare.collect()))
