@@ -12,6 +12,12 @@ Values round-trip as ISO strings for date/timestamp cursors, as exact
 string-encoded decimals for DECIMAL cursors (Oracle NUMBER et al. —
 float would lose precision and break the ``>`` pushdown boundary),
 and as plain ints/floats/strings otherwise.
+
+``set`` and ``clear`` are a load -> modify -> replace cycle; a lock per
+absolute file path serialises that cycle across threads, so tables
+loading concurrently (and several store instances on one file) never
+lose each other's watermarks. ``get`` needs no lock: the replace is
+atomic, so a reader sees the old file or the new one.
 """
 
 from __future__ import annotations
@@ -21,6 +27,7 @@ import decimal
 import json
 import os
 import tempfile
+import threading
 from dataclasses import dataclass
 from typing import Any
 
@@ -44,6 +51,10 @@ def _decode(value: Any) -> Any:
         if value["$type"] == "decimal":
             return decimal.Decimal(value["v"])
     return value
+
+
+#: absolute store path -> the lock serialising its read-modify-write
+_PATH_LOCKS: dict[str, threading.Lock] = {}
 
 
 @dataclass
@@ -73,15 +84,21 @@ class CursorStore:
                 os.unlink(tmp)
             raise
 
+    def _lock(self) -> threading.Lock:
+        # setdefault is atomic, so two threads always get the same lock
+        return _PATH_LOCKS.setdefault(os.path.abspath(self.path), threading.Lock())
+
     def get(self, tenant_id: str, table: str) -> Any | None:
         return self._load().get(f"{tenant_id}/{table}")
 
     def set(self, tenant_id: str, table: str, value: Any) -> None:
-        state = self._load()
-        state[f"{tenant_id}/{table}"] = value
-        self._write(state)
+        with self._lock():
+            state = self._load()
+            state[f"{tenant_id}/{table}"] = value
+            self._write(state)
 
     def clear(self, tenant_id: str, table: str) -> None:
-        state = self._load()
-        if state.pop(f"{tenant_id}/{table}", None) is not None:
-            self._write(state)
+        with self._lock():
+            state = self._load()
+            if state.pop(f"{tenant_id}/{table}", None) is not None:
+                self._write(state)

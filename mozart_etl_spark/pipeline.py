@@ -14,6 +14,20 @@ only rows past the stored watermark, upserts by ``primary_key`` when
 configured (append otherwise), and advances the watermark only after a
 successful load. Without a cursor store it degrades to the reference's
 observed truncate-and-reload.
+
+Scheduling contract:
+
+- every table spec is validated before the first job;
+- width: each table is one task on a ``JobPool``, so the tables load
+  side by side, at most ``session.default_parallelism()`` at once; a
+  task is the table's extract, load strategy and cursor advance, run
+  under the caller's job group, description and scheduler pool;
+- results come back in spec order;
+- failure: every task runs to its end, then the first failure in spec
+  order is raised; only tables that landed have advanced their cursors;
+- barrier: ``run`` starts no model before every table has landed, so
+  no model reads a half-loaded raw layer (``plans/runner.py`` states
+  the model scheduler's contract).
 """
 
 from __future__ import annotations
@@ -26,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from . import writers
 from .config import TenantSpec
 from .cursor import CursorStore
+from .jobpool import JobPool
 from .plans.runner import ModelRunner, RunResult
 from .sources import extract_table
 
@@ -55,31 +70,36 @@ class TenantPipeline:
     def mart_ns(self) -> str:
         return self.spec.mart_namespace(self.env)
 
+    def _validate_tables(self) -> None:
+        """Config errors of every table, raised before any table loads."""
+        for t in self.spec.tables:
+            if t.tenant_filter and self.spec.params.get(t.tenant_filter) is None:
+                # a configured tenant filter with no matching param must
+                # be a LOUD config error: silently skipping the predicate
+                # would ingest every tenant's rows into this tenant's
+                # namespace (cross-tenant data leak)
+                raise ValueError(
+                    f"table {t.name!r} sets tenant_filter={t.tenant_filter!r} but "
+                    f"tenant {self.spec.tenant_id!r} has no param named "
+                    f"{t.tenant_filter!r} (params: {sorted(self.spec.params)})"
+                )
+            if (t.mode == "incremental" and t.incremental_column and t.columns
+                    and t.incremental_column not in t.columns):
+                # the watermark is taken from the written table, so a
+                # projection that drops the cursor column would fail
+                # only after the load
+                raise ValueError(
+                    f"table {t.name!r}: incremental_column "
+                    f"{t.incremental_column!r} must be included in the "
+                    f"columns projection {tuple(t.columns)}"
+                )
+
     def _ingest_one(self, spark: SparkSession, spec_idx: int) -> IngestResult:
         t = self.spec.tables[spec_idx]
         tenant_value = self.spec.params.get(t.tenant_filter) if t.tenant_filter else None
-        if t.tenant_filter and tenant_value is None:
-            # a configured tenant filter with no matching param must be
-            # a LOUD config error: silently skipping the predicate
-            # would ingest every tenant's rows into this tenant's
-            # namespace (cross-tenant data leak)
-            raise ValueError(
-                f"table {t.name!r} sets tenant_filter={t.tenant_filter!r} but "
-                f"tenant {self.spec.tenant_id!r} has no param named "
-                f"{t.tenant_filter!r} (params: {sorted(self.spec.params)})"
-            )
         target = f"{self.raw_ns}.{t.name}"
 
         incremental = t.mode == "incremental" and bool(t.incremental_column)
-        if incremental and t.columns and t.incremental_column not in t.columns:
-            # validate BEFORE any data lands: the watermark is taken
-            # from the written table, so a projection that drops the
-            # cursor column would fail only after the load
-            raise ValueError(
-                f"table {t.name!r}: incremental_column "
-                f"{t.incremental_column!r} must be included in the "
-                f"columns projection {tuple(t.columns)}"
-            )
         last_value = None
         if incremental and self.cursor_store is not None:
             last_value = self.cursor_store.get(self.spec.tenant_id, t.name)
@@ -113,7 +133,12 @@ class TenantPipeline:
         return IngestResult(t.name, target, strategy, written.num_rows, written.watermark)
 
     def ingest(self, spark: SparkSession) -> list[IngestResult]:
-        return [self._ingest_one(spark, i) for i in range(len(self.spec.tables))]
+        """Load every table concurrently (module docstring: contract)."""
+        self._validate_tables()
+        n = len(self.spec.tables)
+        with JobPool(spark, n) as pool:
+            futures = [pool.submit(self._ingest_one, spark, i) for i in range(n)]
+        return [f.result() for f in futures]
 
     def transform(self, spark: SparkSession) -> list[RunResult]:
         if not self.spec.models_dir:

@@ -43,6 +43,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import uuid
 from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -283,7 +284,9 @@ def merge_upsert(
     if fmt in _MERGE_NATIVE:
         # transactional in-place MERGE — no staging table, no swap
         # window, concurrent readers see old-or-new atomically
-        src = "_merge_upsert_src"
+        # one view per call: concurrent merges in a session must not
+        # read each other's rows through a shared view name
+        src = f"_merge_upsert_src_{uuid.uuid4().hex}"
         df.createOrReplaceTempView(src)
         on = " AND ".join(f"t.{k} = s.{k}" for k in primary_key)
         try:

@@ -22,8 +22,10 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def spark_jobs(spark):
     """``spark_jobs(fn) -> (fn(), jobs)``: run ``fn`` under a job group
-    of its own and count the Spark jobs launched from this thread while
-    it ran (jobs a stream runs on its own threads are not counted)."""
+    of its own and count the Spark jobs launched in that group while it
+    ran: from this thread and from worker threads that inherit its
+    local properties (jobs a stream runs on its own threads are not
+    counted)."""
     import itertools
 
     sc = spark.sparkContext
