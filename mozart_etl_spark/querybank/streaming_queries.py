@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from ..streaming import (
     click_view_interval_join,
-    drain_state_partitions,
     events_stream,
     hourly_counts_stream,
     run_to_memory,
@@ -89,12 +88,7 @@ _HOURLY_ORACLE = """
 def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = events_stream(spark, sf_dir)
     agg = hourly_counts_stream(stream, watermark="2 hours", window="1 hour")
-    # bounded drain: state-store count, not data, dominates wall time
-    # (see drain_state_partitions — r14, measured 2.0s -> 1.4s at sf0.1)
-    return run_to_memory(
-        agg, f"hourly_{uuid.uuid4().hex[:8]}",
-        state_partitions=drain_state_partitions(),
-    )
+    return run_to_memory(agg, f"hourly_{uuid.uuid4().hex[:8]}")
 
 
 @register(
@@ -112,12 +106,7 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = events_stream(spark, sf_dir)
     sessions = sessionize_stream(stream, gap="30 minutes", watermark="2 hours")
-    # bounded drain: 8 state stores cover the ~1.5k-user replay
-    # (drain_state_partitions — r14, measured 3.7s -> 1.7s at sf0.1)
-    out = run_to_memory(
-        sessions, f"sessions_{uuid.uuid4().hex[:8]}",
-        state_partitions=drain_state_partitions(),
-    )
+    out = run_to_memory(sessions, f"sessions_{uuid.uuid4().hex[:8]}")
     return out.select("user_id", "session_start_us", "last_event_us", "n_events")
 
 
@@ -149,10 +138,6 @@ def streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         running_user_totals(stream),
         f"totals_{uuid.uuid4().hex[:8]}",
         output_mode="append",
-        # bounded drain: 8 state stores (and 8 Python state workers)
-        # cover the ~1.5k-user replay (drain_state_partitions — r14,
-        # measured 5.2s -> 2.7s at sf0.1)
-        state_partitions=drain_state_partitions(),
     )
     # One emitted row per user per micro-batch; the final cumulative
     # state is the row with the highest n_events (monotone counter —
@@ -197,9 +182,6 @@ def streaming_continuous_aggregate(spark: SparkSession, sf_dir: str) -> DataFram
     ckpt = tempfile.mkdtemp(prefix=f"ca_ckpt_{run_id}_")
     n = stream_merge_to_table(
         agg, tbl, ("window_start_us", "event_type"), ckpt, output_mode="update",
-        # bounded drain: state-store count dominates (see
-        # drain_state_partitions — r14)
-        state_partitions=drain_state_partitions(),
         # update mode emits only data-changed groups, so the trailing
         # zero-row watermark batch merges nothing (r15, measured 0.4 s
         # of the 1.6 s drain at sf0.1; table proven identical)
@@ -255,9 +237,6 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs,
         f"ssjoin_{uuid.uuid4().hex[:8]}",
         output_mode="append",
-        # 2 stateful sides x shuffle partitions state stores dominate a
-        # bounded drain; 8 is plenty for the test key cardinality
-        state_partitions=drain_state_partitions(),
         # inner stream-stream join: every match is emitted in the data
         # batch; the trailing zero-row watermark batch only evicts
         # state (r15, measured 0.8-0.9 s of the 2.6 s drain at sf0.1;

@@ -12,7 +12,6 @@ drained with ``trigger(availableNow=True)``.
 
 from .events import (
     click_view_interval_join,
-    drain_state_partitions,
     events_stream,
     hourly_counts_stream,
     run_to_memory,
@@ -25,7 +24,6 @@ from .stateful import running_user_totals
 __all__ = [
     "stream_merge_to_table",
     "click_view_interval_join",
-    "drain_state_partitions",
     "events_stream",
     "hourly_counts_stream",
     "run_to_memory",

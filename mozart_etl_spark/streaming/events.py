@@ -298,21 +298,17 @@ def click_view_interval_join(
     )
 
 
-def drain_state_partitions(default: int = 8) -> int:
-    """State-store count for BOUNDED certify-drains (r14, guide §1.2
-    "the distributed algorithm first": a structured-streaming query
-    materializes one state store per shuffle partition *per stateful
-    operator*, and on a bounded replay the per-batch store
-    open/commit overhead dominates wall time, not data volume —
-    measured at sf0.1: sessionize 3.7s→1.7s, running_totals
-    5.2s→2.7s, hourly 2.0s→1.4s going 32→8 stores, outputs
-    identical). 8 matches the drained corpora's key cardinality
-    (hundreds–thousands of keys); ``SPARK_GRAFT_STATE_PARTITIONS``
-    overrides for bigger replays — size it to key cardinality /
-    throughput, NOT core count. A production unbounded run keeps the
-    partition count its checkpoint was created with and never calls
-    this."""
-    return int(os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", default))
+def _state_stores(spark: SparkSession) -> int:
+    """State-store count for a bounded drain: one task wave, capped at 8.
+
+    On a bounded replay the per-batch store open/commit cost, not data
+    volume, sets a drain's wall time, so more stores than task slots
+    pay for a second wave. Fewer stores than slots is not faster
+    everywhere: the Python-state running totals drain at sf0.1 took
+    3.45 s at 2 stores and 6.16 s at 1. 8 is r14's cap from the
+    drained corpora's key cardinality (hundreds to thousands of keys),
+    so a cluster, whose ``defaultParallelism`` exceeds 8, keeps 8."""
+    return min(8, spark.sparkContext.defaultParallelism)
 
 
 def run_to_memory(
@@ -320,7 +316,6 @@ def run_to_memory(
     name: str,
     output_mode: str = "complete",
     timeout_s: int = 300,
-    state_partitions: int | None = None,
     final_no_data_batch: bool = True,
 ) -> DataFrame:
     """Drain a (finite) streaming query into an in-memory table with
@@ -330,17 +325,17 @@ def run_to_memory(
     position — right for draining a bounded replay; a production
     unbounded query would use ``append`` + a real sink.
 
-    ``state_partitions`` temporarily scopes
-    ``spark.sql.shuffle.partitions`` for the drain: a streaming query
-    materializes one state store per shuffle partition *per stateful
-    operator* (a stream-stream join has two sides), so per-drain wall
-    time is dominated by store count, not data, on bounded replays.
-    Size it to key cardinality — a production unbounded run keeps the
-    partition count it was first checkpointed with.
+    The drain scopes ``spark.sql.shuffle.partitions`` to one task wave
+    of state stores, ``min(8, defaultParallelism)``, and restores it
+    afterwards: a streaming query materializes one state store per
+    shuffle partition *per stateful operator* (a stream-stream join has
+    two sides), so on a bounded replay the store count, not data, sets
+    the drain's wall time. A query resumed from an existing checkpoint
+    keeps the count its checkpoint was created with.
 
     ``final_no_data_batch=False`` scopes
     ``spark.sql.streaming.noDataMicroBatches.enabled=false`` for the
-    drain (saved/restored like ``state_partitions``). After the data
+    drain (saved/restored like the store count). After the data
     batch, availableNow runs one more zero-row micro-batch purely to
     advance the watermark and evict state — every state store opens
     and commits again for no output (measured at sf0.1: 0.8-0.9 s of
@@ -355,8 +350,7 @@ def run_to_memory(
     spark = df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_nodata = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(_state_stores(spark)))
     if not final_no_data_batch:
         spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     try:
@@ -372,8 +366,7 @@ def run_to_memory(
             q.stop()
             raise TimeoutError(f"stream {name} did not drain in {timeout_s}s")
     finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
         if not final_no_data_batch:
             spark.conf.set(
                 "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from .. import writers
+from . import events
 
 
 def stream_merge_to_table(
@@ -27,7 +28,6 @@ def stream_merge_to_table(
     checkpoint_dir: str,
     timeout_s: int = 300,
     output_mode: str = "append",
-    state_partitions: int | None = None,
     final_no_data_batch: bool = True,
 ) -> int:
     """Drain ``stream`` into ``table_ident`` with a keyed merge per
@@ -44,13 +44,12 @@ def stream_merge_to_table(
     rollup table — the table converges to the batch GROUP BY without
     ever recomputing it.
 
-    ``state_partitions`` temporarily scopes
-    ``spark.sql.shuffle.partitions`` for the drain, exactly like
+    The drain scopes ``spark.sql.shuffle.partitions`` to one task wave
+    of state stores, ``min(8, defaultParallelism)``, exactly like
     :func:`~mozart_etl_spark.streaming.events.run_to_memory`: on a
     bounded replay the per-batch state-store open/commit cost
-    dominates, so size the store count to key cardinality. A
-    production unbounded run keeps the partition count its checkpoint
-    was created with.
+    dominates. A drain resumed from an existing ``checkpoint_dir``
+    keeps the count its checkpoint was created with.
 
     ``final_no_data_batch=False`` scopes
     ``spark.sql.streaming.noDataMicroBatches.enabled=false`` for the
@@ -76,8 +75,9 @@ def stream_merge_to_table(
     prev_nodata = spark_session.conf.get(
         "spark.sql.streaming.noDataMicroBatches.enabled"
     )
-    if state_partitions is not None:
-        spark_session.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark_session.conf.set(
+        "spark.sql.shuffle.partitions", str(events._state_stores(spark_session))
+    )
     if not final_no_data_batch:
         spark_session.conf.set(
             "spark.sql.streaming.noDataMicroBatches.enabled", "false"
@@ -103,8 +103,7 @@ def stream_merge_to_table(
                 f"stream merge into {table_ident} did not drain in {timeout_s}s"
             )
     finally:
-        if state_partitions is not None:
-            spark_session.conf.set("spark.sql.shuffle.partitions", prev)
+        spark_session.conf.set("spark.sql.shuffle.partitions", prev)
         if not final_no_data_batch:
             spark_session.conf.set(
                 "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata

@@ -312,14 +312,13 @@ def test_bench_compact_line_fits_tail_capture():
 
 def test_driver_priority_window():
     """The driver harness records CORRECTNESS rows for the first 50
-    queries() entries. Round-15 rotation: the 16 queries whose plans
-    or operators changed in the r15 optimization round lead (the
-    driver must hash-certify every touched query), then the remaining
-    6 r12-dated rows the r14 rotation explicitly deferred to r15,
-    then the 28 fastest r13-dated rows. After this round every
-    r12-dated row is refreshed and nothing outside the window is
-    older than one round (r13-dated). Every priority name must
-    resolve (no typos against the registry)."""
+    queries() entries. Round-16 rotation: the 5 streaming drains whose
+    state-store count changed this round lead (the driver must
+    hash-certify every touched query), then the 13 r13-dated rows the
+    r15 rotation deferred to r16, then the 32 fastest r14-dated rows.
+    After this round every r13-dated row is refreshed and nothing
+    outside the window is older than one round (r14-dated). Every
+    priority name must resolve (no typos against the registry)."""
     import json
 
     from mozart_etl_spark import querybank
@@ -328,31 +327,29 @@ def test_driver_priority_window():
     assert len(names) == len(set(names))
     missing = [n for n in querybank.DRIVER_PRIORITY if n not in querybank.REGISTRY]
     assert not missing, f"priority names not registered: {missing}"
+    assert len(querybank.DRIVER_PRIORITY) == 50
     window = set(names[:50])
 
-    # (a) changed in r15 — certified first
-    changed_r15 = [
-        "dedup_components", "dedup_canonical", "streaming_interval_join",
-        "streaming_continuous_aggregate", "streaming_running_totals",
-        "dedup_minhash_lsh", "dedup_ngram_jaccard", "corpus_span_scrub",
-        "corpus_repeated_spans", "text_cooccurrence_pmi",
-        "knn_lsh_cosine", "knn_ivf_cosine", "knn_bruteforce_cosine",
-        "dedup_embedding_lsh", "dedup_embedding_cosine",
-        "customer_balance_deciles",
+    # (a) changed in r16 — certified first
+    changed_r16 = [
+        "streaming_hourly_counts", "streaming_sessionize",
+        "streaming_running_totals", "streaming_continuous_aggregate",
+        "streaming_interval_join",
     ]
-    assert list(names[:16]) == changed_r15
-    # (b) every r12-dated row (the r14 deferral list) is in-window —
-    # the r14 rotation's commitment "rotate first in r15"
-    r12 = set(json.load(open("CORRECTNESS_r12.json")))
+    assert list(names[:5]) == changed_r16
+    # (b) every r13-dated row (the r15 deferral list) is in-window —
+    # the r15 rotation's commitment "rotate first next round"
     r13 = set(json.load(open("CORRECTNESS_r13.json")))
     r14 = set(json.load(open("CORRECTNESS_r14.json")))
-    r12_dated = r12 - r13 - r14
-    assert r12_dated <= window, f"r12-dated rows left outside: {r12_dated - window}"
-    # (c) everything outside the window carries an r13-or-newer row —
+    r15 = set(json.load(open("CORRECTNESS_r15.json")))
+    r13_dated = r13 - r14 - r15
+    assert len(r13_dated) == 13
+    assert set(names[5:18]) == r13_dated
+    # (c) everything outside the window carries an r14-or-newer row —
     # nothing regresses past one-round staleness, nothing uncertified
     outside = set(names) - window
-    uncovered = outside - r13 - r14
-    assert not uncovered, f"outside window with no r13/r14 row: {uncovered}"
+    uncovered = outside - r14 - r15
+    assert not uncovered, f"outside window with no r14/r15 row: {uncovered}"
 
 
 def test_ntile_formula_matches_sql_ntile():

@@ -116,6 +116,20 @@ def test_observe_fires_on_staged_merge_write(spark, ns, kind):
     assert _metrics(dup)["key_rows"] == (1 if kind == "rows" else None)
 
 
+def test_observe_fires_under_eager_local_checkpoint(spark):
+    """``connected_components`` observes each round's changed-label
+    count on the frame it checkpoints eagerly and reads the metric
+    right after, taking ``None`` as converged. The metric must be
+    filled by the checkpoint job itself: if it were not, propagation
+    would stop after one round and split components."""
+    obs = Observation()
+    labels = spark.range(10).selectExpr("id AS lab", "id % 3 AS _old")
+    labels.observe(
+        obs, F.sum(F.when(F.col("lab") != F.col("_old"), 1).otherwise(0)).alias("changed")
+    ).localCheckpoint(eager=True)
+    assert _metrics(obs) == {"changed": 7}
+
+
 # --- parquet reads with a supplied schema ----------------------------
 #
 # ``io.read_parquet`` caches the StructType a bare ``spark.read.parquet``
@@ -156,3 +170,88 @@ def test_supplied_parquet_schema_skips_inference(spark, spark_jobs, tmp_path, la
     if layout == "hive_partitioned":
         assert supplied.schema.names[-1] == "k"
     assert sorted(map(repr, supplied.collect())) == sorted(map(repr, bare.collect()))
+
+
+# --- bounded streaming drains ----------------------------------------
+#
+# The registered streaming queries drain a file-source stream with
+# ``trigger(availableNow=True)``. The hourly drain (complete mode)
+# relies on that trigger running a single micro-batch, and the
+# continuous aggregate (update mode) skips availableNow's trailing
+# no-data batch because update mode already emitted every changed group
+# in the data batch.
+
+
+def _hourly_stream(spark, tmp_path):
+    """Hourly per-key counts over a bounded stream of 12 events 30
+    minutes apart (6 hours), watermarked 2 hours behind event time."""
+    src = str(tmp_path / "events")
+    spark.createDataFrame(
+        [(i, "ab"[i % 2]) for i in range(12)], "i INT, k STRING"
+    ).selectExpr(
+        "TIMESTAMP '2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, i * 30, 0) AS ts", "k"
+    ).write.parquet(src)
+    stream = spark.readStream.schema("ts TIMESTAMP, k STRING").parquet(src)
+    return (
+        stream.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour"), "k")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(F.col("window.start").alias("start"), "k", "n")
+    )
+
+
+def _drained(q) -> list[int]:
+    """Batch ids of a finished availableNow query."""
+    if not q.awaitTermination(120):
+        q.stop()
+        pytest.fail("availableNow query did not finish within 120 s")
+    return [p.batchId for p in q.recentProgress]
+
+
+def _batch_groups(spark, tmp_path) -> list[tuple]:
+    rows = spark.read.parquet(str(tmp_path / "events"))
+    return sorted(
+        tuple(r)
+        for r in rows.groupBy(F.window("ts", "1 hour").start.alias("start"), "k")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+
+
+def test_complete_mode_drain_runs_one_micro_batch(spark, tmp_path):
+    """A watermarked complete-mode aggregation has no state to evict, so
+    availableNow runs its data batch and no trailing no-data batch."""
+    name = "canary_complete_drain"
+    q = (
+        _hourly_stream(spark, tmp_path)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert _drained(q) == [0]
+    assert sorted(tuple(r) for r in spark.table(name).collect()) == _batch_groups(spark, tmp_path)
+
+
+def test_update_mode_emits_every_group_in_its_data_batch(spark, tmp_path):
+    """An update-mode aggregation emits every group the data changed in
+    the data batch itself; the no-data batch that follows emits
+    nothing, so skipping it loses no rows."""
+    emitted: dict[int, list[tuple]] = {}
+
+    def collect(batch_df, batch_id):
+        emitted[batch_id] = sorted(tuple(r) for r in batch_df.collect())
+
+    q = (
+        _hourly_stream(spark, tmp_path)
+        .writeStream.foreachBatch(collect)
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    batches = _drained(q)
+    assert batches[0] == 0
+    assert emitted[0] == _batch_groups(spark, tmp_path)
+    assert all(not emitted.get(b) for b in batches[1:])

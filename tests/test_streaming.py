@@ -3,8 +3,13 @@ approximate-operator quality (LSH recall vs brute force)."""
 
 from __future__ import annotations
 
+import decimal
+import hashlib
+import math
 import uuid
+from contextlib import contextmanager
 
+import pytest
 from pyspark.sql import functions as F
 
 from mozart_etl_spark.io import table
@@ -232,40 +237,68 @@ def test_stream_merge_to_table_idempotent(spark, tmp_path):
     spark.sql(f"DROP TABLE {tbl}")
 
 
-def test_drain_state_partitions_scoping(spark, monkeypatch):
-    """The r14 bounded-drain state-store sizing: the helper reads the
-    env override (size to key cardinality, not core count), the drain
-    runs under the scoped partition count, and the session conf is
-    restored afterwards — a leaked conf would silently resize every
-    later batch shuffle in the session."""
+@contextmanager
+def _state_store_counts(spark):
+    """Collect ``stateOperators[*].numShufflePartitions`` from the
+    progress of every streaming micro-batch run inside the block."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    counts: list[int] = []
+
+    class _Stores(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            counts.extend(op.numShufflePartitions for op in event.progress.stateOperators)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = _Stores()
+    spark.streams.addListener(listener)
+    try:
+        yield counts
+        # progress events reach listeners through the listener bus
+        # asynchronously; drain it before the caller reads the counts
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+
+
+def test_drain_state_partitions_scoping(spark):
+    """Bounded drains run their stateful stage in one task wave: both
+    drains run every state operator with ``min(8, defaultParallelism)``
+    stores, and the session conf is restored afterwards — a leaked conf
+    would silently resize every later batch shuffle in the session."""
     import tempfile
 
-    from mozart_etl_spark.streaming import (
-        drain_state_partitions,
-        hourly_counts_stream,
-        stream_merge_to_table,
-    )
+    from mozart_etl_spark.streaming import hourly_counts_stream, stream_merge_to_table
 
-    assert drain_state_partitions() == 8
-    monkeypatch.setenv("SPARK_GRAFT_STATE_PARTITIONS", "12")
-    assert drain_state_partitions() == 12
-    monkeypatch.delenv("SPARK_GRAFT_STATE_PARTITIONS")
-
+    one_wave = min(8, spark.sparkContext.defaultParallelism)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    out = run_to_memory(
-        hourly_counts_stream(events_stream(spark, SF)),
-        f"sp_scope_{uuid.uuid4().hex[:8]}",
-        state_partitions=4,
-    )
+    with _state_store_counts(spark) as counts:
+        out = run_to_memory(
+            hourly_counts_stream(events_stream(spark, SF)),
+            f"sp_scope_{uuid.uuid4().hex[:8]}",
+        )
+    assert counts and set(counts) == {one_wave}
     assert out.count() > 0
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
     tbl = "default.sp_scope_merge_check"
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     ckpt = tempfile.mkdtemp(prefix="sp_scope_ckpt_")
-    stream = events_stream(spark, SF).select("event_id", "user_id", "value")
-    n = stream_merge_to_table(stream, tbl, ("event_id",), ckpt, state_partitions=4)
-    assert n == table(spark, SF, "events").count()
+    with _state_store_counts(spark) as counts:
+        n = stream_merge_to_table(
+            hourly_counts_stream(events_stream(spark, SF)),
+            tbl, ("window_start_us", "event_type"), ckpt, output_mode="update",
+        )
+    assert counts and set(counts) == {one_wave}
+    assert n == out.count()
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
     spark.sql(f"DROP TABLE {tbl}")
 
@@ -288,7 +321,6 @@ def test_final_no_data_batch_scoping(spark):
             click_view_interval_join(events_stream(spark, SF)),
             f"ndb_{uuid.uuid4().hex[:8]}",
             output_mode="append",
-            state_partitions=4,
             final_no_data_batch=not skip,
         )
         return sorted(
@@ -300,6 +332,57 @@ def test_final_no_data_batch_scoping(spark):
     without_batch = drain(skip=True)
     assert spark.conf.get(key) == prev
     assert with_batch == without_batch and len(with_batch) > 0
+
+
+#: the registered queries that drain a stream (run_to_memory or
+#: stream_merge_to_table)
+_STREAMING_DRAINS = (
+    "streaming_hourly_counts",
+    "streaming_sessionize",
+    "streaming_running_totals",
+    "streaming_continuous_aggregate",
+    "streaming_interval_join",
+)
+
+
+def _canon(v) -> str:
+    if v is None:
+        return "<NULL>"
+    if isinstance(v, (float, decimal.Decimal)):
+        return "NaN" if math.isnan(v) else f"{v:.6f}".rstrip("0").rstrip(".")
+    if isinstance(v, (list, tuple)):
+        return "[" + ",".join(_canon(x) for x in v) + "]"
+    if isinstance(v, dict):
+        return "{" + ",".join(f"{k}:{_canon(v[k])}" for k in sorted(v)) + "}"
+    return str(v)
+
+
+def _value_hash(rows: list[dict]) -> str:
+    """Order-insensitive hash: columns by name, floats to 6 decimals,
+    rows sorted (the benchmark's golden hash)."""
+    cols = sorted(rows[0]) if rows else []
+    canon = sorted("\x1f".join(_canon(r[c]) for c in cols) for r in rows)
+    return hashlib.sha256("\x1e".join(canon).encode()).hexdigest()[:16]
+
+
+@pytest.mark.parametrize("name", _STREAMING_DRAINS)
+def test_state_store_count_changes_no_output(spark, monkeypatch, name):
+    """A drain's output does not depend on how many state stores it
+    runs with: each streaming query gives the same value hash drained
+    with 1 store and with 8."""
+    from mozart_etl_spark import querybank
+    from mozart_etl_spark.streaming import events as stream_events
+
+    build = querybank.queries()[name]
+    hashes = {}
+    for stores in (1, 8):
+        monkeypatch.setattr(stream_events, "_state_stores", lambda _spark, n=stores: n)
+        with _state_store_counts(spark) as counts:
+            rows = [r.asDict(recursive=True) for r in build(spark, SF).collect()]
+        assert counts and set(counts) == {stores}
+        assert rows
+        hashes[stores] = _value_hash(rows)
+    assert hashes[1] == hashes[8]
 
 
 def test_checkpoint_resume_processes_only_new_files(spark, tmp_path):
