@@ -100,7 +100,7 @@ def table(
 #: per-row CPU it unlocks. Row-group-starved files BIGGER than this
 #: are a data-layout bug to fix at the writer (guide: aim for
 #: 128 MB-1 GB row groups), not something to silently shuffle.
-FAN_OUT_MAX_BYTES = int(os.environ.get("SPARK_GRAFT_FANOUT_MAX_BYTES", 8 * 1024**3))
+FAN_OUT_MAX_BYTES = 8 * 1024**3
 
 #: partition-sizing floors: a fan-out partition must be worth its
 #: task overhead — at least this many rows OR this many bytes
@@ -109,8 +109,8 @@ FAN_OUT_MAX_BYTES = int(os.environ.get("SPARK_GRAFT_FANOUT_MAX_BYTES", 8 * 1024*
 #: alone). Data-derived, so the fan-out degree tracks input size,
 #: not core count: a 50-row smoke corpus stays unshuffled instead of
 #: becoming 32 one-row tasks.
-FAN_OUT_MIN_ROWS = int(os.environ.get("SPARK_GRAFT_FANOUT_MIN_ROWS", 64))
-FAN_OUT_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_FANOUT_MIN_BYTES", 4 * 1024**2))
+FAN_OUT_MIN_ROWS = 64
+FAN_OUT_MIN_BYTES = 4 * 1024**2
 
 #: session confs that change the schema Spark infers for a parquet
 #: path (the last two for hive-partitioned ``k=v/`` directories); part

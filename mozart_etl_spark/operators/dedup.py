@@ -31,8 +31,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import default_fold_impl
-
 #: Mersenne prime 2^31-1; permutation arithmetic stays in BIGINT range
 #: because multipliers and hashes are both < 2^31.
 _MERSENNE_31 = (1 << 31) - 1
@@ -619,9 +617,7 @@ def minhash_signatures(
     n: int = 3,
     num_perm: int = 64,
     seed: int = 42,
-    impl: str | None = None,
     with_text_fp: bool = False,
-    fold_slice: int | None = None,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """MinHash signature per document: (doc_id, sig array<bigint>).
@@ -632,50 +628,29 @@ def minhash_signatures(
     Everything downstream of the hash is pure integer math, identical
     for either choice.
 
-    ``fold_slice`` (default :data:`_FOLD_SLICE`) caps how many
-    shingle hashes the arrow kernel expands into the (n, num_perm)
-    work matrix at once — the r12 giant-document bound; slicing is
-    exact (running min), so any value yields bit-identical output.
-
     ``with_text_fp=True`` adds a ``_tfp`` column — the 16-byte md5 of
     the raw text — computed in the SAME pass (no extra corpus scan),
     so callers can collapse verbatim-identical documents at the
     signature table (see the certified dedup edge chain): identical
     text ⇒ identical signature, and banding cannot damp true
     identical-signature clusters, so exact collapse must happen
-    before the band join. On the Arrow path the fingerprint rides the
-    ``mapInPandas`` batch untouched; on the JVM path it is one more
-    projected expression.
+    before the band join. The fingerprint rides the ``mapInPandas``
+    batch untouched.
 
     Each permutation is an affine map over the xxhash64 shingle hash
     reduced mod 2^31-1; the signature component is the min over the
     document's shingles.
 
-    Both implementations are **shuffle-free** (embarrassingly
-    parallel; the only shuffles in the whole LSH pipeline are the
-    band-bucket joins) and produce **bit-identical** output — the
-    math is pure int64, no floating point — pinned against the same
-    independent Python model in tests:
-
-    - ``impl="arrow"`` (default): shingle hashing stays a JVM
-      expression; the num_perm affine-min fold runs as a vectorized
-      numpy kernel behind ``mapInPandas`` (one
-      ``(n_shingles, num_perm)`` broadcasted multiply-mod-min per
-      row, ~27 KB peak per row at the defaults — batch memory is
-      bounded per ROW, not per corpus). 3x faster than the JVM fold
-      at sf0.1 (0.8 s vs 2.3 s for 5 000 docs): Spark higher-order
-      functions evaluate their lambdas interpreted per element, and
-      the fold allocates a fresh num_perm array per shingle, while
-      numpy runs the same integer arithmetic as one C loop.
-    - ``impl="jvm"``: the original single-``aggregate`` fold
-      (``zip_with`` against the permutation-constant array) — kept
-      for Python-worker-free deployments. The single-fold shape
-      matters: the shingle-hash array is the aggregate's *input
-      argument*, evaluated once per row. A transform-per-permutation
-      formulation puts that array reference inside the permutation
-      lambda, and after CollapseProject inlines the generating
-      expression it is recomputed num_perm times per row (measured
-      30x slower at sf0.1).
+    **Shuffle-free** (embarrassingly parallel; the only shuffles in
+    the whole LSH pipeline are the band-bucket joins). Shingle hashing
+    stays a JVM expression; the num_perm affine-min fold runs as a
+    vectorized numpy kernel behind ``mapInPandas`` (one
+    ``(n_shingles, num_perm)`` broadcasted multiply-mod-min per row,
+    ~27 KB peak per row at the defaults — batch memory is bounded per
+    ROW, not per corpus; a giant document is folded in
+    :data:`_FOLD_SLICE`-shingle slices). The math is pure int64, no
+    floating point, pinned bit-for-bit against an independent Python
+    model in tests.
     """
     words = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != "")
     extra = [F.unhex(F.md5(F.col(text_col))).alias("_tfp")] if with_text_fp else []
@@ -689,68 +664,54 @@ def minhash_signatures(
         f"i -> pmod({shingle_hash}, {_MERSENNE_31}L)))"
     )
     perms = _permutation_params(num_perm, seed)
-    impl = impl or default_fold_impl()
-    if impl == "arrow":
-        fp_cols = ["_tfp"] if with_text_fp else []
-        hdf = base.select("doc_id", hashes.alias("h"), *fp_cols)
-        out_schema = T.StructType(
-            [
-                T.StructField("doc_id", hdf.schema["doc_id"].dataType),
-                T.StructField("sig", T.ArrayType(T.LongType())),
-            ]
-            + [T.StructField("_tfp", T.BinaryType()) for _ in fp_cols]
-        )
-
-        slice_n = fold_slice or _FOLD_SLICE
-
-        def fold(batches):
-            import numpy as np
-            import pandas as pd
-
-            a = np.array([p[0] for p in perms], dtype=np.int64)[None, :]
-            b = np.array([p[1] for p in perms], dtype=np.int64)[None, :]
-            for pdf in batches:
-                sigs = []
-                for h in pdf["h"]:
-                    hh = np.asarray(h, dtype=np.int64)[:, None]
-                    # hh < 2^31 and a < 2^31, so hh*a + b < 2^62: no
-                    # int64 overflow before the mod. The (n_shingles,
-                    # num_perm) multiply is SLICED along the shingle
-                    # axis (r12 giant-document axis): one
-                    # multi-hundred-MB document has millions of
-                    # distinct shingles, and the unsliced matrix was
-                    # the first engine kernel to blow up (n x 64 x 8 B
-                    # ≈ 85 bytes per text byte — a 64 MB doc built a
-                    # ~3 GB temp for ONE row). Running elementwise min
-                    # across slices is exact (min is associative), so
-                    # the output stays bit-identical while peak memory
-                    # is bounded at _FOLD_SLICE*num_perm*8 ≈ 64 MB.
-                    if hh.shape[0] <= slice_n:
-                        sigs.append(((hh * a + b) % _MERSENNE_31).min(axis=0))
-                    else:
-                        acc = None
-                        for s in range(0, hh.shape[0], slice_n):
-                            m = ((hh[s : s + slice_n] * a + b) % _MERSENNE_31).min(axis=0)
-                            acc = m if acc is None else np.minimum(acc, m)
-                        sigs.append(acc)
-                out = {"doc_id": pdf["doc_id"], "sig": sigs}
-                for c in fp_cols:
-                    out[c] = pdf[c]
-                yield pd.DataFrame(out)
-
-        return hdf.mapInPandas(fold, out_schema)
-    perm_arr = F.array(
-        *[F.struct(F.lit(a).alias("a"), F.lit(b).alias("b")) for a, b in perms]
+    fp_cols = ["_tfp"] if with_text_fp else []
+    hdf = base.select("doc_id", hashes.alias("h"), *fp_cols)
+    out_schema = T.StructType(
+        [
+            T.StructField("doc_id", hdf.schema["doc_id"].dataType),
+            T.StructField("sig", T.ArrayType(T.LongType())),
+        ]
+        + [T.StructField("_tfp", T.BinaryType()) for _ in fp_cols]
     )
-    init = F.array_repeat(F.lit(_MERSENNE_31).cast("bigint"), num_perm)
-    sig = F.aggregate(
-        hashes,
-        init,
-        lambda acc, h: F.zip_with(
-            acc, perm_arr, lambda m, p: F.least(m, F.pmod(h * p["a"] + p["b"], F.lit(_MERSENNE_31)))
-        ),
-    )
-    return base.select("doc_id", sig.alias("sig"), *(["_tfp"] if with_text_fp else []))
+
+    slice_n = _FOLD_SLICE
+
+    def fold(batches):
+        import numpy as np
+        import pandas as pd
+
+        a = np.array([p[0] for p in perms], dtype=np.int64)[None, :]
+        b = np.array([p[1] for p in perms], dtype=np.int64)[None, :]
+        for pdf in batches:
+            sigs = []
+            for h in pdf["h"]:
+                hh = np.asarray(h, dtype=np.int64)[:, None]
+                # hh < 2^31 and a < 2^31, so hh*a + b < 2^62: no
+                # int64 overflow before the mod. The (n_shingles,
+                # num_perm) multiply is SLICED along the shingle
+                # axis (r12 giant-document axis): one
+                # multi-hundred-MB document has millions of
+                # distinct shingles, and the unsliced matrix was
+                # the first engine kernel to blow up (n x 64 x 8 B
+                # ≈ 85 bytes per text byte — a 64 MB doc built a
+                # ~3 GB temp for ONE row). Running elementwise min
+                # across slices is exact (min is associative), so
+                # the output stays bit-identical while peak memory
+                # is bounded at _FOLD_SLICE*num_perm*8 ≈ 64 MB.
+                if hh.shape[0] <= slice_n:
+                    sigs.append(((hh * a + b) % _MERSENNE_31).min(axis=0))
+                else:
+                    acc = None
+                    for s in range(0, hh.shape[0], slice_n):
+                        m = ((hh[s : s + slice_n] * a + b) % _MERSENNE_31).min(axis=0)
+                        acc = m if acc is None else np.minimum(acc, m)
+                    sigs.append(acc)
+            out = {"doc_id": pdf["doc_id"], "sig": sigs}
+            for c in fp_cols:
+                out[c] = pdf[c]
+            yield pd.DataFrame(out)
+
+    return hdf.mapInPandas(fold, out_schema)
 
 
 def minhash_lsh_params(
@@ -992,8 +953,6 @@ def simhash(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    impl: str | None = None,
-    fold_slice: int | None = None,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """64-bit SimHash fingerprint per document.
@@ -1004,11 +963,6 @@ def simhash(
     fingerprint is then a 60-bit SimHash, reproducible by any SQL
     engine with md5; Hamming-distance semantics are unchanged.
 
-    ``fold_slice`` (default :data:`_FOLD_SLICE`) caps how many token
-    hashes the arrow kernel expands into the (n, 64) bit matrix at
-    once — the r12 giant-document bound; per-slice integer vote sums
-    are exact, so any value yields bit-identical output.
-
     Token hashes vote per bit (+1 if set, -1 if clear); every token
     OCCURRENCE votes, not every distinct token. The fingerprint sets
     each bit where the vote is positive. Output: (doc_id, simhash
@@ -1016,91 +970,64 @@ def simhash(
     distance; banding the 64 bits into chunks turns radius-k search
     into equi-joins (same pattern as MinHash-LSH).
 
-    Both implementations are shuffle-free and bit-identical (pure
-    integer math; equality pinned against an independent Python model
-    in tests):
+    Shuffle-free. Token hashing stays a JVM expression; the 64-slot
+    vote tally runs as a vectorized numpy kernel behind
+    ``mapInPandas`` (one ``(n_tokens, 64)`` bit extract + sum per
+    row, in :data:`_FOLD_SLICE`-token slices; peak memory is per ROW,
+    not per batch). Pure integer math, pinned bit-for-bit against an
+    independent Python model in tests.
 
-    - ``impl="arrow"`` (default): token hashing stays a JVM xxhash64
-      expression; the 64-slot vote tally runs as a vectorized numpy
-      kernel behind ``mapInPandas`` (one ``(n_tokens, 64)`` bit
-      extract + sum per row; peak memory is per ROW, not per batch).
-      4x faster than the JVM fold at sf0.1 (0.5 s vs 2.0 s for 5 000
-      docs) — higher-order-function lambdas evaluate interpreted and
-      allocate a 64-array per token, numpy runs one C loop.
-    - ``impl="jvm"``: the original aggregate + zip_with fold — kept
-      for Python-worker-free deployments.
-
-    NULL text yields a NULL fingerprint on both paths; an empty token
-    list yields 0 (all votes tie at zero, no bit set).
+    NULL text yields a NULL fingerprint; an empty token list yields 0
+    (all votes tie at zero, no bit set).
     """
     words = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != "")
     base = df.select(F.col(id_col).alias("doc_id"), words.alias("w"))
-    impl = impl or default_fold_impl()
-    if impl == "arrow":
-        hdf = base.select(
-            "doc_id", F.transform("w", lambda t: _hash64_col(t, hash_fn)).alias("h")
-        )
-        out_schema = T.StructType(
-            [
-                T.StructField("doc_id", hdf.schema["doc_id"].dataType),
-                T.StructField("simhash", T.LongType()),
-            ]
-        )
-        slice_n = fold_slice or _FOLD_SLICE
+    hdf = base.select(
+        "doc_id", F.transform("w", lambda t: _hash64_col(t, hash_fn)).alias("h")
+    )
+    out_schema = T.StructType(
+        [
+            T.StructField("doc_id", hdf.schema["doc_id"].dataType),
+            T.StructField("simhash", T.LongType()),
+        ]
+    )
+    slice_n = _FOLD_SLICE
 
-        def fold(batches):
-            import numpy as np
-            import pandas as pd
+    def fold(batches):
+        import numpy as np
+        import pandas as pd
 
-            ks = np.arange(64, dtype=np.int64)[None, :]
-            uks = np.arange(64, dtype=np.uint64)
-            for pdf in batches:
-                out = []
-                for h in pdf["h"]:
-                    if h is None:
-                        out.append(None)
-                        continue
-                    hh = np.asarray(h, dtype=np.int64)[:, None]
-                    if hh.size == 0:
-                        out.append(0)
-                        continue
-                    # >> on int64 is arithmetic, matching Java's >>;
-                    # bit k of h is ((h >> k) & 1) on both engines.
-                    # Sliced along the token axis (r12 giant-document
-                    # axis, same bound as the minhash fold): every
-                    # OCCURRENCE votes, so a multi-hundred-MB document
-                    # has tens of millions of token rows in the (n,
-                    # 64) bit matrix; per-slice integer vote sums are
-                    # exact, output bit-identical, peak memory capped.
-                    votes = sum(
-                        (2 * ((hh[s : s + slice_n] >> ks) & 1) - 1).sum(axis=0)
-                        for s in range(0, hh.shape[0], slice_n)
-                    )
-                    fpv = int(((votes > 0).astype(np.uint64) << uks).sum(dtype=np.uint64))
-                    out.append(fpv - (1 << 64) if fpv >= (1 << 63) else fpv)
-                yield pd.DataFrame(
-                    {"doc_id": pdf["doc_id"], "simhash": pd.array(out, dtype="Int64")}
+        ks = np.arange(64, dtype=np.int64)[None, :]
+        uks = np.arange(64, dtype=np.uint64)
+        for pdf in batches:
+            out = []
+            for h in pdf["h"]:
+                if h is None:
+                    out.append(None)
+                    continue
+                hh = np.asarray(h, dtype=np.int64)[:, None]
+                if hh.size == 0:
+                    out.append(0)
+                    continue
+                # >> on int64 is arithmetic, matching Java's >>;
+                # bit k of h is ((h >> k) & 1) on both engines.
+                # Sliced along the token axis (r12 giant-document
+                # axis, same bound as the minhash fold): every
+                # OCCURRENCE votes, so a multi-hundred-MB document
+                # has tens of millions of token rows in the (n,
+                # 64) bit matrix; per-slice integer vote sums are
+                # exact, output bit-identical, peak memory capped.
+                votes = sum(
+                    (2 * ((hh[s : s + slice_n] >> ks) & 1) - 1).sum(axis=0)
+                    for s in range(0, hh.shape[0], slice_n)
                 )
+                fpv = int(((votes > 0).astype(np.uint64) << uks).sum(dtype=np.uint64))
+                out.append(fpv - (1 << 64) if fpv >= (1 << 63) else fpv)
+            yield pd.DataFrame(
+                {"doc_id": pdf["doc_id"], "simhash": pd.array(out, dtype="Int64")}
+            )
 
-        return hdf.mapInPandas(fold, out_schema)
-    # Shuffle-free: fold token hashes into a 64-slot vote vector per
-    # row (aggregate + zip_with), then assemble the fingerprint — one
-    # codegen'd expression, no explode/groupBy.
-    votes = F.expr(
-        "aggregate("
-        "  filter(w, t -> length(t) > 0),"
-        "  array_repeat(0L, 64),"
-        "  (acc, t) -> zip_with(acc,"
-        "     transform(sequence(0, 63),"
-        f"               k -> IF((shiftright({_hash64_sql('t', hash_fn)}, k) & 1) = 1, 1L, -1L)),"
-        "     (x, y) -> x + y))"
-    )
-    fp = F.expr(
-        "aggregate(zip_with(votes, sequence(0, 63),"
-        "                   (v, k) -> IF(v > 0, shiftleft(1L, k), 0L)),"
-        "          0L, (acc, x) -> acc + x)"
-    )
-    return base.select("doc_id", votes.alias("votes")).select("doc_id", fp.alias("simhash"))
+    return hdf.mapInPandas(fold, out_schema)
 
 
 def connected_components(

@@ -66,10 +66,9 @@ from the model dimension — the truncated-write / mixed-model-version
 ingest corruption. Every value guard passes it (clean finite norm),
 yet cross-vector math on it is engine-divergent three ways: Spark's
 ``zip_with`` dot NULL-pads (NULL score), DuckDB's
-``list_dot_product`` errors the whole query, and the two lsh_banded
-impls disagreed with each other (arrow raised, JVM silently bucketed
-at zero bits). Contract: wrong-length vectors are entry-excluded
-wherever a dimension is declared (:func:`_dim_ok` /
+``list_dot_product`` errors the whole query, and the lsh_banded
+kernel raises on the whole query. Contract: wrong-length vectors are
+entry-excluded wherever a dimension is declared (:func:`_dim_ok` /
 :func:`drop_ragged_vectors`; ``lsh_banded``/``lsh_knn``/
 ``lsh_near_dup_pairs`` always — they already require ``dim`` — and
 ``brute_force_knn``/``ivf_knn``/``ivf_centroids`` via the optional
@@ -88,8 +87,6 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from . import default_fold_impl
 
 
 _INF = float("inf")
@@ -188,9 +185,8 @@ def _dim_ok(vec: Column, dim: int | None) -> Column:
     finite norm, yet every cross-vector operation on it is undefined
     — Spark's ``zip_with`` dot pads the short side with NULLs (NULL
     score), DuckDB's ``list_dot_product`` ERRORS the whole query, and
-    the LSH arrow kernel raised where the JVM HOF fold silently
-    bucketed ragged vectors at all-zero bits (NULL projection →
-    ``otherwise(0)``) — three different behaviors for one row.
+    the LSH kernel raises ``ValueError`` — three different behaviors
+    for one row.
     NULL vectors pass (TRUE) — the NULL-vector policy owns them
     downstream; ``dim=None`` disables the guard (per-row operators
     like :func:`quantize_embeddings` are row-faithful by contract and
@@ -416,141 +412,85 @@ def lsh_banded(
     n_planes: int = 8,
     n_tables: int = 4,
     seed: int = 42,
-    impl: str | None = None,
 ) -> DataFrame:
     """Multi-table random-hyperplane banding: (id, vec, table_id, bucket).
 
     One scan: all tables' buckets as an array, posexploded to
     (table_id, bucket) rows.
 
-    - ``impl="arrow"`` (default): the projection matrix runs as one
-      numpy matmul per Arrow batch — ``(batch, dim) @ (dim,
-      n_tables*n_planes)`` — behind ``mapInPandas``; the explode to
-      (table_id, bucket) rows stays JVM-side. ~5x faster than the
-      HOF fold at sf0.1 (0.3 s vs 1.5 s for 2 000x64-dim vectors):
-      dense float linear algebra is BLAS's home turf, while Spark
-      higher-order functions evaluate interpreted per element. Sign
-      decisions match the JVM fold except for projections within
-      ~1 ulp of 0 (matmul may reorder the additions) — the pair sets
-      downstream are recall-pinned, not bit-pinned, and the property
-      suite has never produced a divergence. A NULL vector gets
-      all-zero buckets on both paths; NaN elements set every bit on
-      both paths (Spark orders NaN above all numbers, the kernel
-      mirrors it with ``~(proj < 0)``). One malformed-input case
-      diverges between the paths and is UNDEFINED by contract: a
-      NULL *element* inside a vector (Arrow surfaces it to the
-      kernel as NaN — indistinguishable from a genuine NaN, so it
-      sets every bit, where the JVM fold's NULL projection yields
-      0 bits). Validate upstream if the source can produce one.
-      Ragged vectors (length != ``dim``) are no longer undefined:
-      the r12 axis made them an entry-EXCLUDED class (:func:`_dim_ok`
-      filter on ``base``, identical in both impls) — before it the
-      arrow kernel raised ``ValueError`` on the whole query while
-      the JVM fold silently gave the ragged vector all-zero bits
-      (its every projection is NULL via zip_with padding, and
-      ``otherwise(0)`` reads that as a 0 bit), funneling every
-      ragged vector into one shared bucket per table — a measured
-      cross-impl divergence AND a hot-bucket hazard. The kernel's
-      ValueError stays as an unreachable-by-contract assertion.
-    - ``impl="jvm"``: the single-Literal HOF fold below — kept for
-      Python-worker-free deployments. The vector cast happens once
-      per row (multi-referenced projection, so CollapseProject keeps
-      the barrier) instead of once per table.
+    The projection matrix runs as one numpy matmul per Arrow batch —
+    ``(batch, dim) @ (dim, n_tables*n_planes)`` — behind
+    ``mapInPandas``; the explode to (table_id, bucket) rows stays
+    JVM-side. A bucket bit is set when the projection is >= 0, the
+    textbook definition the property suite pins against a sequential
+    Python fold; matmul may reorder the additions, so a projection
+    within ~1 ulp of 0 could flip its bit, which is why the pair sets
+    downstream are recall-pinned, not bit-pinned (the suite has never
+    produced a divergence). A NULL vector gets all-zero buckets; NaN
+    elements set every bit (Spark orders NaN above all numbers, the
+    kernel mirrors it with ``~(proj < 0)``). A NULL *element* inside
+    a vector reaches the kernel as NaN, indistinguishable from a
+    genuine NaN, so it too sets every bit; validate upstream if the
+    source can produce one. Ragged vectors (length != ``dim``) are an
+    entry-EXCLUDED class (r12 axis: :func:`_dim_ok` filter on
+    ``base``), so the kernel's ``ValueError`` on a wrong-length vector
+    is an unreachable-by-contract assertion.
     """
     base = df.filter(_dim_ok(F.col(vec_col), dim)).select(
         F.col(id_col).alias(out_id), _as_double(F.col(vec_col)).alias(out_vec)
     )
-    impl = impl or default_fold_impl()
-    if impl == "arrow":
-        all_planes_np = [
-            p for t in range(n_tables) for p in _hyperplanes(dim, n_planes, seed + t)
-        ]
-        out_schema = T.StructType(
-            [
-                T.StructField(out_id, base.schema[out_id].dataType),
-                T.StructField(out_vec, T.ArrayType(T.DoubleType())),
-                T.StructField("buckets", T.ArrayType(T.LongType())),
-            ]
-        )
-
-        def project(batches):
-            import numpy as np
-            import pandas as pd
-
-            planes = np.array(all_planes_np, dtype=np.float64).T  # (dim, n_all)
-            weights = np.array(
-                [1 << (i % n_planes) for i in range(n_tables * n_planes)],
-                dtype=np.int64,
-            )
-            for pdf in batches:
-                mats, idx = [], []
-                for j, v in enumerate(pdf[out_vec]):
-                    if v is not None:
-                        a = np.asarray(v, dtype=np.float64)
-                        if a.shape != (dim,):
-                            raise ValueError(
-                                f"lsh_banded: vector for {out_id}="
-                                f"{pdf[out_id].iloc[j]!r} has length "
-                                f"{a.shape[0] if a.ndim == 1 else a.shape} "
-                                f"but dim={dim}"
-                            )
-                        mats.append(a)
-                        idx.append(j)
-                buckets = [np.zeros(n_tables, dtype=np.int64)] * len(pdf)
-                if mats:
-                    proj = np.stack(mats) @ planes  # (rows, n_all)
-                    bits = (~(proj < 0.0)).astype(np.int64) * weights[None, :]
-                    per_table = bits.reshape(len(mats), n_tables, n_planes).sum(axis=2)
-                    for row, j in enumerate(idx):
-                        buckets[j] = per_table[row]
-                yield pd.DataFrame(
-                    {
-                        out_id: pdf[out_id],
-                        out_vec: pdf[out_vec],
-                        "buckets": buckets,
-                    }
-                )
-
-        banded = base.mapInPandas(project, out_schema)
-        return banded.select(
-            out_id, out_vec, F.posexplode("buckets").alias("table_id", "bucket")
-        )
-    # All n_tables*n_planes hyperplanes as ONE constant-folded nested
-    # array literal, projected in a single transform and folded into the
-    # per-table bucket array with a single aggregate. The naive
-    # formulation (one aggregate-of-64-literals expression per plane per
-    # table) generates a codegen tree that grows as tables*planes*dim
-    # and dominated wall time; this shape is three constants plus two
-    # compact loops. The projection array is the *input argument* of
-    # the fold (evaluated once per row — CollapseProject-safe).
-    n_all = n_tables * n_planes
-    all_planes = [
-        [float(x) for x in p] for t in range(n_tables) for p in _hyperplanes(dim, n_planes, seed + t)
+    all_planes_np = [
+        p for t in range(n_tables) for p in _hyperplanes(dim, n_planes, seed + t)
     ]
-    # Single Literal nodes (nested-list F.lit), NOT per-element F.lit
-    # trees: n_tables*n_planes*dim literal expression nodes made
-    # Catalyst analysis the dominant cost (seconds per query, flat in
-    # row count) — as one Literal the tree is 3 constants.
-    planes_lit = F.lit(all_planes)
-    # per plane index i: owning table t = i // n_planes, bit weight 2^(i % n_planes)
-    tbl_lit = F.lit([i // n_planes for i in range(n_all)])
-    wt_lit = F.lit([1 << (i % n_planes) for i in range(n_all)]).cast("array<bigint>")
-    projs = F.transform(planes_lit, lambda p: _dot(F.col(out_vec), p))
-    contrib = F.zip_with(
-        projs,
-        F.sequence(F.lit(1), F.lit(n_all)),
-        lambda p, i: F.struct(
-            F.element_at(tbl_lit, i).alias("t"),
-            F.when(p >= 0, F.element_at(wt_lit, i)).otherwise(F.lit(0).cast("bigint")).alias("c"),
-        ),
+    out_schema = T.StructType(
+        [
+            T.StructField(out_id, base.schema[out_id].dataType),
+            T.StructField(out_vec, T.ArrayType(T.DoubleType())),
+            T.StructField("buckets", T.ArrayType(T.LongType())),
+        ]
     )
-    buckets = F.aggregate(
-        contrib,
-        F.array_repeat(F.lit(0).cast("bigint"), n_tables),
-        lambda acc, s: F.transform(acc, lambda x, ti: F.when(ti == s["t"], x + s["c"]).otherwise(x)),
-    )
-    return base.select(
-        out_id, out_vec, F.posexplode(buckets).alias("table_id", "bucket")
+
+    def project(batches):
+        import numpy as np
+        import pandas as pd
+
+        planes = np.array(all_planes_np, dtype=np.float64).T  # (dim, n_all)
+        weights = np.array(
+            [1 << (i % n_planes) for i in range(n_tables * n_planes)],
+            dtype=np.int64,
+        )
+        for pdf in batches:
+            mats, idx = [], []
+            for j, v in enumerate(pdf[out_vec]):
+                if v is not None:
+                    a = np.asarray(v, dtype=np.float64)
+                    if a.shape != (dim,):
+                        raise ValueError(
+                            f"lsh_banded: vector for {out_id}="
+                            f"{pdf[out_id].iloc[j]!r} has length "
+                            f"{a.shape[0] if a.ndim == 1 else a.shape} "
+                            f"but dim={dim}"
+                        )
+                    mats.append(a)
+                    idx.append(j)
+            buckets = [np.zeros(n_tables, dtype=np.int64)] * len(pdf)
+            if mats:
+                proj = np.stack(mats) @ planes  # (rows, n_all)
+                bits = (~(proj < 0.0)).astype(np.int64) * weights[None, :]
+                per_table = bits.reshape(len(mats), n_tables, n_planes).sum(axis=2)
+                for row, j in enumerate(idx):
+                    buckets[j] = per_table[row]
+            yield pd.DataFrame(
+                {
+                    out_id: pdf[out_id],
+                    out_vec: pdf[out_vec],
+                    "buckets": buckets,
+                }
+            )
+
+    banded = base.mapInPandas(project, out_schema)
+    return banded.select(
+        out_id, out_vec, F.posexplode("buckets").alias("table_id", "bucket")
     )
 
 
@@ -1007,7 +947,6 @@ def quantize_embeddings(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     bits: int = 8,
-    impl: str | None = None,
     checksums: bool = False,
 ) -> DataFrame:
     """Symmetric per-vector integer quantization (the int8 compression
@@ -1021,10 +960,10 @@ def quantize_embeddings(
     per-element round is elementwise). A zero vector keeps scale NULL
     (nothing to quantize), and so does a DENORMAL vector whose
     max|x| < ~3.2e-321: its scale max|x|/127 underflows to exactly
-    0.0, which would divide-by-zero (ANSI error on the JVM path,
-    garbage zeros on the arrow path) — scale-underflow is treated as
-    one more NULL-marked class, gated on the computed scale rather
-    than on max|x|. A corrupt (NaN- or ±Inf-poisoned) vector
+    0.0, which would divide-by-zero (garbage zeros out of the
+    kernel, an ANSI error in a SQL engine) — scale-underflow is
+    treated as one more NULL-marked class, gated on the computed
+    scale rather than on max|x|. A corrupt (NaN- or ±Inf-poisoned) vector
     gets the same NULL-marked row (NULL scale, NULL qvec) a NULL
     input vector gets (module corrupt-vector policy): a NaN component
     makes the raw max-abs NaN, and an Inf component makes it +Inf —
@@ -1040,149 +979,99 @@ def quantize_embeddings(
     integer digests, the certification surface for a store whose
     float arrays are not hash-comparable.
 
-    - ``impl="arrow"`` (default, ``SPARK_GRAFT_FOLD_IMPL``
-      overridable): one vectorized numpy pass per Arrow batch behind
-      ``mapInPandas`` — vectors flatten to a single buffer and
-      ``np.maximum.reduceat`` / ``np.add.reduceat`` fold per-row
-      segments, so per-element work is C, not interpreted expression
-      evaluation (the r9 round measured the interpreted HOF fold
-      chain at 6.4x the pre-guard cost; this kernel is the same
-      ~5x-faster move lsh_banded made). Bit-identical to the JVM
-      fold BY CONSTRUCTION, not merely in practice: max() of doubles
-      is exact in any order, the quotient is a single IEEE division
-      on both paths, and the kernel's trunc+frac round reproduces
-      round-half-away-from-zero exactly (|q| <= qmax + 1 so the
-      fractional part is exact; Spark's HALF_UP on a double's
-      shortest decimal representation decides every boundary the
-      same way because the shortest repr of v < 0.5 is itself
-      < 0.5). The bit-identity is gate-verified per round
-      (SPARK_GRAFT_FOLD_IMPL=jvm) and property-pinned in
-      tests/test_knn_properties.py.
-    - ``impl="jvm"``: the higher-order-function folds (one
-      ``aggregate`` for max|x|, one ``transform`` for the array, one
-      ``aggregate`` per checksum) — kept for Python-worker-free
-      deployments.
+    One vectorized numpy pass per Arrow batch behind ``mapInPandas``:
+    vectors flatten to a single buffer and ``np.maximum.reduceat`` /
+    ``np.add.reduceat`` fold per-row segments, so per-element work is
+    C, not interpreted expression evaluation. The kernel's
+    trunc+frac round reproduces round-half-away-from-zero (Spark's
+    HALF_UP, DuckDB's ``round``) exactly: |q| <= qmax + 1 keeps the
+    fractional part exact. Bit-identity with the SQL formulation is
+    property-pinned in tests/test_knn_properties.py.
 
-    A vector containing a NULL *element* is UNDEFINED by contract
-    across the two impls (same boundary as lsh_banded): Arrow
-    surfaces the element to the kernel as NaN — indistinguishable
-    from genuine corruption, NULL-marked row — while the JVM
-    ``greatest`` fold skips the NULL and quantizes the remaining
-    components against a max that ignores it. Validate upstream if
-    the source can produce NULL elements.
+    A vector containing a NULL *element* reaches the kernel as NaN —
+    indistinguishable from genuine corruption — so it gets the
+    NULL-marked row. Validate upstream if the source can produce NULL
+    elements.
     """
     qmax = 2 ** (bits - 1) - 1
-    impl = impl or default_fold_impl()
-    if impl == "arrow":
-        id_type = df.schema[id_col].dataType
-        fields = [
-            T.StructField(id_col, id_type),
-            T.StructField("scale", T.DoubleType()),
-            T.StructField("qvec", T.ArrayType(T.IntegerType())),
-        ]
-        if checksums:
-            fields += [
-                T.StructField("q_sum", T.LongType()),
-                T.StructField("q_l1", T.LongType()),
-            ]
-        out_schema = T.StructType(fields)
-
-        def quantize(batches):
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                n = len(pdf)
-                # object columns: NULL must reach Arrow as None — a
-                # float-dtype NaN is indistinguishable from a data NaN
-                scale_out = np.full(n, None, dtype=object)
-                qvec_out: list = [None] * n
-                qsum_out = np.full(n, None, dtype=object)
-                ql1_out = np.full(n, None, dtype=object)
-                vecs = [
-                    (j, np.asarray(v, dtype=np.float64))
-                    for j, v in enumerate(pdf[vec_col])
-                    if v is not None and len(v) > 0
-                ]
-                if vecs:
-                    lens = np.array([a.size for _, a in vecs])
-                    flat = np.concatenate([a for _, a in vecs])
-                    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-                    bounds = np.cumsum(lens)
-                    max_abs = np.maximum.reduceat(np.abs(flat), starts)
-                    # scale is computed BEFORE the ok mask so the mask can
-                    # reject scale underflow: for max_abs < ~3.2e-321 the
-                    # quotient max_abs/127 is a subnormal that flushes to
-                    # exactly 0.0, and an ok row with scale 0 would emit
-                    # the same plausible-zeros-with-unusable-scale garbage
-                    # the Inf guard exists for (scale > 0 also covers
-                    # max_abs == 0 and NaN; isfinite still rejects +Inf)
-                    scale_raw = max_abs / float(qmax)
-                    ok = np.isfinite(max_abs) & (max_abs <= _OVERFLOW) & (scale_raw > 0.0)
-                    scale = np.where(ok, scale_raw, np.nan)
-                    # round half away from zero, exactly as Spark's
-                    # HALF_UP and DuckDB/C++ round(): |x| <= qmax + 1
-                    # keeps the fractional part exactly representable,
-                    # so the >= 0.5 comparison is exact. Corrupt rows
-                    # (ok=False) compute garbage lanes that are never
-                    # read — errstate silences their IEEE warnings.
-                    with np.errstate(invalid="ignore", over="ignore"):
-                        x = flat / np.repeat(np.where(ok, scale, 1.0), lens)
-                        t = np.trunc(x)
-                        q = np.where(
-                            np.isfinite(x),
-                            t + np.where(np.abs(x - t) >= 0.5, np.copysign(1.0, x), 0.0),
-                            0.0,
-                        ).astype(np.int64)
-                    sums = np.add.reduceat(q, starts)
-                    l1s = np.add.reduceat(np.abs(q), starts)
-                    # zero-length reduceat segments can't occur: empty
-                    # vectors were filtered with the NULLs above
-                    for row, (j, _) in enumerate(vecs):
-                        if ok[row]:
-                            scale_out[j] = float(scale[row])
-                            qvec_out[j] = q[starts[row] : bounds[row]].astype(np.int32)
-                            qsum_out[j] = int(sums[row])
-                            ql1_out[j] = int(l1s[row])
-                cols = {
-                    id_col: pdf[id_col],
-                    "scale": scale_out,
-                    "qvec": qvec_out,
-                }
-                if checksums:
-                    cols["q_sum"] = qsum_out
-                    cols["q_l1"] = ql1_out
-                yield pd.DataFrame(cols)
-
-        return df.select(id_col, vec_col).mapInPandas(quantize, out_schema)
-    if impl != "jvm":
-        raise ValueError(f"impl must be 'arrow' or 'jvm', got {impl!r}")
-    vec = F.col(vec_col)
-    max_abs = F.aggregate(
-        vec, F.lit(0.0).cast("double"), lambda acc, x: F.greatest(acc, F.abs(x.cast("double")))
-    )
-    # nullif wraps the QUOTIENT, not max_abs: a subnormal max_abs
-    # (< ~3.2e-321) divided by qmax underflows to exactly 0.0, and a
-    # 0.0 scale reaching the transform's division is DIVIDE_BY_ZERO
-    # under ANSI mode (and garbage zeros otherwise) — the quotient
-    # form NULL-marks both the zero-vector and the underflow class
-    scale = F.when(
-        ~F.isnan(max_abs) & (max_abs <= F.lit(_OVERFLOW)),
-        F.nullif(max_abs / F.lit(float(qmax)), F.lit(0.0)),
-    )
-    qvec = F.when(
-        scale.isNotNull(),
-        F.transform(vec, lambda x: F.round(x.cast("double") / scale).cast("int")),
-    )
-    cols = [
-        F.col(id_col),
-        scale.alias("scale"),
-        qvec.alias("qvec"),
+    id_type = df.schema[id_col].dataType
+    fields = [
+        T.StructField(id_col, id_type),
+        T.StructField("scale", T.DoubleType()),
+        T.StructField("qvec", T.ArrayType(T.IntegerType())),
     ]
     if checksums:
-        zero = F.lit(0).cast("bigint")
-        cols += [
-            F.aggregate(qvec, zero, lambda a, x: a + x.cast("bigint")).alias("q_sum"),
-            F.aggregate(qvec, zero, lambda a, x: a + F.abs(x.cast("bigint"))).alias("q_l1"),
+        fields += [
+            T.StructField("q_sum", T.LongType()),
+            T.StructField("q_l1", T.LongType()),
         ]
-    return df.select(*cols)
+    out_schema = T.StructType(fields)
+
+    def quantize(batches):
+        import numpy as np
+        import pandas as pd
+
+        for pdf in batches:
+            n = len(pdf)
+            # object columns: NULL must reach Arrow as None — a
+            # float-dtype NaN is indistinguishable from a data NaN
+            scale_out = np.full(n, None, dtype=object)
+            qvec_out: list = [None] * n
+            qsum_out = np.full(n, None, dtype=object)
+            ql1_out = np.full(n, None, dtype=object)
+            vecs = [
+                (j, np.asarray(v, dtype=np.float64))
+                for j, v in enumerate(pdf[vec_col])
+                if v is not None and len(v) > 0
+            ]
+            if vecs:
+                lens = np.array([a.size for _, a in vecs])
+                flat = np.concatenate([a for _, a in vecs])
+                starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
+                bounds = np.cumsum(lens)
+                max_abs = np.maximum.reduceat(np.abs(flat), starts)
+                # scale is computed BEFORE the ok mask so the mask can
+                # reject scale underflow: for max_abs < ~3.2e-321 the
+                # quotient max_abs/127 is a subnormal that flushes to
+                # exactly 0.0, and an ok row with scale 0 would emit
+                # the same plausible-zeros-with-unusable-scale garbage
+                # the Inf guard exists for (scale > 0 also covers
+                # max_abs == 0 and NaN; isfinite still rejects +Inf)
+                scale_raw = max_abs / float(qmax)
+                ok = np.isfinite(max_abs) & (max_abs <= _OVERFLOW) & (scale_raw > 0.0)
+                scale = np.where(ok, scale_raw, np.nan)
+                # round half away from zero, exactly as Spark's
+                # HALF_UP and DuckDB/C++ round(): |x| <= qmax + 1
+                # keeps the fractional part exactly representable,
+                # so the >= 0.5 comparison is exact. Corrupt rows
+                # (ok=False) compute garbage lanes that are never
+                # read — errstate silences their IEEE warnings.
+                with np.errstate(invalid="ignore", over="ignore"):
+                    x = flat / np.repeat(np.where(ok, scale, 1.0), lens)
+                    t = np.trunc(x)
+                    q = np.where(
+                        np.isfinite(x),
+                        t + np.where(np.abs(x - t) >= 0.5, np.copysign(1.0, x), 0.0),
+                        0.0,
+                    ).astype(np.int64)
+                sums = np.add.reduceat(q, starts)
+                l1s = np.add.reduceat(np.abs(q), starts)
+                # zero-length reduceat segments can't occur: empty
+                # vectors were filtered with the NULLs above
+                for row, (j, _) in enumerate(vecs):
+                    if ok[row]:
+                        scale_out[j] = float(scale[row])
+                        qvec_out[j] = q[starts[row] : bounds[row]].astype(np.int32)
+                        qsum_out[j] = int(sums[row])
+                        ql1_out[j] = int(l1s[row])
+            cols = {
+                id_col: pdf[id_col],
+                "scale": scale_out,
+                "qvec": qvec_out,
+            }
+            if checksums:
+                cols["q_sum"] = qsum_out
+                cols["q_l1"] = ql1_out
+            yield pd.DataFrame(cols)
+
+    return df.select(id_col, vec_col).mapInPandas(quantize, out_schema)

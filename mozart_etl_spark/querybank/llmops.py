@@ -1702,11 +1702,10 @@ def embedding_quantize_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import quantize_embeddings
 
     emb = table(spark, sf_dir, "embeddings")
-    # checksums=True: the digests ride the same per-row pass as the
-    # quantization itself (one Arrow kernel under the default impl,
-    # bit-identical HOF folds under SPARK_GRAFT_FOLD_IMPL=jvm) — the
-    # r9 three-interpreted-folds-per-row shape was this round's one
-    # measured regression (AB_r10.json)
+    # checksums=True: the digests ride the same per-row Arrow kernel
+    # pass as the quantization itself — the r9 three-interpreted-
+    # folds-per-row shape was this round's one measured regression
+    # (AB_r10.json)
     q = quantize_embeddings(
         emb, vec_col="embedding", id_col="vec_id", bits=8, checksums=True
     )

@@ -59,34 +59,31 @@ def giant_frame(spark):
     return spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
 
 
-def test_minhash_fold_slicing_bit_identical(spark):
+def test_minhash_fold_slicing_bit_identical(spark, monkeypatch):
     """Slicing the (n_shingles, num_perm) multiply cannot change one
-    bit: fold_slice=7 forces dozens of slices on ordinary docs and
-    must equal the unsliced jvm fold exactly."""
+    bit: a 7-shingle slice forces dozens of slices on ordinary docs
+    and must equal the unsliced fold exactly. The kernel captures
+    _FOLD_SLICE on the driver when the frame is built, so patching
+    the constant reaches the workers."""
     df = spark.createDataFrame(
         [(i, f"some text body number {i} " * 20) for i in range(30)],
         "doc_id BIGINT, text STRING",
     )
-    sliced = {
-        r.doc_id: list(r.sig)
-        for r in DD.minhash_signatures(df, impl="arrow", fold_slice=7).collect()
-    }
-    jvm = {
-        r.doc_id: list(r.sig) for r in DD.minhash_signatures(df, impl="jvm").collect()
-    }
-    assert sliced == jvm
+    whole = {r.doc_id: list(r.sig) for r in DD.minhash_signatures(df).collect()}
+    monkeypatch.setattr(DD, "_FOLD_SLICE", 7)
+    sliced = {r.doc_id: list(r.sig) for r in DD.minhash_signatures(df).collect()}
+    assert sliced == whole
 
 
-def test_simhash_fold_slicing_bit_identical(spark):
+def test_simhash_fold_slicing_bit_identical(spark, monkeypatch):
     df = spark.createDataFrame(
         [(i, f"token stream alpha beta gamma {i} " * 15) for i in range(30)],
         "doc_id BIGINT, text STRING",
     )
-    sliced = {
-        r.doc_id: r.simhash for r in DD.simhash(df, impl="arrow", fold_slice=7).collect()
-    }
-    jvm = {r.doc_id: r.simhash for r in DD.simhash(df, impl="jvm").collect()}
-    assert sliced == jvm
+    whole = {r.doc_id: r.simhash for r in DD.simhash(df).collect()}
+    monkeypatch.setattr(DD, "_FOLD_SLICE", 7)
+    sliced = {r.doc_id: r.simhash for r in DD.simhash(df).collect()}
+    assert sliced == whole
 
 
 def test_fake_features_numpy_matches_byte_loop():
@@ -116,21 +113,14 @@ def test_fake_features_numpy_matches_byte_loop():
         assert MM._fake_features(payload) == loop(payload)
 
 
-def test_giant_doc_minhash_slice_invariant(giant_frame):
+def test_giant_doc_minhash_slice_invariant(giant_frame, monkeypatch):
     """The 140k-word doc crosses _FOLD_SLICE (2^17) shingles at the
     default, so the multi-slice path runs for real; a much smaller
     slice must produce the identical signature (associativity pin at
-    giant scale, where the jvm twin would take minutes)."""
-    a = {
-        r.doc_id: list(r.sig)
-        for r in DD.minhash_signatures(giant_frame, impl="arrow").collect()
-    }
-    b = {
-        r.doc_id: list(r.sig)
-        for r in DD.minhash_signatures(
-            giant_frame, impl="arrow", fold_slice=1 << 12
-        ).collect()
-    }
+    giant scale)."""
+    a = {r.doc_id: list(r.sig) for r in DD.minhash_signatures(giant_frame).collect()}
+    monkeypatch.setattr(DD, "_FOLD_SLICE", 1 << 12)
+    b = {r.doc_id: list(r.sig) for r in DD.minhash_signatures(giant_frame).collect()}
     assert a == b
     assert all(len(s) == 64 for s in a.values())
 
@@ -170,7 +160,7 @@ def test_arrow_solo_batch_path(spark, giant_frame):
             .collect()
         }
         assert out[900] == len(_giant_unique(140_000))
-        sigs = DD.minhash_signatures(giant_frame, impl="arrow").filter(
+        sigs = DD.minhash_signatures(giant_frame).filter(
             F.col("doc_id") == 900
         ).collect()
         assert len(sigs) == 1 and len(sigs[0].sig) == 64

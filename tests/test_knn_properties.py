@@ -19,6 +19,7 @@ from __future__ import annotations
 import math
 
 from hypothesis import given, settings, strategies as st
+from pyspark.sql import functions as F
 
 from mozart_etl_spark.operators import similarity as S
 
@@ -403,22 +404,63 @@ _qvec = st.one_of(
 )
 
 
+_OVERFLOW = S._OVERFLOW
+
+
+def _quantize_reference(
+    df, vec_col="embedding", id_col="vec_id", bits=8, checksums=False
+):
+    """The SQL formulation of ``S.quantize_embeddings`` as
+    higher-order-function folds (one ``aggregate`` for max|x|, one
+    ``transform`` for the array, one ``aggregate`` per checksum): the
+    engine's former JVM fold, kept here as the kernel's reference."""
+    qmax = 2 ** (bits - 1) - 1
+    vec = F.col(vec_col)
+    max_abs = F.aggregate(
+        vec, F.lit(0.0).cast("double"), lambda acc, x: F.greatest(acc, F.abs(x.cast("double")))
+    )
+    # nullif wraps the QUOTIENT, not max_abs: a subnormal max_abs
+    # (< ~3.2e-321) divided by qmax underflows to exactly 0.0, and a
+    # 0.0 scale reaching the transform's division is DIVIDE_BY_ZERO
+    # under ANSI mode (and garbage zeros otherwise) — the quotient
+    # form NULL-marks both the zero-vector and the underflow class
+    scale = F.when(
+        ~F.isnan(max_abs) & (max_abs <= F.lit(_OVERFLOW)),
+        F.nullif(max_abs / F.lit(float(qmax)), F.lit(0.0)),
+    )
+    qvec = F.when(
+        scale.isNotNull(),
+        F.transform(vec, lambda x: F.round(x.cast("double") / scale).cast("int")),
+    )
+    cols = [
+        F.col(id_col),
+        scale.alias("scale"),
+        qvec.alias("qvec"),
+    ]
+    if checksums:
+        zero = F.lit(0).cast("bigint")
+        cols += [
+            F.aggregate(qvec, zero, lambda a, x: a + x.cast("bigint")).alias("q_sum"),
+            F.aggregate(qvec, zero, lambda a, x: a + F.abs(x.cast("bigint"))).alias("q_l1"),
+        ]
+    return df.select(*cols)
+
+
 @settings(max_examples=6, deadline=None)
 @given(st.lists(_qvec, min_size=1, max_size=12))
 def test_quantize_arrow_matches_jvm_bit_identical(spark, vecs):
-    """quantize_embeddings impl='arrow' (the fused numpy kernel that
-    replaced the r9 three-interpreted-folds-per-row shape, AB_r10) vs
-    impl='jvm' (the HOF folds): BIT-identical on arbitrary vectors —
-    scale as raw IEEE doubles, qvec arrays, both integer checksums —
-    across NULL vectors, empty vectors, zero vectors, NaN/±Inf
-    corruption, exact .5 rounding boundaries and negative-zero
-    results. This is the property the per-round
-    SPARK_GRAFT_FOLD_IMPL=jvm gate sim relies on."""
+    """quantize_embeddings (the fused numpy kernel that replaced the
+    r9 three-interpreted-folds-per-row shape, AB_r10) vs
+    :func:`_quantize_reference` (the HOF folds): BIT-identical on
+    arbitrary vectors — scale as raw IEEE doubles, qvec arrays, both
+    integer checksums — across NULL vectors, empty vectors, zero
+    vectors, NaN/±Inf corruption, exact .5 rounding boundaries and
+    negative-zero results."""
     rows = [(i, v) for i, v in enumerate(vecs)]
     df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
 
-    def run(impl):
-        out = S.quantize_embeddings(df, checksums=True, impl=impl).collect()
+    def run(quantize):
+        out = quantize(df, checksums=True).collect()
         return {
             r["vec_id"]: (
                 None if r["scale"] is None else r["scale"].hex(),
@@ -429,7 +471,7 @@ def test_quantize_arrow_matches_jvm_bit_identical(spark, vecs):
             for r in out
         }
 
-    assert run("arrow") == run("jvm")
+    assert run(S.quantize_embeddings) == run(_quantize_reference)
 
 
 def test_finite_overflow_vectors_are_corrupt_everywhere(spark):
@@ -519,12 +561,11 @@ def test_accumulation_overflow_vectors_excluded_from_ivf_lsh(spark):
 def test_denormal_vector_quantizes_to_null_marked_row(spark):
     """Advisor pin (r11): scale UNDERFLOW is one more NULL-marked
     class. For max|x| < ~3.2e-321 the scale max|x|/127 underflows to
-    exactly 0.0 — the old arrow mask (max_abs != 0) passed it and
-    emitted the plausible-zeros-with-unusable-scale garbage row the
-    Inf guard exists for, while impl='jvm' crashed the whole job with
-    DIVIDE_BY_ZERO under ANSI mode. Both impls must emit the same
-    NULL-marked row, bit-identically; a denormal max-abs whose scale
-    is still a NONZERO subnormal keeps quantizing normally."""
+    exactly 0.0 — a mask on max_abs != 0 passes it and emits the
+    plausible-zeros-with-unusable-scale garbage row the Inf guard
+    exists for. The kernel must emit the NULL-marked row; a denormal
+    max-abs whose scale is still a NONZERO subnormal keeps quantizing
+    normally."""
     tiny = 5e-324                     # min subnormal m: m/127 -> 0.0
     ok_denormal = 254 * 5e-324        # 254m/127 = 2m exactly: scale > 0
     rows = [
@@ -534,17 +575,16 @@ def test_denormal_vector_quantizes_to_null_marked_row(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
 
-    for impl in ("arrow", "jvm"):
-        got = {
-            r["vec_id"]: (r["scale"], r["qvec"], r["q_sum"], r["q_l1"])
-            for r in S.quantize_embeddings(df, checksums=True, impl=impl).collect()
-        }
-        assert got[0][1] == [64, -127], impl
-        assert got[1] == (None, None, None, None), (
-            f"{impl}: underflowed scale must NULL-mark the row, got {got[1]}"
-        )
-        assert got[2][0] is not None and got[2][0] > 0.0, impl
-        assert got[2][1] == [127, 0], impl
+    got = {
+        r["vec_id"]: (r["scale"], r["qvec"], r["q_sum"], r["q_l1"])
+        for r in S.quantize_embeddings(df, checksums=True).collect()
+    }
+    assert got[0][1] == [64, -127]
+    assert got[1] == (None, None, None, None), (
+        f"underflowed scale must NULL-mark the row, got {got[1]}"
+    )
+    assert got[2][0] is not None and got[2][0] > 0.0
+    assert got[2][1] == [127, 0]
 
 
 def test_legal_extreme_vectors_stay_scored(spark):

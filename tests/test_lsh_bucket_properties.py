@@ -1,19 +1,17 @@
 """Differential property test for the LSH hyperplane bucket fold.
 
-``lsh_banded`` packs all n_tables*n_planes hyperplanes into one
-constant-folded literal and derives every table's bucket in a single
-zip_with/aggregate fold — the shape that keeps Catalyst analysis flat
-(see the operator docstring). The compressed fold must still equal
-the textbook definition: bucket(table t) = Σ 2^j over planes j of
-table t whose projection <x, plane_j> is >= 0.
+``lsh_banded`` projects every vector onto all n_tables*n_planes
+hyperplanes in one numpy matmul per Arrow batch and packs each
+table's sign bits into its bucket. The result must equal the textbook
+definition: bucket(table t) = Σ 2^j over planes j of table t whose
+projection <x, plane_j> is >= 0.
 
-The default Arrow implementation (numpy matmul) and the JVM HOF fold
-are both asserted equal to the replica and to each other. The matmul
-may reorder additions vs the sequential folds, but a sign flip needs
-a projection within ~1 ulp of zero — unreachable for random vectors
-against fixed gaussian planes (an exact-cancellation projection
-would require solving for the plane coefficients, which hypothesis
-does not control).
+The kernel is asserted equal to a pure-Python replica. The matmul may
+reorder additions vs the replica's sequential fold, but a sign flip
+needs a projection within ~1 ulp of zero — unreachable for random
+vectors against fixed gaussian planes (an exact-cancellation
+projection would require solving for the plane coefficients, which
+hypothesis does not control).
 """
 
 from __future__ import annotations
@@ -50,14 +48,6 @@ def test_lsh_banded_buckets_match_python_model(spark, vecs, n_planes, n_tables, 
             df, _DIM, "qid", "qv", n_planes=n_planes, n_tables=n_tables, seed=seed
         ).collect()
     }
-    got_jvm = {
-        (r["qid"], r["table_id"]): r["bucket"]
-        for r in S.lsh_banded(
-            df, _DIM, "qid", "qv", n_planes=n_planes, n_tables=n_tables, seed=seed,
-            impl="jvm",
-        ).collect()
-    }
-    assert got == got_jvm
 
     want = {}
     for t in range(n_tables):
@@ -66,7 +56,7 @@ def test_lsh_banded_buckets_match_python_model(spark, vecs, n_planes, n_tables, 
             bucket = 0
             for j, p in enumerate(planes):
                 proj = 0.0
-                for x, y in zip(v, p):  # same left fold as the JVM aggregate
+                for x, y in zip(v, p):  # sequential left fold
                     proj += float(x) * y
                 if proj >= 0:
                     bucket |= 1 << j
@@ -79,19 +69,16 @@ def test_lsh_banded_buckets_match_python_model(spark, vecs, n_planes, n_tables, 
 
 def test_lsh_banded_excludes_dim_mismatch_identically(spark):
     """r12 ragged axis: a vector whose length differs from dim is
-    entry-EXCLUDED by the _dim_ok filter, identically in both impls
-    (this superseded the pre-r12 contract where the arrow kernel
-    raised ValueError while the JVM fold silently bucketed the ragged
-    vector at all-zero bits — a cross-impl divergence; the kernel's
-    ValueError remains as an unreachable-by-contract assertion).
-    See tests/test_ragged_vectors.py for the full-ladder pins."""
+    entry-EXCLUDED by the _dim_ok filter (before r12 the kernel
+    raised ValueError on the whole query; that check remains as an
+    unreachable-by-contract assertion). See
+    tests/test_ragged_vectors.py for the full-ladder pins."""
     df = spark.createDataFrame(
         [(1, [1.0, 2.0, 3.0, 4.0]), (2, [1.0, 2.0])],
         "vec_id LONG, embedding ARRAY<DOUBLE>",
     )
-    for impl in ("arrow", "jvm"):
-        out = S.lsh_banded(df, dim=4, out_id="i", out_vec="v", impl=impl).collect()
-        assert {r.i for r in out} == {1}, impl
+    out = S.lsh_banded(df, dim=4, out_id="i", out_vec="v").collect()
+    assert {r.i for r in out} == {1}
 
 
 def test_auto_lsh_params_closed_forms():

@@ -10,10 +10,8 @@ engines don't even agree on HOW cross-vector math fails on one:
 - DuckDB's ``list_dot_product`` ERRORS the whole query on a length
   mismatch (measured: InvalidInputException "list dimensions must be
   equal"; this build even INTERNAL-errors on two EMPTY lists);
-- the two lsh_banded impls diverged from each other: the arrow
-  kernel raised ValueError while the JVM HOF fold silently gave the
-  ragged vector all-zero bits (every projection NULL → otherwise(0)),
-  funneling all ragged vectors into one shared bucket per table.
+- the lsh_banded kernel, unguarded, raises ValueError on the whole
+  query.
 
 Contract (mirrors the value classes): wrong-length vectors are
 entry-EXCLUDED wherever a model dimension is declared
@@ -70,16 +68,14 @@ def test_brute_force_dim_guard_excludes_ragged_both_sides(frame):
 
 
 def test_lsh_banded_impls_agree_on_ragged(frame):
-    """THE cross-impl pin: before r12 the arrow kernel raised on a
-    ragged vector while the JVM fold silently bucketed it at zero
-    bits; both now exclude it at entry and emit identical rows."""
+    """Before r12 the kernel raised on a ragged vector; it is now
+    excluded at entry, so the query runs and the ragged and empty
+    vectors are simply absent."""
     kw = dict(n_planes=4, n_tables=2, seed=7)
-    arrow = S.lsh_banded(frame, DIM, "id", "v", "vec_id", "embedding", impl="arrow", **kw)
-    jvm = S.lsh_banded(frame, DIM, "id", "v", "vec_id", "embedding", impl="jvm", **kw)
-    a = sorted((r.id, r.table_id, r.bucket) for r in arrow.collect())
-    j = sorted((r.id, r.table_id, r.bucket) for r in jvm.collect())
-    assert a == j
+    out = S.lsh_banded(frame, DIM, "id", "v", "vec_id", "embedding", **kw)
+    a = sorted((r.id, r.table_id, r.bucket) for r in out.collect())
     assert {t[0] for t in a} == {1, 2, 3, 4, 13}  # NULL vec kept (NULL policy), ragged/empty gone
+    assert [t[2] for t in a if t[0] == 13] == [0, 0]  # NULL vec: all-zero buckets
 
 
 def test_lsh_knn_never_scores_ragged(frame):
@@ -123,19 +119,14 @@ def test_near_dup_keeps_identical_ragged_singleton(spark):
 
 def test_quantize_is_row_faithful_on_ragged(frame):
     """The store pass NEVER drops an id for shape: a ragged row
-    quantizes against its own length (per-row reduceat segments on
-    the arrow path, per-row HOF folds on the JVM path), and the empty
-    vector gets the NULL-marked row — identically in both impls."""
-    for impl in ("arrow", "jvm"):
-        rows = {
-            r.vec_id: r
-            for r in S.quantize_embeddings(frame, impl=impl, checksums=True).collect()
-        }
-        assert set(rows) == {1, 2, 3, 4, 10, 11, 12, 13}
-        assert len(rows[10].qvec) == 2 and len(rows[11].qvec) == 6
-        assert rows[10].scale == pytest.approx(1.0 / 127)
-        assert rows[12].scale is None and rows[12].qvec is None
-        assert rows[13].scale is None and rows[13].qvec is None
+    quantizes against its own length (per-row reduceat segments), and
+    the empty vector gets the NULL-marked row."""
+    rows = {r.vec_id: r for r in S.quantize_embeddings(frame, checksums=True).collect()}
+    assert set(rows) == {1, 2, 3, 4, 10, 11, 12, 13}
+    assert len(rows[10].qvec) == 2 and len(rows[11].qvec) == 6
+    assert rows[10].scale == pytest.approx(1.0 / 127)
+    assert rows[12].scale is None and rows[12].qvec is None
+    assert rows[13].scale is None and rows[13].qvec is None
 
 
 def test_dim_ok_null_vector_passes():

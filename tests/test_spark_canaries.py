@@ -130,6 +130,37 @@ def test_observe_fires_under_eager_local_checkpoint(spark):
     assert _metrics(obs) == {"changed": 7}
 
 
+# --- a filter above a nondeterministic projection --------------------
+#
+# ``similarity._filter_once`` adds a ``spark_partition_id()`` column to
+# the projection it filters, so Catalyst cannot push the filter below
+# the projection and inline the projected cosine fold into every
+# conjunct that reads it.
+
+
+def test_filter_once_keeps_projected_fold_evaluated_once(spark):
+    """The score is a dot-product fold and the sanity filter reads it
+    twice. Pinned by ``_filter_once`` the fold appears once in the
+    optimized plan; a plain filter is pushed below the projection and
+    repeats it in each conjunct. Both keep the same rows."""
+    from mozart_etl_spark.operators import similarity as S
+
+    df = spark.createDataFrame(
+        [(i, [float(i), 1.0, -2.0]) for i in range(6)], "id INT, v ARRAY<DOUBLE>"
+    )
+    scored = df.select("id", S._dot(F.col("v"), F.col("v")).alias("score"))
+    cond = S._score_is_sane(F.col("score"))
+
+    def folds(out) -> int:
+        return out._jdf.queryExecution().optimizedPlan().toString().count("zip_with(")
+
+    pinned = S._filter_once(scored, cond)
+    plain = scored.filter(cond)
+    assert folds(pinned) == 1
+    assert folds(plain) > 1
+    assert sorted(pinned.collect()) == sorted(plain.collect())
+
+
 # --- parquet reads with a supplied schema ----------------------------
 #
 # ``io.read_parquet`` caches the StructType a bare ``spark.read.parquet``

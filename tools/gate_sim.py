@@ -9,7 +9,7 @@ queries (no oracle by design) must still execute and return >= 1 row
 — a rows-only entry that silently returns 0 rows is vacuous.
 
 The runner inherits every session knob from the environment, so the
-three r7-discipline evidence runs are all this one tool:
+r7-discipline evidence runs are all this one tool:
 
     # plain gate simulation (driver twin)
     python tools/gate_sim.py /root/testdata/sf0.01
@@ -19,9 +19,6 @@ three r7-discipline evidence runs are all this one tool:
         python tools/gate_sim.py /root/testdata/sf0.01
     SPARK_GRAFT_AQE=false SPARK_GRAFT_SHUFFLE=64 \
         python tools/gate_sim.py /root/testdata/sf0.01
-
-    # JVM fold path: Arrow-free fallback must be bit-identical
-    SPARK_GRAFT_FOLD_IMPL=jvm python tools/gate_sim.py /root/testdata/sf0.01
 
 Exit code = number of divergences (0 = green, matches the driver's
 ``bad = []``).
