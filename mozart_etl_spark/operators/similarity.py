@@ -61,6 +61,19 @@ NULL-cosine ``nullif`` guards; NULL *elements* inside a vector are
 NOT corruption (SQL engines skip them in avg; folds turn them into
 NULL norms which the norm-form guards exclude as NULL vectors).
 
+**Sane-first ranking.** The top-k scorers do not filter corrupt
+norms or insane scores before they rank: :func:`_top_k` orders each
+partition by a non-NULL ``_ok`` flag first (both norms clean, score
+sane), then by score, then by the tie column, and keeps ``_ok AND
+rn <= k`` above the Window. Every sane row ranks ahead of every
+insane one, so the kept rows are exactly those a filter-then-rank
+would keep. The dim-length cosine fold is evaluated once per pair:
+Catalyst pushes no filter on a non-partition column through a Window,
+and CollapseProject does not inline a fold into a Project that
+references it twice (the score and the ``_ok`` flag). A filter below
+the ranking would be pushed into the join condition instead, with
+the fold inlined into each conjunct that reads the score.
+
 The ladder's SHAPE class (r12): a vector whose **length** differs
 from the model dimension — the truncated-write / mixed-model-version
 ingest corruption. Every value guard passes it (clean finite norm),
@@ -137,43 +150,76 @@ def _norm_is_clean(norm: Column) -> Column:
 
 
 def _score_is_sane(score: Column) -> Column:
-    """Ranking-time backstop (r10): keep a score only if it is NULL
+    """Ranking-time backstop (r10): a score is sane if it is NULL
     (zero-norm pairs — both engines rank NULLS LAST) or finite.
     Entry guards should make this a no-op; it exists so that ANY
     residual non-finite score — e.g. the accumulation-overflow class
     the component-form guard cannot see — can never outrank genuine
-    neighbors or leak a NaN row, in either engine."""
+    neighbors or leak a NaN row, in either engine. :func:`_top_k`
+    ranks sane rows ahead of insane ones and keeps only the sane."""
     return F.coalesce(~F.isnan(score) & (F.abs(score) != F.lit(_INF)), F.lit(True))
 
 
-def _filter_once(df: DataFrame, cond: Column) -> DataFrame:
-    """Apply ``cond`` so every projected column it references is
-    evaluated exactly ONCE (r15, guide §4.4's duplication problem in
-    its JVM form). Catalyst pushes a post-projection filter below the
-    Project and on into the join condition, inlining the projected
-    expression into every conjunct — the interpreted dim-length cosine
-    fold was evaluated up to 3x per candidate pair (twice in the join
-    condition via _score_is_sane's isnan/Inf conjuncts, once in the
-    output projection; committed r15 before-plans show it). The pin —
-    a ``spark_partition_id()`` column referenced by an always-true
-    conjunct — makes the projection nondeterministic and the pin
-    column unprunable, so the Filter stays ABOVE the Project and reads
-    the computed attribute; codegen fuses Project+Filter into one
-    stage. ``spark_partition_id() >= 0`` is vacuously true whatever
-    partition a retried/speculated task lands on, so semantics are
-    unchanged. Verified: the fold appears exactly once in the plan
-    with the pin, 3x without.
+def _vectors(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    out_id: str,
+    out_vec: str,
+    out_norm: str,
+    *keep: Column,
+) -> DataFrame:
+    """One row per non-NULL vector: ``out_id``, the components cast to
+    DOUBLE as ``out_vec``, any ``keep`` columns, and the L2 norm as
+    ``out_norm``, folded once per vector so no pair folds it again.
+    The ``IS NOT NULL`` filter is the NULL-vector policy and reaches
+    the scan as a pushed filter. Corrupt norms are not filtered here:
+    :func:`_top_k` ranks a pair only when both norms are clean."""
+    return (
+        df.filter(F.col(vec_col).isNotNull())
+        .select(F.col(id_col).alias(out_id), _as_double(F.col(vec_col)).alias(out_vec), *keep)
+        .withColumn(out_norm, F.sqrt(_dot(F.col(out_vec), F.col(out_vec))))
+    )
 
-    Side effect the call sites compensate for: the pin also blocks
-    predicates CATALYST would have derived from the condition from
-    reaching the scan (e.g. ``IsNotNull(embedding)`` out of a NULL
-    norm failing ``_norm_is_clean``). Sites whose condition provably
-    drops NULL inputs re-state that as an explicit deterministic
-    filter BELOW the pinned projection, so scan pushdown is
-    preserved (pinned by test_plan_expectations' pushed_ge floors).
-    """
-    pinned = df.withColumn("_eval_pin", F.spark_partition_id())
-    return pinned.filter((F.col("_eval_pin") >= 0) & cond).drop("_eval_pin")
+
+def _cosine(a: str, b: str, na: str, nb: str) -> Column:
+    """Cosine of vector columns ``a``/``b`` from their precomputed
+    norms; NULL for a zero-norm side."""
+    return _dot(F.col(a), F.col(b)) / F.nullif(F.col(na) * F.col(nb), F.lit(0.0))
+
+
+def _top_k(
+    scored: DataFrame, part: str, score: str, tie: str, k: int, norms: tuple[str, ...]
+) -> DataFrame:
+    """The ``k`` best sane rows per ``part``: score descending, then
+    ``tie`` ascending. A row is sane when every column in ``norms``
+    passes :func:`_norm_is_clean` and ``score`` passes
+    :func:`_score_is_sane`; the non-NULL ``_ok`` flag orders sane rows
+    first, and the cut ``_ok AND rn <= k`` sits above the Window,
+    where Catalyst leaves it (module docstring, sane-first ranking).
+    ``_ok`` references ``score``, so the fold behind it stays in its
+    own Project and is evaluated once per row."""
+    ok = _score_is_sane(F.col(score))
+    for n in norms:
+        ok = _norm_is_clean(F.col(n)) & ok
+    w = Window.partitionBy(part).orderBy(F.desc("_ok"), F.desc(score), F.asc(tie))
+    return (
+        scored.withColumn("_ok", F.coalesce(ok, F.lit(False)))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("_ok") & (F.col("rn") <= k))
+        .drop("_ok", "rn")
+    )
+
+
+def _rank_neighbors(joined: DataFrame, k: int) -> DataFrame:
+    """Exact cosine top-k of joined (query_id, qv, qn) x (neighbor_id,
+    cv, cn) pairs: (query_id, neighbor_id, cosine 4dp)."""
+    scored = joined.select(
+        "query_id", "neighbor_id", "qn", "cn", _cosine("qv", "cv", "qn", "cn").alias("cos_raw")
+    )
+    return _top_k(scored, "query_id", "cos_raw", "neighbor_id", k, ("qn", "cn")).select(
+        "query_id", "neighbor_id", (F.round("cos_raw", 4) + F.lit(0.0)).alias("cosine")
+    )
 
 
 def _dim_ok(vec: Column, dim: int | None) -> Column:
@@ -245,32 +291,12 @@ def brute_force_knn(
     if dim is not None:
         queries = drop_ragged_vectors(queries, vec_col, dim)
         candidates = drop_ragged_vectors(candidates, vec_col, dim)
-    q = _filter_once(
-        queries.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", F.sqrt(_dot(F.col("qv"), F.col("qv")))),
-        _norm_is_clean(F.col("qn")),
-    )
-    c = _filter_once(
-        candidates.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
-    ).withColumn("cn", F.sqrt(_dot(F.col("cv"), F.col("cv")))),
-        _norm_is_clean(F.col("cn")),
-    )
+    q = _vectors(queries, id_col, vec_col, "query_id", "qv", "qn")
+    c = _vectors(candidates, id_col, vec_col, "neighbor_id", "cv", "cn")
     joined = c.crossJoin(F.broadcast(q))
     if exclude_self:
         joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
-    cos_raw = _dot(F.col("qv"), F.col("cv")) / F.nullif(F.col("qn") * F.col("cn"), F.lit(0.0))
-    scored = _filter_once(
-        joined.select("query_id", "neighbor_id", cos_raw.alias("cos_raw")),
-        _score_is_sane(F.col("cos_raw")),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", (F.round("cos_raw", 4) + F.lit(0.0)).alias("cosine"))
-    )
+    return _rank_neighbors(joined, k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -344,62 +370,33 @@ def ivf_knn(
     # every component finite and <= sqrt(DBL_MAX), scoring a fake
     # finite/Inf = 0.0 against clean queries that _score_is_sane
     # cannot reject yet can outrank genuinely negative neighbors).
-    # The norms are needed for the cosines anyway, so the guard rides
-    # the projection that precomputes them per VECTOR — never per
-    # pair. ivf_centroids applies its own component-form guard with
-    # NULL-element tolerance internally (avg semantics differ there).
+    # The norms are needed for the cosines anyway, so they are folded
+    # once per VECTOR and the guard rides the sane-first ranking of
+    # both the probe and the final top-k. ivf_centroids applies its
+    # own component-form guard with NULL-element tolerance internally
+    # (avg semantics differ there).
     # ``dim`` (r12 ragged axis) excludes wrong-length vectors from the
     # centroids, both scoring sides, and the probe routing.
     if dim is not None:
         queries = drop_ragged_vectors(queries, vec_col, dim)
         candidates = drop_ragged_vectors(candidates, vec_col, dim)
     cents = ivf_centroids(candidates, cell_col, id_col, vec_col, dim=dim)
-    q = _filter_once(
-        queries.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", F.sqrt(_dot(F.col("qv"), F.col("qv")))),
-        _norm_is_clean(F.col("qn")),
-    )
+    q = _vectors(queries, id_col, vec_col, "query_id", "qv", "qn")
     # probe: rank centroids per query by cosine, keep top nprobe
-    qc = q.crossJoin(F.broadcast(cents))
-    cos_cent = _dot(F.col("qv"), F.col("centroid")) / F.nullif(
-        F.col("qn") * F.sqrt(_dot(F.col("centroid"), F.col("centroid"))),
-        F.lit(0.0),
+    cents = cents.withColumn("cent_n", F.sqrt(_dot(F.col("centroid"), F.col("centroid"))))
+    qc = q.crossJoin(F.broadcast(cents)).select(
+        "query_id", "qv", "qn", "cell", _cosine("qv", "centroid", "qn", "cent_n").alias("cent_cos")
     )
-    wp = Window.partitionBy("query_id").orderBy(F.desc("cent_cos"), F.asc("cell"))
-    probes = (
-        _filter_once(
-            qc.select("query_id", "qv", "qn", "cell", cos_cent.alias("cent_cos")),
-            _score_is_sane(F.col("cent_cos")),
-        )
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "qv", "qn", "cell")
+    probes = _top_k(qc, "query_id", "cent_cos", "cell", nprobe, ("qn",)).select(
+        "query_id", "qv", "qn", "cell"
     )
-    c = _filter_once(
-        candidates.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(F.col(vec_col)).alias("cv"),
-        F.col(cell_col).alias("cell"),
-    ).withColumn("cn", F.sqrt(_dot(F.col("cv"), F.col("cv")))),
-        _norm_is_clean(F.col("cn")),
+    c = _vectors(
+        candidates, id_col, vec_col, "neighbor_id", "cv", "cn", F.col(cell_col).alias("cell")
     )
     joined = c.join(F.broadcast(probes), "cell").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    cos_raw = _dot(F.col("qv"), F.col("cv")) / F.nullif(
-        F.col("qn") * F.col("cn"), F.lit(0.0)
-    )
-    scored = _filter_once(
-        joined.select("query_id", "neighbor_id", cos_raw.alias("cos_raw")),
-        _score_is_sane(F.col("cos_raw")),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", (F.round("cos_raw", 4) + F.lit(0.0)).alias("cosine"))
-    )
+    return _rank_neighbors(joined, k)
 
 
 def lsh_banded(
@@ -545,35 +542,15 @@ def lsh_knn(
     )
     # norms precomputed per VECTOR (multi-referenced projection — no
     # CollapseProject inlining), never per candidate pair. The NORM
-    # form of the corrupt-vector guard rides the same projection
+    # form of the corrupt-vector guard rides the sane-first ranking
     # (r11): the component-form entry guard above cannot see an
     # accumulation-overflow vector (norm = +Inf, every component
     # finite), which would score a fake finite/Inf = 0.0 into top-k
     # slots past the _score_is_sane backstop.
-    qv = _filter_once(
-        queries.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", F.sqrt(_dot(F.col("qv"), F.col("qv")))),
-        _norm_is_clean(F.col("qn")),
-    )
-    cv = _filter_once(
-        candidates.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
-    ).withColumn("cn", F.sqrt(_dot(F.col("cv"), F.col("cv")))),
-        _norm_is_clean(F.col("cn")),
-    )
+    qv = _vectors(queries, id_col, vec_col, "query_id", "qv", "qn")
+    cv = _vectors(candidates, id_col, vec_col, "neighbor_id", "cv", "cn")
     joined = pairs.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id")
-    cos_raw = _dot(F.col("qv"), F.col("cv")) / F.nullif(F.col("qn") * F.col("cn"), F.lit(0.0))
-    scored = _filter_once(
-        joined.select("query_id", "neighbor_id", cos_raw.alias("cos_raw")),
-        _score_is_sane(F.col("cos_raw")),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", (F.round("cos_raw", 4) + F.lit(0.0)).alias("cosine"))
-    )
+    return _rank_neighbors(joined, k)
 
 
 def auto_lsh_params(
@@ -913,17 +890,10 @@ def lsh_near_dup_pairs(
         .dropDuplicates(["doc_a", "doc_b"])
     )
     cand = _rescore_parallelism_rescue(cand, n_rows, n_planes, n_tables)
-    vecs = df.select(
-        F.col(id_col).alias("doc_id"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("n", F.sqrt(_dot(F.col("v"), F.col("v"))))
+    vecs = _vectors(df, id_col, vec_col, "doc_id", "v", "n")
     va = vecs.select(F.col("doc_id").alias("doc_a"), F.col("v").alias("va"), F.col("n").alias("na"))
     vb = vecs.select(F.col("doc_id").alias("doc_b"), F.col("v").alias("vb"), F.col("n").alias("nb"))
-    cos_raw = _dot(F.col("va"), F.col("vb")) / F.nullif(F.col("na") * F.col("nb"), F.lit(0.0))
-    out = (
-        cand.join(va, "doc_a")
-        .join(vb, "doc_b")
-        .withColumn("cos_raw", cos_raw)
-    )
+    cos_raw = _cosine("va", "vb", "na", "nb")
     # ~isnan: Spark sorts NaN greatest, so `NaN >= threshold` is
     # TRUE — without the guard a NaN-norm (NaN-component) vector
     # pair would pass the similarity filter with cosine NaN.
@@ -932,11 +902,16 @@ def lsh_near_dup_pairs(
     # no extra guard HERE either: an Inf-norm pair's cosine is
     # always ±Inf/Inf or NaN/Inf = NaN (caught), or finite/Inf = 0
     # (below threshold) — pinned by the r10 Inf-axis unit tests.
-    # _filter_once: without the pin this filter is pushed into the
-    # vector join's condition and the fold runs up to 3x per pair.
-    out = _filter_once(
-        out, (F.col("cos_raw") >= threshold) & ~F.isnan("cos_raw")
-    ).select("doc_a", "doc_b", (F.round("cos_raw", 4) + F.lit(0.0)).alias("cosine"))
+    # Catalyst pushes this filter into the vector join's condition,
+    # inlining the fold into each conjunct; `>=` comes first, so a
+    # pair below the threshold folds once and only a pair past it
+    # folds again.
+    out = (
+        cand.join(va, "doc_a")
+        .join(vb, "doc_b")
+        .filter((cos_raw >= threshold) & ~F.isnan(cos_raw))
+        .select("doc_a", "doc_b", (F.round(cos_raw, 4) + F.lit(0.0)).alias("cosine"))
+    )
     if star is not None:
         out = out.unionByName(star)
     return out

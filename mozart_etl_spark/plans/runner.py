@@ -83,11 +83,9 @@ class ModelRunner:
         WRONG_COMMAND_FOR_OBJECT_TYPE, so materialization changes
         (table <-> view) must clear the old object first. Same-kind
         re-runs are left to CREATE OR REPLACE / overwrite."""
-        try:
-            existing = self.spark.catalog.getTable(target)
-        except Exception:
+        if not self.spark.catalog.tableExists(target):
             return
-        kind = (existing.tableType or "").upper()
+        kind = (self.spark.catalog.getTable(target).tableType or "").upper()
         if want == "view" and kind != "VIEW":
             self.spark.sql(f"DROP TABLE IF EXISTS {target}")
         elif want != "view" and kind == "VIEW":

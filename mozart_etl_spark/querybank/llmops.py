@@ -1273,11 +1273,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         # form of the guard — Inf components force an Inf norm); NULL
         # norms (NULL vectors) already fail the threshold in both
     )
-    # _filter_once (r15): without the pin Catalyst inlines the norm
-    # fold into the filter condition and evaluates it 3x per vector
-    base = sim_ops._filter_once(
-        base, ~F.isnan("n") & (F.col("n") != F.lit(float("inf")))
-    )
+    # a per-vector filter: Catalyst inlines the norm fold into it, a
+    # cost of n vectors, not of n^2 pairs
+    base = base.filter(~F.isnan("n") & (F.col("n") != F.lit(float("inf"))))
     a = base.select(
         F.col("vec_id").alias("doc_a"), F.col("v").alias("va"), F.col("n").alias("na")
     )
@@ -1288,15 +1286,11 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
     cos_raw = dot / F.nullif(F.col("na") * F.col("nb"), F.lit(0.0))
-    # _filter_once (r15): the threshold filter would otherwise be
-    # pushed into the all-pairs join condition, evaluating the
-    # dim-length fold twice per enumerated pair (condition + output)
-    return (
-        sim_ops._filter_once(
-            a.join(b, F.col("doc_a") < F.col("doc_b")).withColumn("cos_raw", cos_raw),
-            F.col("cos_raw") >= 0.95,
-        )
-        .select("doc_a", "doc_b", (F.round("cos_raw", 4) + F.lit(0.0)).alias("cosine"))
+    # the threshold rides the join condition after the cheap id
+    # conjunct, so the dim-length fold runs once per unordered pair
+    # and once more only for the pairs kept
+    return a.join(b, (F.col("doc_a") < F.col("doc_b")) & (cos_raw >= 0.95)).select(
+        "doc_a", "doc_b", (F.round(cos_raw, 4) + F.lit(0.0)).alias("cosine")
     )
 
 

@@ -39,6 +39,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..io import events_raw_schema, normalize_ts_us
 
@@ -311,6 +312,44 @@ def _state_stores(spark: SparkSession) -> int:
     return min(8, spark.sparkContext.defaultParallelism)
 
 
+def _drain(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    what: str,
+    timeout_s: int,
+    final_no_data_batch: bool,
+) -> None:
+    """Run ``writer`` with ``availableNow`` to the end of its input, with
+    ``spark.sql.shuffle.partitions`` scoped to :func:`_state_stores` and,
+    unless ``final_no_data_batch``, the trailing no-data micro-batch
+    switched off; both confs are restored afterwards. A query still
+    running after ``timeout_s`` is stopped, then ``TimeoutError`` names
+    ``what``.
+
+    The scoping is session-global: a CONCURRENT batch query in this
+    session during the drain inherits the reduced counts; fine for a
+    single-threaded harness, move to a dedicated session for
+    concurrent use."""
+    nodata = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    prev_nodata = spark.conf.get(nodata)
+    spark.conf.set("spark.sql.shuffle.partitions", str(_state_stores(spark)))
+    if not final_no_data_batch:
+        spark.conf.set(nodata, "false")
+    try:
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination(timeout_s)
+        # stop BEFORE the conf restore (r15 ADVICE): a still-running
+        # query must not outlive the scoped conf it was started under
+        if q.isActive:  # pragma: no cover - deadline guard
+            q.stop()
+            raise TimeoutError(f"{what} did not drain in {timeout_s}s")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        if not final_no_data_batch:
+            spark.conf.set(nodata, prev_nodata)
+
+
 def run_to_memory(
     df: DataFrame,
     name: str,
@@ -348,27 +387,6 @@ def run_to_memory(
     True and call sites opt in per profiled query.
     """
     spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nodata = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_state_stores(spark)))
-    if not final_no_data_batch:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_s)
-        if q.isActive:  # pragma: no cover - deadline guard
-            q.stop()
-            raise TimeoutError(f"stream {name} did not drain in {timeout_s}s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if not final_no_data_batch:
-            spark.conf.set(
-                "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-            )
+    writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    _drain(spark, writer, f"stream {name}", timeout_s, final_no_data_batch)
     return spark.table(name)

@@ -70,50 +70,20 @@ def stream_merge_to_table(
         # unused per-batch result costs no extra scan
         writers.merge_upsert(batch_df.sparkSession, batch_df, table_ident, primary_key)
 
-    spark_session = stream.sparkSession
-    prev = spark_session.conf.get("spark.sql.shuffle.partitions")
-    prev_nodata = spark_session.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark = stream.sparkSession
+    writer = (
+        stream.writeStream.foreachBatch(_merge)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_dir)
     )
-    spark_session.conf.set(
-        "spark.sql.shuffle.partitions", str(events._state_stores(spark_session))
+    events._drain(
+        spark, writer, f"stream merge into {table_ident}", timeout_s, final_no_data_batch
     )
-    if not final_no_data_batch:
-        spark_session.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "false"
-        )
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_merge)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_s)
-        # stop BEFORE the conf restore (r15 ADVICE): a still-running
-        # query must not outlive the scoped conf it was started under.
-        # The scoping is session-global either way — a CONCURRENT
-        # batch query in this session during the drain inherits the
-        # reduced counts; fine for a single-threaded harness, move to
-        # a dedicated session for concurrent use.
-        if q.isActive:  # pragma: no cover - deadline guard
-            q.stop()
-            raise TimeoutError(
-                f"stream merge into {table_ident} did not drain in {timeout_s}s"
-            )
-    finally:
-        spark_session.conf.set("spark.sql.shuffle.partitions", prev)
-        if not final_no_data_batch:
-            spark_session.conf.set(
-                "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-            )
     # the merges ran in foreachBatch's cloned session — refresh this
     # session's view of the table before reading it. If every batch
     # was empty (nothing matched the stream's filter, or a resumed
     # checkpoint was already caught up) the table may not exist at
     # all: that is an empty drain, not an error.
-    spark = stream.sparkSession
     if not spark.catalog.tableExists(table_ident):
         return 0
     spark.catalog.refreshTable(table_ident)

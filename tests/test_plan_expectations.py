@@ -23,6 +23,10 @@ benign plan jitter (AQE re-planning, operator renumbering) passes:
 - ``partial_agg`` — map-side partial aggregation before the shuffle.
 - ``topk``       — ``TakeOrderedAndProject``: ORDER BY + LIMIT must
   not global-sort.
+- ``folds_le``   — ``aggregate(zip_with`` count in the OPTIMIZED
+  logical plan (ceiling): each dim-length cosine/norm fold is
+  evaluated once per vector or pair. Catalyst inlining a fold into a
+  pushed filter or a collapsed Project repeats it in the plan text.
 
 Values were read off the actual sf0.001 plans (identical facts to the
 sf0.1 PLANS.md snapshot for every guarded query).
@@ -108,8 +112,10 @@ EXPECT: dict[str, dict] = {
     # anti-join novelty filter on 16-byte fingerprints
     "corpus_incremental_dedup": dict(pushed_ge=4, width_le=4, exchanges_le=2, no_smj=True),
     # brute-force KNN: embeddings scan pruned to (id, vec); the only
-    # shuffle is the final per-query top-k
-    "knn_bruteforce_cosine": dict(pushed_ge=2, width_le=2, exchanges_le=1),
+    # shuffle is the final per-query top-k; three folds = one norm per
+    # side + one cosine per pair (the knn trio ranks sane-first, see
+    # similarity._top_k)
+    "knn_bruteforce_cosine": dict(pushed_ge=2, width_le=2, exchanges_le=1, folds_le=3),
     # banded LSH self-join, since r8 with the registered
     # collapse_identical=True + max_bucket_size=256 staging: the
     # collapse window and the cap's occupancy window both run INSIDE
@@ -124,7 +130,16 @@ EXPECT: dict[str, dict] = {
     # discount tightening; it only fires when AQE's byte model would
     # under-parallelize the rescore and inserts no shuffle at cluster
     # scale — pinned in test_rescore_parallelism_rescue_bounds).
-    "dedup_embedding_lsh": dict(exchanges_le=2, bhj_ge=4, no_smj=True, no_window=True),
+    # folds: the vector norm, printed once per re-attach side, and the
+    # cosine in the pushed threshold conjuncts (`>=`, then isnan) and
+    # the output; only a pair past `>=` folds a second time
+    "dedup_embedding_lsh": dict(
+        exchanges_le=2, bhj_ge=4, no_smj=True, no_window=True, folds_le=5
+    ),
+    # exact all-pairs twin: 12 of the folds are the per-vector norm and
+    # its inlined guard in the four scans of the self-join; the cosine
+    # sits once in the join condition and once in the output
+    "dedup_embedding_cosine": dict(folds_le=14),
     # r8: rollup/cube run as the re-aggregation cascade
     # (operators/agg.py) — base scanned/shuffled once at the finest
     # grain behind a lazy localCheckpoint, coarser sets re-aggregate
@@ -148,8 +163,10 @@ EXPECT: dict[str, dict] = {
     "dedup_ngram_jaccard": dict(exchanges_le=3, bhj_ge=4, no_smj=True, topk=True, partial_agg=True),
     # one scan -> Arrow kernel, zero shuffles
     "dedup_simhash": dict(width_le=2, exchanges_le=0),
-    "knn_lsh_cosine": dict(pushed_ge=2, width_le=2, exchanges_le=2, no_smj=True),
-    "knn_ivf_cosine": dict(pushed_ge=2, width_le=2, exchanges_le=4, partial_agg=True),
+    "knn_lsh_cosine": dict(pushed_ge=2, width_le=2, exchanges_le=2, no_smj=True, folds_le=3),
+    # five folds: query norm, centroid norm, probe cosine, candidate
+    # norm, final cosine
+    "knn_ivf_cosine": dict(pushed_ge=2, width_le=2, exchanges_le=4, partial_agg=True, folds_le=5),
     "corpus_shard_plan": dict(exchanges_le=1, bhj_ge=1, no_smj=True),
     # as-of via union + last_value window: ONE shuffle, NO join at all
     "asof_click_view": dict(pushed_ge=1, width_le=4, exchanges_le=1, no_smj=True),
@@ -259,8 +276,13 @@ def _facts(plan: str) -> dict:
 @pytest.mark.parametrize("name", sorted(EXPECT))
 def test_plan_expectation(spark, name):
     exp = EXPECT[name]
-    facts = _facts(_plan(REGISTRY[name].fn(spark, SF)))
+    df = REGISTRY[name].fn(spark, SF)
+    facts = _facts(_plan(df))
     errs = []
+    if "folds_le" in exp:
+        folds = df._jdf.queryExecution().optimizedPlan().toString().count("aggregate(zip_with")
+        if folds > exp["folds_le"]:
+            errs.append(f"fold repeated: {folds} aggregate(zip_with folds > {exp['folds_le']}")
     if "pushed_ge" in exp and facts["pushed"] < exp["pushed_ge"]:
         errs.append(f"pushdown lost: {facts['pushed']} scans pushed < {exp['pushed_ge']}")
     if "width_le" in exp and facts["max_width"] > exp["width_le"]:

@@ -130,35 +130,72 @@ def test_observe_fires_under_eager_local_checkpoint(spark):
     assert _metrics(obs) == {"changed": 7}
 
 
-# --- a filter above a nondeterministic projection --------------------
+# --- sane-first top-k ranking ---------------------------------------
 #
-# ``similarity._filter_once`` adds a ``spark_partition_id()`` column to
-# the projection it filters, so Catalyst cannot push the filter below
-# the projection and inline the projected cosine fold into every
-# conjunct that reads it.
+# ``similarity._top_k`` scores each pair once, flags it ``_ok`` in the
+# Project above the score, ranks ``_ok`` rows first with ``row_number``
+# and cuts ``_ok AND rn <= k`` above the Window. That keeps the cosine
+# fold evaluated once per pair only while Spark (a) leaves a filter on
+# a non-partition column above a Window and (b) does not inline a fold
+# into a Project that references it twice.
 
 
-def test_filter_once_keeps_projected_fold_evaluated_once(spark):
-    """The score is a dot-product fold and the sanity filter reads it
-    twice. Pinned by ``_filter_once`` the fold appears once in the
-    optimized plan; a plain filter is pushed below the projection and
-    repeats it in each conjunct. Both keep the same rows."""
+def _sane_first_top_k(spark):
     from mozart_etl_spark.operators import similarity as S
 
-    df = spark.createDataFrame(
-        [(i, [float(i), 1.0, -2.0]) for i in range(6)], "id INT, v ARRAY<DOUBLE>"
+    df = spark.range(24).selectExpr(
+        "id % 3 AS p",
+        "id",
+        "array(CAST(id AS DOUBLE), 1.0D, -2.0D) AS v",
+        "CAST(id AS DOUBLE) AS n",
     )
+    scored = df.select("p", "id", "n", S._dot(F.col("v"), F.col("v")).alias("score"))
+    return S._top_k(scored, "p", "score", "id", 2, ("n",))
+
+
+def _optimized(df) -> list[str]:
+    return df._jdf.queryExecution().optimizedPlan().toString().splitlines()
+
+
+def test_filter_on_non_partition_column_stays_above_window(spark):
+    """Spark pushes a filter below a Window only on partition columns;
+    the ``_ok`` cut reads the ranking's flag and rank, so it must stay
+    above the Window, where it sees every row the Window ranked."""
+    w = Window.partitionBy("p").orderBy(F.desc("ok"), F.desc("x"))
+    ranked = (
+        spark.range(40)
+        .selectExpr("id % 4 AS p", "id AS x", "id % 3 <> 0 AS ok")
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("ok") & (F.col("rn") <= 2))
+    )
+    for df, flag in ((ranked, "ok#"), (_sane_first_top_k(spark), "_ok#")):
+        plan = _optimized(df)
+        window = next(i for i, line in enumerate(plan) if "Window [" in line)
+        flag_filters = [i for i, line in enumerate(plan) if "Filter" in line and flag in line]
+        assert flag_filters and max(flag_filters) < window, "\n".join(plan)
+    ok_rows = [(x % 4, x) for x in range(40) if x % 3]
+    want = [(p, x) for p, x in ok_rows if sum(q == p and y > x for q, y in ok_rows) < 2]
+    assert sorted((r["p"], r["x"]) for r in ranked.collect()) == sorted(want)
+
+
+def test_fold_referenced_twice_is_not_inlined(spark):
+    """The score fold sits in its own Project because the Project above
+    reads it twice (the score and the ``_ok`` flag); CollapseProject
+    inlining it would evaluate the fold once per reference."""
+    from mozart_etl_spark.operators import similarity as S
+
+    df = spark.range(6).selectExpr("id", "array(CAST(id AS DOUBLE), 1.0D, -2.0D) AS v")
     scored = df.select("id", S._dot(F.col("v"), F.col("v")).alias("score"))
-    cond = S._score_is_sane(F.col("score"))
+    flagged = scored.select("id", "score", S._score_is_sane(F.col("score")).alias("ok"))
 
     def folds(out) -> int:
-        return out._jdf.queryExecution().optimizedPlan().toString().count("zip_with(")
+        return "\n".join(_optimized(out)).count("zip_with(")
 
-    pinned = S._filter_once(scored, cond)
-    plain = scored.filter(cond)
-    assert folds(pinned) == 1
-    assert folds(plain) > 1
-    assert sorted(pinned.collect()) == sorted(plain.collect())
+    assert folds(flagged) == 1
+    assert folds(_sane_first_top_k(spark)) == 1
+    assert sorted((r["id"], r["score"]) for r in flagged.collect()) == [
+        (i, i * i + 5.0) for i in range(6)
+    ]
 
 
 # --- parquet reads with a supplied schema ----------------------------
