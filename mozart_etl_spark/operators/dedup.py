@@ -8,8 +8,10 @@ Design for 100 TB:
   shuffle.
 - **ngram_jaccard_pairs** — inverted-index self-join keyed by shingle.
   Exact, but fanout is quadratic in per-shingle document frequency, so
-  it is the *verification* oracle, not the discovery path. High-DF
-  shingles (boilerplate) should be dropped via ``max_df`` at scale.
+  it is the *verification* oracle, not the discovery path. At scale,
+  MinHash-LSH candidates feed ``jaccard_verify_pairs`` instead: a
+  document-frequency cap cannot bind without losing true pairs
+  (COVERAGE.md, sf1.0).
 - **minhash_lsh_pairs** — the discovery path: constant-size signature
   per doc (num_perm minima), banded into LSH buckets; candidate pairs
   come only from shared buckets, so the join is equi-join-shaped and
@@ -44,6 +46,18 @@ _MERSENNE_31 = (1 << 31) - 1
 #: multi-GB allocation. Slicing is exact: min (minhash) and integer
 #: sum (simhash votes) are associative, so output is bit-identical.
 _FOLD_SLICE = 1 << 17
+
+#: MinHash banding resolution (:func:`minhash_lsh_params`): pair recall
+#: the bands must reach at the threshold, the starting band length r,
+#: and the band-count cap that forces r to walk back.
+_MINHASH_RECALL = 0.98
+_MINHASH_ROWS_PER_BAND = 3
+_MINHASH_MAX_BANDS = 64
+
+#: Propagation-round cap of :func:`connected_components`. The bank's
+#: near-dup graphs converge in 1-2 rounds; a component whose diameter
+#: needs more raises instead of returning partial labels.
+_CC_MAX_ROUNDS = 25
 
 
 def _gram_sql(n: int) -> str:
@@ -225,25 +239,19 @@ def exact_collapse(
     return reps, star
 
 
-def _word_shingles(
-    df: DataFrame, text_col: str, id_col: str, n: int, fingerprint: bool = False
-) -> DataFrame:
+def _word_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     """Distinct n-gram word shingles per document: (id, shingle).
 
     Pure JVM expressions: split -> sequence -> transform(slice) ->
     explode. Documents with fewer than n words produce no shingles.
-    With ``fingerprint=True`` the shingle column is its 16-byte md5
-    instead of the n-word text — the shingle is only ever a
-    join/distinct KEY downstream, so hashing it shrinks every shuffle
-    it enters (including the distinct here, applied after the hash);
-    collision odds are ~n_shingles^2 / 2^128, negligible at any
-    corpus size."""
+    The shingle column is the 16-byte md5 of the n-word text, not the
+    text: the shingle is only ever a join/distinct KEY downstream, so
+    hashing it shrinks every shuffle it enters (including the distinct
+    here, applied after the hash); collision odds are
+    ~n_shingles^2 / 2^128, negligible at any corpus size."""
     words = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != "")
     base = df.select(F.col(id_col).alias("doc_id"), words.alias("w")).filter(F.size("w") >= n)
-    gram = _gram_sql(n)
-    if fingerprint:
-        gram = f"unhex(md5({gram}))"
-    ngrams = F.expr(f"transform(sequence(1, size(w) - {n - 1}), i -> {gram})")
+    ngrams = F.expr(f"transform(sequence(1, size(w) - {n - 1}), i -> unhex(md5({_gram_sql(n)})))")
     return base.select("doc_id", F.explode(ngrams).alias("shingle")).distinct()
 
 
@@ -252,38 +260,22 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    max_df: int | None = None,
-    fingerprint: bool = False,
 ) -> DataFrame:
     """Exact Jaccard similarity for every document pair sharing at
     least one n-gram shingle.
 
     Output: (doc_a, doc_b, jaccard rounded 4dp, _raw_jaccard) with
-    doc_a < doc_b. ``max_df`` drops shingles appearing in more than
-    that many documents (kills boilerplate-driven join fanout at
-    scale; None = keep all, matching the exact oracle).
-    ``fingerprint=True`` (the 100 TB setting) keys the inverted-index
-    self-join and the shingle-distinct shuffle on 16-byte md5s instead
-    of n-word strings — identical pairs and Jaccards (the shingle text
-    never leaves the operator), equivalence pinned in tests.
+    doc_a < doc_b. The inverted-index self-join and the
+    shingle-distinct shuffle are keyed on 16-byte shingle md5s, never
+    n-word strings (the shingle text never leaves the operator).
     """
-    sh = _word_shingles(df, text_col, id_col, n, fingerprint=fingerprint)
-    if max_df is not None:
-        # the surviving-shingle set scales with the corpus — no
-        # broadcast hint; AQE picks the strategy (a semi join on the
-        # shuffle path at scale)
-        keep = sh.groupBy("shingle").count().filter(F.col("count") <= max_df).select("shingle")
-        sh = sh.join(keep, "shingle", "left_semi")
+    sh = _word_shingles(df, text_col, id_col, n)
     # Materialization barrier: the shingle table feeds the size
     # aggregation and BOTH self-join sides; without it each consumer
     # re-runs the corpus scan + explode + distinct (8 scans in the
     # observed plan — Catalyst reuses nothing across the references).
-    # Under fingerprint=True (the at-scale setting, and what every
-    # registered query passes) the checkpointed frame is (doc_id,
-    # 16-byte key) — tiny next to the corpus it replaces; under
-    # fingerprint=False it materializes the n-word shingle STRINGS
-    # (~n x corpus text), so large corpora should always fingerprint.
-    # Lineage-truncated blocks are released by
+    # The checkpointed frame is (doc_id, 16-byte key) — tiny next to
+    # the corpus it replaces. Lineage-truncated blocks are released by
     # the ContextCleaner when the plan is GC'd (same pattern as the
     # MinHash signature table).
     sh = sh.localCheckpoint(eager=False)
@@ -318,7 +310,6 @@ def jaccard_verify_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    fingerprint: bool = True,
 ) -> DataFrame:
     """Exact Jaccard for a GIVEN candidate pair set — the verification
     stage of the at-scale near-dup pipeline (MinHash-LSH candidates ->
@@ -335,14 +326,14 @@ def jaccard_verify_pairs(
     cost — on boilerplate-dense or low-vocabulary corpora that
     approaches all-pairs, and df-capping cannot bind without losing
     true pairs (measured on the sf1.0 stress corpus: ~29k distinct
-    shingles over 50k docs put 99.99% of join mass at df>20, so
-    max_df both misses the mass and would destroy the signal —
+    shingles over 50k docs put 99.99% of join mass at df>20, so a
+    df cap both misses the mass and would destroy the signal —
     COVERAGE.md). Restricting to LSH candidates makes the cost
     Omega(sum |shingles(doc_a)| over candidate pairs): linear in the
     candidate volume the banding already bounded.
 
     Shuffle shape: the shingle table is built once
-    (fingerprint-keyed 16-byte shingles at the default), the candidate
+    (16-byte shingle md5s), the candidate
     pairs join doc_a's shingles by id, and the intersection is one
     equi-join on (doc_b, shingle) + a per-pair count — every shuffle
     is keyed by ids/fingerprints, never by text.
@@ -375,9 +366,7 @@ def jaccard_verify_pairs(
     pruned = df.join(
         cand_ids.select(F.col("doc_id").alias(id_col)), id_col, "left_semi"
     )
-    sh = _word_shingles(pruned, text_col, id_col, n, fingerprint=fingerprint).localCheckpoint(
-        eager=False
-    )
+    sh = _word_shingles(pruned, text_col, id_col, n).localCheckpoint(eager=False)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     sa = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     sb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
@@ -409,18 +398,15 @@ def jaccard_verify_pairs(
     )
 
 
-def _span_key(fingerprint: bool):
-    """Shuffle key for span-keyed stages: the raw n-word text (exact,
-    what the DuckDB oracle compares) or its 128-bit md5 fingerprint —
-    the 100 TB path, where the shuffle carries 16-byte keys instead of
-    n-word strings. Collision odds at corpus scale are
-    ~n_spans^2 / 2^128, negligible; the fingerprint partitions spans
-    identically to the text (same key ⇔ same span up to collisions),
-    so both paths return the same rows.
+def _span_key():
+    """Shuffle key for span-keyed stages: the 128-bit md5 of the
+    n-word span, so shuffles carry 16-byte keys instead of n-word
+    strings. Collision odds at corpus scale are ~n_spans^2 / 2^128,
+    negligible; the md5 partitions spans identically to the text
+    (same key ⇔ same span up to collisions), so the rows equal those
+    of the text-keyed DuckDB oracle.
     """
-    if fingerprint:
-        return F.unhex(F.md5(F.col("span")))
-    return F.col("span")
+    return F.unhex(F.md5(F.col("span")))
 
 
 def _span_occurrences(
@@ -450,7 +436,6 @@ def repeated_spans(
     id_col: str = "doc_id",
     n: int = 10,
     min_df: int = 2,
-    fingerprint: bool = False,
 ) -> DataFrame:
     """Cross-document repeated spans: every word ``n``-gram occurrence
     whose span text appears in at least ``min_df`` DISTINCT documents
@@ -463,18 +448,14 @@ def repeated_spans(
 
     Scale shape: one shuffle keyed on the span for the distinct-doc
     frequency, one semi join back to the positioned occurrences —
-    never a pairwise document comparison. With ``fingerprint=True``
-    (the 100 TB setting) the shuffle KEY shrinks to the 16-byte md5 of
-    the span: the frequency aggregation moves fingerprints only, while
-    the semi join's probe side still carries the span text as row
-    payload because it is this operator's output (the removal pass,
-    which doesn't output the text, drops it before every shuffle).
-    Output rows are identical either way, so the same oracle certifies
-    both paths.
+    never a pairwise document comparison. The shuffle KEY is the
+    16-byte md5 of the span: the frequency aggregation moves
+    fingerprints only, while the semi join's probe side still carries
+    the span text as row payload because it is this operator's output
+    (the removal pass, which doesn't output the text, drops it before
+    every shuffle).
     """
-    occ = _span_occurrences(df, text_col, id_col, n).withColumn(
-        "_key", _span_key(fingerprint)
-    )
+    occ = _span_occurrences(df, text_col, id_col, n).withColumn("_key", _span_key())
     shared = (
         occ.groupBy("_key")
         .agg(F.count_distinct("doc_id").alias("_df"))
@@ -490,7 +471,6 @@ def remove_repeated_spans(
     id_col: str = "doc_id",
     n: int = 10,
     min_df: int = 2,
-    fingerprint: bool = False,
 ) -> DataFrame:
     """The REMOVAL pass completing exact substring dedup: every
     occurrence of a cross-document repeated span except its globally
@@ -526,8 +506,7 @@ def remove_repeated_spans(
     Window.partitionBy(span) would pin every occurrence of the hot
     span to one task with no recourse). The span TEXT never enters a
     shuffle on this path: occurrences shuffle as (key, doc_id, pos)
-    where key is the 16-byte md5 under ``fingerprint=True`` (the
-    100 TB setting; identical output, same oracle). Covered word
+    where key is the 16-byte md5 of the span. Covered word
     indices aggregate to ONE set-valued row per affected document
     (bounded by repeat volume, not corpus size) and join back to the
     document's word ARRAY; the cut itself is a per-row ``filter`` over
@@ -549,7 +528,7 @@ def remove_repeated_spans(
 
     occ = (
         _span_occurrences(df, text_col, id_col, n)
-        .withColumn("_key", _span_key(fingerprint))
+        .withColumn("_key", _span_key())
         .select("doc_id", "pos", "_key")  # span text stays out of the shuffles
     )
     stats = (
@@ -714,20 +693,16 @@ def minhash_signatures(
     return hdf.mapInPandas(fold, out_schema)
 
 
-def minhash_lsh_params(
-    threshold: float,
-    target_recall: float = 0.98,
-    rows_per_band: int = 3,
-    max_bands: int = 64,
-) -> tuple[int, int]:
+def minhash_lsh_params(threshold: float) -> tuple[int, int]:
     """Resolve (num_perm, bands) for MinHash-LSH banding from the
     Jaccard threshold — the banding twin of
     :func:`~mozart_etl_spark.operators.similarity.auto_lsh_params`.
 
     One band of r signature rows collides for a pair of Jaccard j with
     probability ``j^r``; B bands reach pair recall ``1 - (1-j^r)^B``,
-    so the smallest B meeting ``target_recall`` at ``j = threshold``
-    is ``ceil(log(1-R) / log(1-t^r))`` and ``num_perm = r*B``.
+    so the smallest B meeting :data:`_MINHASH_RECALL` at
+    ``j = threshold`` is ``ceil(log(1-R) / log(1-t^r))`` and
+    ``num_perm = r*B``.
 
     Why r matters more than B at scale: r is the ONLY knob bounding
     candidate volume from NON-pairs. An unrelated pair with background
@@ -738,15 +713,17 @@ def minhash_lsh_params(
     the adversarial case): r=2/B=32 enumerates 40.7M pre-dedup pairs
     (max bucket 879), r=3/B=30 enumerates 437k (93x less, max bucket
     285), r=4/B=16 7.8k — while per-TRUE-pair recall at j=0.5 is
-    0.9999 / 0.982 / 0.645. r=3 is the default: the smallest r whose
-    background collision odds shrink cubically, with recall restored
-    by band count instead of shorter bands.
+    0.9999 / 0.982 / 0.645. r=3 (:data:`_MINHASH_ROWS_PER_BAND`) is
+    the start: the smallest r whose background collision odds shrink
+    cubically, with recall restored by band count instead of shorter
+    bands.
 
-    If the recall target would need more than ``max_bands`` bands, r
-    is walked back toward 2 (shorter bands collide more); if even
-    (r=2, max_bands) misses the target, raises ValueError naming the
-    gap — silently under-recalling or exploding band count are both
-    worse than making the caller choose.
+    If the recall target would need more than
+    :data:`_MINHASH_MAX_BANDS` bands, r is walked back toward 2
+    (shorter bands collide more); if even (r=2, max bands) misses the
+    target, raises ValueError naming the gap — silently under-recalling
+    or exploding band count are both worse than making the caller
+    choose explicit (num_perm, bands).
     """
     import math
 
@@ -758,18 +735,17 @@ def minhash_lsh_params(
             return 1
         if p <= 0.0:
             return None
-        b = max(1, math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - p)))
-        return b if b <= max_bands else None
+        b = max(1, math.ceil(math.log(1.0 - _MINHASH_RECALL) / math.log(1.0 - p)))
+        return b if b <= _MINHASH_MAX_BANDS else None
 
-    for r in range(rows_per_band, 1, -1):
+    for r in range(_MINHASH_ROWS_PER_BAND, 1, -1):
         bands = bands_for(r)
         if bands is not None:
             return r * bands, bands
     raise ValueError(
-        f"minhash_lsh_params: recall target {target_recall} at threshold "
-        f"{threshold} needs more than max_bands={max_bands} bands even at "
-        "rows_per_band=2; pass explicit (num_perm, bands) or lower "
-        "target_recall"
+        f"minhash_lsh_params: recall target {_MINHASH_RECALL} at threshold "
+        f"{threshold} needs more than max_bands={_MINHASH_MAX_BANDS} bands even at "
+        "rows_per_band=2; pass explicit (num_perm, bands)"
     )
 
 
@@ -779,10 +755,8 @@ def minhash_lsh_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     num_perm: int = 64,
-    bands: int | str = 16,
+    bands: int = 16,
     seed: int = 42,
-    threshold: float | None = None,
-    target_recall: float = 0.98,
     max_bucket_size: int | None = None,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
@@ -800,19 +774,9 @@ def minhash_lsh_pairs(
     Output: (doc_a, doc_b, est_jaccard) with doc_a < doc_b, one row
     per candidate pair (deduped across bands). The candidate join is
     an equi-join on (band_id, band_hash) — no all-pairs comparison.
-
-    ``bands="auto"`` resolves BOTH (num_perm, bands) from
-    ``threshold`` (required then) via :func:`minhash_lsh_params`
-    (``num_perm`` is ignored): band length r bounds the quadratic
-    within-bucket enumeration of NON-pairs (background agreement
-    collides per band with b^r), band count restores the recall
-    target at the threshold. The certified dedup edge chain passes
-    threshold=0.5 -> (90, 30): r=3, pair recall 0.982 at j=0.5.
+    :func:`minhash_lsh_params` resolves (num_perm, bands) from a
+    Jaccard threshold.
     """
-    if bands == "auto":
-        if threshold is None:
-            raise ValueError('bands="auto" requires threshold')
-        num_perm, bands = minhash_lsh_params(threshold, target_recall)
     if num_perm % bands != 0:
         raise ValueError("num_perm must be divisible by bands")
     # Materialization barrier: the signature table is tiny (num_perm*8
@@ -1034,8 +998,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iter: int = 25,
-    mode: str = "label",
     nodes: DataFrame | None = None,
 ) -> DataFrame:
     """Connected components by iterative min-label propagation: the
@@ -1047,7 +1009,8 @@ def connected_components(
     anyway); every round each node then takes the min of its own
     label and its neighbors' labels, until a round changes nothing.
     Convergence needs at most ``diameter`` rounds — near-dup clusters
-    are small and dense, so a handful in practice. Per round: one
+    are small and dense, so a handful in practice; a component that
+    needs more than :data:`_CC_MAX_ROUNDS` raises. Per round: one
     equi-join + one partial-aggregable groupBy (shuffles on node id
     only), with ``localCheckpoint`` truncating the lineage so plan
     size stays constant across iterations; the previous label rides
@@ -1056,22 +1019,6 @@ def connected_components(
     guide §5 — no driver-side probe job at all: each round is exactly
     ONE job, and the driver reads a scalar metric the propagation job
     already computed).
-
-    ``mode="pointer"`` adds a pointer-jumping shortcut to every round:
-    after propagation each node also takes its LABEL's label
-    (``lab[u] <- min(lab[u], lab[lab[u]])`` — sound because labels are
-    always node ids in the same component and ``lab[x] <= x``, so the
-    jump is monotone toward the component min). Shortcutting roughly
-    doubles the propagated distance per round, so a diameter-d
-    component converges in O(log d) rounds instead of O(d) — the
-    variant for graphs with LONG similarity chains (e.g. 100 TB
-    web-crawl near-dup graphs), at the price of one extra unique-keyed
-    self-join per round (skew on hot labels is AQE-splittable; the
-    lookup side has one row per node). Identical output to
-    ``mode="label"``, pinned against a union-find replica in
-    tests/test_corpus_properties.py and on the driver edge set in
-    tests/test_llmops_queries.py. Default stays ``"label"``: near-dup
-    clusters are small and dense, where the extra join never pays.
 
     Output: (node, component) where component = min node id reachable.
     By default nodes not in any edge are ABSENT from the output — the
@@ -1095,8 +1042,6 @@ def connected_components(
     can't name a document — engine NULL-identity policy: sequence and
     identity-keyed operators drop NULL identities explicitly).
     """
-    if mode not in ("label", "pointer"):
-        raise ValueError(f"mode must be 'label' or 'pointer', got {mode!r}")
     und = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -1140,22 +1085,8 @@ def connected_components(
     # scale a fuse wastes up to unroll-1 full propagation rounds past
     # the fixpoint.
     converged = False
-    for _ in range(max_iter):
+    for _ in range(_CC_MAX_ROUNDS):
         new_labels = one_round(labels)
-        if mode == "pointer":
-            # materialize once: the shortcut self-join reads the
-            # propagated labels on both sides and Catalyst reuses
-            # nothing across the two references
-            new_labels = new_labels.localCheckpoint(eager=True)
-            jump = new_labels.select(
-                F.col("node").alias("lab"), F.col("lab").alias("_lab2")
-            )
-            # least() skips NULLs, so a label whose node row is
-            # somehow absent (cannot happen — labels are node ids)
-            # degrades to the un-jumped label instead of NULL
-            new_labels = new_labels.join(jump, "lab", "left").select(
-                "node", F.least("lab", "_lab2").alias("lab"), "_old"
-            )
         # the eager checkpoint IS the round's action; the observed
         # metric fills during it, so reading `changed` schedules no
         # extra job (None = empty label table = vacuously converged)
@@ -1172,16 +1103,14 @@ def connected_components(
             converged = True
             break
     if not converged:
-        # exhausting max_iter without a fixed point means the labels
-        # are PARTIALLY propagated — silently returning them would
-        # split one true component into several with no error signal.
-        # Components of diameter > max_iter (long similarity chains)
-        # need mode="pointer" (O(log diameter) rounds) or a higher
-        # max_iter.
+        # exhausting the round cap without a fixed point means the
+        # labels are PARTIALLY propagated — silently returning them
+        # would split one true component into several with no error
+        # signal. Components of larger diameter (long similarity
+        # chains) need pointer jumping (SCALING.md).
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            "iterations (a component's graph diameter exceeds it); "
-            'use mode="pointer" or raise max_iter'
+            f"connected_components did not converge in _CC_MAX_ROUNDS="
+            f"{_CC_MAX_ROUNDS} rounds (a component's graph diameter exceeds it)"
         )
     out = labels.select(F.col("node"), F.col("lab").alias("component"))
     if nodes is not None:

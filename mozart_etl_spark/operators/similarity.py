@@ -553,15 +553,18 @@ def lsh_knn(
     return _rank_neighbors(joined, k)
 
 
-def auto_lsh_params(
-    n_rows: int,
-    threshold: float,
-    target_occupancy: int = 32,
-    target_recall: float = 0.95,
-    min_planes: int = 4,
-    max_planes: int = 16,
-    max_tables: int = 32,
-) -> tuple[int, int]:
+#: :func:`auto_lsh_params` tuning: expected rows per bucket, the pair
+#: recall the tables must reach at the threshold, the plane range (the
+#: bucket weight fold packs one bit per plane into an int64), and the
+#: table cap that bounds candidate generation.
+_LSH_TARGET_OCCUPANCY = 32
+_LSH_RECALL = 0.95
+_LSH_MIN_PLANES = 4
+_LSH_MAX_PLANES = 16
+_LSH_MAX_TABLES = 32
+
+
+def auto_lsh_params(n_rows: int, threshold: float) -> tuple[int, int]:
     """Resolve (n_planes, n_tables) from corpus size and similarity
     threshold — the knob a FIXED banding configuration lacks at scale.
 
@@ -571,34 +574,34 @@ def auto_lsh_params(
     for the fixed 6x6 configuration (SCALING.md). Two closed forms fix
     the parameters instead of guesswork:
 
-    - planes: ``ceil(log2(n_rows / target_occupancy))`` keeps expected
-      bucket occupancy ~constant as the corpus grows (each extra plane
-      doubles the bucket count), clamped to [min_planes, max_planes]
-      (the bucket weight fold packs one bit per plane into an int64).
+    - planes: ``ceil(log2(n_rows / _LSH_TARGET_OCCUPANCY))`` keeps
+      expected bucket occupancy ~constant as the corpus grows (each
+      extra plane doubles the bucket count), clamped to
+      [_LSH_MIN_PLANES, _LSH_MAX_PLANES].
     - tables: per-plane collision odds for angle θ = acos(threshold)
       are ``p = 1 - θ/π`` (random-hyperplane LSH), so one r-plane
       table catches a qualifying pair with ``p^r`` and T tables reach
       recall ``1 - (1 - p^r)^T``; the smallest T meeting
-      ``target_recall`` is ``ceil(log(1-recall) / log(1-p^r))`` —
+      ``_LSH_RECALL`` is ``ceil(log(1-recall) / log(1-p^r))`` —
       longer signatures are compensated with more tables instead of
       silently trading recall away.
 
-    Cost containment (``max_tables``): each table is a full bucket
+    Cost containment (``_LSH_MAX_TABLES``): each table is a full bucket
     self-join, so the table count is a direct multiplier on candidate
     generation. A low threshold (wide angle -> small per-table
     collision odds) can demand hundreds of tables for the recall
     target — at threshold 0.5 the raw formula wants ~2000 — which
     would EXPLODE cost instead of containing it. Tables are therefore
-    clamped to ``max_tables``; if the clamp alone cannot reach the
+    clamped to ``_LSH_MAX_TABLES``; if the clamp alone cannot reach the
     recall target, planes are walked back below the occupancy-optimal
     value (shorter signatures -> higher per-table odds) until it can.
     Fewer planes means fuller buckets — the quadratic term returns —
-    so the walk-back floor is ``min_planes``; if even
-    (min_planes, max_tables) misses the recall target the function
+    so the walk-back floor is ``_LSH_MIN_PLANES``; if even
+    (min planes, max tables) misses the recall target the function
     raises ValueError naming the gap, because silently returning a
     configuration that is either unaffordable or under-recall would
     hide exactly the failure this resolver exists to prevent. Pick
-    explicit parameters (or a lower ``target_recall``) in that regime.
+    explicit parameters in that regime.
 
     At the driver corpus (~500-2k vectors, threshold 0.95) this
     resolves to ~(6, 4) — the certified explicit configuration's
@@ -611,29 +614,30 @@ def auto_lsh_params(
 
     def tables_for(planes: int) -> int | None:
         """Smallest T with recall 1-(1-p^planes)^T >= target, or None
-        if that T would exceed max_tables (p^planes too small)."""
+        if that T would exceed the table cap (p^planes too small)."""
         per_table = p**planes
         if per_table >= 1.0:  # threshold 1.0 -> p == 1, one table suffices
             return 1
         if per_table <= 0.0:  # threshold -1.0 -> p == 0: no recall possible
             return None
-        t = max(1, math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - per_table)))
-        return t if t <= max_tables else None
+        t = max(1, math.ceil(math.log(1.0 - _LSH_RECALL) / math.log(1.0 - per_table)))
+        return t if t <= _LSH_MAX_TABLES else None
 
-    planes = min_planes
-    if n_rows > target_occupancy:
-        planes = max(min_planes, min(max_planes, math.ceil(math.log2(n_rows / target_occupancy))))
-    # occupancy-optimal planes first; walk back toward min_planes only
+    lo, hi = _LSH_MIN_PLANES, _LSH_MAX_PLANES
+    planes = lo
+    if n_rows > _LSH_TARGET_OCCUPANCY:
+        planes = max(lo, min(hi, math.ceil(math.log2(n_rows / _LSH_TARGET_OCCUPANCY))))
+    # occupancy-optimal planes first; walk back toward the floor only
     # as far as the recall target forces
-    for cand_planes in range(planes, min_planes - 1, -1):
+    for cand_planes in range(planes, lo - 1, -1):
         tables = tables_for(cand_planes)
         if tables is not None:
             return cand_planes, tables
     raise ValueError(
-        f"auto_lsh_params: recall target {target_recall} at threshold {threshold} "
-        f"needs more than max_tables={max_tables} tables even at min_planes="
-        f"{min_planes} (per-table collision odds {p**min_planes:.3g}); pass "
-        "explicit (n_planes, n_tables) or lower target_recall"
+        f"auto_lsh_params: recall target {_LSH_RECALL} at threshold {threshold} "
+        f"needs more than max_tables={_LSH_MAX_TABLES} tables even at min_planes="
+        f"{lo} (per-table collision odds {p**lo:.3g}); pass "
+        "explicit (n_planes, n_tables)"
     )
 
 

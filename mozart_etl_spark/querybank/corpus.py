@@ -673,13 +673,11 @@ def corpus_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "distinct documents, with its 1-based word position — what a "
     "removal pass cuts or a training-set audit reports. One "
     "span-keyed distinct-doc frequency shuffle + a semi join back; "
-    "never an all-pairs comparison. Runs fingerprint=True — the "
-    "100 TB path where shuffle KEYS are the 16-byte md5 of the span "
-    "rather than the 10-word string (the semi join's probe side still "
-    "carries the span text as payload, since the text is this query's "
-    "output); rows are identical either way, so this certifies the "
-    "scale path against the exact text-keyed oracle (equivalence also "
-    "pinned in tests).",
+    "never an all-pairs comparison. Shuffle KEYS are the 16-byte md5 "
+    "of the span rather than the 10-word string (the semi join's probe "
+    "side still carries the span text as payload, since the text is "
+    "this query's output), certified against the exact text-keyed "
+    "oracle.",
     oracle="""
         WITH w AS (
             SELECT doc_id, list_filter(regexp_split_to_array(trim(text), '\\s+'),
@@ -715,7 +713,7 @@ def corpus_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, sf_dir, "documents", fan_out=True)
     return dedup_ops.repeated_spans(
-        docs, text_col="text", id_col="doc_id", n=10, min_df=2, fingerprint=True
+        docs, text_col="text", id_col="doc_id", n=10, min_df=2
     )
 
 
@@ -730,9 +728,9 @@ def corpus_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     "whatever the corpus size. The first-occurrence election is a "
     "partial-aggregable min(struct) + equi-join (map-side combine "
     "absorbs a pathologically hot boilerplate span; AQE skew-join can "
-    "split the join a ranking window could not), and fingerprint=True "
-    "keys the span shuffles on 16-byte md5s — the 100 TB path, "
-    "certified here against the exact text-keyed oracle.",
+    "split the join a ranking window could not), and the span "
+    "shuffles are keyed on 16-byte md5s, certified here against the "
+    "exact text-keyed oracle.",
     oracle="""
         WITH w AS (
             -- one row per DISTINCT doc_id (r11 duplicate-key axis:
@@ -804,5 +802,5 @@ def corpus_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, sf_dir, "documents", fan_out=True)
     return dedup_ops.remove_repeated_spans(
-        docs, text_col="text", id_col="doc_id", n=10, min_df=2, fingerprint=True
+        docs, text_col="text", id_col="doc_id", n=10, min_df=2
     )

@@ -102,9 +102,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents", fan_out=True)
-    pairs = dedup_ops.ngram_jaccard_pairs(
-        docs, text_col="text", id_col="doc_id", n=3, fingerprint=True
-    )
+    pairs = dedup_ops.ngram_jaccard_pairs(docs, text_col="text", id_col="doc_id", n=3)
     return pairs.orderBy(F.desc("_raw_jaccard"), F.asc("doc_a"), F.asc("doc_b")).limit(20).drop(
         "_raw_jaccard"
     )
@@ -786,11 +784,11 @@ def knn_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _jaccard_edges(docs: DataFrame) -> DataFrame:
     """The certified at-scale Jaccard>=0.5 edge generator shared by
-    dedup_components / dedup_canonical (the pipeline measured in
-    tools/scale_knobs.py, r6; banding re-resolved r7 after the sf10
-    second-decade probe): MinHash-LSH candidate pairs with
-    bands="auto" at threshold 0.5 -> (num_perm=90, bands=30, r=3) via
-    minhash_lsh_params — a true j=0.5 pair collides in >=1 of the 30
+    dedup_components / dedup_canonical (measured against the exact
+    edge set in r6, COVERAGE.md; banding re-resolved r7 after the sf10
+    second-decade probe): MinHash-LSH candidate pairs banded at
+    minhash_lsh_params(0.5) -> (num_perm=90, bands=30, r=3) — a true
+    j=0.5 pair collides in >=1 of the 30
     3-row bands with probability 0.982 (vs 0.645 at the r6-measured
     16x4 config), while r=3 keeps the quadratic within-bucket
     enumeration of NON-pairs cubically damped: on the 500k-doc sf10

@@ -23,6 +23,7 @@ JDBC URL forms mirror the reference's connector registry:
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -219,7 +220,11 @@ def extract_table(
 
 
 def test_connection(spark: SparkSession, source: SourceConfig) -> bool:
-    """``SELECT 1`` probe (reference ``base.py:95-103``)."""
+    """``SELECT 1`` probe (reference ``base.py:95-103``).
+
+    Returns ``False`` when the source is unreachable; a probe that
+    raises also warns with the source and the exception, so the cause
+    is not lost in the bool."""
     if source.type == "parquet":
         if "://" in source.path:
             # any Hadoop filesystem (s3a://, file://, …): existence via
@@ -229,14 +234,16 @@ def test_connection(spark: SparkSession, source: SourceConfig) -> bool:
                 p = jvm.org.apache.hadoop.fs.Path(source.path)
                 fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
                 return bool(fs.exists(p))
-            except Exception:
+            except Exception as e:
+                warnings.warn(f"connection probe of {source.path!r} failed: {e}", stacklevel=2)
                 return False
         return os.path.isdir(source.path)
     probe = jdbc_reader(spark, source, f"({probe_sql(source)}) probe")
     try:
         probe.load().collect()
         return True
-    except Exception:
+    except Exception as e:
+        warnings.warn(f"connection probe of {jdbc_url(source)!r} failed: {e}", stacklevel=2)
         return False
 
 

@@ -129,6 +129,32 @@ def test_connection_probe_hadoop_fs(spark):
     )
 
 
+def test_connection_probe_warns_with_cause_when_it_raises(spark, tmp_path):
+    """A probe that raises still answers False (the reference's bool
+    contract) but warns naming the source and the exception; a probe
+    that merely finds nothing answers False without a warning."""
+    import warnings
+
+    missing_db = f"jdbc:derby:{tmp_path / 'no_such_db'}"
+    for source, named, cause in [
+        (SourceConfig(type="jdbc", options={"url": missing_db}), missing_db, "not found"),
+        (
+            SourceConfig(type="parquet", path="noscheme-xyz://h/p"),
+            "noscheme-xyz://h/p",
+            "No FileSystem for scheme",
+        ),
+    ]:
+        with pytest.warns(UserWarning, match="connection probe") as caught:
+            assert R.test_connection(spark, source) is False
+        (w,) = [w for w in caught if "connection probe" in str(w.message)]
+        assert named in str(w.message) and cause in str(w.message)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert not R.test_connection(
+            spark, SourceConfig(type="parquet", path="file:///nonexistent_dir_xyz")
+        )
+
+
 def test_resolve_format_validation():
     assert writers.resolve_format(None) == "parquet"
     assert writers.resolve_format("delta") == "delta"

@@ -555,24 +555,6 @@ def test_repeated_span_discovery_and_removal_semantics(spark):
     assert out[3]["n_removed"] == 0 and out[3]["n_kept"] == 4
 
 
-def test_repeated_span_fingerprint_path_equivalent(spark, sf_dir):
-    """fingerprint=True (shuffles keyed on the 16-byte md5 of the
-    span — the 100 TB path) must return exactly the rows of the
-    text-keyed path, for both discovery and removal, on real corpus
-    data."""
-    from mozart_etl_spark.operators.dedup import remove_repeated_spans, repeated_spans
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    a = repeated_spans(docs, n=10, min_df=2, fingerprint=False)
-    b = repeated_spans(docs, n=10, min_df=2, fingerprint=True)
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
-    assert a.count() > 0  # non-vacuous: sf data does contain repeats
-
-    ra = remove_repeated_spans(docs, n=10, min_df=2, fingerprint=False)
-    rb = remove_repeated_spans(docs, n=10, min_df=2, fingerprint=True)
-    assert ra.exceptAll(rb).isEmpty() and rb.exceptAll(ra).isEmpty()
-
-
 def test_repeated_span_removal_survives_pathological_hot_span(spark):
     """Skew stress for the fused election: ONE boilerplate span
     occurs in ~90% of documents (the web-crawl header shape). The
@@ -614,7 +596,7 @@ def test_repeated_span_removal_survives_pathological_hot_span(spark):
         .alias("text"),
     )
 
-    out = remove_repeated_spans(docs, n=5, min_df=2, fingerprint=True)
+    out = remove_repeated_spans(docs, n=5, min_df=2)
     buf = io.StringIO()
     with redirect_stdout(buf):
         out.explain("formatted")
@@ -632,20 +614,6 @@ def test_repeated_span_removal_survives_pathological_hot_span(spark):
     # non-boilerplate docs (all-unique words) are untouched
     cold = [d for d in range(n) if d % 10 >= 9]
     assert all(rows[d]["n_removed"] == 0 and rows[d]["n_kept"] == 5 for d in cold)
-
-
-def test_ngram_jaccard_fingerprint_path_equivalent(spark, sf_dir):
-    """fingerprint=True (inverted-index self-join keyed on 16-byte
-    md5s — the 100 TB path used by the registered queries) must return
-    exactly the pairs and Jaccards of the text-keyed path on real
-    corpus data."""
-    from mozart_etl_spark.operators.dedup import ngram_jaccard_pairs
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    a = ngram_jaccard_pairs(docs, n=3, fingerprint=False).drop("_raw_jaccard")
-    b = ngram_jaccard_pairs(docs, n=3, fingerprint=True).drop("_raw_jaccard")
-    assert a.count() > 0
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
 
 
 def test_funnel_custom_stage_chains(spark):

@@ -171,8 +171,7 @@ def test_remove_repeated_spans_matches_python_model(spark, texts, n):
     """The three-word alphabet forces heavy span collisions, so every
     example exercises shared spans, overlapping cuts, and whole-doc
     removals — against a brute-force reference that shares no code
-    with the operator. Runs the fingerprint=True path (what the
-    registered queries use)."""
+    with the operator."""
     from mozart_etl_spark.operators.dedup import remove_repeated_spans
 
     df = spark.createDataFrame(
@@ -180,7 +179,7 @@ def test_remove_repeated_spans_matches_python_model(spark, texts, n):
     )
     got = {
         r["doc_id"]: (r["n_kept"], r["n_removed"], r["clean_fp"])
-        for r in remove_repeated_spans(df, n=n, min_df=2, fingerprint=True).collect()
+        for r in remove_repeated_spans(df, n=n, min_df=2).collect()
     }
     assert got == _span_model(texts, n, min_df=2)
 
@@ -224,20 +223,16 @@ def test_global_running_sum_matches_python_model(spark, values):
         min_size=1,
         max_size=20,
     ),
-    st.sampled_from(["label", "pointer"]),
 )
-def test_connected_components_matches_union_find(spark, edges, mode):
-    """Both component modes — min-label propagation and the
-    pointer-jumping variant — must agree with an independent
+def test_connected_components_matches_union_find(spark, edges):
+    """Min-label propagation must agree with an independent
     union-find on arbitrary random graphs — self-loops,
     parallel/reversed edges, long chains (worst-case diameter) and
     multi-component shapes included."""
     from mozart_etl_spark.operators.dedup import connected_components
 
     df = spark.createDataFrame(edges, "doc_a LONG, doc_b LONG")
-    got = {
-        r["node"]: r["component"] for r in connected_components(df, mode=mode).collect()
-    }
+    got = {r["node"]: r["component"] for r in connected_components(df).collect()}
 
     parent = {}
 

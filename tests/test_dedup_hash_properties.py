@@ -156,21 +156,14 @@ def test_arrow_kernels_are_batch_boundary_independent(spark):
 @given(_texts, st.integers(min_value=1, max_value=3))
 def test_ngram_jaccard_pairs_match_python_sets(spark, texts, n):
     """Property: the inverted-index equi-join produces exactly the
-    pairs sharing >=1 shingle with textbook set-Jaccard values, and
-    the 16-byte-fingerprint join path returns the identical result."""
+    pairs sharing >=1 shingle with textbook set-Jaccard values."""
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id INT, text STRING"
     )
-
-    def rows(fingerprint):
-        return {
-            (r["doc_a"], r["doc_b"]): r["jaccard"]
-            for r in D.ngram_jaccard_pairs(df, n=n, fingerprint=fingerprint).collect()
-        }
-
-    got_text = rows(False)
-    got_fp = rows(True)
-    assert got_text == got_fp
+    got = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in D.ngram_jaccard_pairs(df, n=n).collect()
+    }
 
     shingles = {}
     for i, t in enumerate(texts):
@@ -185,7 +178,7 @@ def test_ngram_jaccard_pairs_match_python_sets(spark, texts, n):
             inter = len(shingles[a] & shingles[b])
             if inter:
                 want[(a, b)] = round(inter / len(shingles[a] | shingles[b]), 4)
-    assert got_text == want
+    assert got == want
 
 
 @settings(max_examples=8, deadline=None)
@@ -200,7 +193,7 @@ def test_jaccard_verify_pairs_matches_full_scorer(spark, texts, n):
     )
     full = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in D.ngram_jaccard_pairs(df, n=n, fingerprint=True).collect()
+        for r in D.ngram_jaccard_pairs(df, n=n).collect()
     }
     # candidates: every pair the full scorer found, plus every other
     # doc pair (no shared shingle — the verifier must keep them at 0)
@@ -210,7 +203,7 @@ def test_jaccard_verify_pairs_matches_full_scorer(spark, texts, n):
     cand = spark.createDataFrame(all_pairs, "doc_a INT, doc_b INT")
     got = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in D.jaccard_verify_pairs(df, cand, n=n, fingerprint=True).collect()
+        for r in D.jaccard_verify_pairs(df, cand, n=n).collect()
     }
     assert set(got) == set(all_pairs)  # no candidate dropped
     for p in all_pairs:
@@ -235,15 +228,16 @@ def test_jaccard_verify_pairs_dedups_candidate_rows(spark):
     assert want[0]["jaccard"] == 0.6
 
 
-def test_minhash_lsh_params_closed_forms():
+def test_minhash_lsh_params_closed_forms(monkeypatch):
     """minhash_lsh_params must satisfy the banding recall identity
     1-(1-t^r)^B >= target at r = num_perm/bands, walk r back toward 2
     only when the band cap forces it, and refuse when even (r=2,
-    max_bands) cannot reach the target."""
+    max bands) cannot reach the target."""
     import math
 
     import pytest
 
+    from mozart_etl_spark.operators import dedup
     from mozart_etl_spark.operators.dedup import minhash_lsh_params
 
     for t in (0.5, 0.6, 0.8, 0.9):
@@ -254,7 +248,9 @@ def test_minhash_lsh_params_closed_forms():
     # hand-derived pins (quoted in the docstring and in the certified
     # _jaccard_edges chain)
     assert minhash_lsh_params(0.5) == (90, 30)
-    assert minhash_lsh_params(0.5, 0.95) == (69, 23)
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_MINHASH_RECALL", 0.95)
+        assert minhash_lsh_params(0.5) == (69, 23)
     assert minhash_lsh_params(1.0) == (3, 1)
     # low threshold walks r back to 2 before giving up
     num_perm, bands = minhash_lsh_params(0.3)
@@ -264,11 +260,3 @@ def test_minhash_lsh_params_closed_forms():
         minhash_lsh_params(0.05)
     with pytest.raises(ValueError, match="explicit"):
         minhash_lsh_params(0.0)
-
-
-def test_minhash_lsh_pairs_auto_requires_threshold(spark):
-    import pytest
-
-    df = spark.createDataFrame([(0, "a b c d")], "doc_id INT, text STRING")
-    with pytest.raises(ValueError, match="threshold"):
-        D.minhash_lsh_pairs(df, bands="auto")

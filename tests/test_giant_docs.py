@@ -26,8 +26,9 @@ Measured terrain (scout at 2/16/64 MB per doc, local[32]):
 - Linear-but-single-task costs remain by design: one document's
   shingle explosion/distinct and HOF folds run in one task (~linear
   seconds per 10 MB) — parallelism across documents, not within one.
-  The documented scale path for million-shingle docs is max_df (kills
-  their boilerplate fanout) and pre-chunking.
+  The scale path for million-shingle docs is MinHash-LSH candidates
+  verified by jaccard_verify_pairs (a df cap does not bind at sf1.0 —
+  COVERAGE.md), plus pre-chunking.
 
 The edges profile injects two ~2 MB documents (unique-vocab id 29,
 boilerplate id 38) so every sweep measures all 105 queries against

@@ -37,47 +37,19 @@ def test_embedding_lsh_driver_row_contains_injected_twins(spark, d):
     assert len(rows) >= 20
 
 
-def test_pointer_mode_matches_label_mode_on_driver_edges(spark):
-    """``mode="pointer"`` (pointer-jumping, O(log diameter) rounds)
-    must produce the exact component labeling of the default
-    ``mode="label"`` on the real driver edge set — the Jaccard>=0.5
-    near-dup graph dedup_canonical / dedup_components run on."""
-    from mozart_etl_spark.io import table
-    from mozart_etl_spark.operators import dedup as dedup_ops
-    from pyspark.sql import functions as F
-
-    docs = table(spark, SF_CORRECT, "documents")
-    pairs = dedup_ops.ngram_jaccard_pairs(docs, n=3, fingerprint=True)
-    edges = pairs.filter(F.col("_raw_jaccard") >= 0.5).select("doc_a", "doc_b")
-    lab = {
-        (r["node"], r["component"])
-        for r in dedup_ops.connected_components(edges, mode="label").collect()
-    }
-    ptr = {
-        (r["node"], r["component"])
-        for r in dedup_ops.connected_components(edges, mode="pointer").collect()
-    }
-    assert lab == ptr and len(lab) > 0
-
-
-def test_pointer_mode_converges_on_chain_where_label_mode_cannot(spark):
+def test_components_raise_on_chain_beyond_round_cap(spark, monkeypatch):
     """A path graph of 60 nodes has diameter 59: min-label propagation
     needs ~30 rounds (it spreads the min ~2 hops per round from the
-    free init), so max_iter=8 must hard-error rather than return a
-    partial labeling — while pointer jumping doubles the propagated
-    distance per round and converges well inside the same budget."""
-    from mozart_etl_spark.operators.dedup import connected_components
+    free init), so a round cap of 8 must hard-error rather than return
+    a partial labeling."""
+    from mozart_etl_spark.operators import dedup as dedup_ops
 
+    monkeypatch.setattr(dedup_ops, "_CC_MAX_ROUNDS", 8)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(59)], "doc_a LONG, doc_b LONG"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=8, mode="label")
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(chain, max_iter=8, mode="pointer").collect()
-    }
-    assert got == {i: 0 for i in range(60)}
+        dedup_ops.connected_components(chain)
 
 
 def test_exact_collapse_reps_star_and_min_words(spark):
@@ -162,7 +134,7 @@ def test_jaccard_edges_exact_cluster_is_linear_and_components_exact(spark):
         (r["node"], r["component"])
         for r in connected_components(_jaccard_edges(docs)).collect()
     }
-    exact = ngram_jaccard_pairs(docs, n=3, fingerprint=True)
+    exact = ngram_jaccard_pairs(docs, n=3)
     exact_edges = [
         (r["doc_a"], r["doc_b"])
         for r in exact.collect()

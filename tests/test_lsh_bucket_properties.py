@@ -123,7 +123,7 @@ def test_auto_lsh_params_sawtooth_drift_is_bounded():
       n (the 2x occupancy ceil times one integer table step — the
       smooth part of table growth is the documented price of holding
       recall >= 0.95 while planes lengthen, not drift);
-    - regime boundary: past n = target_occupancy * 2^max_planes the
+    - regime boundary: past n = _LSH_TARGET_OCCUPANCY * 2^_LSH_MAX_PLANES the
       plane cap binds and occupancy grows linearly — the quadratic
       term returns BY DESIGN there (docstring: pick explicit params);
       the drift bounds above only claim the uncapped regime.
@@ -157,18 +157,19 @@ def test_auto_lsh_params_sawtooth_drift_is_bounded():
     assert p1 == p2 == 16  # planes pinned at the cap -> occupancy ~ n
 
 
-def test_auto_lsh_params_table_clamp_and_failure_modes():
+def test_auto_lsh_params_table_clamp_and_failure_modes(monkeypatch):
     """Tables are a direct multiplier on candidate-generation cost
     (each table is a full bucket self-join), so the resolver must (a)
-    never return more than max_tables, (b) trade planes back down —
+    never return more than the table cap, (b) trade planes back down —
     raising per-table collision odds — when the recall target would
     otherwise blow the clamp, and (c) refuse with a named error when
-    even (min_planes, max_tables) cannot reach the target, instead of
+    even (min planes, max tables) cannot reach the target, instead of
     silently returning an unaffordable or under-recall config."""
     import math
 
     import pytest
 
+    from mozart_etl_spark.operators import similarity
     from mozart_etl_spark.operators.similarity import auto_lsh_params
 
     # moderate thresholds on a big corpus: the occupancy-optimal 16
@@ -182,15 +183,18 @@ def test_auto_lsh_params_table_clamp_and_failure_modes():
         assert 4 <= planes < 16  # walked back below the occupancy optimum
         assert 1.0 - (1.0 - p**planes) ** tables >= 0.95
     # tighter clamp binds harder
-    planes_loose, _ = auto_lsh_params(2_000_000, 0.8, max_tables=32)
-    planes_tight, tables_tight = auto_lsh_params(2_000_000, 0.8, max_tables=8)
+    planes_loose, _ = auto_lsh_params(2_000_000, 0.8)
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "_LSH_MAX_TABLES", 8)
+        planes_tight, tables_tight = auto_lsh_params(2_000_000, 0.8)
     assert tables_tight <= 8 and planes_tight <= planes_loose
     # unreachable: p(threshold=-1) == 0 -> no table count ever collides
     with pytest.raises(ValueError, match="max_tables"):
         auto_lsh_params(1_000, -1.0)
-    # unreachable by clamp: even min_planes needs more than max_tables
+    # unreachable by clamp: even min planes needs more than max tables
+    monkeypatch.setattr(similarity, "_LSH_MAX_TABLES", 2)
     with pytest.raises(ValueError, match="explicit"):
-        auto_lsh_params(1_000_000, 0.1, max_tables=2)
+        auto_lsh_params(1_000_000, 0.1)
 
 
 def test_lsh_near_dup_pairs_auto_keeps_twin_recall(spark):

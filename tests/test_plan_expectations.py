@@ -321,3 +321,34 @@ def test_mid_plan_round_robin_counts_against_budget(spark):
 
     scan_adjacent = docs.repartition(8).groupBy("source").count()
     assert _facts(_plan(scan_adjacent))["exchanges"] == 1  # agg exchange only
+
+
+def test_fan_out_rr_ids_discounts_only_a_scan_adjacent_round_robin(spark):
+    """Pins what ``_fan_out_rr_ids`` discounts, on real Spark plans: a
+    repartition(n) directly above a parquet scan, through Filter and
+    Project only, is discounted; the same repartition above a join or
+    an aggregate is a mid-plan shuffle and stays counted."""
+    from pyspark.sql import functions as F
+
+    from mozart_etl_spark.io import table
+
+    docs = table(spark, SF, "documents")
+    scan = (
+        docs.filter(F.col("doc_id") > 3)
+        .select("doc_id", (F.col("doc_id") + 1).alias("x"))
+        .repartition(4)
+    )
+    join = (
+        docs.select("doc_id", "source")
+        .join(docs.select("doc_id", F.length("text").alias("n")), "doc_id")
+        .repartition(4)
+    )
+    agg = docs.groupBy("source").count().repartition(4)
+    rr = re.compile(r"\((\d+)\) Exchange\nInput[^\n]*\nArguments: RoundRobinPartitioning")
+    for shape, df, discounted in [("scan", scan, True), ("join", join, False), ("agg", agg, False)]:
+        plan = _plan(df)
+        rr_ids = set(rr.findall(plan))
+        assert len(rr_ids) == 1, f"{shape}: expected one RoundRobin exchange"
+        if discounted:
+            assert "Filter" in plan and "Project" in plan, f"{shape}: not the pinned shape"
+        assert _fan_out_rr_ids(plan) == (rr_ids if discounted else set()), shape

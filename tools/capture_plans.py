@@ -8,7 +8,10 @@ evidence the optimization rounds commit).
 With no query names, captures the full bank. Streaming queries drain
 to memory first (their plan is the drained LocalTableScan — the
 drain-time streaming plan lives in the checkpoint, not here), so a
-full capture runs the five drains once.
+full capture runs the five drains once. A query that fails to build
+is reported and skipped, and the tool then exits 1 naming every
+failed query, so a scripted before/after diff never silently compares
+fewer plans.
 """
 
 from __future__ import annotations
@@ -37,6 +40,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = querybank.queries()
     todo = names or sorted(qs)
+    failed = []
     for name in todo:
         try:
             df = qs[name](spark, sf_dir)
@@ -49,7 +53,10 @@ def main() -> None:
             print(f"# {name}: {len(buf.getvalue())} chars", file=sys.stderr)
         except Exception as e:
             print(f"# FAIL {name}: {e}", file=sys.stderr)
+            failed.append(name)
     spark.stop()
+    if failed:
+        sys.exit(f"# {len(failed)} of {len(todo)} plans not captured: {' '.join(failed)}")
 
 
 if __name__ == "__main__":
