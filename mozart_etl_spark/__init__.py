@@ -14,12 +14,14 @@ Package map
 - ``io``         testdata/table loaders (incl. ns-timestamp handling)
 - ``querybank``  registry of named queries + DuckDB oracle SQL
 - ``config``     tenant.yaml parsing and ${VAR:default} resolution
+- ``pipeline``   tenant run: extract -> load strategy -> cursor -> models
 - ``plans``      Jinja-subset SQL renderer + model DAG runner
 - ``sources``    JDBC/Parquet source builders (postgres/mysql/oracle)
-- ``sinks``      full-replace / truncate-reload / incremental writers
-- ``state``      incremental high-watermark cursor store
+- ``writers``    full-replace / truncate-reload / merge-upsert / append
+- ``cursor``     incremental high-watermark cursor store
+- ``jobpool``    bounded thread pool for concurrent Spark jobs
+- ``streaming``  file-source streams, availableNow drains, merge sink
 - ``operators``  dedup / similarity / text / multimodal transformers
-- ``functions``  scalar helpers (frozen clock, null-safe concat)
 """
 
 __version__ = "0.1.0"

@@ -353,7 +353,3 @@ def normalize_ts_us(df: DataFrame, col: str = "ts") -> DataFrame:
     if dt == "timestamp_ntz":
         return df.withColumn("ts_us", F.unix_micros(F.col(col).cast("timestamp"))).drop(col)
     return df.withColumn("ts_us", F.unix_micros(F.col(col))).drop(col)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in ALL_TABLES}

@@ -68,33 +68,23 @@ def fraction_threshold_hex(fraction: float) -> str:
     return format(int(fraction * _HASH_SPACE), "08x")
 
 
-def sample_deterministic(
-    df: DataFrame, id_col: str, fraction: float, seed: str = "s0"
-) -> DataFrame:
-    """Reproducible Bernoulli sample: keep rows whose hash draw falls
-    below the fraction cut. Unlike ``DataFrame.sample`` the result is
-    a pure filter — stable under task retries, AQE re-planning, and
-    partition count, and it pushes down to the scan."""
-    cut = fraction_threshold_hex(fraction)
-    return df.filter(hash_bucket_hex(F.col(id_col), seed) < F.lit(cut))
-
-
 def sample_stratified(
     df: DataFrame,
     id_col: str,
     strata_col: str,
     fractions: dict[str, float],
-    default_fraction: float = 1.0,
     seed: str = "s0",
 ) -> DataFrame:
     """Per-stratum deterministic sampling — the corpus-rebalancing
     primitive (e.g. downsample the dominant language, keep the rest).
 
     ``fractions`` maps stratum value -> keep fraction; strata not
-    listed keep ``default_fraction``. One filter expression, no
-    shuffle, no per-stratum pass.
+    listed are kept whole. Keep iff the row's md5 draw
+    (:func:`hash_bucket_hex`) falls below its stratum's cut: a pure
+    filter, stable under task retries, AQE re-planning and partition
+    count. One filter expression, no shuffle, no per-stratum pass.
     """
-    cut = F.lit(fraction_threshold_hex(default_fraction))
+    cut = F.lit(fraction_threshold_hex(1.0))
     for value, frac in sorted(fractions.items()):
         cut = F.when(
             F.col(strata_col) == value, F.lit(fraction_threshold_hex(frac))
@@ -456,24 +446,22 @@ PII_PATTERNS: tuple[tuple[str, str], ...] = (
 def scrub_pii(
     df: DataFrame,
     text_col: str = "text",
-    patterns: tuple[tuple[str, str], ...] = PII_PATTERNS,
     out_col: str = "clean_text",
-    count_prefix: str = "n_",
 ) -> DataFrame:
     """Redact PII-shaped spans and count what was redacted.
 
-    Adds ``out_col`` (text with every pattern replaced by its tag, in
-    declaration order — earlier patterns win overlapping spans) and one
-    ``n_<TAG>`` BIGINT column per pattern with the match count *before*
-    redaction. Pure ``regexp_replace`` / ``regexp_extract_all`` column
-    expressions: no shuffle, no UDF, linear per row — the C4-style
-    scrub pass that runs over every byte of a 100 TB corpus, so it must
-    stay inside whole-stage codegen.
+    Adds ``out_col`` (text with every :data:`PII_PATTERNS` pattern
+    replaced by its tag, in declaration order — earlier patterns win
+    overlapping spans) and one ``n_<TAG>`` BIGINT column per pattern
+    with the match count *before* redaction. Pure ``regexp_replace`` /
+    ``regexp_extract_all`` column expressions: no shuffle, no UDF,
+    linear per row — the C4-style scrub pass that runs over every byte
+    of a 100 TB corpus, so it must stay inside whole-stage codegen.
     """
     cleaned = F.col(text_col)
     counts = []
-    for pat, tag in patterns:
-        name = count_prefix + tag.strip("<>").lower()
+    for pat, tag in PII_PATTERNS:
+        name = "n_" + tag.strip("<>").lower()
         counts.append(
             F.size(F.regexp_extract_all(F.col(text_col), F.lit(pat), F.lit(0)))
             .cast("bigint")

@@ -156,89 +156,6 @@ def novel_documents(
     return first_in_batch.join(hist_fps, "_fp", "left_anti").drop("_fp")
 
 
-def exact_collapse(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_words: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Collapse verbatim-identical documents to one representative —
-    the staging step that makes giant EXACT-duplicate clusters linear
-    for any downstream pairwise near-dup operator.
-
-    Returns ``(representatives, star_edges)``: ``representatives`` is
-    ``df`` restricted to the minimum-id row per distinct ``text_col``
-    value (all original columns kept), and ``star_edges`` is
-    ``(doc_a=rep_id, doc_b=member_id)`` — one row per collapsed
-    member, ``doc_a < doc_b`` always (the representative is the
-    group minimum).
-
-    Why this must run BEFORE banding-based candidate generation:
-    verbatim copies have identical MinHash signatures, so E copies of
-    one document land in the same bucket of EVERY band and the
-    within-bucket enumeration emits all E(E-1)/2 pairs — band length
-    r damps background collisions between UNRELATED docs but is
-    powerless against true identical-signature clusters (a viral
-    page copied 10M times at web scale is ~5e13 pairs). Collapsing
-    first replaces that quadratic pair set with E-1 star edges and
-    hands the near-dup stage one representative, while preserving
-    connectivity exactly: jaccard depends only on the shingle set,
-    identical text ⇒ identical shingles, so for every member m and
-    any doc y, jaccard(m, y) = jaccard(rep(m), y) — every edge a
-    member would have contributed is present through its
-    representative, and the star edge (jaccard 1.0) reconnects the
-    member. Connected components over
-    ``near_dup_edges(reps) ∪ star_edges`` therefore equal components
-    over the full exact pairwise edge set.
-
-    ``min_words`` (match it to the shingle ``n`` of the downstream
-    stage) excludes documents too short to produce any shingle: such
-    docs have NO pairwise edges — jaccard is undefined without
-    shingles — so star-linking their verbatim copies would invent
-    components the exact edge semantics (and the SQL oracle) do not
-    contain. NULL texts never split into ``min_words`` words and are
-    likewise excluded when the filter is on.
-
-    With ``min_words=None`` the collapse is pure EXACT-TEXT-EQUALITY
-    semantics: verbatim copies of ANY non-NULL text — including texts
-    too short to shingle, such as the empty string — are star-linked.
-    That is the right contract for an exact-dedup consumer, but a
-    Jaccard-shingle consumer must pass ``min_words=n`` or those star
-    edges assert components the shingle semantics do not contain.
-    NULL-text rows pass through to ``representatives`` untouched in
-    this mode (each gets a per-id solo key — ``md5(NULL)`` is NULL and
-    an equi-join would otherwise silently drop them from BOTH
-    outputs); NULL never equals NULL, so they are never star-linked.
-
-    Cost shape: one md5 fingerprint + one map-side-combinable groupBy
-    on the 16-byte key + one fingerprint-keyed assignment join; the
-    (doc_id, rep_id) assignment is lineage-truncated via lazy
-    ``localCheckpoint`` (id-sized, never text) because both outputs
-    consume it. Everything shuffles ids/fingerprints, never text.
-    """
-    base = df
-    fp = F.unhex(F.md5(F.col(text_col)))
-    if min_words is not None:
-        words = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != "")
-        base = df.filter(F.size(words) >= min_words)
-    else:
-        # NULL-text rows get a 17-byte per-id solo key (a 16-byte md5
-        # can never equal it) so each stays its own representative
-        # instead of vanishing through the NULL-keyed equi-join below
-        fp = F.when(F.col(text_col).isNotNull(), fp).otherwise(
-            F.concat(F.lit(b"\x00"), F.unhex(F.md5(F.col(id_col).cast("string"))))
-        )
-    keyed = base.select(F.col(id_col).alias("_ec_id"), fp.alias("_tfp"))
-    rep = keyed.groupBy("_tfp").agg(F.min("_ec_id").alias("_rep_id"))
-    assign = keyed.join(rep, "_tfp").select("_ec_id", "_rep_id").localCheckpoint(eager=False)
-    star = assign.filter(F.col("_ec_id") != F.col("_rep_id")).select(
-        F.col("_rep_id").alias("doc_a"), F.col("_ec_id").alias("doc_b")
-    )
-    rep_ids = assign.filter(F.col("_ec_id") == F.col("_rep_id")).select("_ec_id")
-    reps = base.join(rep_ids, F.col(id_col) == F.col("_ec_id"), "left_semi")
-    return reps, star
-
-
 def _word_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     """Distinct n-gram word shingles per document: (id, shingle).
 
@@ -757,7 +674,6 @@ def minhash_lsh_pairs(
     num_perm: int = 64,
     bands: int = 16,
     seed: int = 42,
-    max_bucket_size: int | None = None,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """LSH-banded near-duplicate candidate pairs with estimated
@@ -766,10 +682,6 @@ def minhash_lsh_pairs(
     ``hash_fn`` selects the shingle AND band hash
     (:func:`_hash64_sql`): the portable choice makes the whole chain
     value-checkable by another engine's SQL.
-
-    ``max_bucket_size`` is forwarded to :func:`signature_band_pairs`
-    (deterministic hot-bucket cap; default off — see there for the
-    recall semantics).
 
     Output: (doc_a, doc_b, est_jaccard) with doc_a < doc_b, one row
     per candidate pair (deduped across bands). The candidate join is
@@ -798,16 +710,13 @@ def minhash_lsh_pairs(
         .dropDuplicates(["doc_id"])
         .localCheckpoint(eager=False)
     )
-    return signature_band_pairs(
-        sigs, num_perm, bands, max_bucket_size=max_bucket_size, hash_fn=hash_fn
-    )
+    return signature_band_pairs(sigs, num_perm, bands, hash_fn=hash_fn)
 
 
 def signature_band_pairs(
     sigs: DataFrame,
     num_perm: int,
     bands: int,
-    max_bucket_size: int | None = None,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """The banding stage of MinHash-LSH, over an EXISTING signature
@@ -823,29 +732,9 @@ def signature_band_pairs(
     times and the candidate join re-attaches both signatures — an
     unbarriered generating expression would be recomputed at every
     reference.
-
-    ``max_bucket_size`` (default ``None`` = off, identical plan) is a
-    deterministic safety valve for the one residual quadratic term:
-    clusters of NEAR-duplicate texts (mutated/permuted copies —
-    verbatim copies are collapsed upstream) share every band's bucket,
-    and within-bucket enumeration is quadratic in bucket size. When
-    set, any (band_id, band_hash) bucket with more than this many
-    members is dropped BEFORE the self-join, bounding worst-case
-    candidate volume at ``n_buckets * cap^2``. Recall semantics, so
-    callers can reason about what the cap costs: a pair lost with one
-    dropped bucket still collides in its other ``bands-1`` bands
-    independently, so background-recall loss is negligible; the loss
-    concentrates on genuine near-dup clusters LARGER than the cap,
-    whose every band is hot — exactly the clusters whose true pair set
-    is quadratic and which a pairwise consumer cannot afford anyway.
-    The filter is one window count over the same (band_id, band_hash)
-    keys the self-join already shuffles on — no sampling, no extra
-    shuffle of the banded table.
     """
     if num_perm % bands != 0:
         raise ValueError("num_perm must be divisible by bands")
-    if max_bucket_size is not None and max_bucket_size < 2:
-        raise ValueError("max_bucket_size must be >= 2 (a bucket of 2 is one pair)")
     r = num_perm // bands
     # ONE F.expr string, not nested Column algebra (r15): building the
     # bands*(r+2) Column objects Python-side cost 0.43 s of py4j round
@@ -873,21 +762,6 @@ def signature_band_pairs(
     banded = sigs.select("doc_id", F.explode(band_structs).alias("band")).select(
         "doc_id", F.col("band.band_id").alias("band_id"), F.col("band.band_hash").alias("band_hash")
     )
-    if max_bucket_size is not None:
-        from pyspark.sql.window import Window
-
-        bucket_n = F.count(F.lit(1)).over(Window.partitionBy("band_id", "band_hash"))
-        # checkpoint AFTER the occupancy filter: both self-join sides
-        # read the capped table, and without a barrier each would
-        # re-evaluate the window count independently. The materialized
-        # rows are (doc_id, band_id, band_hash) — ~24 B/row, id-sized,
-        # never text or signatures.
-        banded = (
-            banded.withColumn("_bucket_n", bucket_n)
-            .filter(F.col("_bucket_n") <= max_bucket_size)
-            .drop("_bucket_n")
-            .localCheckpoint(eager=False)
-        )
     a = banded.select(F.col("doc_id").alias("doc_a"), "band_id", "band_hash")
     b = banded.select(F.col("doc_id").alias("doc_b"), "band_id", "band_hash")
     pairs = (

@@ -105,97 +105,3 @@ def funnel_stage_times(
         "user_id",
         *[F.col("_s").getField(f"s{i}").alias(stage) for i, stage in enumerate(stages)],
     )
-
-
-def asof_join_backward(
-    left: DataFrame,
-    right: DataFrame,
-    key_cols: tuple[str, ...],
-    left_ts: str,
-    right_ts: str,
-    payload_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """As-of join, backward-inclusive: for every left row, the most
-    recent right row with the same key at or before the left row's
-    timestamp (``right_ts <= left_ts``). SQL surfaces without a native
-    ASOF JOIN can't express this without a per-row correlated subquery
-    or a range join that explodes on dense histories; here it is the
-    union + running-max trick — tag both sides, union, and take a
-    running max of the right-side (ts, payload) struct over a window
-    keyed on the join key and ordered by (ts, side) with right rows
-    first at equal timestamps.
-
-    Output: every left row plus ``asof_ts`` (BIGINT-comparable
-    ``right_ts`` of the match, NULL when no right row precedes) and
-    the requested right ``payload_cols`` prefixed ``asof_`` (NULL
-    likewise). When several right rows share (key, ts), the match is
-    the one with the greatest payload tuple — a deterministic
-    tiebreak.
-
-    NULL-ts policy (engine-wide, streaming/events.py): right rows
-    with a NULL timestamp are unmatchable ("at or before" is
-    undefined) and are dropped explicitly — without the drop a key
-    whose ONLY right row is NULL-ts would hand that row's payload to
-    every left row with ``asof_ts`` NULL, because a struct with a
-    NULL leading field still participates in ``max``. Left rows are
-    PRESERVED per the operator contract: a NULL-ts left row sorts
-    before every timestamped right row (NULLS FIRST asc), so it gets
-    the correct no-match NULLs.
-
-    NULL-key policy (r9 orphan-FK axis): an as-of join is an
-    equi-key join in time — and SQL equality never matches a NULL
-    key, while this window formulation's ``partitionBy`` POOLS NULL
-    keys into one partition, so without a guard a NULL-key left row
-    would silently match a NULL-key right row that no join engine
-    would pair. Right rows with any NULL key component are therefore
-    dropped explicitly (unmatchable); NULL-key left rows are
-    preserved with no-match NULLs — they pool in the NULL partition,
-    but with no right rows left there the running max is NULL, which
-    is exactly the SQL result. Pinned by
-    ``test_asof_null_key_left_preserved_right_dropped``.
-
-    Scale shape: ONE shuffle (the window partition on the key), no
-    range-join row explosion; identical cost profile at 100 TB. Cites
-    the reference's SQL-only surface (mozart-ETL dbt models) which has
-    no as-of equivalent — this operator is part of the engine's
-    event-analytics value-add.
-    """
-    from pyspark.sql import Window
-
-    keys = list(key_cols)
-    lpay = [c for c in left.columns if c not in keys]
-    r_struct = F.struct(
-        F.col(right_ts).alias("_ts"), *[F.col(c).alias(c) for c in payload_cols]
-    )
-    r_not_null = F.col(right_ts).isNotNull()
-    for k in keys:
-        r_not_null = r_not_null & F.col(k).isNotNull()
-    r_side = right.filter(r_not_null).select(
-        *keys,
-        F.col(right_ts).alias("_ord_ts"),
-        F.lit(1).alias("_is_right"),
-        r_struct.alias("_r"),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lpay],
-    )
-    l_side = left.select(
-        *keys,
-        F.col(left_ts).alias("_ord_ts"),
-        F.lit(0).alias("_is_right"),
-        F.lit(None).cast(r_side.schema["_r"].dataType).alias("_r"),
-        *lpay,
-    )
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(F.asc("_ord_ts"), F.desc("_is_right"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    matched = l_side.unionByName(r_side).withColumn("_m", F.max("_r").over(w))
-    return (
-        matched.filter(F.col("_is_right") == 0)
-        .select(
-            *keys,
-            *lpay,
-            F.col("_m._ts").alias("asof_ts"),
-            *[F.col("_m").getField(c).alias(f"asof_{c}") for c in payload_cols],
-        )
-    )

@@ -29,14 +29,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-#: Set True only in environments with real codec libraries installed.
-#: Retried every round per the verdicts: as of r14 (2026-08-17) none
-#: of PIL/cv2/soundfile/librosa/av/imageio import in this container
-#: and there is no network to fetch them (repo1.maven.org curl code
-#: 000) — env-blocked.
-REAL_DECODERS_AVAILABLE = False
-
-
 def attach_binary_payload(df: DataFrame, text_col: str = "text", kind: str = "blob") -> DataFrame:
     """Wrap a column as an opaque binary payload + media metadata
     struct (stands in for reading image/audio bytes from object
@@ -100,16 +92,6 @@ def _fake_features(payload: bytes, n_dims: int = 8) -> list[float]:
     return [float(x) / (255.0 * n) for x in acc]
 
 
-def decode_payload(payload: bytes, kind: str) -> object:
-    """Decode opaque bytes into a media object. NOT IMPLEMENTED in
-    this environment — requires codec libraries."""
-    if not REAL_DECODERS_AVAILABLE:
-        raise NotImplementedError(
-            f"decoding kind={kind!r} requires media libraries not present in this container"
-        )
-    raise NotImplementedError  # pragma: no cover
-
-
 def extract_features(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -169,9 +151,8 @@ def sample_frames(
     one row per sampled frame — the mapInPandas plumbing a real video
     frame-sampler uses (declared explode-shaped output schema, Arrow
     batches, per-row work bounded by payload size). The DECODE step
-    is stubbed (no codec libraries in this environment,
-    :data:`REAL_DECODERS_AVAILABLE`); the per-frame statistic is a
-    deterministic position-weighted checksum
+    is stubbed (no codec libraries in this environment); the
+    per-frame statistic is a deterministic position-weighted checksum
     ``sum((byte+1) * (pos_in_frame+1))`` — pure integer math, so the
     registered query carries a full DuckDB oracle (bit-exact, no
     tolerance; a byte reorder inside a frame changes the value, which
@@ -261,7 +242,7 @@ def resize_payload_grid(
     to bucket ``j * out_dims // n``; bucket value = mean byte / 255).
     This is the mapInPandas shape a real image resize uses (fixed
     declared output width, Arrow batches, per-row vectorized kernel);
-    the DECODE step is stubbed (:data:`REAL_DECODERS_AVAILABLE`), and
+    the DECODE step is stubbed (no codec libraries), and
     the bucket mean is exact-integer sums + ONE IEEE division — the
     same bit-exact-across-engines math as the featurizer, so the
     registered query carries a full DuckDB oracle. Empty payloads and

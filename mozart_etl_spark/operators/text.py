@@ -13,8 +13,7 @@ tests/test_unicode_parity.py):
   on ASCII whitespace only (``\\s`` is ASCII in both Java regex and
   RE2 — NBSP/ideographic space are token-internal), shingles and
   fingerprints hash the bytes they are given. NFC and NFD encodings
-  of the same visible text are therefore DIFFERENT documents; callers
-  who want them unified apply :func:`nfc_normalize` at ingest — the
+  of the same visible text are therefore DIFFERENT documents: the
   engine never normalizes silently.
 - Measured parity-SAFE classes (identical in Spark and DuckDB):
   accented Latin, Greek, Cyrillic, CJK spans, ligatures, sharp-s,
@@ -36,11 +35,8 @@ tests/test_unicode_parity.py):
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 #: the 52 ASCII letters, for translate-deletion char counts
@@ -85,48 +81,25 @@ def regex_token_count(text: Column, pattern: str = BPE_TOKEN_PATTERN) -> Column:
 STOPWORDS: tuple[str, ...] = ("the", "and", "of", "to", "a", "in", "is", "it")
 
 
-def stopword_ratio(text: Column, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
-    """Fraction of whitespace tokens that are stopwords (lowercased)."""
+def stopword_ratio(text: Column) -> Column:
+    """Fraction of whitespace tokens that are :data:`STOPWORDS`
+    (lowercased)."""
     toks = F.split(F.lower(F.trim(text)), r"\s+")
-    sw = F.array(*[F.lit(w) for w in stopwords])
+    sw = F.array(*[F.lit(w) for w in STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(sw, t))).cast("double")
     return n_stop / F.nullif(_n_tokens(text).cast("double"), F.lit(0.0))
 
 
-def rolling_hash(text: Column, base: int = 31, mod: int = 2147483647) -> Column:
+def rolling_hash(text: Column) -> Column:
     """Polynomial rolling hash over the character stream:
-    ``h = (h*base + codepoint) mod m`` — the classic Rabin-Karp
+    ``h = (h*31 + codepoint) mod (2^31 - 1)`` — the classic Rabin-Karp
     fingerprint, computed as one codegen-friendly fold (no UDF)."""
     chars = F.split(text, "")
     return F.aggregate(
         chars,
         F.lit(0).cast("bigint"),
-        lambda acc, c: F.pmod(acc * F.lit(base) + F.ascii(c), F.lit(mod)),
+        lambda acc, c: F.pmod(acc * F.lit(31) + F.ascii(c), F.lit(2147483647)),
     )
-
-
-def nfc_normalize(df: DataFrame, text_col: str = "text", out_col: str | None = None) -> DataFrame:
-    """Ingest-time NFC unicode normalization — THE documented policy
-    for corpora where the same visible text arrives under multiple
-    codepoint encodings (NFD from macOS filenames/HFS+, decomposed
-    OCR output): normalize once at the ingest boundary, then every
-    downstream byte-faithful operator (exact dedup, shingles,
-    fingerprints, rolling hashes) unifies the twins for free. The
-    engine itself never normalizes silently (module contract above).
-
-    Arrow-batched scalar pandas_udf over Python's ``unicodedata``
-    (the reference NFC implementation; Spark ships no normalization
-    builtin) — per-row, zero-shuffle, linear scale-out. NULL in,
-    NULL out. DuckDB's ``nfc_normalize()`` is the oracle twin,
-    parity-pinned in tests/test_unicode_parity.py.
-    """
-    @F.pandas_udf(T.StringType())
-    def _nfc(s: pd.Series) -> pd.Series:
-        import unicodedata
-
-        return s.map(lambda x: None if x is None else unicodedata.normalize("NFC", x))
-
-    return df.withColumn(out_col or text_col, _nfc(F.col(text_col)))
 
 
 def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -253,7 +226,6 @@ def cooccurrence_pmi(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    min_pair_count: int = 1,
     max_vocab: int | None = None,
 ) -> DataFrame:
     """Document-level token co-occurrence with pointwise mutual
@@ -344,7 +316,6 @@ def cooccurrence_pmi(
         a.join(b, (F.col(f"a.{id_col}") == F.col(f"b.{id_col}")) & (F.col("a.tok") < F.col("b.tok")))
         .groupBy(F.col("a.tok").alias("tok_a"), F.col("b.tok").alias("tok_b"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_ab"))
-        .filter(F.col("n_ab") >= min_pair_count)
     )
     ma = F.broadcast(marg.select(F.col("tok").alias("tok_a"), F.col("_c").alias("_ca")))
     mb = F.broadcast(marg.select(F.col("tok").alias("tok_b"), F.col("_c").alias("_cb")))

@@ -35,7 +35,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from . import writers
 from .config import TenantSpec
@@ -160,8 +160,3 @@ class TenantPipeline:
         ingests = self.ingest(spark)
         models = self.transform(spark)
         return {"ingest": ingests, "models": models}
-
-
-def preview(df: DataFrame, n: int = 5) -> list[dict[str, Any]]:
-    """5-row preview metadata (reference ``trino.py:55-71``)."""
-    return [row.asDict() for row in df.limit(n).collect()]

@@ -822,10 +822,8 @@ def _jaccard_edges(docs: DataFrame) -> DataFrame:
     unchanged: identical text ⇒ identical shingle set ⇒ for every
     member m and any doc y, jaccard(m, y) = jaccard(rep(m), y), so
     every edge a member would have contributed exists through its
-    representative, and the star edge reconnects the member (see
-    :func:`~mozart_etl_spark.operators.dedup.exact_collapse`, the
-    generic text-level form of the same staging). All collapse
-    arithmetic runs on the checkpointed signature table — ids,
+    representative, and the star edge reconnects the member. All
+    collapse arithmetic runs on the checkpointed signature table — ids,
     signatures, and 16-byte fingerprints shuffle; text never does,
     and the corpus is still scanned exactly twice (signatures +
     verify), as before the staging. Since r14 the verify stage
@@ -1394,7 +1392,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the byte stream into 256-byte frames, keep every 3rd (partial "
     "last frame included), one output row per sampled frame — the "
     "mapInPandas explode-shaped plumbing a real frame-sampler uses, "
-    "with the decode stubbed (REAL_DECODERS_AVAILABLE) and a "
+    "with the decode stubbed (no codec libraries) and a "
     "position-weighted integer checksum sum((byte+1)*(pos+1)) as the "
     "per-frame statistic, so the DuckDB oracle certifies the sampled "
     "WINDOWS bit-exactly (byte values AND positions; the oracle "

@@ -700,7 +700,7 @@ def segment_year_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sketch estimate AND the exact distinct count, and emits "
     "(exact, within_bound) where within_bound asserts the estimate "
     "sits within 5% of the exact (2.5x the rsd=0.02 std error — the "
-    "same bound tests/test_types_functions.py pins). DuckDB emits "
+    "same bound tests/test_streaming.py pins). DuckDB emits "
     "the same exact count and literal TRUE, so a degraded sketch "
     "flips within_bound and FAILS the driver hash — the estimate is "
     "value-gated, not just rows-counted. The HLL++ estimate is "

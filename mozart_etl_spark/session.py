@@ -40,8 +40,8 @@ RUNTIME_CONFS: dict[str, str] = {
     # engine. DuckDB-oracle parity on overflow is error-vs-error for
     # scalar arithmetic (both raise) and throw-vs-HUGEINT for
     # SUM(BIGINT) — measured and pinned in tests/test_overflow_parity
-    # .py; folds that need a VALUE past 2^63 opt into
-    # functions.widened_sum (DECIMAL(38,0) accumulator).
+    # .py; a fold that needs a VALUE past 2^63 widens its addends in
+    # the query itself (sum(CAST(x AS DECIMAL(38,0)))).
     "spark.sql.ansi.enabled": "true",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",

@@ -4,7 +4,8 @@ The reference is batch-only (cron micro-batching every 2 h); this
 module adds true streaming versions of the engine's event-table
 operators so the same logical queries run unbounded: file-source
 ingestion, watermarked tumbling-window aggregation, session windows,
-and in-stream deduplication. Batch/stream parity is the design rule —
+an interval stream-stream join and stateful running totals.
+Batch/stream parity is the design rule —
 every streaming query here has a batch twin in the query bank, and
 the tests assert both produce identical results when the stream is
 drained with ``trigger(availableNow=True)``.
@@ -16,7 +17,6 @@ from .events import (
     hourly_counts_stream,
     run_to_memory,
     sessionize_stream,
-    stream_dedup,
 )
 from .sink import stream_merge_to_table
 from .stateful import running_user_totals
@@ -28,6 +28,5 @@ __all__ = [
     "hourly_counts_stream",
     "run_to_memory",
     "sessionize_stream",
-    "stream_dedup",
     "running_user_totals",
 ]

@@ -47,7 +47,6 @@ from ..io import events_raw_schema, normalize_ts_us
 def events_stream(
     spark: SparkSession,
     sf_dir: str,
-    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """File-source stream over the events parquet with the same
     normalized schema as the batch loader (``io._read_events``):
@@ -76,8 +75,6 @@ def events_stream(
             "pathGlobFilter", "events.parquet"
         )
         stream_path = sf_dir
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     raw = reader.parquet(stream_path)
     # same three-form normalization as the batch loader (epoch-ns
     # BIGINT / TIMESTAMP_NTZ / TIMESTAMP) — one rule, two modes
@@ -194,12 +191,6 @@ def sessionize_stream(
             "n_events",
         )
     )
-
-
-def stream_dedup(stream: DataFrame, keys: list[str], watermark: str = "2 hours") -> DataFrame:
-    """In-stream exact deduplication by key, state bounded by the
-    watermark (late duplicates beyond it are dropped by definition)."""
-    return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
 
 
 def _interval_us(interval: str) -> int:

@@ -4,18 +4,17 @@ The escape hatch for streaming semantics Spark's built-in operators
 can't express: arbitrary per-key state evolved batch-by-batch in
 Arrow-vectorized Python. The example operator — per-user running
 totals with first/last event times — is deliberately simple so the
-*harness* (state schema, timeout handling, Arrow batch shape,
-availableNow drain) is the tested artifact; swap the update body for
-real logic (fraud scoring, CDC reconciliation, session enrichment).
+*harness* (state schema, Arrow batch shape, availableNow drain) is
+the tested artifact; swap the update body for real logic (fraud
+scoring, CDC reconciliation, session enrichment).
 
-State bounding: pass ``state_ttl_minutes`` to evict keys idle past
-that processing time (emitted with ``final=true``) — at 100 TB of
-keys this is what keeps the state store finite on a continuous
-trigger. The default is no timeout, which is also what a bounded
-``availableNow`` drain needs: with a processing-time timeout pending,
-availableNow keeps scheduling empty micro-batches until every timeout
-fires, so the drain never terminates (observed: 376 epochs and no
-progress on a 30-min TTL).
+No state timeout: the engine only runs bounded ``availableNow``
+drains, and with a processing-time timeout pending, availableNow
+keeps scheduling empty micro-batches until every timeout fires, so
+the drain never terminates (observed: 376 epochs and no progress on a
+30-min TTL). Evicting idle keys on an unbounded stream is the cluster
+follow-up (SCALING.md); until then no key is evicted and ``final`` is
+always false.
 """
 
 from __future__ import annotations
@@ -73,85 +72,64 @@ _STATE_SCHEMA = (
 )
 
 
-def _make_update(state_ttl_minutes: int | None):
-    def update(
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            n, total, total_nan, first_us, last_us = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [[user_id, n, total, bool(total_nan), first_us, last_us, True]],
-                columns=_KERNEL_SCHEMA.fieldNames(),
-            )
-            return
-        n, total, total_nan, first_us, last_us = (
-            state.get if state.exists else (0, None, False, None, None)
-        )
-        total_nan = bool(total_nan)
-        for pdf in batches:
-            n += len(pdf)
-            # SQL-SUM-faithful total (r13 float-key axis): the value
-            # arrives as the (_value_filled, _value_valid) pair —
-            # Arrow->pandas renders a NULL double as NaN, making it
-            # indistinguishable from a GENUINE NaN value, and pandas'
-            # default nan-SKIPPING sum then diverges from SQL SUM two
-            # ways: a NaN measure must POISON the total (both engines'
-            # SUM propagates NaN), and an all-NULL key must yield NULL
-            # (not 0.0). The mask restores null semantics; the numpy
-            # sum propagates NaN, which is then carried as the
-            # explicit total_nan flag because neither the state tuple
-            # nor the output frame can transport an NaN double across
-            # the pandas->Arrow hop without it collapsing to NULL.
-            vals = pdf["_value_filled"][pdf["_value_valid"]]
-            if len(vals) and not total_nan:
-                batch_sum = float(vals.to_numpy(dtype="float64").sum())
-                if math.isnan(batch_sum):
-                    total, total_nan = None, True
-                else:
-                    total = batch_sum if total is None else total + batch_sum
-            # the timestamp reaches this kernel as the non-null
-            # `_ts_us_filled` int64 + `_ts_valid` mask pair, NEVER as
-            # a nullable ts_us column: Arrow->pandas converts int64
-            # with nulls to FLOAT64, whose 53-bit mantissa silently
-            # corrupts epoch-us beyond ~2255 (measured on the r11
-            # extreme-timestamp axis: 9191836036854775 us ->
-            # ...776.0 -> +1 us in the emitted state). The split
-            # keeps the dtype int64 end-to-end; null semantics
-            # (min/max skip nulls) ride the mask.
-            ts = pdf["_ts_us_filled"][pdf["_ts_valid"]]
-            if len(ts):
-                lo, hi = int(ts.min()), int(ts.max())
-                first_us = lo if first_us is None else min(first_us, lo)
-                last_us = hi if last_us is None else max(last_us, hi)
-        state.update((n, total, total_nan, first_us, last_us))
-        if state_ttl_minutes is not None:
-            state.setTimeoutDuration(state_ttl_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            [[user_id, n, total, total_nan, first_us, last_us, False]],
-            columns=_KERNEL_SCHEMA.fieldNames(),
-        )
-
-    return update
+def _update(
+    key: tuple[Any, ...],
+    batches: Iterator[pd.DataFrame],
+    state: GroupState,
+) -> Iterator[pd.DataFrame]:
+    (user_id,) = key
+    n, total, total_nan, first_us, last_us = (
+        state.get if state.exists else (0, None, False, None, None)
+    )
+    total_nan = bool(total_nan)
+    for pdf in batches:
+        n += len(pdf)
+        # SQL-SUM-faithful total (r13 float-key axis): the value
+        # arrives as the (_value_filled, _value_valid) pair —
+        # Arrow->pandas renders a NULL double as NaN, making it
+        # indistinguishable from a GENUINE NaN value, and pandas'
+        # default nan-SKIPPING sum then diverges from SQL SUM two
+        # ways: a NaN measure must POISON the total (both engines'
+        # SUM propagates NaN), and an all-NULL key must yield NULL
+        # (not 0.0). The mask restores null semantics; the numpy
+        # sum propagates NaN, which is then carried as the
+        # explicit total_nan flag because neither the state tuple
+        # nor the output frame can transport an NaN double across
+        # the pandas->Arrow hop without it collapsing to NULL.
+        vals = pdf["_value_filled"][pdf["_value_valid"]]
+        if len(vals) and not total_nan:
+            batch_sum = float(vals.to_numpy(dtype="float64").sum())
+            if math.isnan(batch_sum):
+                total, total_nan = None, True
+            else:
+                total = batch_sum if total is None else total + batch_sum
+        # the timestamp reaches this kernel as the non-null
+        # `_ts_us_filled` int64 + `_ts_valid` mask pair, NEVER as
+        # a nullable ts_us column: Arrow->pandas converts int64
+        # with nulls to FLOAT64, whose 53-bit mantissa silently
+        # corrupts epoch-us beyond ~2255 (measured on the r11
+        # extreme-timestamp axis: 9191836036854775 us ->
+        # ...776.0 -> +1 us in the emitted state). The split
+        # keeps the dtype int64 end-to-end; null semantics
+        # (min/max skip nulls) ride the mask.
+        ts = pdf["_ts_us_filled"][pdf["_ts_valid"]]
+        if len(ts):
+            lo, hi = int(ts.min()), int(ts.max())
+            first_us = lo if first_us is None else min(first_us, lo)
+            last_us = hi if last_us is None else max(last_us, hi)
+    state.update((n, total, total_nan, first_us, last_us))
+    yield pd.DataFrame(
+        [[user_id, n, total, total_nan, first_us, last_us, False]],
+        columns=_KERNEL_SCHEMA.fieldNames(),
+    )
 
 
-def running_user_totals(stream: DataFrame, state_ttl_minutes: int | None = None) -> DataFrame:
+def running_user_totals(stream: DataFrame) -> DataFrame:
     """Per-user running totals as a custom stateful operator.
 
     Emits one row per user per micro-batch with the cumulative state
-    (``final=false``); with ``state_ttl_minutes`` set (continuous
-    triggers only — see module docstring), idle keys are evicted and
-    emitted with ``final=true``. Input must carry ``user_id, value,
-    ts_us``.
+    (``final=false``). Input must carry ``user_id, value, ts_us``.
     """
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if state_ttl_minutes is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
     # null-split BEFORE Arrow: see the kernel comment — a nullable
     # int64 ts_us would cross the Arrow->pandas boundary as float64
     # and corrupt epoch-us beyond 2^53 (~year 2255)
@@ -174,11 +152,11 @@ def running_user_totals(stream: DataFrame, state_ttl_minutes: int | None = None)
         "user_id", "_ts_valid", "_ts_us_filled", "_value_valid", "_value_filled"
     )
     out = stream.groupBy("user_id").applyInPandasWithState(
-        _make_update(state_ttl_minutes),
+        _update,
         outputStructType=_KERNEL_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=timeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
     # reconstruct the NaN total JVM-side (see _KERNEL_SCHEMA): the
     # kernel cannot emit an NaN double through Arrow without it

@@ -155,11 +155,14 @@ def test_connection_probe_warns_with_cause_when_it_raises(spark, tmp_path):
         )
 
 
-def test_resolve_format_validation():
-    assert writers.resolve_format(None) == "parquet"
-    assert writers.resolve_format("delta") == "delta"
+def test_resolve_format_validation(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_TABLE_FORMAT", raising=False)
+    assert writers.resolve_format() == "parquet"
+    monkeypatch.setenv("SPARK_GRAFT_TABLE_FORMAT", "delta")
+    assert writers.resolve_format() == "delta"
+    monkeypatch.setenv("SPARK_GRAFT_TABLE_FORMAT", "orc2")
     with pytest.raises(ValueError):
-        writers.resolve_format("orc2")
+        writers.resolve_format()
 
 
 def test_merge_upsert_leaves_no_scratch_tables(spark):
@@ -226,73 +229,6 @@ def test_truncate_reload_aligns_columns_by_name(spark):
     spark.sql(f"DROP TABLE {tbl}")
 
 
-def test_partitioned_write_restores_overwrite_mode(spark):
-    """The dynamic partition-overwrite conf must not leak onto the
-    session: a later truncate_reload would otherwise keep stale
-    partitions instead of replacing the table."""
-    key = "spark.sql.sources.partitionOverwriteMode"
-    before = spark.conf.get(key)
-    tbl = "default.pw_conf_check"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    df = spark.range(0, 10).selectExpr("id", "id % 2 AS p")
-    writers.partitioned_write(spark, df, tbl, ("p",))
-    assert spark.conf.get(key) == before
-    spark.sql(f"DROP TABLE {tbl}")
-
-
-def test_scd2_ignores_stale_effective_times(spark):
-    """A late/replayed batch whose effective time is at or before the
-    current row's valid_from must be a no-op — never a negative
-    validity interval."""
-    tbl = "default.scd2_stale_check"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    writers.scd2_upsert(
-        spark,
-        spark.createDataFrame([(1, "v10", 10)], "pk INT, v STRING, eff INT"),
-        tbl, ("pk",), "eff",
-    )
-    # stale: differing payload but effective time before current
-    writers.scd2_upsert(
-        spark,
-        spark.createDataFrame([(1, "old", 5)], "pk INT, v STRING, eff INT"),
-        tbl, ("pk",), "eff",
-    )
-    rows = {(r.pk, r.v, r.valid_from, r.valid_to, r.is_current) for r in spark.table(tbl).collect()}
-    assert rows == {(1, "v10", 10, None, True)}
-    # genuinely newer version still supersedes
-    writers.scd2_upsert(
-        spark,
-        spark.createDataFrame([(1, "v20", 20)], "pk INT, v STRING, eff INT"),
-        tbl, ("pk",), "eff",
-    )
-    rows = {(r.pk, r.v, r.valid_from, r.valid_to, r.is_current) for r in spark.table(tbl).collect()}
-    assert rows == {(1, "v10", 10, 20, False), (1, "v20", 20, None, True)}
-    spark.sql(f"DROP TABLE {tbl}")
-
-
-def test_zvalue_clamps_bits_for_many_columns(spark):
-    """With 4+ columns the interleave must stay below the bigint sign
-    bit: all z-values non-negative and the first column's ordering
-    preserved (an overflow would sort MSB rows negative-first)."""
-    from mozart_etl_spark.writers import _zvalue
-
-    df = spark.createDataFrame(
-        [(a, b, c, d) for a in (0, 1000) for b in (0, 1000) for c in (0, 1000) for d in (0, 1000)],
-        "a INT, b INT, c INT, d INT",
-    )
-    z = _zvalue(
-        [F.col(x) for x in "abcd"],
-        [F.lit(0)] * 4,
-        [F.lit(1000)] * 4,
-        bits=16,  # would reach bit 63 unclamped
-    )
-    vals = df.select("a", "b", "c", "d", z.alias("z")).collect()
-    assert all(r["z"] >= 0 for r in vals)
-    lo = max(r["z"] for r in vals if (r["a"], r["b"], r["c"], r["d"]) != (1000, 1000, 1000, 1000))
-    hi = next(r["z"] for r in vals if (r["a"], r["b"], r["c"], r["d"]) == (1000, 1000, 1000, 1000))
-    assert hi > lo  # the all-max corner stays the curve's maximum
-
-
 def test_interval_us_units_and_compounds():
     """Every interval form session_window accepts parses: singular/
     plural, day/week units, compounds, mixed case."""
@@ -322,111 +258,7 @@ def test_stream_merge_empty_drain_returns_zero(spark, tmp_path):
     assert not spark.catalog.tableExists(tbl)
 
 
-def test_zvalue_interleaves_bits(spark):
-    """Morton interleave of identity-scaled 2-bit values matches the
-    hand-computed curve (col 0 on even bit positions, col 1 on odd)."""
-    from mozart_etl_spark.writers import _zvalue
-
-    df = spark.createDataFrame(
-        [(0, 0), (3, 1), (1, 3), (3, 3)], "x INT, y INT"
-    )
-    z = _zvalue([F.col("x"), F.col("y")], [F.lit(0), F.lit(0)], [F.lit(3), F.lit(3)], bits=2)
-    got = {(r["x"], r["y"]): r["z"] for r in df.select("x", "y", z.alias("z")).collect()}
-    assert got == {(0, 0): 0, (3, 1): 7, (1, 3): 11, (3, 3): 15}
-
-
-def test_zorder_write_bounds_files_in_both_dimensions(spark):
-    """Each z-ordered file covers a small rectangle of the 2-D value
-    space, so parquet min/max stats prune reads for predicates on
-    EITHER column — unlike a single-column sort, which leaves the
-    second column's per-file span at ~100% of the domain."""
-    import pyarrow.parquet as pq
-
-    from mozart_etl_spark import writers
-
-    n = 256
-    grid = spark.range(0, n * n).selectExpr(
-        f"CAST(id % {n} AS BIGINT) AS x", f"CAST(id DIV {n} AS BIGINT) AS y", "id AS payload"
-    )
-    tbl = "default.zorder_check"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    assert writers.zorder_write(spark, grid, tbl, ("x", "y"), n_files=16) == n * n
-
-    def spans(col):
-        out = []
-        for f in spark.table(tbl).inputFiles():
-            md = pq.ParquetFile(f.removeprefix("file:")).metadata
-            idx = md.schema.names.index(col)
-            lo = min(md.row_group(g).column(idx).statistics.min for g in range(md.num_row_groups))
-            hi = max(md.row_group(g).column(idx).statistics.max for g in range(md.num_row_groups))
-            out.append((hi - lo) / (n - 1))
-        return out
-
-    x_spans, y_spans = spans("x"), spans("y")
-    assert len(x_spans) >= 8
-    # a z-curve file covers a bounded rectangle: both dims well under
-    # the full domain (a y-sorted layout would put x_span ≈ 1.0)
-    assert sum(x_spans) / len(x_spans) < 0.6
-    assert sum(y_spans) / len(y_spans) < 0.6
-    # data intact
-    assert spark.table(tbl).agg(F.sum("payload")).collect()[0][0] == (n * n) * (n * n - 1) // 2
-    spark.sql(f"DROP TABLE {tbl}")
-
-
-def test_compact_table_reduces_files_preserving_data(spark):
-    """Compaction collapses a fragmented table (32 files of tiny data)
-    to the size-derived file count without changing contents, and is a
-    no-op on an already-compact table."""
-    tbl = "default.compact_check"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    df = spark.range(0, 1000).selectExpr("id", "id * 2 AS v").repartition(32)
-    writers.full_replace(spark, df, tbl)
-    before_rows = {(r["id"], r["v"]) for r in spark.table(tbl).collect()}
-    files_before, files_after = writers.compact_table(spark, tbl)
-    assert files_before >= 32 and files_after == 1
-    assert {(r["id"], r["v"]) for r in spark.table(tbl).collect()} == before_rows
-    # second call: already compact, no rewrite
-    again_before, again_after = writers.compact_table(spark, tbl)
-    assert (again_before, again_after) == (1, 1)
-    names = {t.name for t in spark.catalog.listTables("default")}
-    assert "compact_check__merge_staging" not in names
-    spark.sql(f"DROP TABLE {tbl}")
-
-
-def test_scd2_upsert_history(spark):
-    """Type-2 dimension history: changed keys close out and reopen,
-    unchanged keys are untouched, new keys appear current."""
-    tbl = "default.scd2_check"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    b1 = spark.createDataFrame(
-        [(1, "a", 100), (2, "b", 100)], "pk INT, v STRING, eff INT"
-    )
-    # duplicate key in one batch: latest effective (300 -> 'a') wins
-    b1 = b1.union(spark.createDataFrame([(1, "a0", 50)], "pk INT, v STRING, eff INT"))
-    writers.scd2_upsert(spark, b1, tbl, ("pk",), "eff")
-    rows = {(r.pk, r.v, r.valid_from, r.valid_to, r.is_current) for r in spark.table(tbl).collect()}
-    assert rows == {(1, "a", 100, None, True), (2, "b", 100, None, True)}
-
-    b2 = spark.createDataFrame(
-        [(1, "a2", 200), (2, "b", 200), (3, "c", 200)], "pk INT, v STRING, eff INT"
-    )
-    writers.scd2_upsert(spark, b2, tbl, ("pk",), "eff")
-    rows = {(r.pk, r.v, r.valid_from, r.valid_to, r.is_current) for r in spark.table(tbl).collect()}
-    assert rows == {
-        (1, "a", 100, 200, False),   # closed at the new effective time
-        (1, "a2", 200, None, True),  # reopened with the new payload
-        (2, "b", 100, None, True),   # identical payload: no-op
-        (3, "c", 200, None, True),   # new key
-    }
-    # point-in-time lookup: as of t=150 key 1 was 'a'
-    asof = spark.table(tbl).filter(
-        (F.col("valid_from") <= 150) & (F.col("valid_to").isNull() | (F.col("valid_to") > 150))
-    )
-    assert {(r.pk, r.v) for r in asof.collect()} == {(1, "a"), (2, "b")}
-    spark.sql(f"DROP TABLE {tbl}")
-
-
-def test_lakehouse_merge_native(spark):
+def test_lakehouse_merge_native(spark, monkeypatch):
     """Transactional in-place MERGE INTO on a Delta/Iceberg catalog.
 
     This container ships no lakehouse jar (and no network to fetch
@@ -443,12 +275,13 @@ def test_lakehouse_merge_native(spark):
     )
     if fmt is None:
         pytest.skip("no Delta/Iceberg runtime in this environment")
+    monkeypatch.setenv("SPARK_GRAFT_TABLE_FORMAT", fmt)
     df1 = spark.createDataFrame([(1, "a"), (2, "b")], "pk INT, v STRING")
     df2 = spark.createDataFrame([(2, "B"), (3, "c")], "pk INT, v STRING")
     tbl = "default.lakehouse_merge_check"
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    writers.merge_upsert(spark, df1, tbl, ("pk",), fmt=fmt)
-    writers.merge_upsert(spark, df2, tbl, ("pk",), fmt=fmt)
+    writers.merge_upsert(spark, df1, tbl, ("pk",))
+    writers.merge_upsert(spark, df2, tbl, ("pk",))
     rows = {(r["pk"], r["v"]) for r in spark.table(tbl).collect()}
     assert rows == {(1, "a"), (2, "B"), (3, "c")}
     spark.sql(f"DROP TABLE {tbl}")

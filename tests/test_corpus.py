@@ -71,22 +71,6 @@ def test_salted_join_fans_out_duplicate_dim_keys_like_plain_join(spark):
         assert salted == plain, how
 
 
-def test_sample_deterministic_and_nested(spark):
-    docs = table(spark, SF, "documents")
-    n = docs.count()
-    s30 = C.sample_deterministic(docs, "doc_id", 0.3, seed="t")
-    ids30 = {r[0] for r in s30.select("doc_id").collect()}
-    # re-evaluation is identical (pure filter, no RNG state)
-    assert ids30 == {r[0] for r in s30.select("doc_id").collect()}
-    # fraction lands near 0.3 (binomial tolerance at n=500)
-    assert abs(len(ids30) / n - 0.3) < 0.08
-    # same seed, smaller fraction => strict subset (monotone cut)
-    ids10 = {r[0] for r in C.sample_deterministic(docs, "doc_id", 0.1, seed="t").select("doc_id").collect()}
-    assert ids10 < ids30
-    # keep-everything sentinel
-    assert C.sample_deterministic(docs, "doc_id", 1.0).count() == n
-
-
 def test_shuffle_order_is_a_permutation(spark):
     docs = table(spark, SF, "documents").select("doc_id")
     n = docs.count()
@@ -324,35 +308,6 @@ def test_cap_per_group_salted_prune_identical_on_hot_key(spark):
     assert "_salt_rn" in plan
 
 
-def test_asof_null_key_left_preserved_right_dropped(spark):
-    """NULL-key policy pin (r9 orphan-FK axis): the window formulation
-    pools NULL keys where SQL equality never matches them — so right
-    rows with a NULL key must be dropped (unmatchable) and NULL-key
-    left rows preserved with no-match NULLs, never matched to another
-    orphan's payload."""
-    from mozart_etl_spark.operators.events import asof_join_backward
-
-    left = spark.createDataFrame(
-        [(None, 10, "L_orphan"), (1, 10, "L1")],
-        "k LONG, lts LONG, ltag STRING",
-    )
-    right = spark.createDataFrame(
-        [(None, 5, "R_orphan"), (1, 5, "R1")],
-        "k LONG, rts LONG, payload STRING",
-    )
-    got = {
-        r["ltag"]: (r["asof_ts"], r["asof_payload"])
-        for r in asof_join_backward(
-            left, right, key_cols=("k",), left_ts="lts", right_ts="rts",
-            payload_cols=("payload",),
-        ).collect()
-    }
-    assert got == {
-        "L1": (5, "R1"),         # normal backward match
-        "L_orphan": (None, None),  # pooled NULL partition must NOT match R_orphan
-    }
-
-
 def test_sample_temperature_keeps_null_stratum(spark):
     """NULL-stratum policy pin (r9 orphan-FK axis): rows with a NULL
     stratum are a real stratum — counted, temperature-weighted, and
@@ -473,7 +428,9 @@ def test_hash_keyed_ops_invariant_to_partitioning(spark):
         return sorted(r[0] for r in df.collect())
 
     for build in (
-        lambda d: C.sample_deterministic(d, "doc_id", 0.3, seed="p").select("doc_id"),
+        lambda d: C.sample_stratified(
+            d, "doc_id", "lang", {"en": 0.3, "zh": 0.3}, seed="p"
+        ).select("doc_id"),
         lambda d: C.sample_weighted_topk(d, "doc_id", "n_chars", k=40, seed="p").select("doc_id"),
         lambda d: C.cap_per_group(d, "source", "doc_id", cap=5, seed="p").select("doc_id"),
     ):
@@ -689,33 +646,3 @@ def test_funnel_null_identity_events_are_excluded(spark):
         for r in funnel_stage_times(df).collect()
     }
     assert got == {7: (1, 2, 3)}
-
-
-def test_asof_null_ts_left_preserved_right_dropped(spark):
-    """NULL-ts policy pin (r9): asof_join_backward keeps NULL-ts LEFT
-    rows (with no-match NULLs — the operator contract preserves every
-    left row) and drops NULL-ts RIGHT rows — without the drop, a key
-    whose only right row is untimestamped would donate its payload
-    through struct max with asof_ts NULL."""
-    from mozart_etl_spark.operators.events import asof_join_backward
-
-    left = spark.createDataFrame(
-        [(1, 10, "L1"), (1, None, "L2"), (2, 5, "L3")],
-        "k LONG, lts LONG, ltag STRING",
-    )
-    right = spark.createDataFrame(
-        [(1, 8, "R1"), (1, None, "R_null"), (2, None, "R_null_only")],
-        "k LONG, rts LONG, payload STRING",
-    )
-    got = {
-        r["ltag"]: (r["asof_ts"], r["asof_payload"])
-        for r in asof_join_backward(
-            left, right, key_cols=("k",), left_ts="lts", right_ts="rts",
-            payload_cols=("payload",),
-        ).collect()
-    }
-    assert got == {
-        "L1": (8, "R1"),        # normal backward match
-        "L2": (None, None),     # NULL-ts left row preserved, no match
-        "L3": (None, None),     # key 2's only right row is NULL-ts: dropped
-    }

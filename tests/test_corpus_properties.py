@@ -467,220 +467,6 @@ def test_cap_per_group_matches_python_model(spark, groups, cap, salt_buckets):
     assert got == want
 
 
-@settings(max_examples=6, deadline=None)
-@given(
-    st.lists(
-        st.lists(
-            st.tuples(
-                st.integers(min_value=0, max_value=2),   # key
-                st.integers(min_value=0, max_value=2),   # value
-                st.integers(min_value=0, max_value=9),   # effective time
-            ),
-            min_size=0,
-            max_size=6,
-        ),
-        min_size=1,
-        max_size=3,
-    )
-)
-def test_scd2_upsert_matches_python_model(spark, batches):
-    """SCD2 history vs an independent model of the contract: per
-    batch+key the latest effective version wins; a differing payload
-    with a strictly newer effective time closes the current row and
-    reopens; identical payloads and stale (<= current valid_from)
-    versions are no-ops. Random batch sequences hit close/reopen
-    chains, stale replays, and unchanged keys in one walk."""
-    import uuid
-
-    from mozart_etl_spark import writers
-
-    # drop duplicate (key, eff) pairs: with both engines fed the same
-    # deduped rows, the "latest effective wins" election is total
-    clean_batches = []
-    for batch in batches:
-        seen, rows = set(), []
-        for k, v, e in batch:
-            if (k, e) not in seen:
-                seen.add((k, e))
-                rows.append((k, v, e))
-        clean_batches.append(rows)
-
-    tbl = f"default.scd2_prop_{uuid.uuid4().hex[:10]}"
-    state: dict = {}  # key -> {"cur": (v, vf) | None, "hist": [(v, vf, vt)]}
-    try:
-        created = False
-        for rows in clean_batches:
-            if not rows:
-                continue
-            df = spark.createDataFrame(rows, "pk INT, v INT, eff INT")
-            writers.scd2_upsert(spark, df, tbl, ("pk",), "eff")
-
-            winners = {}
-            for k, v, e in rows:
-                if k not in winners or e > winners[k][1]:
-                    winners[k] = (v, e)
-            if not created:
-                for k, (v, e) in winners.items():
-                    state[k] = {"cur": (v, e), "hist": []}
-                created = True
-                continue
-            for k, (v, e) in winners.items():
-                if k not in state:
-                    state[k] = {"cur": (v, e), "hist": []}
-                    continue
-                cv, cvf = state[k]["cur"]
-                if v != cv and e > cvf:
-                    state[k]["hist"].append((cv, cvf, e))
-                    state[k]["cur"] = (v, e)
-
-        if created:
-            got = {
-                (r["pk"], r["v"], r["valid_from"], r["valid_to"], r["is_current"])
-                for r in spark.table(tbl).collect()
-            }
-            want = set()
-            for k, s in state.items():
-                for v, vf, vt in s["hist"]:
-                    want.add((k, v, vf, vt, False))
-                cv, cvf = s["cur"]
-                want.add((k, cv, cvf, None, True))
-            assert got == want
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-
-
-@settings(max_examples=8, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=2),  # key
-            st.integers(min_value=0, max_value=9),  # left ts
-        ),
-        min_size=1,
-        max_size=12,
-    ),
-    st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=2),  # key
-            st.integers(min_value=0, max_value=9),  # right ts
-            st.integers(min_value=0, max_value=3),  # payload
-        ),
-        min_size=0,
-        max_size=12,
-    ),
-)
-def test_asof_join_backward_matches_python_model(spark, lrows, rrows):
-    """Backward-inclusive as-of join vs a brute-force model: per left
-    row, the right row with the same key and the greatest
-    (ts <= left_ts), ties on ts broken by greatest payload. The tight
-    ts range makes equal-timestamp matches (inclusive boundary) and
-    no-match lefts routine."""
-    from mozart_etl_spark.operators.events import asof_join_backward
-
-    left = spark.createDataFrame(
-        [(k, t, i) for i, (k, t) in enumerate(lrows)], "k INT, lt LONG, lid LONG"
-    )
-    right = spark.createDataFrame(rrows, "k INT, rt LONG, pay LONG")
-    got = {
-        r["lid"]: (r["asof_ts"], r["asof_pay"])
-        for r in asof_join_backward(
-            left, right, ("k",), "lt", "rt", payload_cols=("pay",)
-        ).collect()
-    }
-
-    want = {}
-    for i, (k, lt) in enumerate(lrows):
-        cands = [(rt, p) for kk, rt, p in rrows if kk == k and rt <= lt]
-        want[i] = max(cands) if cands else (None, None)
-    assert got == want
-
-
-@settings(max_examples=15, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=-1000, max_value=1000),
-            st.integers(min_value=-1000, max_value=1000),
-            st.integers(min_value=-1000, max_value=1000),
-        ),
-        min_size=1,
-        max_size=30,
-    ),
-    st.integers(min_value=1, max_value=20),
-)
-def test_zvalue_matches_python_model(spark, rows, bits):
-    """The Morton z-value fold (min-max scale to 2^bits buckets,
-    bit-plane interleave, bits clamped below the bigint sign bit) vs a
-    bit-for-bit Python model — degenerate all-equal columns and the
-    bits > 63//n clamp included."""
-    import math
-
-    from mozart_etl_spark import writers
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(rows, "a LONG, b LONG, c LONG")
-    cols = [F.col("a"), F.col("b"), F.col("c")]
-    names = ["a", "b", "c"]
-    stats = df.agg(
-        *[F.min(c).alias(f"_lo{i}") for i, c in enumerate(names)],
-        *[F.max(c).alias(f"_hi{i}") for i, c in enumerate(names)],
-    )
-    z = writers._zvalue(
-        cols,
-        [F.col(f"_lo{i}") for i in range(3)],
-        [F.col(f"_hi{i}") for i in range(3)],
-        bits=bits,
-    )
-    got = [
-        r["z"]
-        for r in df.crossJoin(F.broadcast(stats)).select(z.alias("z")).collect()
-    ]
-
-    n = 3
-    eb = min(bits, 63 // n)
-    los = [min(r[j] for r in rows) for j in range(n)]
-    his = [max(r[j] for r in rows) for j in range(n)]
-    want = []
-    for r in rows:
-        zi = 0
-        for j in range(n):
-            span = 1.0 if his[j] == los[j] else float(his[j] - los[j])
-            s = min(2**eb - 1, math.floor((r[j] - los[j]) / span * (2**eb - 1)))
-            for i in range(eb):
-                zi |= ((s >> i) & 1) << (i * n + j)
-        want.append(zi)
-    assert got == want
-
-
-@settings(max_examples=12, deadline=None)
-@given(
-    st.lists(st.integers(min_value=0, max_value=10_000), min_size=1, max_size=40, unique=True),
-    st.floats(min_value=0.0, max_value=1.0, allow_nan=False),
-    st.floats(min_value=0.0, max_value=1.0, allow_nan=False),
-)
-def test_sample_deterministic_membership_and_nesting(spark, ids, f1, f2):
-    """Bernoulli sampling vs a Python replica of the md5 draw: exact
-    membership (keep iff md5('s0:'||id)[:8] < threshold hex), and the
-    nested-subset guarantee — a larger fraction's sample contains
-    every smaller fraction's sample, the property that makes
-    sample-size sweeps consistent."""
-    import hashlib
-
-    df = spark.createDataFrame([(i,) for i in ids], "id LONG")
-    lo, hi = sorted((f1, f2))
-    got_lo = {r["id"] for r in C.sample_deterministic(df, "id", lo).collect()}
-    got_hi = {r["id"] for r in C.sample_deterministic(df, "id", hi).collect()}
-
-    def draw(i: int) -> str:
-        return hashlib.md5(f"s0:{i}".encode()).hexdigest()[:8]
-
-    for frac, got in ((lo, got_lo), (hi, got_hi)):
-        cut = C.fraction_threshold_hex(frac)
-        want = {i for i in ids if draw(i) < cut}
-        assert got == want
-    assert got_lo <= got_hi
-
-
 @settings(max_examples=8, deadline=None)
 @given(st.lists(st.integers(min_value=0, max_value=10_000), min_size=1, max_size=30, unique=True))
 def test_shuffle_order_matches_python_model(spark, ids):

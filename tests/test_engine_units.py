@@ -374,3 +374,20 @@ def test_ntile_formula_matches_sql_ntile():
             for rank in range(1, n + 1)
         ]
         assert mine == duck, n
+
+
+def test_orphan_keys_counts_null_keys(spark):
+    """NULL fact keys reference nothing: they are orphans and must be
+    reflected in n_orphan_keys, not silently skipped by
+    count_distinct; an orphan-free input still reports 0."""
+    from mozart_etl_spark.operators.quality import orphan_keys
+
+    fact = spark.createDataFrame(
+        [(None,), (None,), (7,), (1,)], "user_id INT"
+    )
+    dim = spark.createDataFrame([(1,)], "id INT")
+    row = orphan_keys(fact, dim, "user_id", "id").collect()[0]
+    assert row["n_orphan_rows"] == 3  # two NULLs + key 7
+    assert row["n_orphan_keys"] == 2  # {NULL, 7}
+    clean = orphan_keys(spark.createDataFrame([(1,)], "user_id INT"), dim, "user_id", "id").collect()[0]
+    assert (clean["n_orphan_rows"], clean["n_orphan_keys"]) == (0, 0)

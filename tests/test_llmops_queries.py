@@ -52,56 +52,6 @@ def test_components_raise_on_chain_beyond_round_cap(spark, monkeypatch):
         dedup_ops.connected_components(chain)
 
 
-def test_exact_collapse_reps_star_and_min_words(spark):
-    """exact_collapse: one min-id representative per distinct text,
-    star edge (rep, member) per collapsed copy with doc_a < doc_b,
-    and min_words excluding docs too short to shingle — verbatim
-    copies of a sub-n-word text must NOT be star-linked, because the
-    exact pairwise semantics (and the SQL oracle) give shingle-less
-    docs no edges at all."""
-    from mozart_etl_spark.operators.dedup import exact_collapse
-
-    rows = [
-        (7, "alpha beta gamma delta"),
-        (3, "alpha beta gamma delta"),   # dup, lower id -> representative
-        (9, "alpha beta gamma delta"),   # dup
-        (5, "something else entirely here"),
-        (11, "too short"),               # < 3 words
-        (12, "too short"),               # verbatim dup of a short doc
-        (13, None),                      # NULL text never collapses
-    ]
-    docs = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    reps, star = exact_collapse(docs, min_words=3)
-    assert {r["doc_id"] for r in reps.collect()} == {3, 5}
-    got_star = {(r["doc_a"], r["doc_b"]) for r in star.collect()}
-    assert got_star == {(3, 7), (3, 9)}
-    assert all(a < b for a, b in got_star)
-
-
-def test_exact_collapse_no_min_words_keeps_nulls_and_star_links_short(spark):
-    """exact_collapse(min_words=None) — r7 ADVICE regression: NULL-text
-    rows must appear in representatives untouched (md5(NULL) used to
-    yield a NULL join key, silently dropping them from BOTH outputs),
-    and must never be star-linked to each other (NULL != NULL).
-    Verbatim shingle-less duplicates (e.g. '') ARE star-linked in this
-    mode by the documented exact-text-equality contract."""
-    from mozart_etl_spark.operators.dedup import exact_collapse
-
-    rows = [
-        (1, "alpha beta gamma"),
-        (6, "alpha beta gamma"),  # verbatim dup -> star (1, 6)
-        (2, None),                # NULL text: own representative
-        (3, None),                # NULL text: own representative
-        (4, ""),                  # shingle-less verbatim dup pair:
-        (5, ""),                  #   star-linked under exact-equality
-    ]
-    docs = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    reps, star = exact_collapse(docs)  # min_words=None
-    assert {r["doc_id"] for r in reps.collect()} == {1, 2, 3, 4}
-    got_star = {(r["doc_a"], r["doc_b"]) for r in star.collect()}
-    assert got_star == {(1, 6), (4, 5)}
-
-
 def test_jaccard_edges_exact_cluster_is_linear_and_components_exact(spark):
     """The certified edge chain's stage-0 collapse on an adversarial
     EXACT-duplicate cluster: 40 verbatim copies must contribute 39

@@ -1,11 +1,11 @@
 """Behavioral pins for the deterministic hot-bucket cap in the
-MinHash-LSH band join (``signature_band_pairs(max_bucket_size=...)``).
+embedding LSH band join (``lsh_near_dup_pairs(max_bucket_size=...)``).
 
-The cap is the safety valve for the one residual quadratic term the
-certified dedup chain documents (COVERAGE.md): clusters of NEAR-
-duplicate texts share every band's bucket, and within-bucket pair
-enumeration is quadratic in bucket size. These tests pin the three
-contracts that make the cap safe to reach for in production:
+The cap is the safety valve for the one residual quadratic term of
+banded candidate generation: a cluster of near-identical vectors
+shares every table's bucket, and within-bucket pair enumeration is
+quadratic in bucket size. These tests pin the three contracts that
+make the cap safe to reach for in production:
 
 1. off (None) means OFF — bit-identical result to an effectively
    unbounded cap, and no Window node in the physical plan (the
@@ -22,9 +22,6 @@ import contextlib
 import io
 
 import pytest
-from hypothesis import given, settings, strategies as st
-
-from mozart_etl_spark.operators import dedup as D
 
 
 def _plan(df) -> str:
@@ -33,54 +30,6 @@ def _plan(df) -> str:
         df.explain("formatted")
     return buf.getvalue()
 
-# 8-member hot cluster (identical text => identical signatures => every
-# band bucket has 8 members) + a 2-member cold pair + 2 singletons.
-_CORPUS = (
-    [(i, "alpha beta gamma delta epsilon zeta") for i in range(8)]
-    + [(100, "omega psi chi phi upsilon tau"), (101, "omega psi chi phi upsilon tau")]
-    + [(200, "one two three four five six"), (201, "moon star cloud rain snow wind")]
-)
-
-
-def _pairs(spark, max_bucket_size):
-    df = spark.createDataFrame(_CORPUS, "doc_id INT, text STRING")
-    out = D.minhash_lsh_pairs(
-        df, n=3, num_perm=8, bands=4, max_bucket_size=max_bucket_size
-    )
-    return sorted((r["doc_a"], r["doc_b"], r["est_jaccard"]) for r in out.collect())
-
-
-def test_cap_off_identical_to_unbounded_and_window_free(spark):
-    assert _pairs(spark, None) == _pairs(spark, 10**6)
-    df = spark.createDataFrame(_CORPUS, "doc_id INT, text STRING")
-    assert "Window" not in _plan(D.minhash_lsh_pairs(df, n=3, num_perm=8, bands=4))
-    # since r8 the cap-on path checkpoints AFTER the occupancy filter,
-    # so its Window is evaluated once into the materialized blocks and
-    # must not leak into the final (post-checkpoint) plan either — a
-    # Window here means both self-join sides recompute the count
-    assert "Window" not in _plan(
-        D.minhash_lsh_pairs(df, n=3, num_perm=8, bands=4, max_bucket_size=5)
-    )
-
-
-def test_cap_drops_hot_cluster_keeps_cold_buckets(spark):
-    uncapped = _pairs(spark, None)
-    cluster = {(a, b) for a, b, _ in uncapped if a < 8 and b < 8}
-    assert len(cluster) == 28  # the quadratic term: C(8,2) verbatim pairs
-    assert (100, 101, 1.0) in [(a, b, j) for a, b, j in uncapped]
-
-    capped = _pairs(spark, 4)
-    assert {(a, b) for a, b, _ in capped if a < 8 and b < 8} == set()
-    assert capped == [t for t in uncapped if not (t[0] < 8 and t[1] < 8)]
-
-
-def test_cap_below_two_rejected(spark):
-    df = spark.createDataFrame(_CORPUS, "doc_id INT, text STRING")
-    with pytest.raises(ValueError, match="max_bucket_size"):
-        D.minhash_lsh_pairs(df, n=3, num_perm=8, bands=4, max_bucket_size=1)
-
-
-# --- embedding twin: lsh_near_dup_pairs(max_bucket_size=...) ---
 
 _DIM = 8
 
@@ -267,24 +216,3 @@ def test_r8_candidate_config_matches_certified_on_driver_corpus(spark):
     candidate = run(collapse_identical=True, max_bucket_size=256)
     assert len(certified) >= 20  # the injected twin floor
     assert candidate == certified
-
-
-@settings(max_examples=4, deadline=None)
-@given(
-    st.lists(st.text(alphabet="ab x", min_size=0, max_size=40), min_size=2, max_size=10),
-    st.integers(min_value=2, max_value=4),
-)
-def test_cap_is_monotone_in_the_cap(spark, texts, cap):
-    """Property: bucket sizes don't depend on the cap, so raising the
-    cap only ever ADDS buckets (and therefore pairs) — for any corpus,
-    pairs(cap) ⊆ pairs(cap + 1) ⊆ pairs(None)."""
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id INT, text STRING"
-    )
-
-    def pairs(mbs):
-        out = D.minhash_lsh_pairs(df, n=2, num_perm=8, bands=4, max_bucket_size=mbs)
-        return {(r["doc_a"], r["doc_b"]) for r in out.collect()}
-
-    tight, loose, unbounded = pairs(cap), pairs(cap + 1), pairs(None)
-    assert tight <= loose <= unbounded

@@ -17,11 +17,9 @@ boundary (every case below is a live measurement, not doctrine):
   (session.py RUNTIME_CONFS pins ``spark.sql.ansi.enabled=true`` so
   a cluster-side default can't silently swap throw for pre-ANSI
   wraparound — a silently negative 100 TB byte budget is the worst
-  outcome of the three). Folds whose semantics demand a VALUE past
-  2^63 opt into ``functions.widened_sum`` (DECIMAL(38,0) addends →
-  exact map-side partials, ~1e38 headroom), whose DuckDB twin
-  ``CAST(sum(x) AS DECIMAL(38,0))`` is bit-equal parity — pinned
-  here across the 2^63 crossing with NULLs and groups.
+  outcome of the three). No registered fold needs a value past
+  2^63; one that did would widen its addends in the query itself
+  (``sum(CAST(x AS DECIMAL(38,0)))``).
 - Legal near-max: sums that stop AT 2^63-1 are exact and equal in
   both engines (no early widening, no precision loss).
 - ``AVG(BIGINT)``: both engines fold in DOUBLE — no throw at any
@@ -48,8 +46,8 @@ boundary (every case below is a live measurement, not doctrine):
 
 Reference anchor: the DECIMAL(p,s) ingest surface the reference maps
 (`/root/reference/mozart_etl/code_locations/_tenant_factory.py:49-50`,
-`docker/postgres/init.sql:15`) — this engine's JDBC type map
-(types.py) carries the same p/s through to these Spark semantics.
+`docker/postgres/init.sql:15`) — Spark's JDBC reader carries the
+same p/s through to these Spark semantics.
 """
 
 from __future__ import annotations
@@ -113,30 +111,6 @@ def test_sum_bigint_at_exact_max_agrees(spark):
         ["CREATE TABLE t(x BIGINT)", f"INSERT INTO t VALUES ({I64_MAX - 1}), (1)"],
     )
     assert got[0][0] == I64_MAX
-
-
-def test_widened_sum_parity_across_2p63(spark):
-    """The opt-in value path: DECIMAL(38,0) fold == DuckDB HUGEINT
-    sum cast to DECIMAL(38,0), bit-equal, incl. NULL addends and the
-    all-NULL group (SQL: sum of no non-NULL addends is NULL)."""
-    from mozart_etl_spark.functions import widened_sum
-
-    rows = [("a", I64_MAX), ("a", I64_MAX), ("a", None), ("b", 7), ("c", None)]
-    df = spark.createDataFrame(rows, "g STRING, x BIGINT")
-    got = sorted(
-        (r["g"], r["s"])
-        for r in df.groupBy("g").agg(widened_sum("x").alias("s")).collect()
-    )
-    want = _duck(
-        "SELECT g, CAST(sum(x) AS DECIMAL(38,0)) AS s FROM t GROUP BY g ORDER BY g",
-        [
-            "CREATE TABLE t(g VARCHAR, x BIGINT)",
-            f"INSERT INTO t VALUES ('a', {I64_MAX}), ('a', {I64_MAX}), "
-            "('a', NULL), ('b', 7), ('c', NULL)",
-        ],
-    )
-    assert got == [tuple(w) for w in want]
-    assert got[0][1] == Decimal(2 * I64_MAX)  # exactly 2^64 - 2, past 2^63
 
 
 def test_avg_bigint_double_accumulator_agrees(spark):

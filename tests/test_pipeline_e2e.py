@@ -240,59 +240,6 @@ def test_two_tenant_isolation(spark, tmp_path):
         assert tags == {f"{seg}_SEG"}
 
 
-def test_partitioned_write_prunes(spark):
-    """Partition pruning: a filter on the partition column must appear
-    as a PartitionFilters entry, not a data filter over all files."""
-    import io
-    from contextlib import redirect_stdout
-
-    ns = f"w{uuid.uuid4().hex[:8]}"
-    o = spark.read.parquet(f"{SF}/orders.parquet").withColumn(
-        "order_year", F.year("o_orderdate")
-    )
-    n = writers.partitioned_write(spark, o, f"{ns}.orders_by_year", ("order_year",))
-    assert n == o.count()
-
-    q = spark.table(f"{ns}.orders_by_year").filter(F.col("order_year") == 1996)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        q.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan and "order_year" in plan.split("PartitionFilters", 1)[1].split("]", 1)[0]
-
-    # dynamic overwrite replaces only the partitions present in the frame
-    one_year = o.filter(F.col("order_year") == 1996)
-    writers.partitioned_write(spark, one_year, f"{ns}.orders_by_year", ("order_year",))
-    assert spark.table(f"{ns}.orders_by_year").count() == n  # other years intact
-
-
-def test_bucketed_join_has_no_shuffle(spark):
-    """Two same-bucketed tables join without a shuffle exchange."""
-    import io
-    from contextlib import redirect_stdout
-
-    ns = f"w{uuid.uuid4().hex[:8]}"
-    o = spark.read.parquet(f"{SF}/orders.parquet")
-    li = spark.read.parquet(f"{SF}/lineitem.parquet")
-    writers.bucketed_write(spark, o, f"{ns}.orders_b", ("o_orderkey",), n_buckets=8)
-    writers.bucketed_write(
-        spark, li.withColumnRenamed("l_orderkey", "o_orderkey"), f"{ns}.lineitem_b",
-        ("o_orderkey",), n_buckets=8,
-    )
-    joined = spark.table(f"{ns}.orders_b").join(
-        spark.table(f"{ns}.lineitem_b"), "o_orderkey"
-    )
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        joined.explain("formatted")
-    plan = buf.getvalue()
-    import re
-
-    n_exchange = len(re.findall(r"\(\d+\) Exchange", plan))
-    assert n_exchange == 0, f"bucketed join still shuffles:\n{plan[:1500]}"
-    assert joined.count() == li.count()
-
-
 def test_env_prefix_namespaces(spark, tmp_path):
     spec = _tenant(
         tmp_path,

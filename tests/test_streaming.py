@@ -14,20 +14,9 @@ from pyspark.sql import functions as F
 
 from mozart_etl_spark.io import table
 from mozart_etl_spark.operators import similarity as sim_ops
-from mozart_etl_spark.streaming import events_stream, run_to_memory, stream_dedup
+from mozart_etl_spark.streaming import events_stream, run_to_memory
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_stream_dedup_matches_batch(spark):
-    st = events_stream(spark, SF)
-    dd = stream_dedup(st, ["user_id", "event_type"], watermark="2 hours")
-    out = run_to_memory(
-        dd.select("user_id", "event_type"), f"dd_{uuid.uuid4().hex[:8]}", output_mode="append"
-    )
-    batch = table(spark, SF, "events").select("user_id", "event_type").distinct()
-    assert out.count() == batch.count()
-    assert out.exceptAll(batch).count() == 0
 
 
 def test_lsh_knn_recall_vs_bruteforce(spark):

@@ -29,11 +29,10 @@ boundary:
   proof; this suite pins the boundary itself and the immunity of
   each consumer shape. An operator that must EMIT lowered raw
   unicode text cannot be oracle-certified on these classes —
-  normalize at ingest (operators.text.nfc_normalize for codepoint
-  forms; a casefold policy for case) instead;
+  normalize the source at ingest instead;
 - r11 hard classes measured parity-SAFE end-to-end: NFC vs NFD
   encodings (byte-faithful everywhere — twins stay DISTINCT
-  documents until nfc_normalize unifies them at ingest, by policy),
+  documents, by policy),
   astral-plane emoji incl. ZWJ sequences and regional-indicator
   flags (even through the split('')+ascii() rolling-hash path: both
   engines split into codepoints and return the codepoint number),
@@ -186,44 +185,14 @@ def test_lower_consumers_immune_to_case_divergence(spark, duck, text):
     assert s_ratio == d_ratio
 
 
-def test_nfc_normalize_matches_duckdb(spark, duck):
-    """The documented ingest normalization policy: the Arrow-batched
-    nfc_normalize operator must agree byte-for-byte with DuckDB's
-    nfc_normalize() — including NULL passthrough and already-NFC
-    idempotence — so a normalized corpus certifies identically."""
-    import unicodedata
-
-    from mozart_etl_spark.operators.text import nfc_normalize
-
-    base = "Héllo Wörld Café Naïve é̂"
-    rows = [
-        (0, unicodedata.normalize("NFC", base)),
-        (1, unicodedata.normalize("NFD", base)),
-        (2, None),
-        (3, "plain ascii"),
-        (4, "日本語 🎉 z̀́̂̃"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    got = {
-        r["doc_id"]: r["text"] for r in nfc_normalize(df, "text").collect()
-    }
-    for i, t in rows:
-        want = duck.execute("SELECT nfc_normalize(?)", [t]).fetchone()[0] if t is not None else None
-        assert got[i] == want, f"doc {i}: {got[i]!r} != {want!r}"
-    assert got[0] == got[1], "NFC/NFD twins must unify under the policy"
-
-
-def test_nfc_nfd_twins_distinct_until_normalized(spark):
+def test_nfc_nfd_twins_stay_distinct(spark):
     """Codepoint-faithfulness contract: NFC and NFD encodings of the
     same visible text are DIFFERENT documents to every byte-faithful
-    stage (exact dedup must NOT collapse them), and become the SAME
-    document after the nfc_normalize ingest policy — both engines
-    agree on both sides of the boundary, so this is an engine
-    contract, not a parity risk."""
+    stage (exact dedup must NOT collapse them) — both engines agree,
+    so this is an engine contract, not a parity risk."""
     import unicodedata
 
     from mozart_etl_spark.operators.dedup import exact_dedup
-    from mozart_etl_spark.operators.text import nfc_normalize
 
     base = "Héllo Wörld Café"
     rows = [
@@ -234,10 +203,6 @@ def test_nfc_nfd_twins_distinct_until_normalized(spark):
     raw = exact_dedup(df).collect()
     assert len(raw) == 2 and all(r["n_copies"] == 1 for r in raw), (
         "NFC/NFD twins wrongly collapsed raw"
-    )
-    norm = exact_dedup(nfc_normalize(df)).collect()
-    assert len(norm) == 1 and norm[0]["n_copies"] == 2, (
-        "normalized twins must collapse to one group"
     )
 
 

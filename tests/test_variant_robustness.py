@@ -132,7 +132,7 @@ EDGE_SENSITIVE = [
     # identically in both engines and are never dropped. The posture
     # split a fold WOULD hit (Spark ANSI-throw vs DuckDB HUGEINT) is
     # pinned at the primitive level in tests/test_overflow_parity.py;
-    # value semantics opt into functions.widened_sum.
+    # value semantics would widen the addends to DECIMAL(38,0).
     "corpus_weighted_sample",     # ln(u)/n_chars priority at near-max n_chars
                                   # (pri -> -0.0, +0.0-canonicalized; top-k
                                   # membership shifts deterministically)

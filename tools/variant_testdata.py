@@ -32,8 +32,7 @@ reproducible without any RNG):
   ASCII-anchored LIKE/set membership — so the sweep staying green IS
   the engine-wide immunity proof (tests/test_unicode_parity.py pins
   the boundary itself; any future operator that emits lowered raw
-  text must normalize at ingest via operators.text.nfc_normalize +
-  casefold policy or keep İ/Σ out);
+  text must normalize its source at ingest or keep İ/Σ out);
 - customer/orders/part/supplier/events: NULLs in non-key columns,
   negative balances, trailing/doubled spaces in names, lowercased
   flag values, fractional quantities, timestamp shift, NULL event
@@ -88,8 +87,7 @@ reproducible without any RNG):
   (filters, double divisions, order statistics, stringification);
   any FUTURE integer fold meets Spark's ANSI ARITHMETIC_OVERFLOW
   here loudly instead of silently diverging from DuckDB's HUGEINT
-  promotion (posture + widened_sum opt-out pinned in
-  tests/test_overflow_parity.py).
+  promotion (posture pinned in tests/test_overflow_parity.py).
 
 - ragged-dimension embeddings (r12): truncated (dim 32, vec_id ≡ 19
   mod 127), mixed-model-version (dim 96, ≡ 29 mod 137), and
@@ -226,9 +224,7 @@ def transform(name: str, tbl: pa.Table) -> pa.Table:
             # carry the same VISIBLE text with different codepoint
             # sequences — byte-faithful operators must treat them as
             # distinct documents, identically in both engines (exact
-            # dedup must NOT collapse them; shingles differ). The
-            # nfc_normalize ingest operator is the documented policy
-            # for callers who want them collapsed.
+            # dedup must NOT collapse them; shingles differ).
             if d % 53 == 11:
                 texts[i] = unicodedata.normalize("NFC", acc_twin + (originals[i] or ""))
             if d % 53 == 12 and (d - 1) in idx_of:
@@ -274,9 +270,8 @@ def transform(name: str, tbl: pa.Table) -> pa.Table:
         # FUTURE query that sums n_chars will hit Spark's ANSI
         # ARITHMETIC_OVERFLOW loudly in this sweep instead of
         # silently diverging from DuckDB's HUGEINT promotion (the
-        # measured posture split, tests/test_overflow_parity.py —
-        # value semantics opt into functions.widened_sum). d % 5
-        # spreads five distinct near-max values incl. exactly
+        # measured posture split, tests/test_overflow_parity.py).
+        # d % 5 spreads five distinct near-max values incl. exactly
         # int64-max so ORDER BY sees non-tied extremes.
         cols["n_chars"] = [
             (9223372036854775807 - (d % 5)) if (d is not None and d % 47 == 21) else v
