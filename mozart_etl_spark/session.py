@@ -26,6 +26,17 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, between 1 and 24 GiB.
+
+    In local mode the driver JVM is the only executor, so its heap is
+    the engine's working memory; the other half stays for the Python
+    workers the Arrow kernels run in and for the page cache the parquet
+    scans read through. ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    half_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**31
+    return f"{max(1, min(24, half_gib))}g"
+
+
 #: Configs that are safe (and desirable) to apply to an externally
 #: provided session at runtime — all are dynamic SQL confs.
 RUNTIME_CONFS: dict[str, str] = {
@@ -91,7 +102,7 @@ def get_spark(
         **RUNTIME_CONFS,
         "spark.sql.shuffle.partitions": str(shuffle_partitions or max(cpus, 8)),
         "spark.ui.enabled": "false",
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
         # managed-table data (raw/mart layers) lands here; in-memory
         # catalog metadata is per-session, so runs are self-contained.
         # The default is PID-scoped: the stale-location cleanup in

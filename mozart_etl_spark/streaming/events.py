@@ -36,6 +36,7 @@ continuously) and on a drained replay (``availableNow``):
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -303,42 +304,82 @@ def _state_stores(spark: SparkSession) -> int:
     return min(8, spark.sparkContext.defaultParallelism)
 
 
+#: Spark's FileSystem-API checkpoint manager (the class moved to the
+#: ``checkpointing`` package in Spark 4.1;
+#: tests/test_spark_canaries.py fails if it moves again)
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _is_local(spark: SparkSession, path: str | None) -> bool:
+    """Whether a checkpoint at ``path`` lands on the local filesystem.
+    ``None`` is Spark's own temp checkpoint, which is local. A path
+    without a scheme resolves against Hadoop's ``fs.defaultFS``, as
+    Spark resolves it."""
+    if path is None:
+        return True
+    scheme = urlparse(path).scheme
+    if not scheme:
+        default_fs = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+        scheme = urlparse(default_fs or "file:///").scheme
+    return scheme == "file"
+
+
 def _drain(
     spark: SparkSession,
     writer: DataStreamWriter,
     what: str,
     timeout_s: int,
     final_no_data_batch: bool,
+    checkpoint: str | None,
 ) -> None:
     """Run ``writer`` with ``availableNow`` to the end of its input, with
     ``spark.sql.shuffle.partitions`` scoped to :func:`_state_stores` and,
     unless ``final_no_data_batch``, the trailing no-data micro-batch
-    switched off; both confs are restored afterwards. A query still
+    switched off. A local ``checkpoint`` (``None`` is Spark's temp
+    checkpoint) is written through the FileSystem-API checkpoint
+    manager. All three confs are restored afterwards. A query still
     running after ``timeout_s`` is stopped, then ``TimeoutError`` names
     ``what``.
 
-    The scoping is session-global: a CONCURRENT batch query in this
-    session during the drain inherits the reduced counts; fine for a
+    Spark's default manager renames through ``FileContext``, which on
+    a host without the native Hadoop library forks ``readlink`` for
+    every rename (drain A/B in SCALING.md). The FileSystem-API manager
+    renames with ``File.renameTo``: POSIX ``rename(2)``, atomic, which
+    is Spark's stated condition for that manager to be correct, and a
+    bounded drain is its checkpoint's only writer. It writes the same
+    checkpoint files, and either manager resumes the other's
+    checkpoint. A remote checkpoint keeps Spark's default.
+
+    The scoping is session-global: a CONCURRENT query in this session
+    during the drain inherits the scoped confs; fine for a
     single-threaded harness, move to a dedicated session for
     concurrent use."""
-    nodata = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nodata = spark.conf.get(nodata)
-    spark.conf.set("spark.sql.shuffle.partitions", str(_state_stores(spark)))
+    scoped = {"spark.sql.shuffle.partitions": str(_state_stores(spark))}
     if not final_no_data_batch:
-        spark.conf.set(nodata, "false")
+        scoped["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    if _is_local(spark, checkpoint):
+        scoped["spark.sql.streaming.checkpointFileManagerClass"] = _FS_CHECKPOINT_MANAGER
+    prev = {k: spark.conf.get(k, None) for k in scoped}
+    for k, v in scoped.items():
+        spark.conf.set(k, v)
     try:
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination(timeout_s)
         # stop BEFORE the conf restore (r15 ADVICE): a still-running
         # query must not outlive the scoped conf it was started under
-        if q.isActive:  # pragma: no cover - deadline guard
+        if q.isActive:
             q.stop()
             raise TimeoutError(f"{what} did not drain in {timeout_s}s")
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if not final_no_data_batch:
-            spark.conf.set(nodata, prev_nodata)
+        # a conf the session had not set goes back to unset
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def run_to_memory(
@@ -376,8 +417,13 @@ def run_to_memory(
     AGGREGATION emits its windows *in* the no-data batch — passing
     False there would silently drain zero rows, so the default stays
     True and call sites opt in per profiled query.
+
+    Spark's temp checkpoint, or one under a local
+    ``spark.sql.streaming.checkpointLocation``, is written through the
+    FileSystem-API checkpoint manager for the drain (see :func:`_drain`).
     """
     spark = df.sparkSession
     writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
-    _drain(spark, writer, f"stream {name}", timeout_s, final_no_data_batch)
+    checkpoint = spark.conf.get("spark.sql.streaming.checkpointLocation", None)
+    _drain(spark, writer, f"stream {name}", timeout_s, final_no_data_batch, checkpoint)
     return spark.table(name)

@@ -13,8 +13,7 @@ drains, and with a processing-time timeout pending, availableNow
 keeps scheduling empty micro-batches until every timeout fires, so
 the drain never terminates (observed: 376 epochs and no progress on a
 30-min TTL). Evicting idle keys on an unbounded stream is the cluster
-follow-up (SCALING.md); until then no key is evicted and ``final`` is
-always false.
+follow-up (SCALING.md); until then no key is evicted.
 """
 
 from __future__ import annotations
@@ -35,22 +34,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-RUNNING_TOTALS_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-        StructField("first_ts_us", LongType()),
-        StructField("last_ts_us", LongType()),
-        StructField("final", BooleanType()),
-    ]
-)
-
 #: Kernel-facing output: total_value rides as (value, is_nan) because
 #: the pandas->Arrow hop treats NaN as pandas' null sentinel — an
 #: SQL-SUM-faithful NaN total would silently emerge as NULL (measured
-#: r13 float-key axis). The wrapper reconstructs the public
-#: RUNNING_TOTALS_SCHEMA with a JVM-side CASE.
+#: r13 float-key axis). The wrapper reconstructs ``total_value`` with a
+#: JVM-side CASE.
 _KERNEL_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -59,7 +47,6 @@ _KERNEL_SCHEMA = StructType(
         StructField("_total_is_nan", BooleanType()),
         StructField("first_ts_us", LongType()),
         StructField("last_ts_us", LongType()),
-        StructField("final", BooleanType()),
     ]
 )
 
@@ -119,7 +106,7 @@ def _update(
             last_us = hi if last_us is None else max(last_us, hi)
     state.update((n, total, total_nan, first_us, last_us))
     yield pd.DataFrame(
-        [[user_id, n, total, total_nan, first_us, last_us, False]],
+        [[user_id, n, total, total_nan, first_us, last_us]],
         columns=_KERNEL_SCHEMA.fieldNames(),
     )
 
@@ -127,8 +114,9 @@ def _update(
 def running_user_totals(stream: DataFrame) -> DataFrame:
     """Per-user running totals as a custom stateful operator.
 
-    Emits one row per user per micro-batch with the cumulative state
-    (``final=false``). Input must carry ``user_id, value, ts_us``.
+    Emits one row per user per micro-batch with the cumulative state:
+    ``user_id, n_events, total_value, first_ts_us, last_ts_us``. Input
+    must carry ``user_id, value, ts_us``.
     """
     # null-split BEFORE Arrow: see the kernel comment — a nullable
     # int64 ts_us would cross the Arrow->pandas boundary as float64
@@ -169,5 +157,4 @@ def running_user_totals(stream: DataFrame) -> DataFrame:
         .alias("total_value"),
         "first_ts_us",
         "last_ts_us",
-        "final",
     )

@@ -15,6 +15,7 @@ forms below fails the test rather than stalling the suite.
 from __future__ import annotations
 
 import threading
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import Observation, Window
@@ -323,3 +324,119 @@ def test_update_mode_emits_every_group_in_its_data_batch(spark, tmp_path):
     assert batches[0] == 0
     assert emitted[0] == _batch_groups(spark, tmp_path)
     assert all(not emitted.get(b) for b in batches[1:])
+
+
+# A bounded drain writes its local checkpoint through Spark's
+# FileSystem-API checkpoint manager (streaming/events._drain): the
+# default FileContext manager forks ``readlink`` on every rename on a
+# host without the native Hadoop library. The conf key is internal and
+# the class moved package in Spark 4.1; a Spark that renames the key
+# would bring the forks back silently, so it fails here instead.
+
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _resolved_manager(session, path: str) -> str:
+    """Class of the checkpoint manager Spark resolves for ``path`` from
+    ``session``'s Hadoop conf."""
+    jvm = session._jvm
+    conf = session._jsparkSession.sessionState().newHadoopConf()
+    pkg = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = pkg.CheckpointFileManager.create(jvm.org.apache.hadoop.fs.Path(path), conf)
+    return manager.getClass().getName()
+
+
+@contextmanager
+def _manager(spark, cls: str | None):
+    """Scope the checkpoint manager (``None``: Spark's default)."""
+    prev = spark.conf.get(_MANAGER_KEY, None)
+    if cls is None:
+        spark.conf.unset(_MANAGER_KEY)
+    else:
+        spark.conf.set(_MANAGER_KEY, cls)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(_MANAGER_KEY)
+        else:
+            spark.conf.set(_MANAGER_KEY, prev)
+
+
+def test_drain_resolves_filesystem_checkpoint_manager(spark, tmp_path):
+    """Inside a drain over a local checkpoint, the manager resolved
+    from the drain's own Hadoop conf is the FileSystem-API one."""
+    from mozart_etl_spark.streaming import events
+
+    ckpt = str(tmp_path / "ckpt")
+    seen: list[str] = []
+
+    def probe(batch_df, batch_id):
+        # the batch must run in full for its state stores to commit
+        batch_df.collect()
+        seen.append(_resolved_manager(batch_df.sparkSession, ckpt))
+
+    writer = (
+        _hourly_stream(spark, tmp_path)
+        .writeStream.foreachBatch(probe)
+        .outputMode("update")
+        .option("checkpointLocation", ckpt)
+    )
+    events._drain(spark, writer, "canary drain", 120, True, ckpt)
+    assert seen and set(seen) == {events._FS_CHECKPOINT_MANAGER}
+
+
+def _keyed_counts(spark, src: str, ckpt: str) -> dict[str, int]:
+    """Drain per-key running counts over the parquet files in ``src``
+    from checkpoint ``ckpt``; the groups the drain updated."""
+    emitted: dict[str, int] = {}
+
+    def collect(batch_df, batch_id):
+        emitted.update((r["k"], r["n"]) for r in batch_df.collect())
+
+    q = (
+        spark.readStream.schema("k STRING")
+        .parquet(src)
+        .groupBy("k")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .writeStream.foreachBatch(collect)
+        .outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    _drained(q)
+    return emitted
+
+
+def _files(root) -> list[str]:
+    return sorted(str(p.relative_to(root)) for p in root.rglob("*") if p.is_file())
+
+
+@pytest.mark.parametrize("first_fs_api", [True, False])
+def test_checkpoint_resumes_under_the_other_manager(spark, tmp_path, first_fs_api):
+    """A local checkpoint written by one manager resumes under the
+    other: the second drain reads only the new file and continues the
+    first drain's state. Both managers write the same files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mozart_etl_spark.streaming.events import _FS_CHECKPOINT_MANAGER
+
+    managers = [_FS_CHECKPOINT_MANAGER, None]
+    if not first_fs_api:
+        managers.reverse()
+    src = tmp_path / "src"
+    src.mkdir()
+    pq.write_table(pa.table({"k": ["a", "a", "a", "b", "b"]}), src / "f1.parquet")
+    ckpts = {}
+    for i, cls in enumerate(managers):
+        ckpts[cls] = tmp_path / f"ckpt_{i}"
+        with _manager(spark, cls):
+            assert _keyed_counts(spark, str(src), str(ckpts[cls])) == {"a": 3, "b": 2}
+    assert _files(ckpts[managers[0]]) == _files(ckpts[managers[1]])
+
+    pq.write_table(pa.table({"k": ["a", "c"]}), src / "f2.parquet")
+    with _manager(spark, managers[1]):
+        resumed = _keyed_counts(spark, str(src), str(ckpts[managers[0]]))
+    assert resumed == {"a": 4, "c": 1}

@@ -258,17 +258,30 @@ def _state_store_counts(spark):
         spark.streams.removeListener(listener)
 
 
+#: the session confs a bounded drain scopes (streaming/events._drain)
+_SCOPED_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.noDataMicroBatches.enabled",
+    "spark.sql.streaming.checkpointFileManagerClass",
+)
+
+
+def _scoped(spark) -> dict[str, str | None]:
+    return {k: spark.conf.get(k, None) for k in _SCOPED_CONFS}
+
+
 def test_drain_state_partitions_scoping(spark):
     """Bounded drains run their stateful stage in one task wave: both
     drains run every state operator with ``min(8, defaultParallelism)``
-    stores, and the session conf is restored afterwards — a leaked conf
-    would silently resize every later batch shuffle in the session."""
+    stores, and every conf the drain scoped is restored afterwards — a
+    leaked partition count would silently resize every later batch
+    shuffle in the session."""
     import tempfile
 
     from mozart_etl_spark.streaming import hourly_counts_stream, stream_merge_to_table
 
     one_wave = min(8, spark.sparkContext.defaultParallelism)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    prev = _scoped(spark)
     with _state_store_counts(spark) as counts:
         out = run_to_memory(
             hourly_counts_stream(events_stream(spark, SF)),
@@ -276,7 +289,7 @@ def test_drain_state_partitions_scoping(spark):
         )
     assert counts and set(counts) == {one_wave}
     assert out.count() > 0
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert _scoped(spark) == prev
 
     tbl = "default.sp_scope_merge_check"
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -288,7 +301,7 @@ def test_drain_state_partitions_scoping(spark):
         )
     assert counts and set(counts) == {one_wave}
     assert n == out.count()
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert _scoped(spark) == prev
     spark.sql(f"DROP TABLE {tbl}")
 
 
@@ -302,8 +315,7 @@ def test_final_no_data_batch_scoping(spark):
     window emission) for every later streaming query in the session."""
     from mozart_etl_spark.streaming import click_view_interval_join
 
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev = spark.conf.get(key)
+    prev = _scoped(spark)
 
     def drain(skip: bool):
         out = run_to_memory(
@@ -317,10 +329,98 @@ def test_final_no_data_batch_scoping(spark):
         )
 
     with_batch = drain(skip=False)
-    assert spark.conf.get(key) == prev
+    assert _scoped(spark) == prev
     without_batch = drain(skip=True)
-    assert spark.conf.get(key) == prev
+    assert _scoped(spark) == prev
     assert with_batch == without_batch and len(with_batch) > 0
+
+
+class _StuckQuery:
+    """A query still running at the drain's deadline; ``stop`` records
+    the confs in force when it is called."""
+
+    isActive = True
+
+    def __init__(self, spark, at_stop: list):
+        self._spark, self._at_stop = spark, at_stop
+
+    def awaitTermination(self, timeout):
+        return False
+
+    def stop(self):
+        self._at_stop.append(_scoped(self._spark))
+
+
+class _Writer:
+    """The ``DataStreamWriter`` calls ``_drain`` makes, with ``start``
+    supplied by the test."""
+
+    def __init__(self, start):
+        self.start = start
+
+    def trigger(self, availableNow):
+        return self
+
+
+@pytest.mark.parametrize("prev_manager", [None, "prior.Manager"])
+@pytest.mark.parametrize("failure", ["timeout", "start_raises"])
+def test_drain_restores_confs_when_it_fails(spark, failure, prev_manager):
+    """A drain that times out or whose ``start()`` raises still restores
+    every conf it scoped, whether or not the session had set a
+    checkpoint manager; a timed-out query is stopped while the drain's
+    confs are still in force."""
+    from mozart_etl_spark.streaming import events
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    if prev_manager is not None:
+        spark.conf.set(key, prev_manager)
+    try:
+        before = _scoped(spark)
+        at_stop: list = []
+
+        def start():
+            if failure == "start_raises":
+                raise RuntimeError("start failed")
+            return _StuckQuery(spark, at_stop)
+
+        expected = TimeoutError if failure == "timeout" else RuntimeError
+        with pytest.raises(expected):
+            events._drain(spark, _Writer(start), "stuck drain", 1, False, None)
+        assert _scoped(spark) == before
+        if failure == "timeout":
+            assert at_stop == [
+                {
+                    "spark.sql.shuffle.partitions": str(events._state_stores(spark)),
+                    "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+                    key: events._FS_CHECKPOINT_MANAGER,
+                }
+            ]
+    finally:
+        spark.conf.unset(key)
+
+
+def test_remote_checkpoint_keeps_spark_default_manager(spark):
+    """Only a checkpoint on the local filesystem switches the manager."""
+    from mozart_etl_spark.streaming.events import _is_local
+
+    assert _is_local(spark, None)
+    assert _is_local(spark, "/tmp/ckpt")
+    assert _is_local(spark, "file:///tmp/ckpt")
+    assert not _is_local(spark, "hdfs://namenode:8020/ckpt")
+    assert not _is_local(spark, "s3a://bucket/ckpt")
+
+
+def test_continuous_aggregate_removes_its_checkpoint(spark, tmp_path, monkeypatch):
+    """The continuous aggregate's private checkpoint goes once the drain
+    returns; the table it filled stays."""
+    import tempfile
+
+    from mozart_etl_spark import querybank
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = querybank.queries()["streaming_continuous_aggregate"](spark, SF)
+    assert out.count() > 0
+    assert not list(tmp_path.glob("ca_ckpt_*"))
 
 
 #: the registered queries that drain a stream (run_to_memory or
