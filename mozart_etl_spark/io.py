@@ -48,20 +48,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-CORE_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-)
-AUX_TABLES = ("events", "documents", "embeddings")
-ALL_TABLES = CORE_TABLES + AUX_TABLES
-
 
 def table(
     spark: SparkSession, sf_dir: str, name: str, fan_out: bool = False

@@ -77,17 +77,3 @@ class ModelGraph:
             cyclic = sorted(set(models) - set(order))
             raise ValueError(f"model dependency cycle involving: {cyclic}")
         return tuple(order)
-
-    def downstream_closure(self, changed: str) -> tuple[str, ...]:
-        """Models to re-run when ``changed`` rematerializes — the
-        reference's eager automation (``translator.py:52-55``), applied
-        within one run."""
-        out: set[str] = set()
-        frontier = [changed]
-        while frontier:
-            cur = frontier.pop()
-            for name, m in self.models.items():
-                if cur in m.refs and name not in out:
-                    out.add(name)
-                    frontier.append(name)
-        return tuple(n for n in self.order if n in out)

@@ -13,12 +13,19 @@ point but harmless on local[N]:
   across machines (SURVEY.md §7.4).
 - Arrow transfers on: any toPandas/applyInPandas boundary is
   vectorized, never row-at-a-time pickling.
+- No YARN defaults in the session's Hadoop conf: every entry whose
+  only source is ``yarn-default.xml`` (about half of the conf) is
+  unset once the session is up. Every scan broadcasts and every write
+  task deserializes that conf, and nothing in the engine reads a
+  ``yarn.*`` key; ``spark.hadoop.yarn.*`` and ``yarn-site.xml`` values
+  stay (SCALING.md, "Cluster scale").
 """
 
 from __future__ import annotations
 
 import os
 import warnings
+import xml.etree.ElementTree as ET
 
 from pyspark.sql import SparkSession
 
@@ -126,7 +133,27 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     apply_runtime_confs(spark)
+    _drop_yarn_defaults(spark._jvm, spark.sparkContext._jsc.hadoopConfiguration())
     return spark
+
+
+def _drop_yarn_defaults(jvm, conf) -> None:
+    """Unset every entry of the Hadoop ``Configuration`` ``conf`` whose
+    only source is ``yarn-default.xml``.
+
+    MapReduce's ``JobConf`` registers that file as a default resource,
+    so its entries ride in ``sessionState.newHadoopConf()``, which
+    each write task deserializes from its closure and each scan
+    broadcasts. An entry set on purpose (``spark.hadoop.yarn.*``,
+    ``yarn-site.xml``) records that source instead and is kept. The
+    conf is written out once as XML, which lists each entry's sources,
+    so the check costs three round trips plus one ``unset`` per dropped
+    entry."""
+    out = jvm.java.io.StringWriter()
+    conf.writeXml(out)
+    for prop in ET.fromstring(out.toString()).iter("property"):
+        if [s.text for s in prop.iter("source")] == ["yarn-default.xml"]:
+            conf.unset(prop.findtext("name"))
 
 
 def apply_runtime_confs(spark: SparkSession) -> None:

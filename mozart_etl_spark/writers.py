@@ -293,7 +293,10 @@ def merge_upsert(
         return _table_stats(spark, table_ident, watermark_col)
     keys = list(primary_key)
     target = spark.table(table_ident)
-    kept = target.join(df.select(*keys).dropDuplicates(), keys, "left_anti")
+    # a left-anti join emits each target row at most once however often
+    # a key repeats on the right, so the keys need no distinct (and no
+    # shuffle of their own); repeats are caught by the observed count
+    kept = target.join(df.select(*keys), keys, "left_anti")
     dup = Observation()
     incoming = (
         df.select(*target.columns)

@@ -12,7 +12,20 @@ import os
 
 import duckdb
 
-from mozart_etl_spark.io import ALL_TABLES
+#: every table of the testdata layout (TESTDATA.md): the TPC-H-ish star
+#: schema plus the events, documents and embeddings tables
+ALL_TABLES = (
+    "region",
+    "nation",
+    "customer",
+    "supplier",
+    "part",
+    "orders",
+    "lineitem",
+    "events",
+    "documents",
+    "embeddings",
+)
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -63,6 +63,26 @@ def test_tenant_spec_from_dict():
     assert spec.mart_namespace() == "t1"
 
 
+def test_tenant_spec_from_yaml_defaults_models_dir(tmp_path):
+    """A ``tenant.yaml`` with no ``models_dir`` takes the ``models/``
+    directory next to it, as the reference's per-tenant layout does."""
+    (tmp_path / "models").mkdir()
+    path = tmp_path / "tenant.yaml"
+    path.write_text(
+        "tenant_id: t1\n"
+        "source: {type: parquet, path: /data}\n"
+        "params: {project_id: p-1}\n"
+        "tables:\n"
+        "  - {name: orders, mode: incremental, incremental_column: ts}\n"
+    )
+    spec = TenantSpec.from_yaml(str(path))
+    assert spec.models_dir == str(tmp_path / "models")
+    assert spec.source.path == "/data"
+    assert spec.tables[0].incremental_column == "ts"
+    (tmp_path / "models").rmdir()
+    assert TenantSpec.from_yaml(str(path)).models_dir == ""
+
+
 # --- connector URLs (connectors/postgresql.py, mysql.py, oracle.py) --------
 
 
@@ -230,7 +250,6 @@ def test_graph_topo_order(tmp_path):
     )
     g = ModelGraph.from_dir(d)
     assert g.order == ("stg_a", "stg_b", "mart_x")
-    assert g.downstream_closure("stg_a") == ("mart_x",)
 
 
 def test_graph_cycle_raises(tmp_path):

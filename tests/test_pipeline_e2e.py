@@ -457,3 +457,90 @@ def test_incremental_ref_contributes_dag_edge(tmp_path):
     g = ModelGraph.from_dir(str(models))
     assert "b" in g.models["a"].refs
     assert g.order.index("b") < g.order.index("a")
+
+
+# --- Spark jobs per tenant cycle ------------------------------------
+#
+# The jobs a cycle launches are the same on every run of the same input
+# (ROADMAP probe Q1), so they are pinned as ceilings: a write path or a
+# model plan that gains a job fails here, without timing anything. A
+# change that removes jobs lowers the ceilings with it.
+
+#: cycle 0: two truncate-reloads and the model's first build
+CYCLE0_JOBS = 8
+#: later cycles: a merge, an append and the model's rebuild
+INCREMENTAL_JOBS = 12
+
+FCT_ORDERS = """\
+{{ config(materialized='table') }}
+SELECT o.o_orderkey, o.o_status, CAST(COUNT(l.l_orderkey) AS BIGINT) AS n_lines
+FROM {{ source('raw', 'orders') }} o
+LEFT JOIN {{ source('raw', 'lineitem') }} l ON l.l_orderkey = o.o_orderkey
+GROUP BY o.o_orderkey, o.o_status
+"""
+
+
+def _land_cycle(root, cycle: int) -> None:
+    """Cycle ``cycle``'s part of a change-log source: 20 new orders
+    with 2 lineitems each and, from cycle 1 on, orders 0-4 again with
+    a new status."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    day = dt.datetime(2024, 1, 1) + dt.timedelta(days=cycle)
+    new = list(range(20 * cycle, 20 * cycle + 20))
+    keys = new + (list(range(5)) if cycle else [])
+    parts = {
+        "orders": pa.table({
+            "o_orderkey": keys,
+            "o_status": [f"s{cycle}"] * len(keys),
+            "updated_at": [day + dt.timedelta(seconds=i) for i in range(len(keys))],
+        }),
+        "lineitem": pa.table({
+            "l_orderkey": [k for k in new for _ in range(2)],
+            "updated_at": [day + dt.timedelta(seconds=i) for i in range(2 * len(new))],
+        }),
+    }
+    for name, part in parts.items():
+        (root / name).mkdir(parents=True, exist_ok=True)
+        pq.write_table(part, root / name / f"part-{cycle:03d}.parquet")
+
+
+def test_tenant_cycle_job_ceilings(spark, spark_jobs, tmp_path):
+    models = tmp_path / "models"
+    models.mkdir()
+    (models / "fct_orders.sql").write_text(FCT_ORDERS)
+    src = tmp_path / "src"
+    inc = {"mode": "incremental", "incremental_column": "updated_at"}
+    spec = TenantSpec.from_dict(
+        {
+            "tenant_id": f"t{uuid.uuid4().hex[:8]}",
+            "source": {"type": "parquet", "path": str(src)},
+            "tables": [
+                {"name": "orders", "primary_key": ["o_orderkey"], **inc},
+                {"name": "lineitem", **inc},
+            ],
+            "models_dir": str(models),
+        }
+    )
+    pipe = TenantPipeline(spec=spec, cursor_store=CursorStore(str(tmp_path / "cursors.json")))
+    jobs = []
+    try:
+        for cycle in range(3):
+            _land_cycle(src, cycle)
+            result, n = spark_jobs(lambda: pipe.run(spark))
+            jobs.append(n)
+            strategies = [r.strategy for r in result["ingest"]]
+            assert strategies == (
+                ["truncate_reload", "truncate_reload"] if cycle == 0 else ["merge_upsert", "append"]
+            )
+            n_orders = 20 * (cycle + 1)
+            assert [r.num_rows for r in result["ingest"]] == [n_orders, 2 * n_orders]
+            assert result["models"][0].num_rows == n_orders
+        assert jobs[0] <= CYCLE0_JOBS, jobs
+        assert max(jobs[1:]) <= INCREMENTAL_JOBS, jobs
+    finally:
+        for ns in (pipe.raw_ns, pipe.mart_ns):
+            spark.sql(f"DROP DATABASE IF EXISTS {ns} CASCADE")

@@ -1,11 +1,14 @@
-"""Every public function and class in the engine has a caller.
+"""Every public name in the engine has a caller.
 
 The rule (ROADMAP aim 2): engine code that no registered query, tenant
 run, perfbench workload or ``bench.py`` path reaches goes, together
 with the tests that only exercise it. This test parses every module of
-``mozart_etl_spark/`` and fails naming each top-level public function
-or class that is referenced nowhere outside its own body in the engine,
-``perfbench/``, ``bench.py`` or ``__spark_entry__.py``.
+``mozart_etl_spark/`` and fails naming each public definition that is
+referenced nowhere outside its own body in the engine, ``perfbench/``,
+``bench.py`` or ``__spark_entry__.py``. A public definition is a
+top-level function or class, a method of a top-level class, or a
+module-level constant (a name assigned at module level), whose name
+does not start with ``_``.
 
 A reference is an ``ast.Name`` or ``ast.Attribute`` that reads the
 name. Imports, ``__all__`` strings and assignment targets (a dataclass
@@ -22,7 +25,8 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 ENGINE = ROOT / "mozart_etl_spark"
 
-#: Public names kept without an engine caller, each with its reason.
+#: Public names (``Class.method`` for a method) kept without an engine
+#: caller, each with its reason.
 EXCEPTIONS = {
     # the reference connector's probe contract (``base.py:95-103``):
     # a deployment checks a source before it extracts
@@ -30,6 +34,10 @@ EXCEPTIONS = {
     # gates the native MERGE INTO path, which needs a lakehouse jar;
     # its test skips where none is installed
     "lakehouse_available": "writers lakehouse capability check",
+    # the reference's per-tenant ``tenant.yaml`` (tenant discovery): a
+    # deployment loads one file per tenant; the engine and perfbench
+    # build their specs in code
+    "TenantSpec.from_yaml": "config tenant.yaml loader",
 }
 
 
@@ -48,14 +56,28 @@ def _is_registered(node: ast.AST) -> bool:
     return False
 
 
-def _public_defs(tree: ast.Module) -> list[ast.AST]:
-    return [
-        node
-        for node in tree.body
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-        and not node.name.startswith("_")
-        and not _is_registered(node)
-    ]
+def _public_defs(tree: ast.Module) -> list[tuple[str, str, ast.AST]]:
+    """(label, name, defining node) of every public definition."""
+    out = []
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            if not node.name.startswith("_") and not _is_registered(node):
+                out.append((node.name, node.name, node))
+            if isinstance(node, ast.ClassDef) and not node.name.startswith("_"):
+                out += [
+                    (f"{node.name}.{m.name}", m.name, m)
+                    for m in node.body
+                    if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    and not m.name.startswith("_")
+                ]
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            out += [
+                (t.id, t.id, node)
+                for t in targets
+                if isinstance(t, ast.Name) and not t.id.startswith("_")
+            ]
+    return out
 
 
 def _references(trees: dict[Path, ast.Module]) -> dict[str, list[tuple[Path, int]]]:
@@ -81,13 +103,13 @@ def unreferenced() -> list[str]:
     for path, tree in trees.items():
         if ENGINE not in path.parents:
             continue
-        for node in _public_defs(tree):
-            first = min([node.lineno] + [d.lineno for d in node.decorator_list])
+        for label, name, node in _public_defs(tree):
+            first = min([node.lineno] + [d.lineno for d in getattr(node, "decorator_list", [])])
             if all(
                 p == path and first <= line <= node.end_lineno
-                for p, line in refs.get(node.name, [])
+                for p, line in refs.get(name, [])
             ):
-                dead.append(f"{path.relative_to(ROOT)}::{node.name}")
+                dead.append(f"{path.relative_to(ROOT)}::{label}")
     return sorted(dead)
 
 

@@ -23,6 +23,8 @@ from pyspark.sql.types import BinaryType, LongType, StringType
 import mozart_etl_spark.io as mio
 from mozart_etl_spark.session import apply_runtime_confs
 
+from .oracle_harness import ALL_TABLES
+
 NANOS = "spark.sql.legacy.parquet.nanosAsLong"
 BINARY = "spark.sql.parquet.binaryAsString"
 
@@ -50,7 +52,7 @@ def _assert_hit_matches_bare(spark, spark_jobs, path: str) -> None:
     assert _rows(hit) == _rows(bare)
 
 
-@pytest.mark.parametrize("name", mio.ALL_TABLES)
+@pytest.mark.parametrize("name", ALL_TABLES)
 def test_hit_matches_bare_read_for_every_table(spark, spark_jobs, sf_dir, name):
     _assert_hit_matches_bare(spark, spark_jobs, os.path.join(sf_dir, f"{name}.parquet"))
 

@@ -15,6 +15,7 @@ forms below fails the test rather than stalling the suite.
 from __future__ import annotations
 
 import threading
+import xml.etree.ElementTree as ET
 from contextlib import contextmanager
 
 import pytest
@@ -108,7 +109,7 @@ def test_observe_fires_on_staged_merge_write(spark, ns, kind):
         .observe(dup, F.max("_key_rows").alias("key_rows"))
         .drop("_key_rows")
     )
-    kept = target.join(inc.select("id").dropDuplicates(), ["id"], "left_anti")
+    kept = target.join(inc.select("id"), ["id"], "left_anti")
     obs = Observation()
     _stats(kept.unionByName(incoming), obs).write.mode("overwrite").format(
         "parquet"
@@ -440,3 +441,114 @@ def test_checkpoint_resumes_under_the_other_manager(spark, tmp_path, first_fs_ap
     with _manager(spark, managers[1]):
         resumed = _keyed_counts(spark, str(src), str(ckpts[managers[0]]))
     assert resumed == {"a": 4, "c": 1}
+
+
+# --- the session's Hadoop conf ---------------------------------------
+#
+# ``session.get_spark`` unsets every Hadoop conf entry whose only source
+# is ``yarn-default.xml``: ``sessionState.newHadoopConf()``, which every
+# scan broadcasts and every write task deserializes, then carries about
+# half as many entries. A Hadoop class that registers a new default
+# resource later reloads every conf and brings the entries back. That
+# loses the trim's speed, not correctness, so these tests pin that a
+# tenant cycle and a streaming drain register none, and that the trim
+# keeps every other entry.
+
+
+def _hadoop_entries(spark, conf) -> dict[str, tuple[str | None, tuple[str, ...]]]:
+    """name -> (value, sources) of every entry of a Hadoop conf."""
+    out = spark._jvm.java.io.StringWriter()
+    conf.writeXml(out)
+    return {
+        p.findtext("name"): (p.findtext("value"), tuple(s.text for s in p.iter("source")))
+        for p in ET.fromstring(out.toString()).iter("property")
+    }
+
+
+def _yarn_defaults(entries: dict) -> list[str]:
+    return sorted(k for k, (_, src) in entries.items() if src == ("yarn-default.xml",))
+
+
+def _session_hadoop_conf(spark):
+    return spark._jsparkSession.sessionState().newHadoopConf()
+
+
+def test_session_hadoop_conf_drops_only_yarn_defaults(spark):
+    """The conf scans and writes get holds no yarn-default entry, and
+    every other entry keeps the value it would have untrimmed: the same
+    conf with its default resources loaded again."""
+    conf = _session_hadoop_conf(spark)
+    trimmed = _hadoop_entries(spark, conf)
+    assert _yarn_defaults(trimmed) == []
+    full = spark._jvm.org.apache.hadoop.conf.Configuration(conf)
+    full.reloadConfiguration()
+    untrimmed = _hadoop_entries(spark, full)
+    dropped = set(_yarn_defaults(untrimmed))
+    assert len(dropped) > 400  # the trim had yarn-default.xml's entries to drop
+    assert {k: v for k, (v, _) in trimmed.items()} == {
+        k: v for k, (v, _) in untrimmed.items() if k not in dropped
+    }
+
+
+def test_yarn_defaults_stay_out_after_a_tenant_cycle_and_a_drain(spark, tmp_path):
+    from mozart_etl_spark.config import TenantSpec
+    from mozart_etl_spark.cursor import CursorStore
+    from mozart_etl_spark.pipeline import TenantPipeline
+    from mozart_etl_spark.querybank import queries
+
+    from .conftest import SF_SMOKE
+
+    models = tmp_path / "models"
+    models.mkdir()
+    (models / "n_orders.sql").write_text(
+        "{{ config(materialized='table') }}\n"
+        "SELECT o_orderstatus, COUNT(*) AS n FROM {{ source('raw', 'orders') }} "
+        "GROUP BY o_orderstatus\n"
+    )
+    spec = TenantSpec.from_dict(
+        {
+            "tenant_id": "canary_conf",
+            "source": {"type": "parquet", "path": SF_SMOKE},
+            "tables": [
+                {"name": "orders", "mode": "incremental",
+                 "incremental_column": "o_orderdate", "primary_key": ["o_orderkey"]},
+            ],
+            "models_dir": str(models),
+        }
+    )
+    pipe = TenantPipeline(spec=spec, cursor_store=CursorStore(str(tmp_path / "cursors.json")))
+    try:
+        # cycle 0 reloads, cycle 1 merges
+        strategies = [pipe.run(spark)["ingest"][0].strategy for _ in range(2)]
+        assert strategies == ["truncate_reload", "merge_upsert"]
+        assert queries()["streaming_hourly_counts"](spark, SF_SMOKE).count() > 0
+    finally:
+        for ns in (pipe.raw_ns, pipe.mart_ns):
+            spark.sql(f"DROP DATABASE IF EXISTS {ns} CASCADE")
+    assert _yarn_defaults(_hadoop_entries(spark, _session_hadoop_conf(spark))) == []
+
+
+def test_trim_keeps_yarn_entries_set_on_purpose(spark, tmp_path):
+    """An entry from ``yarn-site.xml`` or from a ``spark.hadoop.yarn.*``
+    setting records that source, so the trim keeps it."""
+    from mozart_etl_spark.session import _drop_yarn_defaults
+
+    jvm = spark._jvm
+    site = tmp_path / "yarn-site.xml"
+    site.write_text(
+        "<configuration><property><name>yarn.resourcemanager.hostname</name>"
+        "<value>rm.example</value></property></configuration>"
+    )
+    conf = jvm.org.apache.hadoop.conf.Configuration()
+    conf.addResource(jvm.org.apache.hadoop.fs.Path(str(site)))
+    # how SparkContext applies a spark.hadoop.* setting
+    conf.set("yarn.nodemanager.vmem-check-enabled", "false",
+             "Set by Spark from keys starting with 'spark.hadoop'")
+    before = _hadoop_entries(spark, conf)
+    assert len(_yarn_defaults(before)) > 400
+    _drop_yarn_defaults(jvm, conf)
+    after = _hadoop_entries(spark, conf)
+    assert _yarn_defaults(after) == []
+    assert after["yarn.resourcemanager.hostname"][0] == "rm.example"
+    assert after["yarn.nodemanager.vmem-check-enabled"][0] == "false"
+    assert {k: v for k, v in before.items() if k not in set(_yarn_defaults(before))} == after
