@@ -28,25 +28,24 @@ except ImportError:  # pragma: no cover - yaml ships in this env
 _ENV_PATTERN = re.compile(r"\$\{([^}]+)\}")
 
 
-def resolve_env(value: Any, env: dict[str, str] | None = None) -> Any:
-    """Recursively substitute ``${VAR}`` / ``${VAR:default}`` in strings.
+def resolve_env(value: Any) -> Any:
+    """Recursively substitute ``${VAR}`` / ``${VAR:default}`` in strings
+    from the process environment.
 
     Non-strings pass through; dicts/lists are resolved element-wise.
     """
-    if env is None:
-        env = dict(os.environ)
     if isinstance(value, str):
 
         def _sub(m: re.Match[str]) -> str:
             body = m.group(1)
             name, _, default = body.partition(":")
-            return env.get(name, default)
+            return os.environ.get(name, default)
 
         return _ENV_PATTERN.sub(_sub, value)
     if isinstance(value, dict):
-        return {k: resolve_env(v, env) for k, v in value.items()}
+        return {k: resolve_env(v) for k, v in value.items()}
     if isinstance(value, list):
-        return [resolve_env(v, env) for v in value]
+        return [resolve_env(v) for v in value]
     return value
 
 

@@ -31,8 +31,10 @@ Spark itself inferred there, and reads again with
 - one entry per path: a changed key replaces it, so a long session's
   cache stays bounded by the paths it reads. The same entry holds the
   footer layout (:func:`fan_out_target`) and the nanos flag;
-- local paths only: URI paths (``s3a://``, ``file://`` …) always take
-  the bare read, and a listing that fails takes it with a warning;
+- local paths only (:func:`local_path`: a ``file:`` URI, or a path
+  without a scheme when ``fs.defaultFS`` is local): any other
+  filesystem (``s3a://``, ``hdfs://`` …) always takes the bare read,
+  and a listing that fails takes it with a warning;
 - the cached schema is Spark's own inference from the miss's bare
   read, so a hit's schema is identical to a bare read's by
   construction.
@@ -43,6 +45,7 @@ from __future__ import annotations
 import os
 import warnings
 from dataclasses import dataclass
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -116,8 +119,11 @@ SCHEMA_CONFS = (
 @dataclass
 class _PathMeta:
     """What the session knows about one local parquet path while its
-    files stay as ``files`` says. Each field is filled on first use."""
+    files stay as ``files`` says. The fields after ``files`` are filled
+    on first use."""
 
+    #: the OS path (:func:`local_path`)
+    path: str
     #: ((file, inode, mtime_ns, size), ...) for every file under the path
     files: tuple[tuple[str, int, int, int], ...]
     #: (row groups, rows, bytes) summed over the path's parquet files
@@ -154,20 +160,36 @@ def _file_signature(path: str) -> tuple[tuple[str, int, int, int], ...]:
     return tuple(sig)
 
 
-def _path_meta(path: str) -> _PathMeta | None:
-    """The cache entry for a local ``path``, current with its files;
-    None for URI paths, and (with a warning) when listing fails."""
-    if "://" in path:
+def local_path(spark: SparkSession, path: str) -> str | None:
+    """The OS path that ``path`` names on the local filesystem, or None
+    when it names another filesystem. A ``file:`` URI without a host
+    (``file:/d``, ``file:///d``) is local; a path without a scheme
+    resolves against Hadoop's ``fs.defaultFS``, as Spark resolves it."""
+    parsed = urlparse(path)
+    scheme = parsed.scheme
+    if not scheme:
+        default_fs = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+        scheme = urlparse(default_fs or "file:///").scheme
+    if scheme != "file" or parsed.netloc:
+        return None
+    return parsed.path if parsed.scheme else path
+
+
+def _path_meta(spark: SparkSession, path: str) -> _PathMeta | None:
+    """The cache entry for ``path``, current with its files; None when
+    the path is not local, and (with a warning) when listing fails."""
+    local = local_path(spark, path)
+    if local is None:
         return None
     try:
-        files = _file_signature(path)
+        files = _file_signature(local)
     except OSError as e:
         warnings.warn(f"cannot list parquet path {path!r} ({e}); its metadata is not cached",
                       stacklevel=3)
         return None
-    meta = _PARQUET_CACHE.get(path)
+    meta = _PARQUET_CACHE.get(local)
     if meta is None or meta.files != files:
-        meta = _PARQUET_CACHE[path] = _PathMeta(files)
+        meta = _PARQUET_CACHE[local] = _PathMeta(local, files)
     return meta
 
 
@@ -175,7 +197,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` that runs no schema-inference job
     once the session has inferred the path's schema (module
     docstring: key, one entry per path, local paths only)."""
-    meta = _path_meta(path)
+    meta = _path_meta(spark, path)
     if meta is None:
         return spark.read.parquet(path)
     confs = _schema_confs(spark)
@@ -189,7 +211,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 def parquet_schema(spark: SparkSession, path: str) -> StructType:
     """The schema a bare ``spark.read.parquet(path)`` gives; a hit
     builds no DataFrame."""
-    meta = _path_meta(path)
+    meta = _path_meta(spark, path)
     if meta is not None and meta.schema is not None and meta.schema[0] == _schema_confs(spark):
         return meta.schema[1]
     return read_parquet(spark, path).schema
@@ -199,15 +221,15 @@ def _schema_confs(spark: SparkSession) -> tuple[str, ...]:
     return tuple(spark.conf.get(k) for k in SCHEMA_CONFS)
 
 
-def _parquet_layout(path: str) -> tuple[int, int, int] | None:
+def _parquet_layout(spark: SparkSession, path: str) -> tuple[int, int, int] | None:
     """(sum of row groups, sum of rows, sum of bytes) across the
     path's parquet files, from footer metadata only."""
-    meta = _path_meta(path)
+    meta = _path_meta(spark, path)
     if meta is None:
         return None
     if meta.layout is None:
         parts = [(f, size) for f, _ino, _mtime, size in meta.files
-                 if f == path or f.endswith(".parquet")]
+                 if f == meta.path or f.endswith(".parquet")]
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -231,7 +253,7 @@ def fan_out_target(spark: SparkSession, path: str) -> int:
     partition must clear :data:`FAN_OUT_MIN_ROWS` rows or
     :data:`FAN_OUT_MIN_BYTES` bytes, and a layout already carrying
     that many row groups (every production table) needs nothing."""
-    layout = _parquet_layout(path)
+    layout = _parquet_layout(spark, path)
     if layout is None:
         return 0
     row_groups, rows, total_bytes = layout
@@ -268,16 +290,16 @@ def fan_out_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     return df
 
 
-def _has_nanos_timestamp(path: str) -> bool:
+def _has_nanos_timestamp(spark: SparkSession, path: str) -> bool:
     """Cheap parquet-footer check (no Spark job, no noisy task failure)."""
-    meta = _path_meta(path)
+    meta = _path_meta(spark, path)
     if meta is not None and meta.has_nanos is not None:
         return meta.has_nanos
     import pyarrow as pa
     import pyarrow.dataset as ds
 
     try:
-        schema = ds.dataset(path, format="parquet").schema
+        schema = ds.dataset(path if meta is None else meta.path, format="parquet").schema
     except (OSError, pa.ArrowException) as e:
         warnings.warn(f"cannot read the parquet schema of {path!r} ({e}); "
                       "reading it without nanosAsLong", stacklevel=2)
@@ -299,7 +321,7 @@ def events_raw_schema(spark: SparkSession, path: str) -> StructType:
 
 
 def _nanos_read_mode(spark: SparkSession, path: str) -> None:
-    if _has_nanos_timestamp(path):
+    if _has_nanos_timestamp(spark, path):
         # Spark's parquet reader rejects TIMESTAMP(NANOS) outright;
         # nanosAsLong (dynamic conf) reads it as epoch-ns BIGINT.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -314,8 +336,8 @@ def _read_events(spark: SparkSession, path: str) -> DataFrame:
     return df.select(*cols)
 
 
-def normalize_ts_us(df: DataFrame, col: str = "ts") -> DataFrame:
-    """Replace ``col`` with ``ts_us`` (epoch-microsecond BIGINT),
+def normalize_ts_us(df: DataFrame) -> DataFrame:
+    """Replace ``ts`` with ``ts_us`` (epoch-microsecond BIGINT),
     whatever physical form the parquet writer chose:
 
     - epoch-ns BIGINT (the ``nanosAsLong`` legacy read of
@@ -326,16 +348,16 @@ def normalize_ts_us(df: DataFrame, col: str = "ts") -> DataFrame:
       stored wall-clock micros;
     - TIMESTAMP (zone-tagged parquet) → ``unix_micros`` directly.
     """
-    dt = dict(df.dtypes).get(col)
+    dt = dict(df.dtypes).get("ts")
     if dt is None:
         return df
-    if dt == "bigint":  # nanosAsLong path: col is epoch-ns
+    if dt == "bigint":  # nanosAsLong path: ts is epoch-ns
         # `div` truncates toward zero — deliberately: DuckDB's own
         # parquet TIMESTAMP(NANOS) -> TIMESTAMP conversion truncates
         # the same way (verified: -1500 ns -> -1 us, not floor's -2),
         # so truncation is what keeps pre-1970 sub-microsecond values
         # oracle-consistent across engines
-        return df.withColumn("ts_us", F.expr(f"{col} div 1000")).drop(col)
+        return df.withColumn("ts_us", F.expr("ts div 1000")).drop("ts")
     if dt == "timestamp_ntz":
-        return df.withColumn("ts_us", F.unix_micros(F.col(col).cast("timestamp"))).drop(col)
-    return df.withColumn("ts_us", F.unix_micros(F.col(col))).drop(col)
+        return df.withColumn("ts_us", F.unix_micros(F.col("ts").cast("timestamp"))).drop("ts")
+    return df.withColumn("ts_us", F.unix_micros(F.col("ts"))).drop("ts")

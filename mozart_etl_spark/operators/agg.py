@@ -60,7 +60,7 @@ def cascade_grouping_sets(
     df: DataFrame,
     keys: list[str],
     measures: dict[str, tuple],
-    sets: str | list[tuple[str, ...]] = "rollup",
+    sets: str = "rollup",
     grouping_id: str | None = None,
 ) -> DataFrame:
     """ANSI-faithful ROLLUP/CUBE via one base aggregation + partial
@@ -72,12 +72,9 @@ def cascade_grouping_sets(
     sum÷count at the call site, multi-arg measures are not
     decomposable over partials) raises ``ValueError`` — pinned by
     ``test_agg_cascade`` so a future caller can't silently
-    mis-aggregate. ``sets`` is ``"rollup"``, ``"cube"``, or an
-    explicit list of key tuples — each tuple must be a subset of
-    ``keys`` and no tuple may repeat (a duplicated set would emit
-    duplicate output rows); the finest set need NOT be included, the
-    base aggregation is computed regardless and only requested sets
-    are emitted. ``grouping_id`` optionally adds the SQL
+    mis-aggregate. ``sets`` is ``"rollup"`` or ``"cube"``; both
+    include the finest set, which is the base aggregation itself.
+    ``grouping_id`` optionally adds the SQL
     ``GROUPING()`` bit vector (MSB = first key, 1 = aggregated away),
     emitted as a per-set literal — bit-compatible with
     ``grouping(k1) * 2^(n-1) + ... + grouping(kn)``.
@@ -93,22 +90,7 @@ def cascade_grouping_sets(
     if a re-aggregated total genuinely overflows the partial type,
     i.e. exactly where native rollup's own sum would overflow too.
     """
-    if isinstance(sets, str):
-        sets = {"rollup": _rollup_sets, "cube": _cube_sets}[sets](keys)
-    else:
-        # materialize ONCE before validating: the validation pass and
-        # the branch loop below both iterate `sets`, so a one-shot
-        # iterable (generator) would validate fine and then silently
-        # yield zero branches
-        sets = [tuple(kept) for kept in sets]
-        seen: set[tuple[str, ...]] = set()
-        for kept in sets:
-            extra = [k for k in kept if k not in keys]
-            if extra:
-                raise ValueError(f"grouping set {kept} names non-key column(s) {extra}")
-            if kept in seen:
-                raise ValueError(f"duplicate grouping set {kept}")
-            seen.add(kept)
+    grouping_sets = {"rollup": _rollup_sets, "cube": _cube_sets}[sets](keys)
     finest_aggs = []
     for out, spec in measures.items():
         kind = spec[0]
@@ -138,8 +120,8 @@ def cascade_grouping_sets(
         return merged_expr.alias(out)
 
     branches = []
-    for kept in sets:
-        if tuple(kept) == tuple(keys):
+    for kept in grouping_sets:
+        if kept == tuple(keys):
             # the finest set IS the materialized partial — rename, no
             # re-aggregation (and no extra exchange)
             lvl = finest.select(

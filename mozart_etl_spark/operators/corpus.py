@@ -317,9 +317,8 @@ def salted_join(
     dim_key: str,
     fact_row_id: str,
     n_salts: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-proof equi-join: fact rows are salted by row identity
+    """Skew-proof inner equi-join: fact rows are salted by row identity
     (``pmod(hash(row_id), n_salts)``), the dim side is replicated
     ``n_salts`` ways, and the join runs on (key, salt) — a hot key's
     rows spread across ``n_salts`` reducers instead of one straggler.
@@ -330,18 +329,7 @@ def salted_join(
     can't help (e.g. the skewed side feeds an aggregation that must
     co-partition). Cost: dim shuffle volume ×``n_salts`` — keep
     ``n_salts`` small and the dim narrow.
-
-    Only fact-preserving join types are allowed: under ``right`` /
-    ``full`` every UNMATCHED dim row survives once per replica —
-    ``n_salts`` output copies where the plain join yields one.
     """
-    allowed = {"inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi"}
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"salted_join supports fact-preserving joins {sorted(allowed)}, "
-            f"not {how!r}: replicated unmatched dim rows would appear "
-            f"n_salts times under right/full outer joins"
-        )
     salted_fact = fact.withColumn(
         "_salt", F.pmod(F.hash(F.col(fact_row_id)), F.lit(n_salts))
     )
@@ -351,7 +339,7 @@ def salted_join(
     cond = (salted_fact[fact_key] == replicated_dim[dim_key]) & (
         salted_fact["_salt"] == replicated_dim["_salt"]
     )
-    return salted_fact.join(replicated_dim, cond, how).drop("_salt")
+    return salted_fact.join(replicated_dim, cond, "inner").drop("_salt")
 
 
 def sample_temperature(
@@ -443,14 +431,10 @@ PII_PATTERNS: tuple[tuple[str, str], ...] = (
 )
 
 
-def scrub_pii(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "clean_text",
-) -> DataFrame:
+def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Redact PII-shaped spans and count what was redacted.
 
-    Adds ``out_col`` (text with every :data:`PII_PATTERNS` pattern
+    Adds ``clean_text`` (text with every :data:`PII_PATTERNS` pattern
     replaced by its tag, in declaration order — earlier patterns win
     overlapping spans) and one ``n_<TAG>`` BIGINT column per pattern
     with the match count *before* redaction. Pure ``regexp_replace`` /
@@ -468,7 +452,7 @@ def scrub_pii(
             .alias(name)
         )
         cleaned = F.regexp_replace(cleaned, pat, tag)
-    return df.select("*", cleaned.alias(out_col), *counts)
+    return df.select("*", cleaned.alias("clean_text"), *counts)
 
 
 def global_running_sum(
@@ -561,12 +545,8 @@ def global_running_sum(
 
 
 def global_row_number(
-    df: DataFrame,
-    order_cols: list[str],
-    out_col: str = "rn",
-    num_partitions: int | None = None,
-    return_total: bool = False,
-) -> DataFrame | tuple[DataFrame, int]:
+    df: DataFrame, order_cols: list[str], out_col: str = "rn"
+) -> tuple[DataFrame, int]:
     """Exact global row numbers WITHOUT the single-partition window.
 
     ``row_number() OVER (ORDER BY ...)`` with no PARTITION BY pulls the
@@ -580,16 +560,14 @@ def global_row_number(
     ``order_cols`` must be a total order (include a tiebreaker) or
     numbering is nondeterministic across runs.
 
-    ``return_total=True`` returns ``(ranked, total_rows)`` — the total
-    is the sum of the per-partition counts this operator ALREADY
-    collected for the offsets (r15, guide §1.2): a caller that needs n
-    (e.g. an exact ntile) would otherwise schedule a whole extra
-    count() pass over the ranked table to recompute a number sitting
-    in driver metadata.
+    Returns ``(ranked, total_rows)``: the total is the sum of the
+    per-partition counts this operator ALREADY collected for the
+    offsets (r15, guide §1.2), so a caller that needs n (e.g. an exact
+    ntile) schedules no extra count() pass over the ranked table.
     """
     from pyspark.sql import Window
 
-    parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    parts = df.sparkSession.sparkContext.defaultParallelism
     ranged = df.repartitionByRange(parts, *order_cols).sortWithinPartitions(*order_cols)
     # pin ONE physical partitioning: the counts job and the numbering
     # job otherwise re-plan the range exchange independently, and AQE
@@ -613,11 +591,9 @@ def global_row_number(
         df.sparkSession.createDataFrame(offsets, "_pid INT, _offset BIGINT")
     )
     w = Window.partitionBy("_pid").orderBy(*order_cols)
-    out = (
+    ranked = (
         ranged.join(off_df, "_pid")
         .withColumn(out_col, F.row_number().over(w).cast("bigint") + F.col("_offset"))
         .drop("_pid", "_offset")
     )
-    if return_total:
-        return out, acc
-    return out
+    return ranked, acc

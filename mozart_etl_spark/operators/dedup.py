@@ -221,18 +221,13 @@ def ngram_jaccard_pairs(
     )
 
 
-def jaccard_verify_pairs(
-    df: DataFrame,
-    candidates: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
+def jaccard_verify_pairs(df: DataFrame, candidates: DataFrame, n: int = 3) -> DataFrame:
     """Exact Jaccard for a GIVEN candidate pair set — the verification
     stage of the at-scale near-dup pipeline (MinHash-LSH candidates ->
     exact verify -> connected components).
 
-    ``candidates`` must carry (doc_a, doc_b); output matches
+    ``df`` carries (doc_id, text), ``candidates`` (doc_a, doc_b); output
+    matches
     :func:`ngram_jaccard_pairs` — (doc_a, doc_b, jaccard 4dp,
     _raw_jaccard) — restricted to the candidate pairs, with pairs
     sharing no shingle (or with a sub-``n``-word document) kept at
@@ -280,10 +275,8 @@ def jaccard_verify_pairs(
         .union(cand.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    pruned = df.join(
-        cand_ids.select(F.col("doc_id").alias(id_col)), id_col, "left_semi"
-    )
-    sh = _word_shingles(pruned, text_col, id_col, n).localCheckpoint(eager=False)
+    pruned = df.join(cand_ids, "doc_id", "left_semi")
+    sh = _word_shingles(pruned, "text", "doc_id", n).localCheckpoint(eager=False)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     sa = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     sb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
@@ -868,15 +861,11 @@ def simhash(
     return hdf.mapInPandas(fold, out_schema)
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    nodes: DataFrame | None = None,
-) -> DataFrame:
+def connected_components(edges: DataFrame, nodes: DataFrame | None = None) -> DataFrame:
     """Connected components by iterative min-label propagation: the
     step that turns near-duplicate PAIRS into duplicate GROUPS (keep
-    one representative per component, drop the rest).
+    one representative per component, drop the rest). ``edges``
+    carries the pairs as (doc_a, doc_b).
 
     Each node starts labeled ``min(node, min neighbor)`` (one free
     propagation round, computed in the pass that enumerates the nodes
@@ -917,8 +906,8 @@ def connected_components(
     identity-keyed operators drop NULL identities explicitly).
     """
     und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        edges.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+        .union(edges.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
         .dropDuplicates()
         .localCheckpoint(eager=True)
     )

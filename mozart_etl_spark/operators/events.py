@@ -30,13 +30,11 @@ from pyspark.sql import functions as F
 def funnel_stage_times(
     df: DataFrame,
     stages: tuple[str, ...] = ("view", "click", "purchase"),
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts_us",
 ) -> DataFrame:
-    """Strict-sequence funnel: per user, the earliest timestamp at
-    which each stage was reached, where stage ``i`` only counts events
-    strictly after the user's stage ``i-1`` time (greedy
+    """Strict-sequence funnel over ``user_id``, ``event_type`` and
+    ``ts_us``: per user, the earliest timestamp at which each stage
+    was reached, where stage ``i`` only counts events strictly after
+    the user's stage ``i-1`` time (greedy
     earliest-qualifying, which equals the nested min-after-min
     definition — the DuckDB oracle of ``events_funnel`` uses that
     form). Events of types outside ``stages`` are ignored; ties at
@@ -55,7 +53,7 @@ def funnel_stage_times(
     contract, not an optimization.
 
     NULL-identity policy (r9 orphan-FK axis): a funnel participant
-    requires an identity — events with NULL ``user_col`` are excluded
+    requires an identity — events with NULL ``user_id`` are excluded
     explicitly. The alternatives are both wrong: pooling orphan
     events into one phantom "NULL user" journey (what a bare
     ``groupBy`` does — Spark and SQL group NULLs together) conflates
@@ -80,12 +78,12 @@ def funnel_stage_times(
         raise ValueError("stages must name at least one event type")
     per_user = (
         df.filter(
-            F.col(type_col).isin(*stages)
-            & F.col(ts_col).isNotNull()
-            & F.col(user_col).isNotNull()
+            F.col("event_type").isin(*stages)
+            & F.col("ts_us").isNotNull()
+            & F.col("user_id").isNotNull()
         )
-        .groupBy(F.col(user_col).alias("user_id"))
-        .agg(F.sort_array(F.collect_list(F.struct(F.col(ts_col).alias("ts"), F.col(type_col).alias("et")))).alias("seq"))
+        .groupBy("user_id")
+        .agg(F.sort_array(F.collect_list(F.struct(F.col("ts_us").alias("ts"), F.col("event_type").alias("et")))).alias("seq"))
     )
     init = F.struct(
         *[F.lit(None).cast("bigint").alias(f"s{i}") for i in range(len(stages))]

@@ -269,10 +269,10 @@ def brute_force_knn(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    exclude_self: bool = True,
     dim: int | None = None,
 ) -> DataFrame:
-    """Exact cosine top-k: (query_id, neighbor_id, cosine 4dp).
+    """Exact cosine top-k: (query_id, neighbor_id, cosine 4dp), a query
+    never its own neighbor.
 
     Norms are precomputed per side before the join; the fold order for
     the dot product is the array order, so results are bit-stable
@@ -293,9 +293,7 @@ def brute_force_knn(
         candidates = drop_ragged_vectors(candidates, vec_col, dim)
     q = _vectors(queries, id_col, vec_col, "query_id", "qv", "qn")
     c = _vectors(candidates, id_col, vec_col, "neighbor_id", "cv", "cn")
-    joined = c.crossJoin(F.broadcast(q))
-    if exclude_self:
-        joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
+    joined = c.crossJoin(F.broadcast(q)).filter(F.col("neighbor_id") != F.col("query_id"))
     return _rank_neighbors(joined, k)
 
 
@@ -926,7 +924,6 @@ def quantize_embeddings(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     bits: int = 8,
-    checksums: bool = False,
 ) -> DataFrame:
     """Symmetric per-vector integer quantization (the int8 compression
     pass embedding stores run before serving): ``scale = max|x| / qmax``
@@ -953,10 +950,9 @@ def quantize_embeddings(
     int 0 — a row of plausible-looking zeros with an unusable scale,
     silently corrupting the store in BOTH engines.
 
-    ``checksums=True`` additionally emits ``q_sum``/``q_l1`` (BIGINT
-    sum and L1 of the quantized array) — order-independent exact
-    integer digests, the certification surface for a store whose
-    float arrays are not hash-comparable.
+    ``q_sum``/``q_l1`` (BIGINT sum and L1 of the quantized array) are
+    order-independent exact integer digests, the certification surface
+    for a store whose float arrays are not hash-comparable.
 
     One vectorized numpy pass per Arrow batch behind ``mapInPandas``:
     vectors flatten to a single buffer and ``np.maximum.reduceat`` /
@@ -974,17 +970,15 @@ def quantize_embeddings(
     """
     qmax = 2 ** (bits - 1) - 1
     id_type = df.schema[id_col].dataType
-    fields = [
-        T.StructField(id_col, id_type),
-        T.StructField("scale", T.DoubleType()),
-        T.StructField("qvec", T.ArrayType(T.IntegerType())),
-    ]
-    if checksums:
-        fields += [
+    out_schema = T.StructType(
+        [
+            T.StructField(id_col, id_type),
+            T.StructField("scale", T.DoubleType()),
+            T.StructField("qvec", T.ArrayType(T.IntegerType())),
             T.StructField("q_sum", T.LongType()),
             T.StructField("q_l1", T.LongType()),
         ]
-    out_schema = T.StructType(fields)
+    )
 
     def quantize(batches):
         import numpy as np
@@ -1043,14 +1037,14 @@ def quantize_embeddings(
                         qvec_out[j] = q[starts[row] : bounds[row]].astype(np.int32)
                         qsum_out[j] = int(sums[row])
                         ql1_out[j] = int(l1s[row])
-            cols = {
-                id_col: pdf[id_col],
-                "scale": scale_out,
-                "qvec": qvec_out,
-            }
-            if checksums:
-                cols["q_sum"] = qsum_out
-                cols["q_l1"] = ql1_out
-            yield pd.DataFrame(cols)
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col],
+                    "scale": scale_out,
+                    "qvec": qvec_out,
+                    "q_sum": qsum_out,
+                    "q_l1": ql1_out,
+                }
+            )
 
     return df.select(id_col, vec_col).mapInPandas(quantize, out_schema)

@@ -71,9 +71,9 @@ def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 BPE_TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-def regex_token_count(text: Column, pattern: str = BPE_TOKEN_PATTERN) -> Column:
-    """Token count under a BPE-style pre-tokenization regex."""
-    return F.size(F.regexp_extract_all(text, F.lit(pattern), F.lit(0))).cast("bigint")
+def regex_token_count(text: Column) -> Column:
+    """Token count under :data:`BPE_TOKEN_PATTERN`."""
+    return F.size(F.regexp_extract_all(text, F.lit(BPE_TOKEN_PATTERN), F.lit(0))).cast("bigint")
 
 
 #: Small English stopword set for ratio features (deterministic,
@@ -165,11 +165,11 @@ _LANG_MARKERS: tuple[tuple[str, tuple[str, ...]], ...] = (
 )
 
 
-def language_id(df: DataFrame, text_col: str = "text", out_col: str = "predicted_lang") -> DataFrame:
-    """Deterministic stopword-marker language ID. A real pipeline would
-    swap in an n-gram profile model (e.g. fastText via a Pandas UDF);
-    the contract — text in, ISO code out, fully distributed — is the
-    same."""
+def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Deterministic stopword-marker language ID, added as
+    ``predicted_lang``. A real pipeline would swap in an n-gram profile
+    model (e.g. fastText via a Pandas UDF); the contract — text in, ISO
+    code out, fully distributed — is the same."""
     padded = F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
     expr = F.lit("und")
     # build from the last marker backwards so evaluation order matches
@@ -179,7 +179,7 @@ def language_id(df: DataFrame, text_col: str = "text", out_col: str = "predicted
         for w in words:
             cond = cond | padded.contains(f" {w} ")
         expr = F.when(cond, F.lit(lang)).otherwise(expr)
-    return df.withColumn(out_col, expr)
+    return df.withColumn("predicted_lang", expr)
 
 
 def word_ngrams(tokens: Column, n: int) -> Column:
@@ -204,16 +204,16 @@ def word_ngrams(tokens: Column, n: int) -> Column:
     return grams
 
 
-def ngram_phrase_counts(df: DataFrame, text_col: str = "text", n: int = 2) -> DataFrame:
-    """Corpus n-gram (word) frequency: one row per distinct n-word
-    phrase with its corpus count.
+def ngram_phrase_counts(df: DataFrame, n: int = 2) -> DataFrame:
+    """Corpus n-gram (word) frequency over the ``text`` column: one row
+    per distinct n-word phrase with its corpus count.
 
     The per-document phrase list is built shuffle-free
     (``word_ngrams``); the single shuffle is the partial-aggregable
     phrase count — the shape that survives a 100 TB corpus (map-side
     combine does most of the counting).
     """
-    w = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != "")
+    w = F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != "")
     base = df.select(w.alias("w"))
     return (
         base.select(F.explode(word_ngrams(F.col("w"), n)).alias("phrase"))
@@ -335,8 +335,9 @@ def cooccurrence_pmi(
     )
 
 
-def repetition_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Gopher-style repetition quality signals, per document:
+def repetition_stats(df: DataFrame) -> DataFrame:
+    """Gopher-style repetition quality signals per ``doc_id``, over the
+    ``text`` column:
 
     - ``n_tokens`` — whitespace token count;
     - ``distinct_token_ratio`` — type/token ratio (low = repetitive);
@@ -352,8 +353,8 @@ def repetition_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     struct accumulator) rather than a per-document groupBy, so no
     (doc, token) shuffle exists at all.
     """
-    toks = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != "")
-    base = df.select(id_col, toks.alias("w"))
+    toks = F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != "")
+    base = df.select("doc_id", toks.alias("w"))
     w = F.col("w")
     n_tok = F.size(w).cast("bigint")
 
@@ -381,7 +382,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
 
     denom = F.nullif(n_tok.cast("double"), F.lit(0.0))
     return base.select(
-        id_col,
+        "doc_id",
         n_tok.alias("n_tokens"),
         F.round(F.size(F.array_distinct(w)).cast("double") / denom, 4).alias(
             "distinct_token_ratio"
@@ -391,10 +392,9 @@ def repetition_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     )
 
 
-def tfidf_top_terms(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3
-) -> DataFrame:
-    """Top-``k`` TF-IDF terms per document (score = tf × ln(N/df)).
+def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
+    """Top-``k`` TF-IDF terms per ``doc_id`` over the ``text`` column
+    (score = tf × ln(N/df)).
 
     Plan shape for scale: one explode + partial-aggregable (doc, term)
     count, then a *local checkpoint* of that vocab-sized frame —
@@ -407,10 +407,10 @@ def tfidf_top_terms(
     the vocabulary is small); the top-k window partitions on the
     document — bounded by per-doc vocabulary, never corpus size.
     """
-    toks = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != "")
+    toks = F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != "")
     tf = (
-        df.select(id_col, F.explode(toks).alias("term"))
-        .groupBy(id_col, "term")
+        df.select("doc_id", F.explode(toks).alias("term"))
+        .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
         # lazy: materializes with the first action, cached partitions
         # feed every branch below; freed by the ContextCleaner when
@@ -418,12 +418,12 @@ def tfidf_top_terms(
         .localCheckpoint(eager=False)
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df_t"))
-    n_docs = tf.select(F.count_distinct(F.col(id_col)).cast("double").alias("n_docs"))
+    n_docs = tf.select(F.count_distinct(F.col("doc_id")).cast("double").alias("n_docs"))
     scored = (
         tf.join(dfreq, "term")
         .crossJoin(F.broadcast(n_docs))
         .select(
-            id_col,
+            "doc_id",
             "term",
             "tf",
             F.round(F.col("tf") * F.log(F.col("n_docs") / F.col("df_t")), 4).alias("score"),
@@ -431,7 +431,7 @@ def tfidf_top_terms(
     )
     from pyspark.sql import Window
 
-    w = Window.partitionBy(id_col).orderBy(F.desc("score"), F.asc("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
     return (
         scored.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= k)

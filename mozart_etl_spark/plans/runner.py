@@ -71,7 +71,6 @@ class ModelRunner:
     mart_namespace: str
     variables: dict[str, Any] = field(default_factory=dict)
     frozen_clock: str | None = None
-    collect_previews: bool = True
 
     def _resolve_source(self, group: str, tbl: str) -> str:
         # single-source tenants: every source group maps to the raw layer
@@ -204,6 +203,4 @@ class ModelRunner:
         return writers.full_replace(self.spark, df, target).num_rows
 
     def _preview(self, target: str) -> list[dict[str, Any]]:
-        if not self.collect_previews:
-            return []
         return [row.asDict() for row in self.spark.table(target).limit(5).collect()]

@@ -668,8 +668,7 @@ def knn_bruteforce_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings", fan_out=True)
     queries = emb.filter(F.col("vec_id") < 10)
     return sim_ops.brute_force_knn(
-        queries, emb, id_col="vec_id", vec_col="embedding", k=5, exclude_self=True,
-        dim=_EMBEDDING_DIM,
+        queries, emb, id_col="vec_id", vec_col="embedding", k=5, dim=_EMBEDDING_DIM,
     )
 
 
@@ -1692,13 +1691,10 @@ def embedding_quantize_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import quantize_embeddings
 
     emb = table(spark, sf_dir, "embeddings")
-    # checksums=True: the digests ride the same per-row Arrow kernel
-    # pass as the quantization itself — the r9 three-interpreted-
-    # folds-per-row shape was this round's one measured regression
-    # (AB_r10.json)
-    q = quantize_embeddings(
-        emb, vec_col="embedding", id_col="vec_id", bits=8, checksums=True
-    )
+    # the digests ride the same per-row Arrow kernel pass as the
+    # quantization itself — the r9 three-interpreted-folds-per-row
+    # shape was this round's one measured regression (AB_r10.json)
+    q = quantize_embeddings(emb, vec_col="embedding", id_col="vec_id", bits=8)
     return q.select(
         "vec_id",
         F.round("scale", 6).alias("scale_r"),

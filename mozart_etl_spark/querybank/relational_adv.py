@@ -1060,12 +1060,10 @@ def customer_balance_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.corpus import global_row_number
 
     c = table(spark, sf_dir, "customer").select("c_acctbal", "c_custkey")
-    # return_total (r15, guide §1.2): n comes from the per-partition
-    # counts the ranker already collected — the previous ranked.count()
-    # scheduled a whole extra pass over the ranked table for it
-    ranked, total = global_row_number(
-        c, ["c_acctbal", "c_custkey"], out_col="rank", return_total=True
-    )
+    # n comes from the per-partition counts the ranker already
+    # collected (r15, guide §1.2): a ranked.count() would schedule a
+    # whole extra pass over the ranked table for it
+    ranked, total = global_row_number(c, ["c_acctbal", "c_custkey"], out_col="rank")
     # EXACT SQL ntile(k): with n = qk + r, the FIRST r buckets get q+1
     # rows and the rest get q — ((rank-1)*k) div n spreads the
     # remainder evenly instead, which diverges whenever k does not

@@ -90,11 +90,11 @@ RUNTIME_CONFS: dict[str, str] = {
 
 def get_spark(
     app_name: str = "mozart-etl-spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with engine defaults.
+    """Build (or fetch) a SparkSession with engine defaults, on the
+    master ``SPARK_GRAFT_MASTER`` names (``local[<cores>]`` by default).
 
     ``shuffle_partitions`` defaults to the core count locally; on a
     real cluster leave it high (AQE coalesces down at runtime, and
@@ -103,7 +103,7 @@ def get_spark(
     post-shuffle parallelism.
     """
     cpus = default_parallelism()
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+    master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = {
         **RUNTIME_CONFS,

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import SourceConfig, TableSpec
-from ..io import read_parquet
+from ..io import local_path, read_parquet
 
 _DEFAULT_PORTS = {"postgresql": 5432, "mysql": 3306, "oracle": 1521}
 
@@ -155,24 +155,26 @@ def jdbc_bounds(spark: SparkSession, source: SourceConfig, dbtable: str, column:
     return (row[0], row[1]) if row is not None else (None, None)
 
 
-def parquet_path(base: str, name: str) -> str:
+def parquet_path(spark: SparkSession, base: str, name: str) -> str:
     """Scan path for a table under ``base``.
 
     ``base`` may be a local directory or any Hadoop-filesystem URI
     (``s3a://bucket/prefix``, ``file:///…`` — the reference reads
-    ``s3a://`` extracts, ``_shared.py:26-33``). URI paths always use
-    the canonical ``{name}.parquet`` layout; local paths fall back to
-    a ``{name}/`` directory when the single-file form is absent.
+    ``s3a://`` extracts, ``_shared.py:26-33``). A non-local base always
+    uses the canonical ``{name}.parquet`` layout; a local one
+    (:func:`~mozart_etl_spark.io.local_path`) falls back to a
+    ``{name}/`` directory when the single-file form is absent.
     """
-    if "://" in base:
-        return f"{base.rstrip('/')}/{name}.parquet"
-    p = os.path.join(base, f"{name}.parquet")
-    return p if os.path.exists(p) else os.path.join(base, name)
+    root = base.rstrip("/")
+    local = local_path(spark, base)
+    if local is None or os.path.exists(os.path.join(local, f"{name}.parquet")):
+        return f"{root}/{name}.parquet"
+    return f"{root}/{name}"
 
 
 def _base_scan(spark: SparkSession, source: SourceConfig, spec: TableSpec) -> DataFrame:
     if source.type == "parquet":
-        return read_parquet(spark, parquet_path(source.path, spec.name))
+        return read_parquet(spark, parquet_path(spark, source.path, spec.name))
     dbtable = f"{spec.schema}.{spec.name}" if spec.schema else spec.name
     # Parallel range read only when explicitly configured: Spark
     # requires a numeric/date/timestamp partitionColumn, and the first
@@ -226,9 +228,10 @@ def test_connection(spark: SparkSession, source: SourceConfig) -> bool:
     raises also warns with the source and the exception, so the cause
     is not lost in the bool."""
     if source.type == "parquet":
-        if "://" in source.path:
-            # any Hadoop filesystem (s3a://, file://, …): existence via
-            # the configured FS, not the local os module
+        local = local_path(spark, source.path)
+        if local is None:
+            # any other Hadoop filesystem (s3a://, hdfs://, …):
+            # existence via the configured FS, not the local os module
             try:
                 jvm = spark._jvm
                 p = jvm.org.apache.hadoop.fs.Path(source.path)
@@ -237,7 +240,7 @@ def test_connection(spark: SparkSession, source: SourceConfig) -> bool:
             except Exception as e:
                 warnings.warn(f"connection probe of {source.path!r} failed: {e}", stacklevel=2)
                 return False
-        return os.path.isdir(source.path)
+        return os.path.isdir(local)
     probe = jdbc_reader(spark, source, f"({probe_sql(source)}) probe")
     try:
         probe.load().collect()

@@ -36,13 +36,12 @@ continuously) and on a drained replay (``availableNow``):
 from __future__ import annotations
 
 import os
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
-from ..io import events_raw_schema, normalize_ts_us
+from ..io import events_raw_schema, local_path, normalize_ts_us
 
 
 def events_stream(
@@ -304,6 +303,9 @@ def _state_stores(spark: SparkSession) -> int:
     return min(8, spark.sparkContext.defaultParallelism)
 
 
+#: seconds a bounded drain may run before it is stopped and raises
+_DRAIN_TIMEOUT_S = 300
+
 #: Spark's FileSystem-API checkpoint manager (the class moved to the
 #: ``checkpointing`` package in Spark 4.1;
 #: tests/test_spark_canaries.py fails if it moves again)
@@ -313,25 +315,10 @@ _FS_CHECKPOINT_MANAGER = (
 )
 
 
-def _is_local(spark: SparkSession, path: str | None) -> bool:
-    """Whether a checkpoint at ``path`` lands on the local filesystem.
-    ``None`` is Spark's own temp checkpoint, which is local. A path
-    without a scheme resolves against Hadoop's ``fs.defaultFS``, as
-    Spark resolves it."""
-    if path is None:
-        return True
-    scheme = urlparse(path).scheme
-    if not scheme:
-        default_fs = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
-        scheme = urlparse(default_fs or "file:///").scheme
-    return scheme == "file"
-
-
 def _drain(
     spark: SparkSession,
     writer: DataStreamWriter,
     what: str,
-    timeout_s: int,
     final_no_data_batch: bool,
     checkpoint: str | None,
 ) -> None:
@@ -341,8 +328,8 @@ def _drain(
     switched off. A local ``checkpoint`` (``None`` is Spark's temp
     checkpoint) is written through the FileSystem-API checkpoint
     manager. All three confs are restored afterwards. A query still
-    running after ``timeout_s`` is stopped, then ``TimeoutError`` names
-    ``what``.
+    running after :data:`_DRAIN_TIMEOUT_S` is stopped, then
+    ``TimeoutError`` names ``what``.
 
     Spark's default manager renames through ``FileContext``, which on
     a host without the native Hadoop library forks ``readlink`` for
@@ -360,19 +347,19 @@ def _drain(
     scoped = {"spark.sql.shuffle.partitions": str(_state_stores(spark))}
     if not final_no_data_batch:
         scoped["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
-    if _is_local(spark, checkpoint):
+    if checkpoint is None or local_path(spark, checkpoint) is not None:
         scoped["spark.sql.streaming.checkpointFileManagerClass"] = _FS_CHECKPOINT_MANAGER
     prev = {k: spark.conf.get(k, None) for k in scoped}
     for k, v in scoped.items():
         spark.conf.set(k, v)
     try:
         q = writer.trigger(availableNow=True).start()
-        q.awaitTermination(timeout_s)
+        q.awaitTermination(_DRAIN_TIMEOUT_S)
         # stop BEFORE the conf restore (r15 ADVICE): a still-running
         # query must not outlive the scoped conf it was started under
         if q.isActive:
             q.stop()
-            raise TimeoutError(f"{what} did not drain in {timeout_s}s")
+            raise TimeoutError(f"{what} did not drain in {_DRAIN_TIMEOUT_S}s")
     finally:
         # a conf the session had not set goes back to unset
         for k, v in prev.items():
@@ -386,7 +373,6 @@ def run_to_memory(
     df: DataFrame,
     name: str,
     output_mode: str = "complete",
-    timeout_s: int = 300,
     final_no_data_batch: bool = True,
 ) -> DataFrame:
     """Drain a (finite) streaming query into an in-memory table with
@@ -425,5 +411,5 @@ def run_to_memory(
     spark = df.sparkSession
     writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
     checkpoint = spark.conf.get("spark.sql.streaming.checkpointLocation", None)
-    _drain(spark, writer, f"stream {name}", timeout_s, final_no_data_batch, checkpoint)
+    _drain(spark, writer, f"stream {name}", final_no_data_batch, checkpoint)
     return spark.table(name)

@@ -26,9 +26,6 @@ def stream_merge_to_table(
     table_ident: str,
     primary_key: tuple[str, ...],
     checkpoint_dir: str,
-    timeout_s: int = 300,
-    output_mode: str = "append",
-    final_no_data_batch: bool = True,
 ) -> int:
     """Drain ``stream`` into ``table_ident`` with a keyed merge per
     micro-batch (``availableNow`` here; drop the trigger for a
@@ -38,11 +35,12 @@ def stream_merge_to_table(
     same keys to the same values, so at-least-once delivery from the
     source still yields exactly-once table state.
 
-    With ``output_mode="update"`` and an *aggregated* stream this is a
-    **continuous aggregate**: each micro-batch emits only the groups
+    The sink runs in update mode. Over an *aggregated* stream this is
+    a **continuous aggregate**: each micro-batch emits only the groups
     it changed, and the merge revises exactly those keys in the
     rollup table — the table converges to the batch GROUP BY without
-    ever recomputing it.
+    ever recomputing it. A stream without aggregation emits every row
+    once, as in append mode.
 
     The drain scopes ``spark.sql.shuffle.partitions`` to one task wave
     of state stores, ``min(8, defaultParallelism)``, exactly like
@@ -51,16 +49,15 @@ def stream_merge_to_table(
     dominates. A drain resumed from an existing ``checkpoint_dir``
     keeps the count its checkpoint was created with.
 
-    ``final_no_data_batch=False`` scopes
-    ``spark.sql.streaming.noDataMicroBatches.enabled=false`` for the
-    drain (same save/restore pattern; see
+    The drain also scopes
+    ``spark.sql.streaming.noDataMicroBatches.enabled=false`` (same
+    save/restore pattern; see
     :func:`~mozart_etl_spark.streaming.events.run_to_memory` for the
-    soundness contract). An update-mode aggregation emits a group
-    only when data changes it, so availableNow's trailing zero-row
-    watermark batch merges nothing here — it just re-opens and
-    re-commits every state store (measured 0.4 s of a 1.6 s drain at
-    sf0.1). Keep the default for any sink fed by watermark-driven
-    eviction (append-mode windowed aggregations).
+    soundness contract). Update mode emits a row only when data changes
+    it, never on watermark-driven eviction, so availableNow's trailing
+    zero-row watermark batch would merge nothing here — it would just
+    re-open and re-commit every state store (measured 0.4 s of a 1.6 s
+    drain at sf0.1).
 
     A ``checkpoint_dir`` on the local filesystem is written through the
     FileSystem-API checkpoint manager for the drain, which forks no
@@ -78,17 +75,10 @@ def stream_merge_to_table(
     spark = stream.sparkSession
     writer = (
         stream.writeStream.foreachBatch(_merge)
-        .outputMode(output_mode)
+        .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
     )
-    events._drain(
-        spark,
-        writer,
-        f"stream merge into {table_ident}",
-        timeout_s,
-        final_no_data_batch,
-        checkpoint_dir,
-    )
+    events._drain(spark, writer, f"stream merge into {table_ident}", False, checkpoint_dir)
     # the merges ran in foreachBatch's cloned session — refresh this
     # session's view of the table before reading it. If every batch
     # was empty (nothing matched the stream's filter, or a resumed

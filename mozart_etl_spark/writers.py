@@ -46,6 +46,8 @@ from typing import Any, NamedTuple
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .io import local_path
+
 #: Table formats the write strategies can target. ``parquet`` is the
 #: session-catalog default; ``delta`` / ``iceberg`` route merge_upsert
 #: through a real transactional ``MERGE INTO`` (in-place, no staging
@@ -113,10 +115,10 @@ def _drop_stale_location(spark: SparkSession, table_ident: str) -> None:
     warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
     if not warehouse or "." not in table_ident:
         return
-    path = warehouse.removeprefix("file:")
+    path = local_path(spark, warehouse)
     # non-local warehouse (s3a://… or file://host/…): leave it to the
     # real catalog
-    if "://" in path or path.startswith("//"):
+    if path is None:
         return
     ns, tbl = table_ident.rsplit(".", 1)
     stale = os.path.join(path, f"{ns}.db", tbl)
@@ -168,17 +170,12 @@ def _create(
     return _result(obs)
 
 
-def full_replace(
-    spark: SparkSession,
-    df: DataFrame,
-    table_ident: str,
-    watermark_col: str | None = None,
-) -> WriteResult:
-    """DROP + CTAS semantics (``_tenant_factory.py:300-307``). Count and
-    watermark are observed by the write job."""
+def full_replace(spark: SparkSession, df: DataFrame, table_ident: str) -> WriteResult:
+    """DROP + CTAS semantics (``_tenant_factory.py:300-307``). The count
+    is observed by the write job; a full load keeps no watermark."""
     fmt = resolve_format()
     _ensure_namespace(spark, table_ident)
-    out, obs = _observed(df, watermark_col)
+    out, obs = _observed(df, None)
     out.write.mode("overwrite").option("overwriteSchema", "true").format(fmt).saveAsTable(
         table_ident
     )

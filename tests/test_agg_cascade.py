@@ -101,7 +101,7 @@ def test_cascade_count_col_matches_native(spark):
     # empty input: both counts are 0 on the surviving grand-total row
     got = cascade_grouping_sets(
         df.limit(0), ["k1", "k2"], {"n_star": ("count",), "n_v": ("count", "v")},
-        sets=[()],
+        sets="cube",
     ).collect()
     assert [(r["n_star"], r["n_v"]) for r in got] == [(0, 0)]
 
@@ -116,34 +116,6 @@ def test_cascade_measure_surface_is_pinned():
     for bad in [("avg", "v"), ("collect_list", "v"), ("corr", "a", "b"), ("sum", "v", "w")]:
         with pytest.raises(ValueError, match="non-decomposable"):
             cascade_grouping_sets(None, ["k1"], {"m": bad}, sets="rollup")
-
-
-def test_cascade_validates_explicit_sets():
-    """Explicit sets: every tuple ⊆ keys, no duplicates (a duplicated
-    tuple would silently emit duplicate output rows); the finest set
-    is NOT required — validation fires before any Spark work."""
-    import pytest
-
-    with pytest.raises(ValueError, match="non-key column"):
-        cascade_grouping_sets(None, ["k1", "k2"], {"n": ("count",)}, sets=[("k1", "zz")])
-    with pytest.raises(ValueError, match="duplicate grouping set"):
-        cascade_grouping_sets(None, ["k1", "k2"], {"n": ("count",)}, sets=[("k1",), ("k1",)])
-
-
-def test_cascade_explicit_sets_without_finest(spark):
-    """A set list omitting the finest grouping is legal and equals the
-    matching subset of native GROUPING SETS output."""
-    df = _base(spark)
-    got = cascade_grouping_sets(
-        df, ["k1", "k2"], {"n": ("count",)}, sets=[("k1",), ()], grouping_id="gid"
-    )
-    native = df.cube("k1", "k2").agg(
-        (F.grouping("k1") * 2 + F.grouping("k2")).cast("bigint").alias("gid"),
-        F.count(F.lit(1)).alias("n"),
-    ).filter(F.col("gid").isin(1, 3))
-    assert _rows(got.select("k1", "k2", "gid", "n")) == _rows(
-        native.select("k1", "k2", "gid", "n")
-    )
 
 
 def test_cascade_decimal_sum_type_matches_native(spark):

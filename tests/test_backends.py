@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import contextlib
 import io
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -97,17 +96,32 @@ def test_jdbc_unpartitioned_when_unconfigured(spark, derby_source):
     assert out.rdd.getNumPartitions() == 1
 
 
-def test_parquet_path_schemes():
+def test_parquet_path_schemes(spark, tmp_path):
     assert (
-        R.parquet_path("s3a://bucket/sf0.1", "orders")
+        R.parquet_path(spark, "s3a://bucket/sf0.1", "orders")
         == "s3a://bucket/sf0.1/orders.parquet"
     )
-    assert (
-        R.parquet_path("file:///data/sf0.1/", "orders")
-        == "file:///data/sf0.1/orders.parquet"
-    )
-    # local layout keeps the exists() fallback
-    assert R.parquet_path(SF, "orders") == os.path.join(SF, "orders.parquet")
+    # a local base, with or without the file: scheme, finds the
+    # single-file layout and otherwise falls back to a {name}/ directory
+    for base in (SF, f"file:{SF}", f"file://{SF}/"):
+        assert R.parquet_path(spark, base, "orders") == f"{base.rstrip('/')}/orders.parquet"
+    assert R.parquet_path(spark, f"file:{tmp_path}", "t") == f"file:{tmp_path}/t"
+
+
+def test_file_uri_base_extracts_like_the_plain_directory(spark, spark_jobs):
+    """A ``file:/`` source base is the local directory it names: the
+    same table file, the same rows, the schema-cache hit, no warning."""
+    import warnings
+
+    spec = TableSpec(name="orders", columns=("o_orderkey", "o_totalprice"))
+    plain = R.extract_table(spark, SourceConfig(type="parquet", path=SF), spec)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        via_uri, jobs = spark_jobs(
+            lambda: R.extract_table(spark, SourceConfig(type="parquet", path=f"file:{SF}"), spec)
+        )
+    assert jobs == 0
+    assert sorted(via_uri.collect()) == sorted(plain.collect())
 
 
 def test_file_scheme_extract_matches_local(spark):

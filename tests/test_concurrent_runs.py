@@ -122,7 +122,7 @@ def test_model_failure_waits_for_in_flight_and_skips_downstream(spark, tmp_path)
     ns = f"m{uuid.uuid4().hex[:8]}"
     # a stale ``a`` from an earlier run: ``b`` could run if it started
     writers.full_replace(spark, spark.range(3), f"{ns}.a")
-    runner = ModelRunner(spark, str(models), f"{ns}_raw", ns, collect_previews=False)
+    runner = ModelRunner(spark, str(models), f"{ns}_raw", ns)
     with pytest.raises(Exception, match="no_such_table"):
         runner.run()
     assert spark.catalog.tableExists(f"{ns}.c")

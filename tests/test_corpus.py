@@ -43,32 +43,30 @@ def test_salted_join_fans_out_duplicate_dim_keys_like_plain_join(spark):
     row meets exactly one replica of its dim row") must extend to
     every COPY of a duplicated dim row — each fact row meets each
     duplicate exactly once, never once-per-salt-replica — so the
-    fan-out (and left-join NULL padding) matches the plain join
-    row for row."""
+    fan-out matches the plain join row for row."""
     fact = spark.createDataFrame(
         [(i, 1 if i % 5 else 2, float(i)) for i in range(400)],
         "row_id INT, k INT, v DOUBLE",
     )
     # key 1 (the hot key) duplicated twice, key 2 three times — with
     # DIFFERENT payloads so a lost/extra replica changes values, not
-    # just counts; key 3 matches nothing (left-join padding check)
+    # just counts; key 3 matches nothing
     dim = spark.createDataFrame(
         [(1, "a"), (1, "b"), (2, "x"), (2, "y"), (2, "z"), (3, "never")],
         "dk INT, label STRING",
     )
-    for how in ("inner", "left"):
-        plain = sorted(
-            map(tuple, fact.join(dim, fact.k == dim.dk, how).select("row_id", "label").collect())
+    plain = sorted(
+        map(tuple, fact.join(dim, fact.k == dim.dk).select("row_id", "label").collect())
+    )
+    salted = sorted(
+        map(
+            tuple,
+            C.salted_join(fact, dim, "k", "dk", "row_id", n_salts=4)
+            .select("row_id", "label")
+            .collect(),
         )
-        salted = sorted(
-            map(
-                tuple,
-                C.salted_join(fact, dim, "k", "dk", "row_id", n_salts=4, how=how)
-                .select("row_id", "label")
-                .collect(),
-            )
-        )
-        assert salted == plain, how
+    )
+    assert salted == plain
 
 
 def test_shuffle_order_is_a_permutation(spark):
@@ -170,8 +168,9 @@ def test_global_row_number_dense_and_ordered(spark):
     from mozart_etl_spark.operators.corpus import global_row_number
 
     df = spark.range(0, 5000).selectExpr("id", "cast(id % 13 as double) as v")
-    ranked = global_row_number(df, ["v", "id"], out_col="rn", num_partitions=16)
+    ranked, total = global_row_number(df, ["v", "id"], out_col="rn")
     rows = sorted((r["rn"], r["v"], r["id"]) for r in ranked.collect())
+    assert total == 5000
     assert [r[0] for r in rows] == list(range(1, 5001))
     assert rows == sorted(rows, key=lambda r: (r[1], r[2]))
 
@@ -463,17 +462,6 @@ def test_ngram_phrases_skip_empty_tokens(spark):
     df = spark.createDataFrame([(1, "a b\n"), (2, "a b")], "doc_id LONG, text STRING")
     phrases = {r["phrase"] for r in ngram_phrase_counts(df, n=2).collect()}
     assert phrases == {"a b"}
-
-
-def test_salted_join_rejects_outer_joins(spark):
-    """right/full outer would emit n_salts copies of unmatched dim
-    rows — refuse instead of silently multiplying."""
-    import pytest as _pytest
-
-    fact = spark.createDataFrame([(1, 10)], "row_id INT, k INT")
-    dim = spark.createDataFrame([(10, "d")], "dk INT, label STRING")
-    with _pytest.raises(ValueError, match="fact-preserving"):
-        C.salted_join(fact, dim, "k", "dk", fact_row_id="row_id", how="full")
 
 
 def test_chunk_documents_rejects_gapped_stride(spark):

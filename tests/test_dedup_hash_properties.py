@@ -134,7 +134,7 @@ def test_arrow_kernels_are_batch_boundary_independent(spark):
             },
             "quantize": {
                 r["vec_id"]: (r["scale"], r["qvec"], r["q_sum"], r["q_l1"])
-                for r in S.quantize_embeddings(emb, checksums=True).collect()
+                for r in S.quantize_embeddings(emb).collect()
             },
         }
 

@@ -19,21 +19,25 @@ from mozart_etl_spark.sources.reader import jdbc_url
 # --- config / env resolution (semantics of _shared.py:51-76) ---------------
 
 
-def test_resolve_env_with_default():
-    env = {"HOST": "db.example"}
-    assert resolve_env("${HOST}:${PORT:5432}", env) == "db.example:5432"
+def test_resolve_env_with_default(monkeypatch):
+    monkeypatch.setenv("HOST", "db.example")
+    monkeypatch.delenv("PORT", raising=False)
+    assert resolve_env("${HOST}:${PORT:5432}") == "db.example:5432"
 
 
-def test_resolve_env_unset_no_default_is_empty():
-    assert resolve_env("x${NOPE}y", {}) == "xy"
+def test_resolve_env_unset_no_default_is_empty(monkeypatch):
+    monkeypatch.delenv("NOPE", raising=False)
+    assert resolve_env("x${NOPE}y") == "xy"
 
 
-def test_resolve_env_first_colon_splits():
-    assert resolve_env("${URL:http://a:b}", {}) == "http://a:b"
+def test_resolve_env_first_colon_splits(monkeypatch):
+    monkeypatch.delenv("URL", raising=False)
+    assert resolve_env("${URL:http://a:b}") == "http://a:b"
 
 
-def test_resolve_env_recurses_containers():
-    out = resolve_env({"a": ["${X:1}", {"b": "${X:2}"}]}, {})
+def test_resolve_env_recurses_containers(monkeypatch):
+    monkeypatch.delenv("X", raising=False)
+    out = resolve_env({"a": ["${X:1}", {"b": "${X:2}"}]})
     assert out == {"a": ["1", {"b": "2"}]}
 
 

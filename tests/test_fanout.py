@@ -119,26 +119,26 @@ def test_table_fan_out_keeps_pushdown_and_results(spark):
     )
 
 
-def test_layout_probe_counts_directory_files(tmp_path):
+def test_layout_probe_counts_directory_files(spark, tmp_path):
     d = tmp_path / "dir.parquet"
     os.makedirs(d)
     _write_parquet(str(d / "a.parquet"), 10, rows_per_group=5)
     _write_parquet(str(d / "b.parquet"), 10, rows_per_group=5)
-    rg, rows, nbytes = mio._parquet_layout(str(d))
+    rg, rows, nbytes = mio._parquet_layout(spark, str(d))
     assert rg == 4
     assert rows == 20
     assert nbytes == os.path.getsize(d / "a.parquet") + os.path.getsize(d / "b.parquet")
 
 
-def test_layout_cache_keeps_one_entry_per_path(tmp_path):
+def test_layout_cache_keeps_one_entry_per_path(spark, tmp_path):
     """A rewritten path replaces its cache entry instead of adding one,
     so a long session that rewrites tables keeps the cache bounded."""
     f = str(tmp_path / "t.parquet")
     _write_parquet(f, 10, rows_per_group=5)
-    assert mio._parquet_layout(f)[:2] == (2, 10)
+    assert mio._parquet_layout(spark, f)[:2] == (2, 10)
     for n in (20, 30):
         # a different size changes the stat signature even when the
         # rewrite lands within the filesystem's mtime granularity
         _write_parquet(f, n, rows_per_group=5)
-        assert mio._parquet_layout(f)[:2] == (n // 5, n)
+        assert mio._parquet_layout(spark, f)[:2] == (n // 5, n)
     assert [k for k in mio._PARQUET_CACHE if k.startswith(str(tmp_path))] == [f]

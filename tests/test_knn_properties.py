@@ -407,9 +407,7 @@ _qvec = st.one_of(
 _OVERFLOW = S._OVERFLOW
 
 
-def _quantize_reference(
-    df, vec_col="embedding", id_col="vec_id", bits=8, checksums=False
-):
+def _quantize_reference(df, vec_col="embedding", id_col="vec_id", bits=8):
     """The SQL formulation of ``S.quantize_embeddings`` as
     higher-order-function folds (one ``aggregate`` for max|x|, one
     ``transform`` for the array, one ``aggregate`` per checksum): the
@@ -432,18 +430,14 @@ def _quantize_reference(
         scale.isNotNull(),
         F.transform(vec, lambda x: F.round(x.cast("double") / scale).cast("int")),
     )
-    cols = [
+    zero = F.lit(0).cast("bigint")
+    return df.select(
         F.col(id_col),
         scale.alias("scale"),
         qvec.alias("qvec"),
-    ]
-    if checksums:
-        zero = F.lit(0).cast("bigint")
-        cols += [
-            F.aggregate(qvec, zero, lambda a, x: a + x.cast("bigint")).alias("q_sum"),
-            F.aggregate(qvec, zero, lambda a, x: a + F.abs(x.cast("bigint"))).alias("q_l1"),
-        ]
-    return df.select(*cols)
+        F.aggregate(qvec, zero, lambda a, x: a + x.cast("bigint")).alias("q_sum"),
+        F.aggregate(qvec, zero, lambda a, x: a + F.abs(x.cast("bigint"))).alias("q_l1"),
+    )
 
 
 @settings(max_examples=6, deadline=None)
@@ -460,7 +454,7 @@ def test_quantize_arrow_matches_jvm_bit_identical(spark, vecs):
     df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
 
     def run(quantize):
-        out = quantize(df, checksums=True).collect()
+        out = quantize(df).collect()
         return {
             r["vec_id"]: (
                 None if r["scale"] is None else r["scale"].hex(),
@@ -577,7 +571,7 @@ def test_denormal_vector_quantizes_to_null_marked_row(spark):
 
     got = {
         r["vec_id"]: (r["scale"], r["qvec"], r["q_sum"], r["q_l1"])
-        for r in S.quantize_embeddings(df, checksums=True).collect()
+        for r in S.quantize_embeddings(df).collect()
     }
     assert got[0][1] == [64, -127]
     assert got[1] == (None, None, None, None), (
@@ -611,7 +605,7 @@ def test_legal_extreme_vectors_stay_scored(spark):
     assert all(math.isfinite(x) for x in cents["a"]), f"over-excluded or overflowed: {cents['a']}"
     assert cents["a"][0] == 1.5e38  # mean of 1.0 and 3e38, rounded by avg
 
-    got = {r["vec_id"]: r for r in S.quantize_embeddings(df, checksums=True).collect()}
+    got = {r["vec_id"]: r for r in S.quantize_embeddings(df).collect()}
     assert got[1]["scale"] is not None and math.isfinite(got[1]["scale"])
     assert got[1]["qvec"] == [127, 0]
     assert got[1]["q_sum"] == 127 and got[1]["q_l1"] == 127

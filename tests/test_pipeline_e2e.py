@@ -279,7 +279,7 @@ def test_incremental_model_merges_delta_only(spark, tmp_path):
     models = tmp_path / "models"
     models.mkdir()
     (models / "inc_model.sql").write_text(INC_MODEL)
-    runner = ModelRunner(spark, str(models), raw_ns, mart_ns, collect_previews=False)
+    runner = ModelRunner(spark, str(models), raw_ns, mart_ns)
 
     runner.run()
     tgt = f"{mart_ns}.inc_model"

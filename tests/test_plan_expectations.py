@@ -4,7 +4,8 @@
 this module asserts the PRESENCE of the optimizations each headline
 query's 100 TB story depends on, so a refactor that silently drops a
 pushed filter, widens a scan, adds a shuffle, or degrades a broadcast
-star-join to sort-merge fails CI instead of only aging PLANS.md.
+star-join to sort-merge fails CI instead of only showing up in the
+next ``plans/`` capture.
 
 Each expectation row is a floor/ceiling, not an exact snapshot, so
 benign plan jitter (AQE re-planning, operator renumbering) passes:
@@ -29,7 +30,8 @@ benign plan jitter (AQE re-planning, operator renumbering) passes:
   pushed filter or a collapsed Project repeats it in the plan text.
 
 Values were read off the actual sf0.001 plans (identical facts to the
-sf0.1 PLANS.md snapshot for every guarded query).
+sf0.1 ``plans/`` captures of ``tools/capture_plans.py`` for every
+guarded query).
 """
 
 from __future__ import annotations

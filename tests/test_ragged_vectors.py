@@ -121,7 +121,7 @@ def test_quantize_is_row_faithful_on_ragged(frame):
     """The store pass NEVER drops an id for shape: a ragged row
     quantizes against its own length (per-row reduceat segments), and
     the empty vector gets the NULL-marked row."""
-    rows = {r.vec_id: r for r in S.quantize_embeddings(frame, checksums=True).collect()}
+    rows = {r.vec_id: r for r in S.quantize_embeddings(frame).collect()}
     assert set(rows) == {1, 2, 3, 4, 10, 11, 12, 13}
     assert len(rows[10].qvec) == 2 and len(rows[11].qvec) == 6
     assert rows[10].scale == pytest.approx(1.0 / 127)

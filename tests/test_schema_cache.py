@@ -4,9 +4,10 @@ A hit must be indistinguishable from a bare ``spark.read.parquet``:
 same schema, same rows, for every testdata table. It must miss
 whenever what Spark would infer can differ — a file rewritten, a
 part added or replaced, a schema-affecting conf flipped — and it must
-never hold more than one entry per path. URI paths are not cached,
-and a path that cannot be listed falls back to the bare read with a
-warning rather than silently.
+never hold more than one entry per path. A ``file:`` URI shares the
+entry of the local path it names; a path on any other filesystem is
+not cached, and a path that cannot be listed falls back to the bare
+read with a warning rather than silently.
 """
 
 from __future__ import annotations
@@ -141,16 +142,32 @@ def test_nanos_as_long_flip_never_serves_the_other_schema(spark, tmp_path, resto
     assert mio.parquet_schema(spark, f)["ts"].dataType == LongType()
 
 
-def test_uri_paths_bypass_the_cache(spark, spark_jobs, tmp_path):
+def test_file_uris_share_the_local_cache_entry(spark, spark_jobs, tmp_path):
     f = str(tmp_path / "u.parquet")
     pq.write_table(pa.table({"a": [1, 2]}), f)
-    uri = f"file://{f}"
-    for _ in range(2):
-        df, jobs = spark_jobs(lambda: mio.read_parquet(spark, uri))
-        assert jobs >= 1
+    mio.read_parquet(spark, f)  # the miss
+    for uri in (f"file://{f}", f"file:{f}"):
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            df, jobs = spark_jobs(lambda: mio.read_parquet(spark, uri))
+        assert jobs == 0, uri
         assert sorted(r.a for r in df.collect()) == [1, 2]
-    assert uri not in mio._PARQUET_CACHE
-    assert f not in mio._PARQUET_CACHE
+    assert [k for k in mio._PARQUET_CACHE if k.startswith(str(tmp_path))] == [f]
+
+
+def test_remote_paths_bypass_the_cache(spark):
+    for uri in ("s3a://bucket/t.parquet", "hdfs://nn:8020/t.parquet", "file://otherhost/t.parquet"):
+        assert mio.local_path(spark, uri) is None
+        assert mio._path_meta(spark, uri) is None
+    # a path without a scheme lives where fs.defaultFS says
+    hadoop_conf = spark.sparkContext._jsc.hadoopConfiguration()
+    default_fs = hadoop_conf.get("fs.defaultFS")
+    assert mio.local_path(spark, "/data/t.parquet") == "/data/t.parquet"
+    hadoop_conf.set("fs.defaultFS", "hdfs://nn:8020")
+    try:
+        assert mio.local_path(spark, "/data/t.parquet") is None
+    finally:
+        hadoop_conf.set("fs.defaultFS", default_fs)
 
 
 def test_cache_keeps_one_entry_per_path(spark, tmp_path, restore_confs):
@@ -172,14 +189,14 @@ def test_unlistable_path_warns_and_reads_bare(spark, tmp_path):
     assert missing not in mio._PARQUET_CACHE
 
 
-def test_unreadable_footers_warn(tmp_path):
+def test_unreadable_footers_warn(spark, tmp_path):
     f = str(tmp_path / "corrupt.parquet")
     with open(f, "wb") as fh:
         fh.write(b"not a parquet file")
     with pytest.warns(UserWarning, match="corrupt.parquet"):
-        assert mio._parquet_layout(f) is None
+        assert mio._parquet_layout(spark, f) is None
     with pytest.warns(UserWarning, match="corrupt.parquet"):
-        assert mio._has_nanos_timestamp(f) is False
+        assert mio._has_nanos_timestamp(spark, f) is False
 
 
 def test_failed_runtime_conf_warns_naming_the_key():

@@ -383,7 +383,7 @@ def test_drain_resolves_filesystem_checkpoint_manager(spark, tmp_path):
         .outputMode("update")
         .option("checkpointLocation", ckpt)
     )
-    events._drain(spark, writer, "canary drain", 120, True, ckpt)
+    events._drain(spark, writer, "canary drain", True, ckpt)
     assert seen and set(seen) == {events._FS_CHECKPOINT_MANAGER}
 
 

@@ -297,7 +297,7 @@ def test_drain_state_partitions_scoping(spark):
     with _state_store_counts(spark) as counts:
         n = stream_merge_to_table(
             hourly_counts_stream(events_stream(spark, SF)),
-            tbl, ("window_start_us", "event_type"), ckpt, output_mode="update",
+            tbl, ("window_start_us", "event_type"), ckpt,
         )
     assert counts and set(counts) == {one_wave}
     assert n == out.count()
@@ -364,12 +364,14 @@ class _Writer:
 
 @pytest.mark.parametrize("prev_manager", [None, "prior.Manager"])
 @pytest.mark.parametrize("failure", ["timeout", "start_raises"])
-def test_drain_restores_confs_when_it_fails(spark, failure, prev_manager):
+def test_drain_restores_confs_when_it_fails(spark, failure, prev_manager, monkeypatch):
     """A drain that times out or whose ``start()`` raises still restores
     every conf it scoped, whether or not the session had set a
     checkpoint manager; a timed-out query is stopped while the drain's
     confs are still in force."""
     from mozart_etl_spark.streaming import events
+
+    monkeypatch.setattr(events, "_DRAIN_TIMEOUT_S", 1)
 
     key = "spark.sql.streaming.checkpointFileManagerClass"
     if prev_manager is not None:
@@ -383,9 +385,13 @@ def test_drain_restores_confs_when_it_fails(spark, failure, prev_manager):
                 raise RuntimeError("start failed")
             return _StuckQuery(spark, at_stop)
 
-        expected = TimeoutError if failure == "timeout" else RuntimeError
-        with pytest.raises(expected):
-            events._drain(spark, _Writer(start), "stuck drain", 1, False, None)
+        expected, message = (
+            (TimeoutError, "stuck drain did not drain in 1s")
+            if failure == "timeout"
+            else (RuntimeError, "start failed")
+        )
+        with pytest.raises(expected, match=message):
+            events._drain(spark, _Writer(start), "stuck drain", False, None)
         assert _scoped(spark) == before
         if failure == "timeout":
             assert at_stop == [
@@ -401,13 +407,25 @@ def test_drain_restores_confs_when_it_fails(spark, failure, prev_manager):
 
 def test_remote_checkpoint_keeps_spark_default_manager(spark):
     """Only a checkpoint on the local filesystem switches the manager."""
-    from mozart_etl_spark.streaming.events import _is_local
+    from mozart_etl_spark.io import local_path
 
-    assert _is_local(spark, None)
-    assert _is_local(spark, "/tmp/ckpt")
-    assert _is_local(spark, "file:///tmp/ckpt")
-    assert not _is_local(spark, "hdfs://namenode:8020/ckpt")
-    assert not _is_local(spark, "s3a://bucket/ckpt")
+    assert local_path(spark, "/tmp/ckpt") == "/tmp/ckpt"
+    assert local_path(spark, "file:///tmp/ckpt") == "/tmp/ckpt"
+    assert local_path(spark, "hdfs://namenode:8020/ckpt") is None
+    assert local_path(spark, "s3a://bucket/ckpt") is None
+
+    from mozart_etl_spark.streaming import events
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    managers: list = []
+
+    def start():
+        managers.append(spark.conf.get(key, None))
+        raise RuntimeError("start failed")
+
+    with pytest.raises(RuntimeError):
+        events._drain(spark, _Writer(start), "remote drain", False, "s3a://bucket/ckpt")
+    assert managers == [None]
 
 
 def test_continuous_aggregate_removes_its_checkpoint(spark, tmp_path, monkeypatch):

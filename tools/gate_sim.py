@@ -32,10 +32,31 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import SparkSession  # noqa: E402
 from tests.oracle_harness import compare  # noqa: E402
 
 from mozart_etl_spark import querybank  # noqa: E402
 from mozart_etl_spark.session import get_spark  # noqa: E402
+
+
+def gate(spark: SparkSession, sf_dir: str) -> tuple[list[tuple[str, str]], dict[str, int]]:
+    """Run every registered query on ``sf_dir``: the (query, message)
+    of each oracle divergence or failure, and the row count of each
+    rows-only query (one without an oracle)."""
+    querybank._ensure_loaded()
+    bad: list[tuple[str, str]] = []
+    rows_only: dict[str, int] = {}
+    for name, spec in querybank.REGISTRY.items():
+        try:
+            if spec.oracle is None:
+                rows_only[name] = len(spec.fn(spark, sf_dir).collect())
+            else:
+                ok, msg = compare(spark, sf_dir, spec.fn, spec.oracle)
+                if not ok:
+                    bad.append((name, msg))
+        except Exception as e:  # keep gating; report at the end
+            bad.append((name, str(e)[:300]))
+    return bad, rows_only
 
 
 def main(sf_dir: str) -> int:
@@ -44,24 +65,14 @@ def main(sf_dir: str) -> int:
     if os.environ.get("SPARK_GRAFT_AQE"):
         spark.conf.set("spark.sql.adaptive.enabled", os.environ["SPARK_GRAFT_AQE"])
     spark.sparkContext.setLogLevel("ERROR")
-    querybank._ensure_loaded()
 
-    bad: list[tuple[str, str]] = []
-    rows_only: dict[str, int] = {}
     t0 = time.time()
-    for name, spec in querybank.REGISTRY.items():
-        try:
-            if spec.oracle is None:
-                n = len(spec.fn(spark, sf_dir).collect())
-                rows_only[name] = n
-                if n < 1:
-                    bad.append((name, "rows-only query returned 0 rows (vacuous)"))
-            else:
-                ok, msg = compare(spark, sf_dir, spec.fn, spec.oracle)
-                if not ok:
-                    bad.append((name, msg))
-        except Exception as e:  # keep gating; report at the end
-            bad.append((name, str(e)[:300]))
+    bad, rows_only = gate(spark, sf_dir)
+    bad += [
+        (name, "rows-only query returned 0 rows (vacuous)")
+        for name, n in rows_only.items()
+        if n < 1
+    ]
     print(
         f"gated {len(querybank.REGISTRY)} queries in {time.time() - t0:.0f}s; "
         f"bad = {[n for n, _ in bad]}; rows_only = {rows_only}"
