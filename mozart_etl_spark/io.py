@@ -126,8 +126,11 @@ class _PathMeta:
     path: str
     #: ((file, inode, mtime_ns, size), ...) for every file under the path
     files: tuple[tuple[str, int, int, int], ...]
-    #: (row groups, rows, bytes) summed over the path's parquet files
+    #: (row groups, rows, bytes) summed over the path's parquet files;
+    #: None until the footers are read, and when they cannot be
     layout: tuple[int, int, int] | None = None
+    #: whether any of them has a TIMESTAMP(NANOS) column; None until
+    #: the footers are read
     has_nanos: bool | None = None
     #: (SCHEMA_CONFS values, the schema Spark inferred under them)
     schema: tuple[tuple[str, ...], StructType] | None = None
@@ -221,30 +224,42 @@ def _schema_confs(spark: SparkSession) -> tuple[str, ...]:
     return tuple(spark.conf.get(k) for k in SCHEMA_CONFS)
 
 
+def _read_footers(spark: SparkSession, path: str) -> _PathMeta | None:
+    """The cache entry for ``path`` with ``layout`` and ``has_nanos``
+    filled from one read of each parquet file's footer; None when the
+    path is not local. Footers that cannot be read warn once, leave
+    ``layout`` None and read as no TIMESTAMP(NANOS) column."""
+    meta = _path_meta(spark, path)
+    if meta is None or meta.has_nanos is not None:
+        return meta
+    parts = [(f, size) for f, _ino, _mtime, size in meta.files
+             if f == meta.path or f.endswith(".parquet")]
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        metas = [pq.ParquetFile(f).metadata for f, _size in parts]
+    except (OSError, pa.ArrowException) as e:
+        warnings.warn(f"cannot read parquet footers under {path!r} ({e}); the scan is "
+                      "not fanned out and is read without nanosAsLong", stacklevel=3)
+        meta.has_nanos = False
+        return meta
+    meta.layout = (
+        sum(m.num_row_groups for m in metas),
+        sum(m.num_rows for m in metas),
+        sum(size for _f, size in parts),
+    )
+    meta.has_nanos = any(
+        str(f.type) == "timestamp[ns]" for m in metas for f in m.schema.to_arrow_schema()
+    )
+    return meta
+
+
 def _parquet_layout(spark: SparkSession, path: str) -> tuple[int, int, int] | None:
     """(sum of row groups, sum of rows, sum of bytes) across the
     path's parquet files, from footer metadata only."""
-    meta = _path_meta(spark, path)
-    if meta is None:
-        return None
-    if meta.layout is None:
-        parts = [(f, size) for f, _ino, _mtime, size in meta.files
-                 if f == meta.path or f.endswith(".parquet")]
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        try:
-            metas = [pq.ParquetFile(f).metadata for f, _size in parts]
-        except (OSError, pa.ArrowException) as e:
-            warnings.warn(f"cannot read parquet footers under {path!r} ({e}); "
-                          "the scan is not fanned out", stacklevel=2)
-            return None
-        meta.layout = (
-            sum(m.num_row_groups for m in metas),
-            sum(m.num_rows for m in metas),
-            sum(size for _f, size in parts),
-        )
-    return meta.layout
+    meta = _read_footers(spark, path)
+    return None if meta is None else meta.layout
 
 
 def fan_out_target(spark: SparkSession, path: str) -> int:
@@ -291,23 +306,10 @@ def fan_out_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
 
 
 def _has_nanos_timestamp(spark: SparkSession, path: str) -> bool:
-    """Cheap parquet-footer check (no Spark job, no noisy task failure)."""
-    meta = _path_meta(spark, path)
-    if meta is not None and meta.has_nanos is not None:
-        return meta.has_nanos
-    import pyarrow as pa
-    import pyarrow.dataset as ds
-
-    try:
-        schema = ds.dataset(path if meta is None else meta.path, format="parquet").schema
-    except (OSError, pa.ArrowException) as e:
-        warnings.warn(f"cannot read the parquet schema of {path!r} ({e}); "
-                      "reading it without nanosAsLong", stacklevel=2)
-        return False
-    has_nanos = any(str(f.type) == "timestamp[ns]" for f in schema)
-    if meta is not None:
-        meta.has_nanos = has_nanos
-    return has_nanos
+    """Whether a parquet file under ``path`` has a TIMESTAMP(NANOS)
+    column, from its footer (no Spark job, no noisy task failure)."""
+    meta = _read_footers(spark, path)
+    return meta is not None and meta.has_nanos
 
 
 def events_raw_schema(spark: SparkSession, path: str) -> StructType:

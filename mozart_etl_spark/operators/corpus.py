@@ -464,14 +464,15 @@ def global_running_sum(
 ) -> DataFrame:
     """Exact global prefix sum WITHOUT the single-partition window.
 
-    ``sum(v) OVER (ORDER BY ...)`` with no PARTITION BY is the same
-    scale killer as global row numbering: one task sees every row.
-    Same two-phase fix as ``global_row_number``: range-partition and
+    ``sum(v) OVER (ORDER BY ...)`` with no PARTITION BY pulls the
+    whole dataset into one task — the classic global-ordering scale
+    killer. The scalable equivalent is two-phase: range-partition and
     sort on the order key (parallel), collect the P per-partition
-    totals (driver-side metadata, P numbers), then each row's global
-    prefix = its partition's cumulative offset + a within-partition
-    running sum (parallel window). The inclusive prefix sum this
-    returns is what shard planning / token-budget splitting needs.
+    totals (driver-side metadata, P numbers, like AQE statistics),
+    then each row's global prefix = its partition's cumulative offset
+    + a within-partition running sum (parallel window). The inclusive
+    prefix sum this returns is what shard planning / token-budget
+    splitting needs.
 
     ``order_cols`` must be a total order (include a tiebreaker) or
     prefix sums are nondeterministic across runs. The sum keeps the
@@ -480,12 +481,43 @@ def global_running_sum(
     exact, floating ones carry the usual summation-order rounding of
     any two-phase sum.
     """
+    return _prefix_sum(df, order_cols, F.col(value_col), out_col, num_partitions)[0]
+
+
+def global_row_number(
+    df: DataFrame, order_cols: list[str], out_col: str = "rn"
+) -> tuple[DataFrame, int]:
+    """Exact global row numbers WITHOUT the single-partition window:
+    the global running sum of a constant 1 (:func:`global_running_sum`).
+
+    ``order_cols`` must be a total order (include a tiebreaker) or
+    numbering is nondeterministic across runs.
+
+    Returns ``(ranked, total_rows)``: the total is the sum of the
+    per-partition counts the offset pass ALREADY collected (r15,
+    guide §1.2), so a caller that needs n (e.g. an exact ntile)
+    schedules no extra count() pass over the ranked table.
+    """
+    return _prefix_sum(df, order_cols, F.lit(1), out_col, None)
+
+
+def _prefix_sum(
+    df: DataFrame,
+    order_cols: list[str],
+    value: Column,
+    out_col: str,
+    num_partitions: int | None,
+) -> tuple[DataFrame, object]:
+    """(``df`` with ``out_col`` = the inclusive global running sum of
+    ``value`` in ``order_cols`` order, the grand total of ``value``)."""
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     ranged = df.repartitionByRange(parts, *order_cols).sortWithinPartitions(*order_cols)
-    # pin ONE physical partitioning (see global_row_number): the totals
-    # job and the prefix job must agree on partition ids
+    # pin ONE physical partitioning: the totals job and the prefix job
+    # otherwise re-plan the range exchange independently, and AQE may
+    # coalesce them differently — offsets would then disagree with the
+    # partition ids they are applied to
     ranged = ranged.withColumn("_pid", F.spark_partition_id()).localCheckpoint(eager=True)
-    totals_df = ranged.groupBy("_pid").agg(F.sum(value_col).alias("_offset"))
+    totals_df = ranged.groupBy("_pid").agg(F.sum(value).alias("_offset"))
     totals = {r["_pid"]: r["_offset"] for r in totals_df.collect()}
     # accumulate in the totals' own Python type (int stays exact
     # arbitrary-precision; float stays float; Decimal stays Decimal).
@@ -530,9 +562,9 @@ def global_running_sum(
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    local = F.sum(F.col(value_col)).over(w)
+    local = F.sum(value).over(w)
     zero = F.lit(type_zero).cast(offset_type)
-    return (
+    out = (
         ranged.join(off_df, "_pid")
         .withColumn(
             out_col,
@@ -542,58 +574,4 @@ def global_running_sum(
         )
         .drop("_pid", "_offset")
     )
-
-
-def global_row_number(
-    df: DataFrame, order_cols: list[str], out_col: str = "rn"
-) -> tuple[DataFrame, int]:
-    """Exact global row numbers WITHOUT the single-partition window.
-
-    ``row_number() OVER (ORDER BY ...)`` with no PARTITION BY pulls the
-    whole dataset into one task — the classic global-ranking scale
-    killer. The scalable equivalent is two-phase: range-partition and
-    sort by the key (parallel), count rows per partition (one tiny
-    job whose result is P numbers of driver-side metadata, like AQE
-    statistics), then add each partition's cumulative offset to a
-    *within-partition* row_number (parallel window).
-
-    ``order_cols`` must be a total order (include a tiebreaker) or
-    numbering is nondeterministic across runs.
-
-    Returns ``(ranked, total_rows)``: the total is the sum of the
-    per-partition counts this operator ALREADY collected for the
-    offsets (r15, guide §1.2), so a caller that needs n (e.g. an exact
-    ntile) schedules no extra count() pass over the ranked table.
-    """
-    from pyspark.sql import Window
-
-    parts = df.sparkSession.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(parts, *order_cols).sortWithinPartitions(*order_cols)
-    # pin ONE physical partitioning: the counts job and the numbering
-    # job otherwise re-plan the range exchange independently, and AQE
-    # may coalesce them differently — offsets would then disagree with
-    # the partition ids they are applied to
-    ranged = ranged.withColumn("_pid", F.spark_partition_id()).localCheckpoint(eager=True)
-    counts = {
-        r["_pid"]: r["n"]
-        for r in ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    offsets = []
-    acc = 0
-    for pid in sorted(counts):
-        offsets.append((pid, acc))
-        acc += counts[pid]
-    # P-row broadcast join, not a P-deep when()-chain: at the
-    # thousands-of-partitions scale this targets, a chained CASE WHEN
-    # is a pathological expression tree (codegen fallback, slow
-    # analysis)
-    off_df = F.broadcast(
-        df.sparkSession.createDataFrame(offsets, "_pid INT, _offset BIGINT")
-    )
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    ranked = (
-        ranged.join(off_df, "_pid")
-        .withColumn(out_col, F.row_number().over(w).cast("bigint") + F.col("_offset"))
-        .drop("_pid", "_offset")
-    )
-    return ranked, acc
+    return out, acc

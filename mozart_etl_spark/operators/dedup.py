@@ -33,6 +33,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .similarity import tables_for_recall
+from .text import split_words
+
 #: Mersenne prime 2^31-1; permutation arithmetic stays in BIGINT range
 #: because multipliers and hashes are both < 2^31.
 _MERSENNE_31 = (1 << 31) - 1
@@ -166,7 +169,7 @@ def _word_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFra
     hashing it shrinks every shuffle it enters (including the distinct
     here, applied after the hash); collision odds are
     ~n_shingles^2 / 2^128, negligible at any corpus size."""
-    words = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != "")
+    words = split_words(F.col(text_col))
     base = df.select(F.col(id_col).alias("doc_id"), words.alias("w")).filter(F.size("w") >= n)
     ngrams = F.expr(f"transform(sequence(1, size(w) - {n - 1}), i -> unhex(md5({_gram_sql(n)})))")
     return base.select("doc_id", F.explode(ngrams).alias("shingle")).distinct()
@@ -325,7 +328,7 @@ def _span_occurrences(
     """Every positioned word ``n``-gram: (doc_id, pos, span) with
     ``pos`` the 1-based word index. Generated shuffle-free per row
     (transform over a sequence of slice offsets)."""
-    words = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != "")
+    words = split_words(F.col(text_col))
     base = df.select(F.col(id_col).alias("doc_id"), words.alias("w")).filter(
         F.size("w") >= n
     )
@@ -425,7 +428,7 @@ def remove_repeated_spans(
     at sf0.1 for the span-scrub query, whose remaining cost is the
     inherent explode-to-ngrams discovery side).
     """
-    words_arr = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != "")
+    words_arr = split_words(F.col(text_col))
     # NULL ids excluded on BOTH legs (engine NULL-identity policy):
     # the id-keyed output dedup would otherwise pool every NULL-id
     # row into one arbitrary representative, and a NULL-id occurrence
@@ -541,7 +544,7 @@ def minhash_signatures(
     floating point, pinned bit-for-bit against an independent Python
     model in tests.
     """
-    words = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != "")
+    words = split_words(F.col(text_col))
     extra = [F.unhex(F.md5(F.col(text_col))).alias("_tfp")] if with_text_fp else []
     base = df.select(F.col(id_col).alias("doc_id"), words.alias("w"), *extra).filter(
         F.size("w") >= n
@@ -635,21 +638,9 @@ def minhash_lsh_params(threshold: float) -> tuple[int, int]:
     or exploding band count are both worse than making the caller
     choose explicit (num_perm, bands).
     """
-    import math
-
     t = max(0.0, min(1.0, threshold))
-
-    def bands_for(r: int) -> int | None:
-        p = t**r
-        if p >= 1.0:  # threshold 1.0: every band collides
-            return 1
-        if p <= 0.0:
-            return None
-        b = max(1, math.ceil(math.log(1.0 - _MINHASH_RECALL) / math.log(1.0 - p)))
-        return b if b <= _MINHASH_MAX_BANDS else None
-
     for r in range(_MINHASH_ROWS_PER_BAND, 1, -1):
-        bands = bands_for(r)
+        bands = tables_for_recall(t**r, _MINHASH_RECALL, _MINHASH_MAX_BANDS)
         if bands is not None:
             return r * bands, bands
     raise ValueError(
@@ -811,7 +802,7 @@ def simhash(
     NULL text yields a NULL fingerprint; an empty token list yields 0
     (all votes tie at zero, no bit set).
     """
-    words = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != "")
+    words = split_words(F.col(text_col))
     base = df.select(F.col(id_col).alias("doc_id"), words.alias("w"))
     hdf = base.select(
         "doc_id", F.transform("w", lambda t: _hash64_col(t, hash_fn)).alias("h")

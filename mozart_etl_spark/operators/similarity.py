@@ -562,6 +562,22 @@ _LSH_MAX_PLANES = 16
 _LSH_MAX_TABLES = 32
 
 
+def tables_for_recall(per_table: float, recall: float, cap: int) -> int | None:
+    """The smallest table (or band) count T whose recall
+    ``1-(1-per_table)^T`` reaches ``recall``, or None when that T
+    exceeds ``cap``: the recall equation both LSH resolvers solve
+    (:func:`auto_lsh_params`,
+    :func:`~mozart_etl_spark.operators.dedup.minhash_lsh_params`)."""
+    import math
+
+    if per_table >= 1.0:  # every table collides: one suffices
+        return 1
+    if per_table <= 0.0:  # no table ever collides: no recall possible
+        return None
+    t = max(1, math.ceil(math.log(1.0 - recall) / math.log(1.0 - per_table)))
+    return t if t <= cap else None
+
+
 def auto_lsh_params(n_rows: int, threshold: float) -> tuple[int, int]:
     """Resolve (n_planes, n_tables) from corpus size and similarity
     threshold — the knob a FIXED banding configuration lacks at scale.
@@ -609,18 +625,6 @@ def auto_lsh_params(n_rows: int, threshold: float) -> tuple[int, int]:
     import math
 
     p = 1.0 - math.acos(max(-1.0, min(1.0, threshold))) / math.pi
-
-    def tables_for(planes: int) -> int | None:
-        """Smallest T with recall 1-(1-p^planes)^T >= target, or None
-        if that T would exceed the table cap (p^planes too small)."""
-        per_table = p**planes
-        if per_table >= 1.0:  # threshold 1.0 -> p == 1, one table suffices
-            return 1
-        if per_table <= 0.0:  # threshold -1.0 -> p == 0: no recall possible
-            return None
-        t = max(1, math.ceil(math.log(1.0 - _LSH_RECALL) / math.log(1.0 - per_table)))
-        return t if t <= _LSH_MAX_TABLES else None
-
     lo, hi = _LSH_MIN_PLANES, _LSH_MAX_PLANES
     planes = lo
     if n_rows > _LSH_TARGET_OCCUPANCY:
@@ -628,7 +632,7 @@ def auto_lsh_params(n_rows: int, threshold: float) -> tuple[int, int]:
     # occupancy-optimal planes first; walk back toward the floor only
     # as far as the recall target forces
     for cand_planes in range(planes, lo - 1, -1):
-        tables = tables_for(cand_planes)
+        tables = tables_for_recall(p**cand_planes, _LSH_RECALL, _LSH_MAX_TABLES)
         if tables is not None:
             return cand_planes, tables
     raise ValueError(
@@ -647,40 +651,6 @@ _RESCORE_MIN_PAIRS_PER_PARTITION = 4096
 #: ids + row overhead) — used only to predict when byte-based
 #: coalescing will under-parallelize the CPU-heavy rescore.
 _CAND_PAIR_BYTES = 48
-
-
-def _parse_size_bytes(text: str | None, default: int = 64 * 1024 * 1024) -> int:
-    """Bytes for a Spark size conf value: bare ints are bytes, and the
-    human-readable suffixes Spark itself accepts (``64MB``, ``256m``,
-    ``1g``, ``512k``, ``128b``, any case, optional trailing ``b``) are
-    scaled binary units. r15 ADVICE fix: ``int()`` raised on every
-    suffixed value, so a user-RAISED advisory size — where AQE
-    coalesces harder and the rescore rescue is needed most — silently
-    fell back to the 64 MiB default and overestimated ``aqe_parts``.
-    The default covers only unset/unparseable values; an unparseable
-    one warns (once per value, by ``warnings``' default filter) naming
-    what it could not read."""
-    if text is None:
-        return default
-    s = str(text).strip().lower()
-    try:
-        return int(s)
-    except ValueError:
-        pass
-    import re
-
-    m = re.fullmatch(r"(\d+)\s*([kmgtp])?b?", s)
-    if not m:
-        import warnings
-
-        warnings.warn(
-            f"could not parse size conf value {text!r}; using the default "
-            f"{default} bytes",
-            stacklevel=2,
-        )
-        return default
-    scale = {None: 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}[m.group(2)]
-    return int(m.group(1)) << scale
 
 
 def _rescore_parallelism_rescue(
@@ -716,9 +686,10 @@ def _rescore_parallelism_rescue(
         spark.sparkContext.defaultParallelism,
         max(1, est_pairs // _RESCORE_MIN_PAIRS_PER_PARTITION),
     )
-    advisory = _parse_size_bytes(
-        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", None)
-    )
+    # Spark's own size parser reads the conf as AQE does ("256m",
+    # "64MB", bare bytes); conf.set already rejects what it cannot read
+    parse = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+    advisory = parse(spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
     aqe_parts = max(1, est_pairs * _CAND_PAIR_BYTES // advisory)
     if justified > aqe_parts:
         return cand.repartition(justified)

@@ -43,15 +43,20 @@ from pyspark.sql import functions as F
 _ASCII_ALPHA = "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
 
 
+def split_words(text: Column) -> Column:
+    """A document's words: its NON-EMPTY whitespace tokens. Spark's
+    trim() strips only ASCII spaces and split() keeps boundary
+    empties, so an unfiltered split sees phantom tokens on
+    \\n/\\t-padded text (and 2 on '\\n\\n'); filtering empties gives
+    the intuitive words and none for empty/whitespace-only text with
+    no special-case guard. The one definition for every operator and
+    query; oracles use its DuckDB twin, ``querybank.WORDS_SQL``."""
+    return F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != "")
+
+
 def _n_tokens(text: Column) -> Column:
-    """Whitespace token count over NON-EMPTY tokens. Spark's trim()
-    strips only ASCII spaces and split() keeps boundary empties, so an
-    unfiltered count sees phantom tokens on \\n/\\t-padded text (and
-    2 on '\\n\\n'); filtering empties gives the intuitive count and 0
-    for empty/whitespace-only text with no special-case guard."""
-    return F.size(
-        F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != "")
-    ).cast("bigint")
+    """Word count (:func:`split_words`)."""
+    return F.size(split_words(text)).cast("bigint")
 
 
 def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -213,7 +218,7 @@ def ngram_phrase_counts(df: DataFrame, n: int = 2) -> DataFrame:
     phrase count — the shape that survives a 100 TB corpus (map-side
     combine does most of the counting).
     """
-    w = F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != "")
+    w = split_words(F.col("text"))
     base = df.select(w.alias("w"))
     return (
         base.select(F.explode(word_ngrams(F.col("w"), n)).alias("phrase"))
@@ -278,9 +283,7 @@ def cooccurrence_pmi(
     the same capped universe; documents under the cap are unaffected.
     ``None`` keeps the exact unbounded semantics.
     """
-    arr = F.array_distinct(
-        F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != "")
-    )
+    arr = F.array_distinct(split_words(F.col(text_col)))
     if max_vocab is not None:
         arr = F.transform(
             F.slice(
@@ -306,11 +309,9 @@ def cooccurrence_pmi(
         .localCheckpoint(eager=False)
     )
     n_docs = df.agg(F.count_distinct(F.col(id_col)).cast("double").alias("_nd"))
-    # vocabulary-sized; checkpointed because tok_a and tok_b each
-    # broadcast it and an unbarriered aggregate would run twice
-    marg = toks.groupBy("tok").agg(
-        F.count(F.lit(1)).cast("double").alias("_c")
-    ).localCheckpoint(eager=False)
+    # vocabulary-sized; tok_a and tok_b broadcast it through one
+    # reused exchange, so it is aggregated once without a barrier
+    marg = toks.groupBy("tok").agg(F.count(F.lit(1)).cast("double").alias("_c"))
     a, b = toks.alias("a"), toks.alias("b")
     pairs = (
         a.join(b, (F.col(f"a.{id_col}") == F.col(f"b.{id_col}")) & (F.col("a.tok") < F.col("b.tok")))
@@ -353,7 +354,7 @@ def repetition_stats(df: DataFrame) -> DataFrame:
     struct accumulator) rather than a per-document groupBy, so no
     (doc, token) shuffle exists at all.
     """
-    toks = F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != "")
+    toks = split_words(F.col("text"))
     base = df.select("doc_id", toks.alias("w"))
     w = F.col("w")
     n_tok = F.size(w).cast("bigint")
@@ -407,7 +408,7 @@ def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     the vocabulary is small); the top-k window partitions on the
     document — bounded by per-doc vocabulary, never corpus size.
     """
-    toks = F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != "")
+    toks = split_words(F.col("text"))
     tf = (
         df.select("doc_id", F.explode(toks).alias("term"))
         .groupBy("doc_id", "term")

@@ -54,6 +54,11 @@ class QuerySpec:
 
 REGISTRY: dict[str, QuerySpec] = {}
 
+#: A document's words in oracle SQL: the DuckDB twin of
+#: :func:`~mozart_etl_spark.operators.text.split_words`. Oracles
+#: interpolate it; they never spell it out.
+WORDS_SQL = r"list_filter(regexp_split_to_array(trim(text), '\s+'), t -> t <> '')"
+
 
 def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = (), doc: str = ""):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):

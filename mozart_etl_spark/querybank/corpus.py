@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from ..io import table
 from ..operators import corpus as corpus_ops
 from ..operators import text as text_ops
-from . import register
+from . import WORDS_SQL, register
 
 #: Stratum keep-fractions for the rebalancing demo: downsample the
 #: dominant language hard, trim the runner-up, keep the tail.
@@ -258,7 +258,7 @@ def corpus_chunks_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH t AS (
             SELECT doc_id, lang,
-                   CAST(len(list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> ''))
+                   CAST(len({WORDS_SQL})
                         AS BIGINT) AS n_tokens
             FROM documents
         ), c AS (
@@ -433,9 +433,9 @@ def corpus_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     "equi-join — never all-pairs — and AQE broadcasts the benchmark "
     "side when it is small. The shape used to decontaminate a "
     "pre-training corpus against eval sets at any scale.",
-    oracle="""
+    oracle=f"""
         WITH w AS (
-            SELECT doc_id, source, list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '') AS l
+            SELECT doc_id, source, {WORDS_SQL} AS l
             FROM documents
         ), s AS (
             SELECT doc_id, source,
@@ -461,7 +461,7 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents", fan_out=True)
     # drop phantom empty tokens from boundary \n/\t (Spark trim strips
     # only ASCII spaces) — mirrors the oracle's list_filter(t <> '')
-    toks = F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != "")
+    toks = text_ops.split_words(F.col("text"))
     shingled = docs.select("doc_id", "source", toks.alias("w")).select(
         "doc_id",
         "source",
@@ -621,10 +621,10 @@ def corpus_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(operators/corpus.py:global_running_sum), never a "
     "single-partition window, so the plan survives corpus-scale "
     "inputs; the only collect is P per-partition totals.",
-    oracle="""
+    oracle=f"""
         WITH t AS (
             SELECT doc_id,
-                   CAST(len(list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> ''))
+                   CAST(len({WORDS_SQL})
                         AS BIGINT) AS n_tokens,
                    substr(md5('shard0:' || CAST(doc_id AS VARCHAR)), 1, 8) AS k
             FROM documents
@@ -678,10 +678,9 @@ def corpus_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "side still carries the span text as payload, since the text is "
     "this query's output), certified against the exact text-keyed "
     "oracle.",
-    oracle="""
+    oracle=f"""
         WITH w AS (
-            SELECT doc_id, list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                                       t -> t <> '') AS l
+            SELECT doc_id, {WORDS_SQL} AS l
             FROM documents
         ), shl AS (
             -- per-element concat, NOT array_to_string(l[i:i+9], ' '):
@@ -731,15 +730,14 @@ def corpus_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     "split the join a ranking window could not), and the span "
     "shuffles are keyed on 16-byte md5s, certified here against the "
     "exact text-keyed oracle.",
-    oracle="""
+    oracle=f"""
         WITH w AS (
             -- one row per DISTINCT doc_id (r11 duplicate-key axis:
             -- replayed duplicate id rows are the same document; the
             -- arbitrary pick is stable because copies are identical)
             SELECT doc_id, l FROM (
                 SELECT doc_id,
-                       list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                                   t -> t <> '') AS l,
+                       {WORDS_SQL} AS l,
                        row_number() OVER (PARTITION BY doc_id) AS rn
                 FROM documents
                 WHERE doc_id IS NOT NULL

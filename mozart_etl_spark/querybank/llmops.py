@@ -22,7 +22,7 @@ from ..operators import dedup as dedup_ops
 from ..operators import multimodal as mm_ops
 from ..operators import similarity as sim_ops
 from ..operators import text as text_ops
-from . import register
+from . import WORDS_SQL, register
 
 #: Embedding dimensionality of the testdata `embeddings` table
 #: (TESTDATA.md: array<float> of fixed length 64 at every SF). Passed
@@ -68,9 +68,9 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "COVERAGE.md). At scale, generate candidates with MinHash-LSH and "
     "verify exactly on candidates only (jaccard_verify_pairs) — the "
     "certified edge chain of dedup_components/dedup_canonical.",
-    oracle="""
+    oracle=f"""
         WITH words AS (
-            SELECT doc_id, list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '') AS w
+            SELECT doc_id, {WORDS_SQL} AS w
             FROM documents
         ), sh AS (
             -- per-element concat, NOT array_to_string(w[i:i+2], ' '):
@@ -145,7 +145,7 @@ _MINHASH_PERMS_SQL = ",\n            ".join(
             {_MINHASH_PERMS_SQL}
         ), d AS (
             SELECT doc_id,
-                   list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '') AS w
+                   {WORDS_SQL} AS w
             FROM documents
         ), sh AS (
             -- distinct 3-word shingle hashes per doc: 60-bit md5
@@ -218,12 +218,12 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fingerprint per row exactly like the Spark side, so the "
     "duplicate-key and NULL-id variant profiles cannot split the "
     "engines.",
-    oracle="""
+    oracle=f"""
         WITH d AS (
             SELECT doc_id,
                    CASE WHEN text IS NULL THEN NULL
                         ELSE list_transform(
-                                list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> ''),
+                                {WORDS_SQL},
                                 t -> ('0x' || substr(md5(t), 1, 15))::BIGINT)
                    END AS hs
             FROM documents
@@ -254,10 +254,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_token_stats",
     tags=("text", "documents"),
     doc="Token counting (whitespace tokenization) + char stats per doc.",
-    oracle="""
+    oracle=f"""
         SELECT doc_id,
                CAST(length(text) AS BIGINT) AS n_chars,
-               CAST(len(list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '')) AS BIGINT) AS n_tokens
+               CAST(len({WORDS_SQL}) AS BIGINT) AS n_tokens
         FROM documents
     """,
 )
@@ -271,14 +271,14 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "documents"),
     doc="Quality heuristics: alphabetic ratio, whitespace ratio, mean "
     "token length — the standard pre-training corpus filters.",
-    oracle="""
+    oracle=f"""
         SELECT doc_id,
                round(CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
                      / nullif(length(text), 0), 4) AS alpha_ratio,
                round(CAST(length(regexp_replace(text, '[^ ]', '', 'g')) AS DOUBLE)
                      / nullif(length(text), 0), 4) AS space_ratio,
                round(CAST(length(regexp_replace(text, '\\s', '', 'g')) AS DOUBLE)
-                     / nullif(len(list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '')), 0), 4)
+                     / nullif(len({WORDS_SQL}), 0), 4)
                      AS mean_token_len
         FROM documents
     """,
@@ -361,12 +361,12 @@ def text_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Stopword-ratio quality feature: fraction of whitespace tokens "
     "in a fixed stopword set — the cheap fluency signal corpus "
     "filters use alongside alpha/space ratios.",
-    oracle=r"""
+    oracle=rf"""
         SELECT doc_id,
                round(CAST(len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
                                           t -> list_contains(['the','and','of','to','a','in','is','it'], t)))
                           AS DOUBLE)
-                     / nullif(len(list_filter(regexp_split_to_array(trim(text), '\s+'), t -> t <> '')), 0),
+                     / nullif(len({WORDS_SQL}), 0),
                      4) AS stopword_ratio
         FROM documents
     """,
@@ -387,9 +387,9 @@ def text_stopword_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     "from zipping shifted slices of the token array — shuffle-free "
     "generation; the one shuffle is the partial-aggregable phrase "
     "count, then a top-k.",
-    oracle="""
+    oracle=f"""
         WITH w AS (
-            SELECT doc_id, list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '') AS l
+            SELECT doc_id, {WORDS_SQL} AS l
             FROM documents
         ), bi AS (
             SELECT unnest(l[1:len(l)-1]) AS w1, unnest(l[2:len(l)]) AS w2 FROM w
@@ -431,11 +431,11 @@ def text_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Spark 4.x; convergence pinned in tests/test_float_key_parity.py)."
     " Documents under 512 distinct tokens — the entire non-injected "
     "corpus — are bit-unaffected.",
-    oracle="""
+    oracle=f"""
         WITH x AS (
             -- NULL-id rows excluded (engine NULL-identity policy:
             -- a document without an identity is not a document)
-            SELECT doc_id, unnest(list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '')) AS tok
+            SELECT doc_id, unnest({WORDS_SQL}) AS tok
             FROM documents
             WHERE doc_id IS NOT NULL
         ), t AS (
@@ -508,7 +508,7 @@ def text_rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "replayed duplicate id row gets its own identical stats row; the "
     "oracle discriminates rows with a per-id row_number so its "
     "unnest+group never pools the copies' tokens.",
-    oracle="""
+    oracle=f"""
         WITH w AS (
             -- rid: per-row discriminator so the relational unnest
             -- aggregates per INPUT ROW like the operator's per-row
@@ -519,7 +519,7 @@ def text_rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
             -- the copies are bit-identical, so output is stable.
             SELECT doc_id, row_number() OVER (PARTITION BY doc_id) AS rid,
                    text IS NULL AS no_text,
-                   list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '') AS l
+                   {WORDS_SQL} AS l
             FROM documents
         ), tc AS (
             SELECT doc_id, rid, CAST(sum(c) AS BIGINT) AS n,
@@ -571,9 +571,9 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "frequency is a rollup of that result (no corpus re-scan); N is "
     "a broadcast 1-row aggregate; the top-k window partitions by "
     "document, bounded by per-doc vocabulary at any corpus size.",
-    oracle="""
+    oracle=f"""
         WITH tok AS (
-            SELECT doc_id, unnest(list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '')) AS term
+            SELECT doc_id, unnest({WORDS_SQL}) AS term
             FROM documents
         ), tf AS (
             SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
@@ -873,9 +873,9 @@ def _jaccard_edges(docs: DataFrame) -> DataFrame:
     "reachable id — a hash match therefore certifies both that the "
     "iterative plan equals the fixpoint semantics AND that the "
     "LSH-candidate edge set loses no true edge on this corpus.",
-    oracle="""
+    oracle=f"""
         WITH RECURSIVE words AS (
-            SELECT doc_id, list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '') AS w
+            SELECT doc_id, {WORDS_SQL} AS w
             FROM documents
         ), sh AS (
             -- per-element concat (r12 giant-document axis): a list
@@ -940,9 +940,9 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     "union (LEFT JOIN + coalesce), and the same election, so the "
     "hash match also certifies the LSH edge set's completeness on "
     "this corpus.",
-    oracle="""
+    oracle=f"""
         WITH RECURSIVE words AS (
-            SELECT doc_id, list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '') AS w
+            SELECT doc_id, {WORDS_SQL} AS w
             FROM documents
         ), sh AS (
             -- per-element concat (r12 giant-document axis): a list
@@ -1715,9 +1715,9 @@ def embedding_quantize_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     "locally checkpointed (vocab-sized); the prefix counts are a "
     "rollup of that result; the per-document join is bigram-keyed "
     "(AQE broadcasts small vocabularies).",
-    oracle="""
+    oracle=f"""
         WITH w AS (
-            SELECT doc_id, list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '') AS l
+            SELECT doc_id, {WORDS_SQL} AS l
             FROM documents
         ), bi AS (
             SELECT doc_id, w1 || ' ' || w2 AS bigram, w1
@@ -1740,7 +1740,7 @@ def embedding_quantize_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_bigram_cross_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents", fan_out=True)
-    toks = F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != "")
+    toks = text_ops.split_words(F.col("text"))
     bi = docs.select("doc_id", toks.alias("w")).select(
         "doc_id", F.explode(text_ops.word_ngrams(F.col("w"), 2)).alias("bigram")
     )

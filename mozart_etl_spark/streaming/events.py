@@ -174,7 +174,6 @@ def sessionize_stream(
     survived. The explicit symmetric floor replaces that
     predicate-shaped accident with a deterministic contract.
     """
-    gap_us = _interval_us(gap)
     return (
         stream.filter(
             F.col("ts").isNotNull()
@@ -187,43 +186,11 @@ def sessionize_stream(
         .select(
             "user_id",
             F.unix_micros(F.col("w.start")).alias("session_start_us"),
-            (F.unix_micros(F.col("w.end")) - F.lit(gap_us)).alias("last_event_us"),
+            # Spark parses the gap here with session_window's own parser
+            F.unix_micros(F.col("w.end") - F.expr(f"INTERVAL '{gap}'")).alias("last_event_us"),
             "n_events",
         )
     )
-
-
-def _interval_us(interval: str) -> int:
-    """Microseconds for every interval string ``session_window`` itself
-    accepts: any unit millisecond..week, compound forms
-    ('1 hour 30 minutes'), any case — rejecting a gap Spark would take
-    (KeyError on 'day', unpack error on compounds) would be a bug in
-    this helper, not a contract."""
-    per = {
-        "microsecond": 1,
-        "millisecond": 1_000,
-        "second": 1_000_000,
-        "minute": 60_000_000,
-        "hour": 3_600_000_000,
-        "day": 86_400_000_000,
-        "week": 7 * 86_400_000_000,
-    }
-    parts = interval.lower().split()
-    if len(parts) % 2 != 0 or not parts:
-        raise ValueError(f"malformed interval: {interval!r}")
-    total = 0.0
-    for qty, unit in zip(parts[::2], parts[1::2]):
-        try:
-            # float, not int: Spark accepts fractional quantities
-            # ('1.5 seconds'); result rounds to whole microseconds
-            total += float(qty) * per[unit.rstrip("s")]
-        except KeyError:
-            raise ValueError(f"unknown interval unit {unit!r} in {interval!r}") from None
-        except ValueError as e:
-            if "could not convert" in str(e):
-                raise ValueError(f"malformed interval quantity {qty!r} in {interval!r}") from None
-            raise
-    return int(round(total))
 
 
 def click_view_interval_join(

@@ -243,19 +243,39 @@ def test_truncate_reload_aligns_columns_by_name(spark):
     spark.sql(f"DROP TABLE {tbl}")
 
 
-def test_interval_us_units_and_compounds():
-    """Every interval form session_window accepts parses: singular/
-    plural, day/week units, compounds, mixed case."""
-    from mozart_etl_spark.streaming.events import _interval_us
+@pytest.mark.parametrize(
+    "gap, gap_us",
+    [
+        ("1 hour 30 minutes", 5_400_000_000),
+        ("1.5 seconds", 1_500_000),
+        ("2 weeks", 14 * 86_400_000_000),
+    ],
+)
+def test_sessionize_last_event_is_the_session_max_ts(spark, gap, gap_us):
+    """``last_event_us`` is each session's latest event, for compound,
+    fractional and week gaps: Spark parses the gap once, for the
+    session window and for the session end it subtracts it from."""
+    from pyspark.sql import functions as F
 
-    assert _interval_us("30 seconds") == 30_000_000
-    assert _interval_us("1 day") == 86_400_000_000
-    assert _interval_us("1 hour 30 minutes") == 5_400_000_000
-    assert _interval_us("2 Weeks") == 14 * 86_400_000_000
-    with pytest.raises(ValueError):
-        _interval_us("1 fortnight")
-    with pytest.raises(ValueError):
-        _interval_us("90")
+    from mozart_etl_spark.streaming.events import sessionize_stream
+
+    t0 = 1_700_000_000_000_000
+    offsets = [0, 1_000_000, 3_100_000, 3_600_000_000, 10_800_000_000, 1_728_000_000_000]
+    rows = [(u, t0 + u + off) for u in (1, 2) for off in offsets]
+    events = spark.createDataFrame(rows, "user_id BIGINT, ts_us BIGINT").select(
+        "user_id", F.timestamp_micros("ts_us").alias("ts")
+    )
+    expected = []
+    for u in (1, 2):
+        ts = sorted(t for uid, t in rows if uid == u)
+        start = ts[0]
+        for prev, cur in zip(ts, ts[1:] + [None]):
+            if cur is None or cur - prev >= gap_us:
+                n = sum(start <= t <= prev for t in ts)
+                expected.append((u, start, prev, n))
+                start = cur
+    got = sessionize_stream(events, gap=gap).collect()
+    assert sorted(tuple(r) for r in got) == sorted(expected)
 
 
 def test_stream_merge_empty_drain_returns_zero(spark, tmp_path):
@@ -352,10 +372,3 @@ def test_events_stream_reads_directory_layout(spark, tmp_path):
     st = events_stream(spark, str(sf2)).select("event_id")
     out = run_to_memory(st, "dirlayout_check", output_mode="append")
     assert out.count() == 200
-
-
-def test_interval_us_fractional_quantities():
-    from mozart_etl_spark.streaming.events import _interval_us
-
-    assert _interval_us("1.5 seconds") == 1_500_000
-    assert _interval_us("0.5 hours") == 1_800_000_000

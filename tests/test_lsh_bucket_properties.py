@@ -255,34 +255,36 @@ def test_rescore_parallelism_rescue_bounds(spark):
     assert S._rescore_parallelism_rescue(cand, 10_000_000, 16, 32) is cand
 
 
-def test_parse_size_bytes_accepts_spark_suffixes(spark):
-    """r15 ADVICE fix: the rescue's advisory-size read must parse
-    Spark's human-readable size values ('64MB', '256m') instead of
-    raising and silently falling back to 64 MiB — a user-RAISED
-    advisory size is exactly when AQE coalesces harder and the rescue
-    matters most. The rescue must also still fire with a suffixed
-    conf value set."""
-    p = S._parse_size_bytes
-    assert p("67108864") == 64 * 1024 * 1024
-    assert p("64MB") == 64 * 1024 * 1024
-    assert p("256m") == 256 * 1024 * 1024
-    assert p("1g") == 1 << 30
-    assert p("512k") == 512 * 1024
-    assert p("128b") == 128
-    assert p("64 MB") == 64 * 1024 * 1024
-    assert p(None) == 64 * 1024 * 1024
-    # an unparseable value still falls back, but not silently
-    with pytest.warns(UserWarning, match="'garbage'"):
-        assert p("garbage") == 64 * 1024 * 1024
+def test_unparseable_advisory_size_is_rejected_by_spark(spark):
+    """The rescue reads the advisory size with Spark's own size parser,
+    and needs no fallback for a value it cannot read: Spark refuses to
+    set one."""
+    from pyspark.errors import IllegalArgumentException
 
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prev = spark.conf.get(key)
+    try:
+        with pytest.raises(IllegalArgumentException, match="INVALID_CONF_VALUE"):
+            spark.conf.set(key, "garbage")
+        assert spark.conf.get(key) == prev
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_rescue_reads_suffixed_advisory_size(spark):
+    """r15 ADVICE fix: a suffixed advisory size ('256m') is read as the
+    size it names, not as the 64 MiB default — a user-RAISED advisory
+    size is exactly when AQE coalesces harder and the rescue matters
+    most, and a tiny one ('1k') leaves AQE enough partitions."""
     key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     prev = spark.conf.get(key)
     cand = spark.range(10).selectExpr("id AS doc_a", "id + 1 AS doc_b")
     try:
-        # raised advisory size ("256m"): AQE would coalesce the ~16
-        # B/pair exchange even harder, so the local-shape rescue must
-        # still fire rather than be skipped by a parse failure
         spark.conf.set(key, "256m")
         assert S._rescore_parallelism_rescue(cand, 2000, 6, 4) is not cand
+        # ~125k estimated pairs x 48 B over 1 KiB: thousands of AQE
+        # partitions, more than the rescue would ever ask for
+        spark.conf.set(key, "1k")
+        assert S._rescore_parallelism_rescue(cand, 2000, 6, 4) is cand
     finally:
         spark.conf.set(key, prev)

@@ -193,10 +193,13 @@ def test_unreadable_footers_warn(spark, tmp_path):
     f = str(tmp_path / "corrupt.parquet")
     with open(f, "wb") as fh:
         fh.write(b"not a parquet file")
-    with pytest.warns(UserWarning, match="corrupt.parquet"):
+    # one footer pass serves both readers, so it warns once
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
         assert mio._parquet_layout(spark, f) is None
-    with pytest.warns(UserWarning, match="corrupt.parquet"):
         assert mio._has_nanos_timestamp(spark, f) is False
+    footer = [str(w.message) for w in caught if "parquet footers" in str(w.message)]
+    assert len(footer) == 1 and "corrupt.parquet" in footer[0]
 
 
 def test_failed_runtime_conf_warns_naming_the_key():
