@@ -562,16 +562,20 @@ def _prefix_sum(
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    local = F.sum(value).over(w)
+    # the within-partition running sum gets its own column, read twice
+    # below: written inline twice, the Window node would evaluate two
+    # identical sums
+    local = F.col("_local")
     zero = F.lit(type_zero).cast(offset_type)
     out = (
         ranged.join(off_df, "_pid")
+        .withColumn("_local", F.sum(value).over(w))
         .withColumn(
             out_col,
             F.when(
                 local.isNull() & F.col("_offset").isNull(), F.lit(None).cast(offset_type)
             ).otherwise(F.coalesce(local, zero) + F.coalesce(F.col("_offset"), zero)),
         )
-        .drop("_pid", "_offset")
+        .drop("_pid", "_offset", "_local")
     )
     return out, acc

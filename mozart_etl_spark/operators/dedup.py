@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .similarity import tables_for_recall
+from .similarity import candidate_pairs, label_representatives, tables_for_recall
 from .text import split_words
 
 #: Mersenne prime 2^31-1; permutation arithmetic stays in BIGINT range
@@ -143,19 +143,15 @@ def novel_documents(
     x 16 bytes — ~6 TB of fingerprints per trillion docs) and passes
     that projection, so the anti-join shuffles fingerprints, never
     text. Bucketing the store on the fingerprint makes the join
-    one-sided-shuffle. Within-batch dedup is one fingerprint-keyed
-    window (earliest id wins), same as ``corpus_clean``.
+    one-sided-shuffle. Within the batch, each fingerprint keeps its
+    :func:`~.similarity.label_representatives` row (smallest non-NULL
+    id), same as ``corpus_clean``.
     """
-    from pyspark.sql import Window
-
     from .text import normalized_fp_col as fp
 
     hist_fps = history.select(fp(F.col(text_col)).alias("_fp")).distinct()
-    batch = new_batch.withColumn("_fp", fp(F.col(text_col)))
-    w = Window.partitionBy("_fp").orderBy(id_col)
-    first_in_batch = (
-        batch.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-    )
+    batch = label_representatives(new_batch.withColumn("_fp", fp(F.col(text_col))), id_col, "_fp")
+    first_in_batch = batch.filter(F.col("_rn") == 1).drop("_rep_id", "_rn")
     return first_in_batch.join(hist_fps, "_fp", "left_anti").drop("_fp")
 
 
@@ -737,24 +733,14 @@ def signature_band_pairs(
         return f"concat_ws(',', {parts})"
 
     band_structs = F.expr("array(" + ", ".join(_band_sql(i) for i in range(bands)) + ")")
-    # The band join moves (doc_id, band_id, band_hash) ONLY — never the
-    # signature array. Carrying sig through the self-join would shuffle
-    # num_perm*8 bytes per doc per band per side (16x redundant at
-    # bands=16); instead the deduped candidate pairs re-attach both
-    # signatures with two id-keyed equi-joins against the checkpointed
-    # signature table, which shuffles each signature once per side.
+    # The band join moves (doc_id, band_id, band_hash) ONLY; the
+    # deduped candidate pairs re-attach both signatures with two
+    # id-keyed equi-joins against the checkpointed signature table,
+    # which shuffles each signature once per side.
     banded = sigs.select("doc_id", F.explode(band_structs).alias("band")).select(
         "doc_id", F.col("band.band_id").alias("band_id"), F.col("band.band_hash").alias("band_hash")
     )
-    a = banded.select(F.col("doc_id").alias("doc_a"), "band_id", "band_hash")
-    b = banded.select(F.col("doc_id").alias("doc_b"), "band_id", "band_hash")
-    pairs = (
-        a.join(b, ["band_id", "band_hash"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    cand = pairs.join(
+    cand = candidate_pairs(banded, None).join(
         sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a")), "doc_a"
     ).join(
         sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b")), "doc_b"

@@ -489,6 +489,63 @@ def lsh_banded(
     )
 
 
+def label_representatives(df: DataFrame, id_col: str, fp_col: str) -> DataFrame:
+    """``df`` with every row labelled by its ``fp_col`` group's
+    representative: ``_rep_id`` is the group's smallest non-NULL
+    ``id_col``, and ``_rn`` is 1 on exactly one row of each group, a
+    row that carries that id. The exact-duplicate collapse of every
+    filter-and-verify pipeline: keep the ``_rn = 1`` rows, and where
+    members must stay connected emit ``(_rep_id, id)`` star edges from
+    the rows with ``id != _rep_id``.
+
+    - **Why collapse.** Bucketing cannot damp a cluster of exact
+      duplicates: k copies share every bucket and pair k(k-1)/2 times.
+      Collapsing first makes candidate volume independent of the
+      cluster size. Components are unchanged: a copy is exactly as
+      similar to every document as its representative is, so every
+      edge a member would add exists through the representative, and
+      its star edge reconnects it.
+    - **NULL-safe minimum.** Spark's default ascending order puts
+      NULLs first and ``first`` keeps them, so a group holding a NULL
+      id would elect NULL. The window orders NULLs last and ``first``
+      skips them, matching an oracle's ``min(id)`` or ``ORDER BY id``
+      under DuckDB's NULLS LAST default. A NULL-id member gets no star
+      edge: ``NULL != rep`` is NULL in both engines.
+    - **One row per group.** Replayed-CDC duplicate rows (same id, same
+      content) must not all pass as representatives: each would fan
+      out every join on the id downstream. ``_rn`` picks exactly one,
+      as the oracles' ``GROUP BY fingerprint`` or ``rn = 1`` do.
+    """
+    w = Window.partitionBy(fp_col).orderBy(F.col(id_col).asc_nulls_last())
+    return df.withColumn("_rep_id", F.first(id_col, ignorenulls=True).over(w)).withColumn(
+        "_rn", F.row_number().over(w)
+    )
+
+
+def candidate_pairs(keys: DataFrame, probe: DataFrame | None) -> DataFrame:
+    """The filter of filter-and-verify: the distinct id pairs that
+    share a bucket key. ``keys`` rows are ``(id, key...)``, the id
+    first. With ``probe`` None it is a self-join, and a pair is
+    ``(doc_a, doc_b)`` with ``doc_a < doc_b``. Otherwise ``probe``
+    rows (its own id first, then the same key columns) are broadcast
+    against ``keys``, and a pair is ``(probe id, keys id)`` under the
+    two frames' id names, with the ids unequal.
+
+    Only ids and keys shuffle: the payload a caller scores (a
+    signature, a vector) re-attaches by id to the deduplicated pairs,
+    so a row is not carried once per bucket it shares."""
+    id_col, *key_cols = keys.columns
+    if probe is None:
+        ids = ["doc_a", "doc_b"]
+        a = keys.select(F.col(id_col).alias("doc_a"), *key_cols)
+        b = keys.select(F.col(id_col).alias("doc_b"), *key_cols)
+        pairs = a.join(b, key_cols).filter(F.col("doc_a") < F.col("doc_b"))
+    else:
+        ids = [probe.columns[0], id_col]
+        pairs = keys.join(F.broadcast(probe), key_cols).filter(F.col(id_col) != F.col(ids[0]))
+    return pairs.select(*ids).dropDuplicates(ids)
+
+
 def lsh_knn(
     queries: DataFrame,
     candidates: DataFrame,
@@ -523,21 +580,13 @@ def lsh_knn(
     # construction, not merely by join reachability.
     queries = drop_ragged_vectors(drop_corrupt_vectors(queries, vec_col), vec_col, dim)
     candidates = drop_ragged_vectors(drop_corrupt_vectors(candidates, vec_col), vec_col, dim)
-    # bucket join + pair dedup shuffle IDs ONLY — at corpus scale the
-    # dominant shuffle would otherwise carry every 64-float vector
-    # once per colliding table; vectors re-attach by id afterwards
     qb = lsh_banded(
         queries, dim, "query_id", "qv", id_col, vec_col, n_planes, n_tables, seed
     ).select("query_id", "table_id", "bucket")
     cb = lsh_banded(
         candidates, dim, "neighbor_id", "cv", id_col, vec_col, n_planes, n_tables, seed
     ).select("neighbor_id", "table_id", "bucket")
-    pairs = (
-        cb.join(F.broadcast(qb), ["table_id", "bucket"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
+    pairs = candidate_pairs(cb, qb)
     # norms precomputed per VECTOR (multi-referenced projection — no
     # CollapseProject inlining), never per candidate pair. The NORM
     # form of the corrupt-vector guard rides the sane-first ranking
@@ -748,25 +797,20 @@ def lsh_near_dup_pairs(
 
     ``collapse_identical`` (default ``False`` = exact current
     behavior) stages the embedding analogue of the MinHash chain's
-    exact-duplicate collapse — the companion that makes a cap safe
-    under the giant-identical-cluster adversary (one document
-    embedded k times: every bucket of every table is hot, so a cap
-    alone would drop the WHOLE cluster). Identical vectors — md5 of
-    the STRING rendering of the double array, so "identical" means
-    value-identical after the double cast; zero-norm, NULL, and
-    NaN-containing vectors stay singletons — collapse
-    to their min-id representative before banding; members
-    rejoin as (rep, member) star edges with cosine exactly 1.0 —
-    sound because an identical vector has identical cosine to every
-    other vector, so every edge a member would contribute exists
-    through its representative. The output is then the SPANNING
-    structure per identical-byte cluster rather than all C(k,2)
-    pairs (k-1 star edges; cross-cluster pairs appear once at rep
-    level): connected components — what a dedup pipeline consumes —
-    are provably unchanged, while candidate volume becomes
-    independent of identical-cluster size. Distinct-byte vectors
-    (e.g. positively scaled copies) are NOT collapsed and flow
-    through banding as before.
+    exact-duplicate collapse (:func:`label_representatives` holds the
+    rationale) — the companion that makes a cap safe under the
+    giant-identical-cluster adversary (one document embedded k times:
+    every bucket of every table is hot, so a cap alone would drop the
+    WHOLE cluster). Identical vectors — md5 of the STRING rendering of
+    the double array, so "identical" means value-identical after the
+    double cast; zero-norm, NULL, and NaN-containing vectors stay
+    singletons — collapse to their representative before banding;
+    members rejoin as (rep, member) star edges with cosine exactly
+    1.0. The output is then the SPANNING structure per identical-byte
+    cluster rather than all C(k,2) pairs (k-1 star edges; cross-cluster
+    pairs appear once at rep level). Distinct-byte vectors (e.g.
+    positively scaled copies) are NOT collapsed and flow through
+    banding as before.
     """
     if max_bucket_size is not None and max_bucket_size < 2:
         raise ValueError("max_bucket_size must be >= 2 (a bucket of 2 is one pair)")
@@ -794,30 +838,8 @@ def lsh_near_dup_pairs(
             (norm > 0) & _norm_is_clean(norm) & _dim_ok(F.col("_cv"), dim),
             F.md5(F.col("_cv").cast("string")),
         ).otherwise(F.concat(F.lit("__solo__"), F.col("_cid").cast("string")))
-        # one ordered window drives both the representative id (first
-        # by id = min) and the row-unique pick: exactly ONE row per
-        # fingerprint group enters banding, so replayed-CDC duplicate
-        # rows (same id, same vector — bit-identical by contract)
-        # collapse idempotently instead of flowing through as
-        # duplicate representative rows that would fan out every
-        # rescore join touching them (r13; the oracle mirrors with
-        # GROUP BY fingerprint).
-        # NULL-safe representative pick (r14 advisor): Spark default
-        # ASC is NULLS FIRST and first() keeps nulls, so a group
-        # containing a NULL id would elect _rep_id=NULL — every star
-        # edge then dies in the `_cid != _rep_id` NULL comparison and
-        # the NULL-id row becomes the banding representative. Order
-        # nulls LAST and skip them in first(): _rep_id is the MIN
-        # non-null id, matching the oracle's min(vec_id) under
-        # DuckDB's NULLS LAST default. A NULL-id member itself still
-        # contributes no star edge (NULL != rep is NULL on both
-        # engines — the shared corrupt-id policy).
-        wv = Window.partitionBy("_vfp").orderBy(F.col("_cid").asc_nulls_last())
-        base = (
-            base.withColumn("_vfp", key)
-            .withColumn("_rep_id", F.first("_cid", ignorenulls=True).over(wv))
-            .withColumn("_rn", F.row_number().over(wv))
-            .localCheckpoint(eager=False)
+        base = label_representatives(base.withColumn("_vfp", key), "_cid", "_vfp").localCheckpoint(
+            eager=False
         )
         star = base.filter(F.col("_cid") != F.col("_rep_id")).select(
             F.col("_rep_id").alias("doc_a"),
@@ -831,13 +853,10 @@ def lsh_near_dup_pairs(
     if n_planes == "auto":
         n_rows = df.count()
         n_planes, n_tables = auto_lsh_params(n_rows, threshold)
-    # Candidate generation carries ONLY ids through the self-join and
-    # dedup shuffles — at dim=64 a vector is ~0.5 KB/row vs 16 B for an
-    # id pair, a ~30x shuffle-volume difference. Vectors (with norms
-    # precomputed once per doc, not once per pair) are joined back for
-    # the exact rescoring of the deduped candidates; at this table size
-    # AQE picks a broadcast for the vector side, at 100 TB it degrades
-    # to a shuffle join on id — both correct.
+    # Vectors (with norms precomputed once per doc, not once per pair)
+    # re-attach to the id-only candidates for the exact rescoring; at
+    # this table size AQE picks a broadcast for the vector side, at
+    # 100 TB it degrades to a shuffle join on id — both correct.
     # localCheckpoint: both self-join sides read the banded frame, so a
     # materialization barrier stops the banding expression (the
     # dominant fixed cost) being evaluated once per side. The
@@ -854,14 +873,7 @@ def lsh_near_dup_pairs(
         b = b.withColumn("_bucket_n", bucket_n).filter(
             F.col("_bucket_n") <= max_bucket_size
         ).drop("_bucket_n")
-    b = b.localCheckpoint(eager=False)
-    a = b.select(F.col("doc_id").alias("doc_a"), "table_id", "bucket")
-    c = b.select(F.col("doc_id").alias("doc_b"), "table_id", "bucket")
-    cand = (
-        a.join(c, ["table_id", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    cand = candidate_pairs(b.localCheckpoint(eager=False), None)
     cand = _rescore_parallelism_rescue(cand, n_rows, n_planes, n_tables)
     vecs = _vectors(df, id_col, vec_col, "doc_id", "v", "n")
     va = vecs.select(F.col("doc_id").alias("doc_a"), F.col("v").alias("va"), F.col("n").alias("na"))

@@ -74,76 +74,74 @@ def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = (), d
 #: rows for exactly the first 50 entries of ``queries()`` in dict
 #: order, so entry order decides which queries get certified each
 #: round.
-#: Round-16 rotation (changed queries lead, then the oldest rows):
-#: (a) the 5 streaming drains, whose state-store count changed this
-#: round (one task wave per bounded drain), lead so the driver
-#: hash-certifies every touched query; (b) the 13 r13-dated rows the
-#: r15 rotation deferred to this round; (c) the 32 fastest r14-dated
-#: rows (BENCH_FULL.json timings) fill the window. The 11 slowest
-#: r14-dated rows that don't fit — events_funnel, corpus_clean,
-#: large_order_customers, decimal_uplift_totals,
-#: corpus_chunks_overlap, part_name_typo_pairs,
-#: order_price_quantiles_approx, orders_column_profile,
-#: regional_supplier_revenue, etl_mart_customer,
-#: distinct_parts_approx — stay one-round-stale and rotate first next
-#: round. After this round no registered query's latest row is older
-#: than r14. COVERAGE.md carries the per-query round map.
+#: Round-17 rotation: (a) the 6 queries whose plan changed this round
+#: lead: the representative window now orders NULLs last
+#: (corpus_clean, corpus_incremental_dedup, and the checkpointed
+#: signature stage of dedup_components / dedup_canonical), and the
+#: prefix sum evaluates its window once (customer_balance_deciles,
+#: corpus_shard_plan); (b) the other 10 r14-dated rows the round-16
+#: rotation deferred (corpus_clean, the 11th, is in (a)); (c) the
+#: oldest rows, r15-dated, fill the window in CORRECTNESS_r15.json
+#: order. The 9 r15-dated rows that don't fit — pricing_summary,
+#: text_repetition_stats, idle_rich_customers, segment_year_pivot,
+#: order_priority_waiting, events_retention_cohorts, revenue_rollup,
+#: multimodal_manifest, corpus_temperature_mix — stay one round
+#: staler and rotate first next round. COVERAGE.md carries the
+#: per-query round map.
 DRIVER_PRIORITY: tuple[str, ...] = (
-    # (a) the 5 streaming drains changed this round — certify first
-    "streaming_hourly_counts",
-    "streaming_sessionize",
-    "streaming_running_totals",
-    "streaming_continuous_aggregate",
-    "streaming_interval_join",
-    # (b) the 13 r13-dated rows the r15 rotation deferred
-    "event_props_json",
-    "events_sessionize",
-    "revenue_cube",
-    "big_spenders",
-    "distinct_parts_per_flag",
-    "lineitem_stats",
-    "dedup_simhash",
-    "small_quantity_revenue",
-    "top_orders_revenue",
-    "order_price_quantiles",
-    "text_tfidf_top_terms",
+    # (a) plan changed this round — certify first
+    "corpus_clean",
+    "corpus_incremental_dedup",
+    "customer_balance_deciles",
     "corpus_shard_plan",
-    "text_bigram_cross_entropy",
-    # (c) the 32 fastest r14-dated rows fill the window; the 11
-    # slowest stay one-round-stale and rotate first next round
-    # (window driver runtime stays bounded)
-    "segment_nation_list",
-    "text_token_stats",
-    "dedup_exact",
-    "incremental_range_scan",
-    "part_name_word_counts",
-    "text_fingerprint",
-    "events_hourly_histogram",
-    "party_nation_counts",
-    "embedding_centroids",
-    "customers_with_orders",
-    "customers_without_recent_orders",
-    "text_quality_score",
-    "corpus_pack_sequences",
-    "embedding_quantize_check",
-    "multimodal_frame_sample",
-    "events_intervisit_gaps",
-    "multimodal_features",
-    "multimodal_resize_grid",
-    "events_orphan_users",
-    "corpus_source_cap",
-    "high_value_only_custkeys",
-    "nation_revenue_rank",
-    "events_user_sketch_rollup",
-    "text_top_bigrams",
-    "both_segments_nations",
-    "events_markov_transitions",
-    "nation_revenue_running_share",
-    "range_join_click_views",
-    "customer_order_distribution",
-    "nation_market_share",
-    "disjunctive_filter_revenue",
-    "events_salted_enrich",
+    "dedup_components",
+    "dedup_canonical",
+    # (b) the 10 remaining r14-dated rows
+    "regional_supplier_revenue",
+    "distinct_parts_approx",
+    "large_order_customers",
+    "order_price_quantiles_approx",
+    "events_funnel",
+    "part_name_typo_pairs",
+    "orders_column_profile",
+    "decimal_uplift_totals",
+    "etl_mart_customer",
+    "corpus_chunks_overlap",
+    # (c) the oldest (r15-dated) rows fill the window
+    "dedup_minhash_lsh",
+    "dedup_ngram_jaccard",
+    "corpus_span_scrub",
+    "corpus_repeated_spans",
+    "text_cooccurrence_pmi",
+    "knn_lsh_cosine",
+    "knn_ivf_cosine",
+    "knn_bruteforce_cosine",
+    "dedup_embedding_lsh",
+    "dedup_embedding_cosine",
+    "asof_click_view",
+    "corpus_chunks",
+    "corpus_decontaminate",
+    "corpus_pii_scrub",
+    "cross_nation_trade",
+    "select_project_filter",
+    "string_functions",
+    "top_parts_by_price",
+    "part_catalog_enriched",
+    "corpus_sample_balanced",
+    "corpus_shuffle_slice",
+    "mart_item_master",
+    "text_rolling_hash",
+    "orders_by_year",
+    "corpus_weighted_sample",
+    "text_stopword_ratio",
+    "order_price_buckets",
+    "text_lang_confusion",
+    "text_bpe_token_stats",
+    "events_key_skew_profile",
+    "events_by_type",
+    "latest_event_per_user",
+    "top_supplier_revenue",
+    "promo_revenue_ratio",
 )
 
 

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..io import table
 from ..operators import corpus as corpus_ops
+from ..operators import similarity as sim_ops
 from ..operators import text as text_ops
 from . import WORDS_SQL, register
 
@@ -292,8 +293,8 @@ def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     "runs: quality gate (alphabetic ratio >= 0.6, length >= 100 chars) "
     "then exact near-dup removal keeping one representative per "
     "normalized fingerprint (lowercased alphanumeric skeleton md5, "
-    "earliest doc_id wins). Filter + one fingerprint-keyed window — "
-    "two scans' worth of work, one shuffle.",
+    "smallest non-NULL doc_id wins). Filter + one fingerprint-keyed "
+    "window — two scans' worth of work, one shuffle.",
     oracle="""
         WITH f AS (
             SELECT doc_id, lang, n_chars,
@@ -311,8 +312,6 @@ def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = table(spark, sf_dir, "documents")
     t = F.col("text")
     # translate-deletion count + run-extraction fingerprint (r12
@@ -326,12 +325,8 @@ def corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     gated = docs.filter((alpha_ratio >= 0.6) & (F.col("n_chars") >= 100)).select(
         "doc_id", "lang", "n_chars", norm_fp.alias("norm_fp")
     )
-    w = Window.partitionBy("norm_fp").orderBy("doc_id")
-    return (
-        gated.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "lang", "n_chars")
-    )
+    reps = sim_ops.label_representatives(gated, "doc_id", "norm_fp")
+    return reps.filter(F.col("_rn") == 1).select("doc_id", "lang", "n_chars")
 
 
 @register(

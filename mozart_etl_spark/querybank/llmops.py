@@ -808,42 +808,29 @@ def _jaccard_edges(docs: DataFrame) -> DataFrame:
     driver-certified against the exact recursive-CTE oracle.
 
     Stage 0 (r7): EXACT collapse before banding, fused into the
-    signature pass. Verbatim copies share every signature, so banding
-    puts E copies in the same bucket of all 30 bands and enumerates
-    E(E-1)/2 pairs — band length bounds background collisions, never
-    true identical-signature clusters (a viral page copied 10M times
-    at web scale is ~5e13 bucket pairs). The signature pass therefore
-    also emits the text md5 (``with_text_fp=True`` — same corpus
-    scan), a window over that 16-byte key labels every doc with its
-    group's min id, and only REPRESENTATIVE signatures enter the band
-    join; collapsed members rejoin as E-1 star edges (their jaccard
-    to the representative is exactly 1.0). Components are provably
-    unchanged: identical text ⇒ identical shingle set ⇒ for every
-    member m and any doc y, jaccard(m, y) = jaccard(rep(m), y), so
-    every edge a member would have contributed exists through its
-    representative, and the star edge reconnects the member. All
-    collapse arithmetic runs on the checkpointed signature table — ids,
-    signatures, and 16-byte fingerprints shuffle; text never does,
-    and the corpus is still scanned exactly twice (signatures +
-    verify), as before the staging. Since r14 the verify stage
+    signature pass (:func:`~..operators.similarity.label_representatives`
+    holds the rationale). The signature pass also emits the text md5
+    (``with_text_fp=True`` — same corpus scan); only REPRESENTATIVE
+    signatures enter the band join, and collapsed members rejoin as
+    star edges (identical text has jaccard exactly 1.0 to its
+    representative). All collapse arithmetic runs on the checkpointed
+    signature table — ids, signatures, and 16-byte fingerprints
+    shuffle; text never does, and the corpus is still scanned exactly
+    twice (signatures + verify). Since r14 the verify stage
     shingles only documents that appear in a candidate pair
     (jaccard_verify_pairs' candidate-doc semi-join prune — a shingle
     row of any other document cannot survive the doc_a/doc_b
     equi-joins, so exploding it is pure waste); candidates are
     rep-only and the exact jaccard of a rep pair is unchanged by the
     prune, bit-identically."""
-    from pyspark.sql import Window
-
     num_perm, bands = dedup_ops.minhash_lsh_params(0.5)
-    sigs = dedup_ops.minhash_signatures(
-        docs, num_perm=num_perm, with_text_fp=True
-    ).withColumn(
-        "_rep_id", F.min("doc_id").over(Window.partitionBy("_tfp"))
+    sigs = sim_ops.label_representatives(
+        dedup_ops.minhash_signatures(docs, num_perm=num_perm, with_text_fp=True), "doc_id", "_tfp"
     ).localCheckpoint(eager=False)
     star = sigs.filter(F.col("doc_id") != F.col("_rep_id")).select(
         F.col("_rep_id").alias("doc_a"), F.col("doc_id").alias("doc_b")
     )
-    rep_sigs = sigs.filter(F.col("doc_id") == F.col("_rep_id")).select("doc_id", "sig")
+    rep_sigs = sigs.filter(F.col("_rn") == 1).select("doc_id", "sig")
     cand = (
         dedup_ops.signature_band_pairs(rep_sigs, num_perm, bands)
         .filter(F.col("est_jaccard") >= 0.35)

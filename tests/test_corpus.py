@@ -175,6 +175,25 @@ def test_global_row_number_dense_and_ordered(spark):
     assert rows == sorted(rows, key=lambda r: (r[1], r[2]))
 
 
+def test_global_row_number_window_holds_one_sum(spark):
+    """The within-partition running sum is evaluated once: the optimized
+    plan's Window node holds one window expression, which the all-NULL
+    test and the offset addition both read."""
+    from mozart_etl_spark.operators.corpus import global_row_number
+
+    df = spark.range(0, 100).selectExpr("id", "cast(id % 7 as double) as v")
+    ranked, _ = global_row_number(df, ["v", "id"], out_col="rn")
+    plan = ranked._jdf.queryExecution().optimizedPlan()
+    windows, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Window":
+            windows.append(node)
+        stack.extend(node.children().apply(i) for i in range(node.children().size()))
+    assert len(windows) == 1
+    assert windows[0].windowExpressions().size() == 1
+
+
 def test_global_running_sum_matches_window_and_partitioning(spark):
     """Scalable global prefix sum: equals the single-partition window
     result exactly, and is invariant to input partitioning (the
@@ -248,6 +267,76 @@ def test_novel_documents_drop_paths(spark):
     )
     out = sorted(r["doc_id"] for r in novel_documents(batch, history).collect())
     assert out == [11, 13]
+
+
+def test_novel_documents_null_id_never_wins_a_group(spark):
+    """A NULL id that shares a normalised fingerprint with id 5 does not
+    displace it: the batch keeps the smallest non-NULL id per
+    fingerprint, as the DuckDB window (``ORDER BY doc_id``, NULLS LAST)
+    of ``corpus_incremental_dedup``'s oracle does."""
+    import duckdb
+
+    from mozart_etl_spark.operators.dedup import novel_documents
+
+    rows = [(5, "Omega psi"), (None, "omega, PSI!"), (7, "rho sigma")]
+    batch = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
+    history = spark.createDataFrame([(1, "alpha")], "doc_id BIGINT, text STRING")
+    out = sorted(
+        (r["doc_id"] for r in novel_documents(batch, history).collect()),
+        key=lambda i: (i is None, i),
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE b (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO b VALUES (?, ?)", rows)
+    duck = con.execute(
+        """SELECT doc_id FROM (
+               SELECT doc_id, row_number() OVER (
+                   PARTITION BY md5(lower(regexp_replace(text, '[^0-9A-Za-z]', '', 'g')))
+                   ORDER BY doc_id) AS rn
+               FROM b)
+           WHERE rn = 1 ORDER BY doc_id"""
+    ).fetchall()
+    assert out == [5, 7] == [r[0] for r in duck]
+
+
+def test_corpus_clean_null_id_in_a_duplicate_group_matches_oracle(spark, tmp_path):
+    """``corpus_clean`` on a tiny documents table where a NULL doc_id
+    shares a normalised fingerprint with doc 5: the engine keeps doc 5,
+    as the oracle's ``row_number() ... ORDER BY doc_id`` does."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mozart_etl_spark import querybank
+    from tests.oracle_harness import compare
+
+    body = "Clean alphabetic prose about corpora and tokens, long enough to pass the gate. " * 2
+    rows = [
+        (5, body + "Shared."),
+        (None, body.upper() + "shared!"),
+        (7, body + "Distinct tail."),
+        (None, body + "A lone NULL id."),
+    ]
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+                "text": [r[1] for r in rows],
+                "lang": ["en"] * len(rows),
+                "source": ["src0"] * len(rows),
+                "n_chars": pa.array([len(r[1]) for r in rows], pa.int64()),
+            }
+        ),
+        tmp_path / "documents.parquet",
+    )
+    querybank._ensure_loaded()
+    spec = querybank.REGISTRY["corpus_clean"]
+    ok, msg = compare(spark, str(tmp_path), spec.fn, spec.oracle)
+    assert ok, msg
+    kept = sorted(
+        (r["doc_id"] for r in spec.fn(spark, str(tmp_path)).collect()),
+        key=lambda i: (i is None, i),
+    )
+    assert kept == [5, 7, None]
 
 
 def test_weighted_sample_prefers_heavy_rows(spark):

@@ -335,13 +335,13 @@ def test_bench_compact_line_fits_tail_capture():
 
 def test_driver_priority_window():
     """The driver harness records CORRECTNESS rows for the first 50
-    queries() entries. Round-16 rotation: the 5 streaming drains whose
-    state-store count changed this round lead (the driver must
-    hash-certify every touched query), then the 13 r13-dated rows the
-    r15 rotation deferred to r16, then the 32 fastest r14-dated rows.
-    After this round every r13-dated row is refreshed and nothing
-    outside the window is older than one round (r14-dated). Every
-    priority name must resolve (no typos against the registry)."""
+    queries() entries. Round-17 rotation: the 6 queries whose plan
+    changed this round lead (the driver must hash-certify every touched
+    query), then the 10 other r14-dated rows the round-16 rotation
+    deferred, then the oldest (r15-dated) rows in CORRECTNESS_r15.json
+    order. After this round no r14-dated row is left outside the
+    window. Every priority name must resolve (no typos against the
+    registry)."""
     import json
 
     from mozart_etl_spark import querybank
@@ -351,28 +351,29 @@ def test_driver_priority_window():
     missing = [n for n in querybank.DRIVER_PRIORITY if n not in querybank.REGISTRY]
     assert not missing, f"priority names not registered: {missing}"
     assert len(querybank.DRIVER_PRIORITY) == 50
-    window = set(names[:50])
+    window = names[:50]
 
-    # (a) changed in r16 — certified first
-    changed_r16 = [
-        "streaming_hourly_counts", "streaming_sessionize",
-        "streaming_running_totals", "streaming_continuous_aggregate",
-        "streaming_interval_join",
+    # (a) plan changed in r17 — certified first
+    assert window[:6] == [
+        "corpus_clean", "corpus_incremental_dedup", "customer_balance_deciles",
+        "corpus_shard_plan", "dedup_components", "dedup_canonical",
     ]
-    assert list(names[:5]) == changed_r16
-    # (b) every r13-dated row (the r15 deferral list) is in-window —
-    # the r15 rotation's commitment "rotate first next round"
-    r13 = set(json.load(open("CORRECTNESS_r13.json")))
+    # (b) the 11 r14-dated rows the round-16 rotation deferred (its
+    # DRIVER_PRIORITY comment): certified in r14, not in r15
     r14 = set(json.load(open("CORRECTNESS_r14.json")))
-    r15 = set(json.load(open("CORRECTNESS_r15.json")))
-    r13_dated = r13 - r14 - r15
-    assert len(r13_dated) == 13
-    assert set(names[5:18]) == r13_dated
-    # (c) everything outside the window carries an r14-or-newer row —
-    # nothing regresses past one-round staleness, nothing uncertified
-    outside = set(names) - window
-    uncovered = outside - r14 - r15
-    assert not uncovered, f"outside window with no r14/r15 row: {uncovered}"
+    r15 = json.load(open("CORRECTNESS_r15.json"))
+    r14_deferred = {
+        "events_funnel", "corpus_clean", "large_order_customers",
+        "decimal_uplift_totals", "corpus_chunks_overlap", "part_name_typo_pairs",
+        "order_price_quantiles_approx", "orders_column_profile",
+        "regional_supplier_revenue", "etl_mart_customer", "distinct_parts_approx",
+    }
+    assert r14_deferred <= r14 and not r14_deferred & set(r15)
+    assert set(window[6:16]) == r14_deferred - {"corpus_clean"}
+    # (c) r15-dated rows fill the rest, in CORRECTNESS_r15.json order
+    assert window[16:] == [n for n in r15 if n in set(window[16:])]
+    # no deferred r14-dated row is left outside the window
+    assert not set(names[50:]) & r14_deferred
 
 
 def test_ntile_formula_matches_sql_ntile():

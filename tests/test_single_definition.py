@@ -12,6 +12,16 @@ spells out a decision its single definition already owns:
 - **Their DuckDB twin** is ``querybank.WORDS_SQL``. An oracle
   interpolates it; a string literal that spells out
   ``regexp_split_to_array(trim(...))`` is a second copy.
+- **A duplicate group's representative** is
+  ``operators/similarity.py``'s :func:`label_representatives`: the
+  smallest non-NULL id, one row per group. Anywhere else, a window
+  partitioned by a fingerprint column (a column whose name holds
+  ``fp``) that picks a row with ``row_number``, ``first`` or ``min``
+  is a second copy.
+- **The bucket candidate join** is ``operators/similarity.py``'s
+  :func:`candidate_pairs`. Anywhere else, a ``dropDuplicates`` on an
+  id pair (a two-column list, or a list built elsewhere) that follows
+  a ``join`` is a second copy.
 """
 
 from __future__ import annotations
@@ -27,6 +37,11 @@ ENGINE = ROOT / "mozart_etl_spark"
 WORD_HELPER = ("operators/text.py", "split_words")
 #: (file, constant) that owns the DuckDB word rule
 WORD_SQL = ("querybank/__init__.py", "WORDS_SQL")
+
+#: (file, function) that owns the representative pick
+REP_HELPER = ("operators/similarity.py", "label_representatives")
+#: (file, function) that owns the bucket candidate join
+PAIR_HELPER = ("operators/similarity.py", "candidate_pairs")
 
 #: the word rule written as Spark SQL text
 _SPARK_SQL_WORDS = re.compile(r"filter\(\s*split\(\s*trim\(", re.I)
@@ -59,6 +74,108 @@ def _owner(tree: ast.Module, line: int) -> str | None:
                 return next((t.id for t in targets if isinstance(t, ast.Name)), None)
             return getattr(node, "name", None)
     return None
+
+
+#: a fingerprint column, by name
+_FINGERPRINT = re.compile(r"fp", re.I)
+#: window functions that pick a group's row or id
+_PICKS = {"row_number", "first", "min"}
+
+
+def _top_level(tree: ast.Module):
+    """Each top-level definition with its name (see :func:`_owner`)."""
+    for node in tree.body:
+        name = _owner(tree, node.lineno)
+        if name is not None:
+            yield name, node
+
+
+def _assigned(owner: ast.AST) -> dict[str, ast.AST]:
+    """name -> the expression last assigned to it inside ``owner``."""
+    return {
+        t.id: n.value
+        for n in ast.walk(owner)
+        if isinstance(n, ast.Assign)
+        for t in n.targets
+        if isinstance(t, ast.Name)
+    }
+
+
+def _resolve(node: ast.AST, names: dict[str, ast.AST]) -> ast.AST:
+    return names.get(node.id, node) if isinstance(node, ast.Name) else node
+
+
+def _chain(node: ast.AST, names: dict[str, ast.AST]) -> list[str]:
+    """The method names of a call chain ``x.a(...).b(...)`` below
+    ``node``, following a chain that starts at a local name into the
+    expression assigned to it."""
+    out, seen = [], set()
+    while True:
+        node = _resolve(node, names)
+        if isinstance(node, ast.Call):
+            out.append(_callee(node))
+            node = node.func
+        elif isinstance(node, ast.Attribute):
+            node = node.value
+        else:
+            return out
+        if id(node) in seen:
+            return out
+        seen.add(id(node))
+
+
+def _is_fp_window(spec: ast.AST) -> bool:
+    """``spec`` builds a window partitioned by a fingerprint column."""
+    for call in ast.walk(spec):
+        if _callee(call) == "partitionBy":
+            for a in call.args:
+                label = a.value if isinstance(a, ast.Constant) else getattr(a, "id", None)
+                if isinstance(label, str) and _FINGERPRINT.search(label):
+                    return True
+    return False
+
+
+def _picks_representative(owner: ast.AST) -> bool:
+    """``owner`` evaluates ``row_number``, ``first`` or ``min`` over a
+    fingerprint-partitioned window."""
+    names = _assigned(owner)
+    return any(
+        _callee(n) == "over"
+        and isinstance(n.func, ast.Attribute)
+        and _callee(n.func.value) in _PICKS
+        and n.args
+        and _is_fp_window(_resolve(n.args[0], names))
+        for n in ast.walk(owner)
+    )
+
+
+def _dedupes_joined_pairs(owner: ast.AST) -> bool:
+    """``owner`` drops duplicate id pairs from the result of a join."""
+    names = _assigned(owner)
+    for n in ast.walk(owner):
+        if _callee(n) != "dropDuplicates" or not n.args:
+            continue
+        subset = n.args[0]
+        pair = isinstance(subset, ast.Name) or (
+            isinstance(subset, (ast.List, ast.Tuple)) and len(subset.elts) == 2
+        )
+        if pair and "join" in _chain(n.func.value, names):
+            return True
+    return False
+
+
+def skeleton_copies(root: Path) -> list[str]:
+    """``file::function: what`` of every representative pick and every
+    bucket candidate join under ``root`` outside their owners."""
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for name, node in _top_level(ast.parse(path.read_text(), str(path))):
+            if _picks_representative(node) and (rel, name) != REP_HELPER:
+                found.append(f"{rel}::{name}: representative window")
+            if _dedupes_joined_pairs(node) and (rel, name) != PAIR_HELPER:
+                found.append(f"{rel}::{name}: candidate join")
+    return sorted(found)
 
 
 def copies(root: Path) -> list[str]:
@@ -134,4 +251,69 @@ def test_scan_on_a_synthetic_package(tmp_path):
         "querybank/q.py:4: DuckDB word fragment",
         "querybank/q.py:7: Spark word expression in SQL text",
         "querybank/q.py:8: Spark word expression",
+    ]
+
+
+def test_each_skeleton_step_is_written_once():
+    found = skeleton_copies(ENGINE)
+    assert not found, "written out instead of calling the helper:\n" + "\n".join(found)
+
+
+def test_the_skeleton_owners_hold_their_steps():
+    """The scan is not vacuous on the engine: each helper is caught by
+    its own rule."""
+    trees = {f: ast.parse((ENGINE / f).read_text()) for f in {REP_HELPER[0], PAIR_HELPER[0]}}
+    defs = {
+        (f, name): node for f, tree in trees.items() for name, node in _top_level(tree)
+    }
+    assert _picks_representative(defs[REP_HELPER])
+    assert _dedupes_joined_pairs(defs[PAIR_HELPER])
+
+
+def test_skeleton_scan_on_a_synthetic_package(tmp_path):
+    """Every kind of copy is caught, and the owners and look-alikes
+    that are not copies are not."""
+    (tmp_path / "operators").mkdir()
+    (tmp_path / "operators" / "similarity.py").write_text(
+        "from pyspark.sql import Window, functions as F\n"
+        "def label_representatives(df, id_col, fp_col):\n"
+        "    w = Window.partitionBy(fp_col).orderBy(id_col)\n"
+        "    return df.withColumn('_rn', F.row_number().over(w))\n"
+        "def candidate_pairs(keys, probe):\n"
+        "    ids = ['doc_a', 'doc_b']\n"
+        "    pairs = keys.join(probe, 'k')\n"
+        "    return pairs.select(*ids).dropDuplicates(ids)\n"
+    )
+    (tmp_path / "q.py").write_text(
+        "from pyspark.sql import Window, functions as F\n"
+        "from pyspark.sql.functions import first, row_number\n"
+        "def inline_min(s):\n"
+        "    return s.withColumn('r', F.min('doc_id').over(Window.partitionBy('_tfp')))\n"
+        "def named_first(b):\n"
+        "    wv = Window.partitionBy('_vfp').orderBy('_cid')\n"
+        "    return b.withColumn('r', first('_cid', ignorenulls=True).over(wv))\n"
+        "def named_row_number(g):\n"
+        "    w = Window.partitionBy('norm_fp').orderBy('doc_id')\n"
+        "    return g.withColumn('rn', row_number().over(w))\n"
+        "def not_a_fingerprint(e):\n"
+        "    w = Window.partitionBy('user_id').orderBy('ts')\n"
+        "    return e.withColumn('rn', F.row_number().over(w))\n"
+        "def not_a_pick(g):\n"
+        "    return g.withColumn('n', F.count('x').over(Window.partitionBy('_fp')))\n"
+        "def chained_join(a, b):\n"
+        "    return a.join(b, 'k').filter('x').dropDuplicates(['doc_a', 'doc_b'])\n"
+        "def join_through_a_name(a, b):\n"
+        "    j = a.join(b, 'k').select('q', 'n')\n"
+        "    return j.dropDuplicates(['q', 'n'])\n"
+        "def one_column(a, b):\n"
+        "    return a.join(b, 'k').dropDuplicates(['doc_id'])\n"
+        "def no_join(a):\n"
+        "    return a.select('x', 'y').dropDuplicates(['x', 'y'])\n"
+    )
+    assert skeleton_copies(tmp_path) == [
+        "q.py::chained_join: candidate join",
+        "q.py::inline_min: representative window",
+        "q.py::join_through_a_name: candidate join",
+        "q.py::named_first: representative window",
+        "q.py::named_row_number: representative window",
     ]
