@@ -192,16 +192,10 @@ def shuffle_order(df: DataFrame, id_col: str, seed: str = "epoch0") -> DataFrame
     return df.withColumn("shuffle_key", key).orderBy("shuffle_key", id_col)
 
 
-def chunk_documents(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    size: int = 500,
-    stride: int | None = None,
-) -> DataFrame:
-    """Split each document into fixed-size character chunks
+def chunk_documents(df: DataFrame, size: int = 500, stride: int | None = None) -> DataFrame:
+    """Split each document's ``text`` into fixed-size character chunks
     (context-window preparation). Output one row per chunk:
-    ``(id, chunk_id, chunk_text, chunk_len)``; the final chunk may be
+    ``(doc_id, chunk_id, chunk_text, chunk_len)``; the final chunk may be
     short. ``stride`` (default ``size``) < ``size`` gives overlapping
     sliding windows — the RAG-style chunking that preserves context
     across boundaries; a window starts at every multiple of ``stride``
@@ -247,19 +241,19 @@ def chunk_documents(
     # them by default). Empty text -> empty array -> zero chunks;
     # NULL text -> NULL -> zero chunks. Both match the old
     # ceil(length/stride) row counts with no special-case guard.
-    pieces = F.regexp_extract_all(F.col(text_col), F.lit(f"(?s).{{1,{stride}}}"), F.lit(0))
+    pieces = F.regexp_extract_all(F.col("text"), F.lit(f"(?s).{{1,{stride}}}"), F.lit(0))
     npieces = -(-size // stride)  # ceil(size/stride): pieces per window
     if npieces == 1:
         # contiguous chunking: the pieces ARE the chunks
-        base = df.select(F.col(id_col), pieces.alias("_chunks"))
+        base = df.select(F.col("doc_id"), pieces.alias("_chunks"))
     else:
-        with_p = df.select(F.col(id_col), pieces.alias("_p0"))
+        with_p = df.select(F.col("doc_id"), pieces.alias("_p0"))
         shifted = [
             F.slice(F.col("_p0"), k + 1, F.greatest(F.size("_p0") - k, F.lit(0))).alias(f"_p{k}")
             for k in range(1, npieces)
         ]
         zipped = with_p.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.arrays_zip(F.col("_p0"), *shifted).alias("_z"),
         )
         chunk_arr = F.transform(
@@ -272,10 +266,10 @@ def chunk_documents(
                 size,
             ),
         )
-        base = zipped.select(F.col(id_col), chunk_arr.alias("_chunks"))
-    out = base.select(F.col(id_col), F.posexplode("_chunks").alias("chunk_id", "chunk_text"))
+        base = zipped.select(F.col("doc_id"), chunk_arr.alias("_chunks"))
+    out = base.select(F.col("doc_id"), F.posexplode("_chunks").alias("chunk_id", "chunk_text"))
     return out.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("chunk_id").cast("bigint").alias("chunk_id"),
         F.col("chunk_text"),
         F.length("chunk_text").cast("bigint").alias("chunk_len"),
@@ -459,10 +453,10 @@ def global_running_sum(
     df: DataFrame,
     order_cols: list[str],
     value_col: str,
-    out_col: str = "cum",
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Exact global prefix sum WITHOUT the single-partition window.
+    """Exact global prefix sum WITHOUT the single-partition window,
+    as column ``cum``.
 
     ``sum(v) OVER (ORDER BY ...)`` with no PARTITION BY pulls the
     whole dataset into one task — the classic global-ordering scale
@@ -481,7 +475,7 @@ def global_running_sum(
     exact, floating ones carry the usual summation-order rounding of
     any two-phase sum.
     """
-    return _prefix_sum(df, order_cols, F.col(value_col), out_col, num_partitions)[0]
+    return _prefix_sum(df, order_cols, F.col(value_col), "cum", num_partitions)[0]
 
 
 def global_row_number(

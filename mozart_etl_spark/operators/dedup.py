@@ -23,6 +23,9 @@ Design for 100 TB:
 All hashing uses Spark's xxhash64 (deterministic, seed pinned) and a
 fixed-seed affine permutation family, so results are reproducible
 across runs and cluster sizes.
+
+Every operator reads the bank's document columns: ``doc_id`` and
+``text``.
 """
 
 from __future__ import annotations
@@ -110,26 +113,21 @@ def _hash64_col(col, hash_fn: str):
     raise ValueError(f"hash_fn must be 'xxhash64' or 'portable_md5_60', got {hash_fn!r}")
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Group identical content by md5 fingerprint; keep the lowest id.
 
     Output: (fp, keep_doc_id, n_copies).
     """
     return (
-        df.groupBy(F.md5(F.col(text_col)).alias("fp"))
+        df.groupBy(F.md5(F.col("text")).alias("fp"))
         .agg(
-            F.min(id_col).cast("bigint").alias("keep_doc_id"),
+            F.min("doc_id").cast("bigint").alias("keep_doc_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
 
 
-def novel_documents(
-    new_batch: DataFrame,
-    history: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def novel_documents(new_batch: DataFrame, history: DataFrame) -> DataFrame:
     """Incremental-ingest novelty filter: keep only new-batch rows
     whose normalized content fingerprint (lowercased alphanumeric
     skeleton, md5) appears neither in the historical corpus nor
@@ -149,13 +147,13 @@ def novel_documents(
     """
     from .text import normalized_fp_col as fp
 
-    hist_fps = history.select(fp(F.col(text_col)).alias("_fp")).distinct()
-    batch = label_representatives(new_batch.withColumn("_fp", fp(F.col(text_col))), id_col, "_fp")
+    hist_fps = history.select(fp(F.col("text")).alias("_fp")).distinct()
+    batch = label_representatives(new_batch.withColumn("_fp", fp(F.col("text"))), "doc_id", "_fp")
     first_in_batch = batch.filter(F.col("_rn") == 1).drop("_rep_id", "_rn")
     return first_in_batch.join(hist_fps, "_fp", "left_anti").drop("_fp")
 
 
-def _word_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+def _word_shingles(df: DataFrame, n: int) -> DataFrame:
     """Distinct n-gram word shingles per document: (id, shingle).
 
     Pure JVM expressions: split -> sequence -> transform(slice) ->
@@ -165,18 +163,13 @@ def _word_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFra
     hashing it shrinks every shuffle it enters (including the distinct
     here, applied after the hash); collision odds are
     ~n_shingles^2 / 2^128, negligible at any corpus size."""
-    words = split_words(F.col(text_col))
-    base = df.select(F.col(id_col).alias("doc_id"), words.alias("w")).filter(F.size("w") >= n)
+    words = split_words(F.col("text"))
+    base = df.select("doc_id", words.alias("w")).filter(F.size("w") >= n)
     ngrams = F.expr(f"transform(sequence(1, size(w) - {n - 1}), i -> unhex(md5({_gram_sql(n)})))")
     return base.select("doc_id", F.explode(ngrams).alias("shingle")).distinct()
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
+def ngram_jaccard_pairs(df: DataFrame, n: int = 3) -> DataFrame:
     """Exact Jaccard similarity for every document pair sharing at
     least one n-gram shingle.
 
@@ -185,7 +178,7 @@ def ngram_jaccard_pairs(
     shingle-distinct shuffle are keyed on 16-byte shingle md5s, never
     n-word strings (the shingle text never leaves the operator).
     """
-    sh = _word_shingles(df, text_col, id_col, n)
+    sh = _word_shingles(df, n)
     # Materialization barrier: the shingle table feeds the size
     # aggregation and BOTH self-join sides; without it each consumer
     # re-runs the corpus scan + explode + distinct (8 scans in the
@@ -275,7 +268,7 @@ def jaccard_verify_pairs(df: DataFrame, candidates: DataFrame, n: int = 3) -> Da
         .distinct()
     )
     pruned = df.join(cand_ids, "doc_id", "left_semi")
-    sh = _word_shingles(pruned, "text", "doc_id", n).localCheckpoint(eager=False)
+    sh = _word_shingles(pruned, n).localCheckpoint(eager=False)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     sa = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     sb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
@@ -318,16 +311,12 @@ def _span_key():
     return F.unhex(F.md5(F.col("span")))
 
 
-def _span_occurrences(
-    df: DataFrame, text_col: str, id_col: str, n: int
-) -> DataFrame:
+def _span_occurrences(df: DataFrame, n: int) -> DataFrame:
     """Every positioned word ``n``-gram: (doc_id, pos, span) with
     ``pos`` the 1-based word index. Generated shuffle-free per row
     (transform over a sequence of slice offsets)."""
-    words = split_words(F.col(text_col))
-    base = df.select(F.col(id_col).alias("doc_id"), words.alias("w")).filter(
-        F.size("w") >= n
-    )
+    words = split_words(F.col("text"))
+    base = df.select("doc_id", words.alias("w")).filter(F.size("w") >= n)
     return base.select(
         "doc_id",
         F.explode(
@@ -339,15 +328,9 @@ def _span_occurrences(
     ).select("doc_id", F.col("o.pos").alias("pos"), F.col("o.span").alias("span"))
 
 
-def repeated_spans(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 10,
-    min_df: int = 2,
-) -> DataFrame:
+def repeated_spans(df: DataFrame, n: int = 10) -> DataFrame:
     """Cross-document repeated spans: every word ``n``-gram occurrence
-    whose span text appears in at least ``min_df`` DISTINCT documents
+    whose span text appears in at least two DISTINCT documents
     — the discovery phase of exact substring dedup (the suffix-array
     dedup of Lee et al., re-expressed relationally): the returned
     (doc, position) spans are what a removal pass cuts or a
@@ -364,23 +347,17 @@ def repeated_spans(
     (the removal pass, which doesn't output the text, drops it before
     every shuffle).
     """
-    occ = _span_occurrences(df, text_col, id_col, n).withColumn("_key", _span_key())
+    occ = _span_occurrences(df, n).withColumn("_key", _span_key())
     shared = (
         occ.groupBy("_key")
         .agg(F.count_distinct("doc_id").alias("_df"))
-        .filter(F.col("_df") >= min_df)
+        .filter(F.col("_df") >= 2)
         .select("_key")
     )
     return occ.join(shared, "_key", "left_semi").drop("_key")
 
 
-def remove_repeated_spans(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 10,
-    min_df: int = 2,
-) -> DataFrame:
+def remove_repeated_spans(df: DataFrame, n: int = 10) -> DataFrame:
     """The REMOVAL pass completing exact substring dedup: every
     occurrence of a cross-document repeated span except its globally
     first one (ordered by (doc_id, position)) has its word range cut;
@@ -392,7 +369,7 @@ def remove_repeated_spans(
     row-per-document-sized whatever the corpus size.
 
     Identity-keyed (r11 duplicate-key axis): "document" means a
-    DISTINCT ``id_col`` — one output row per distinct id even when
+    DISTINCT ``doc_id`` — one output row per distinct id even when
     the input carries replayed-CDC duplicate rows (bit-identical
     copies). Copies produce bit-identical OUTPUT rows (the covered
     set is id-keyed, so both copies meet the same cut set), so the
@@ -424,19 +401,17 @@ def remove_repeated_spans(
     at sf0.1 for the span-scrub query, whose remaining cost is the
     inherent explode-to-ngrams discovery side).
     """
-    words_arr = split_words(F.col(text_col))
+    words_arr = split_words(F.col("text"))
     # NULL ids excluded on BOTH legs (engine NULL-identity policy):
     # the id-keyed output dedup would otherwise pool every NULL-id
     # row into one arbitrary representative, and a NULL-id occurrence
     # could win the first-occurrence election for a span it shares
     # with a real document
-    df = df.filter(F.col(id_col).isNotNull())
-    base = df.select(F.col(id_col).alias("doc_id"), words_arr.alias("w")).filter(
-        F.size("w") >= 1
-    )
+    df = df.filter(F.col("doc_id").isNotNull())
+    base = df.select("doc_id", words_arr.alias("w")).filter(F.size("w") >= 1)
 
     occ = (
-        _span_occurrences(df, text_col, id_col, n)
+        _span_occurrences(df, n)
         .withColumn("_key", _span_key())
         .select("doc_id", "pos", "_key")  # span text stays out of the shuffles
     )
@@ -446,7 +421,7 @@ def remove_repeated_spans(
             F.count_distinct("doc_id").alias("_df"),
             F.min(F.struct("doc_id", "pos")).alias("_first"),
         )
-        .filter(F.col("_df") >= min_df)
+        .filter(F.col("_df") >= 2)
         .select("_key", "_first")
     )
     removable = (
@@ -500,8 +475,6 @@ def _permutation_params(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
 
 def minhash_signatures(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
     num_perm: int = 64,
     seed: int = 42,
@@ -540,11 +513,9 @@ def minhash_signatures(
     floating point, pinned bit-for-bit against an independent Python
     model in tests.
     """
-    words = split_words(F.col(text_col))
-    extra = [F.unhex(F.md5(F.col(text_col))).alias("_tfp")] if with_text_fp else []
-    base = df.select(F.col(id_col).alias("doc_id"), words.alias("w"), *extra).filter(
-        F.size("w") >= n
-    )
+    words = split_words(F.col("text"))
+    extra = [F.unhex(F.md5(F.col("text"))).alias("_tfp")] if with_text_fp else []
+    base = df.select("doc_id", words.alias("w"), *extra).filter(F.size("w") >= n)
     # distinct shingle hashes, reduced mod p, as one array per doc
     shingle_hash = _hash64_sql(_gram_sql(n), hash_fn)
     hashes = F.expr(
@@ -648,8 +619,6 @@ def minhash_lsh_params(threshold: float) -> tuple[int, int]:
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
     num_perm: int = 64,
     bands: int = 16,
@@ -686,7 +655,7 @@ def minhash_lsh_pairs(
     # tiny fixed-width signature table (num_perm*8 B/doc), keyed by
     # the same doc_id the re-attach joins already need.
     sigs = (
-        minhash_signatures(df, text_col, id_col, n, num_perm, seed, hash_fn=hash_fn)
+        minhash_signatures(df, n, num_perm, seed, hash_fn=hash_fn)
         .dropDuplicates(["doc_id"])
         .localCheckpoint(eager=False)
     )
@@ -757,12 +726,7 @@ def signature_band_pairs(
     )
 
 
-def simhash(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
+def simhash(df: DataFrame, hash_fn: str = "xxhash64") -> DataFrame:
     """64-bit SimHash fingerprint per document.
 
     ``hash_fn`` selects the token hash (:func:`_hash64_sql`). With
@@ -788,8 +752,8 @@ def simhash(
     NULL text yields a NULL fingerprint; an empty token list yields 0
     (all votes tie at zero, no bit set).
     """
-    words = split_words(F.col(text_col))
-    base = df.select(F.col(id_col).alias("doc_id"), words.alias("w"))
+    words = split_words(F.col("text"))
+    base = df.select("doc_id", words.alias("w"))
     hdf = base.select(
         "doc_id", F.transform("w", lambda t: _hash64_col(t, hash_fn)).alias("h")
     )

@@ -7,6 +7,7 @@ Everything Spark-side is real and tested: schema shape, Arrow-batched
 struct convention.
 
 Convention: a multimodal table carries
+  - ``doc_id``   BIGINT
   - ``payload``  BINARY        (opaque bytes: image/audio/video)
   - ``media``    STRUCT<kind: STRING, n_bytes: BIGINT, meta: STRING>
 and feature extraction is a mapInPandas over batches of payloads,
@@ -29,14 +30,23 @@ from pyspark.sql.types import (
     StructType,
 )
 
-def attach_binary_payload(df: DataFrame, text_col: str = "text", kind: str = "blob") -> DataFrame:
-    """Wrap a column as an opaque binary payload + media metadata
+#: Feature width of :func:`extract_features`.
+_FEATURE_DIMS = 8
+#: Window size and stride of :func:`sample_frames`.
+_FRAME_BYTES = 256
+_FRAME_EVERY = 3
+#: Grid width of :func:`resize_payload_grid`.
+_GRID_DIMS = 16
+
+
+def attach_binary_payload(df: DataFrame, kind: str = "blob") -> DataFrame:
+    """Wrap the ``text`` column as an opaque binary payload + media metadata
     struct (stands in for reading image/audio bytes from object
     storage; the schema contract is what matters). NULL source values
     become EMPTY payloads — downstream feature extraction then has one
     well-defined degenerate case (zero bytes) instead of a nullable
     binary column that crashes Arrow-batch ``len()`` calls."""
-    payload = F.encode(F.coalesce(F.col(text_col), F.lit("")), "UTF-8")
+    payload = F.encode(F.coalesce(F.col("text"), F.lit("")), "UTF-8")
     return df.withColumn("payload", payload).withColumn(
         "media",
         F.struct(
@@ -57,7 +67,7 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def _fake_features(payload: bytes, n_dims: int = 8) -> list[float]:
+def _fake_features(payload: bytes) -> list[float]:
     """Deterministic fake featurizer: byte-histogram moments.
 
     STUB for a real decoder (image resize + CNN embed, audio
@@ -79,25 +89,20 @@ def _fake_features(payload: bytes, n_dims: int = 8) -> list[float]:
     the DuckDB oracle.
     """
     if not payload:
-        return [0.0] * n_dims
+        return [0.0] * _FEATURE_DIMS
     import numpy as np
 
     a = np.frombuffer(payload, dtype=np.uint8)
     n = a.size
-    body = (n // n_dims) * n_dims
-    acc = a[:body].reshape(-1, n_dims).sum(axis=0, dtype=np.int64)
+    body = (n // _FEATURE_DIMS) * _FEATURE_DIMS
+    acc = a[:body].reshape(-1, _FEATURE_DIMS).sum(axis=0, dtype=np.int64)
     if body < n:
         acc = acc.copy()
         acc[: n - body] += a[body:].astype(np.int64)
     return [float(x) / (255.0 * n) for x in acc]
 
 
-def extract_features(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    n_dims: int = 8,
-) -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
     mapInPandas (not a row UDF): each Python worker receives Arrow
@@ -110,7 +115,7 @@ def extract_features(
             # defensive: payloads from attach_binary_payload are never
             # NULL, but a foreign source's nullable binary column must
             # degrade to the empty-payload case, not crash the batch
-            payloads = pdf[payload_col].map(lambda p: b"" if p is None else bytes(p))
+            payloads = pdf["payload"].map(lambda p: b"" if p is None else bytes(p))
             yield pd.DataFrame(
                 {
                     # nullable Int64 (r14 advisor): Arrow->pandas turns
@@ -118,14 +123,14 @@ def extract_features(
                     # would raise and split the engines by exception
                     # where the SQL oracle just groups the NULL. Same
                     # pattern as the simhash kernel.
-                    "doc_id": pdf[id_col].astype("Int64"),
+                    "doc_id": pdf["doc_id"].astype("Int64"),
                     "kind": pdf["media"].map(lambda m: m["kind"]),
                     "n_bytes": payloads.map(len).astype("int64"),
-                    "feat": payloads.map(lambda p: _fake_features(p, n_dims)),
+                    "feat": payloads.map(_fake_features),
                 }
             )
 
-    return df.select(id_col, payload_col, "media").mapInPandas(run, FEATURE_SCHEMA)
+    return df.select("doc_id", "payload", "media").mapInPandas(run, FEATURE_SCHEMA)
 
 
 FRAME_SCHEMA = StructType(
@@ -138,16 +143,10 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def sample_frames(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    frame_bytes: int = 256,
-    every: int = 3,
-) -> DataFrame:
+def sample_frames(df: DataFrame) -> DataFrame:
     """Frame sampling over an opaque video-like payload: split the
-    byte stream into consecutive ``frame_bytes`` windows (the last
-    window may be partial), keep every ``every``-th frame, and emit
+    byte stream into consecutive :data:`_FRAME_BYTES` windows (the last
+    window may be partial), keep every :data:`_FRAME_EVERY`-th frame, and emit
     one row per sampled frame — the mapInPandas plumbing a real video
     frame-sampler uses (declared explode-shaped output schema, Arrow
     batches, per-row work bounded by payload size). The DECODE step
@@ -163,15 +162,12 @@ def sample_frames(
     id row emits its own identical frame rows — no pooling. An empty
     payload emits ZERO rows (a zero-byte video has no frames).
     """
-    if frame_bytes < 1 or every < 1:
-        raise ValueError("frame_bytes and every must be >= 1")
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
         for pdf in batches:
             ids, idxs, sizes, sums = [], [], [], []
-            for doc_id, p in zip(pdf[id_col], pdf[payload_col]):
+            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
                 b = b"" if p is None else bytes(p)
                 n = len(b)
                 if n == 0:
@@ -179,17 +175,17 @@ def sample_frames(
                 # NULL id -> pd.NA, not int(NaN) crash (r14 advisor):
                 # Arrow->pandas delivers a NULL id as float64 NaN
                 did = None if pd.isna(doc_id) else int(doc_id)
-                n_frames = -(-n // frame_bytes)
+                n_frames = -(-n // _FRAME_BYTES)
                 # Vectorized per-frame fold (r14; r13 flagged the
                 # per-frame Python loop as O(frames) interpreter work
                 # per row): pad the byte stream to a whole number of
                 # frames with -1 (so the (byte+1) weight of a padded
                 # position is exactly 0), view it as a
-                # (n_frames, frame_bytes) matrix, select ONLY the
+                # (n_frames, _FRAME_BYTES) matrix, select ONLY the
                 # sampled rows, and fold each against the position
                 # vector in one matrix expression — the same
                 # fully-vectorized shape as the featurizer beside it,
-                # and it touches only ~1/every of the payload where a
+                # and it touches only ~1/_FRAME_EVERY of the payload where a
                 # whole-stream bincount would touch all of it.
                 # Exactness: int64 end to end, per-frame sums <= 2^24
                 # — bit-identical to the loop it replaces (pinned
@@ -197,15 +193,15 @@ def sample_frames(
                 # shapes in tests), DuckDB oracle untouched. Measured
                 # 4.1x on a 2 MiB payload (24.8 ms -> 6.0 ms per
                 # row, local[32] host, r14).
-                ap = np.full(n_frames * frame_bytes, -1, dtype=np.int64)
+                ap = np.full(n_frames * _FRAME_BYTES, -1, dtype=np.int64)
                 ap[:n] = np.frombuffer(b, dtype=np.uint8)
-                sel = np.arange(0, n_frames, every, dtype=np.int64)
-                m = ap.reshape(n_frames, frame_bytes)[sel]
-                pos = np.arange(1, frame_bytes + 1, dtype=np.int64)
+                sel = np.arange(0, n_frames, _FRAME_EVERY, dtype=np.int64)
+                m = ap.reshape(n_frames, _FRAME_BYTES)[sel]
+                pos = np.arange(1, _FRAME_BYTES + 1, dtype=np.int64)
                 fsums = ((m + 1) * pos).sum(axis=1)
-                fsizes = np.full(sel.size, frame_bytes, dtype=np.int64)
+                fsizes = np.full(sel.size, _FRAME_BYTES, dtype=np.int64)
                 if sel.size and sel[-1] == n_frames - 1:
-                    fsizes[-1] = n - (n_frames - 1) * frame_bytes
+                    fsizes[-1] = n - (n_frames - 1) * _FRAME_BYTES
                 ids.extend([did] * sel.size)
                 idxs.extend(sel.tolist())
                 sizes.extend(fsizes.tolist())
@@ -219,7 +215,7 @@ def sample_frames(
                 }
             )
 
-    return df.select(id_col, payload_col).mapInPandas(run, FRAME_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(run, FRAME_SCHEMA)
 
 
 THUMB_SCHEMA = StructType(
@@ -231,15 +227,11 @@ THUMB_SCHEMA = StructType(
 )
 
 
-def resize_payload_grid(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    out_dims: int = 16,
-) -> DataFrame:
+def resize_payload_grid(df: DataFrame) -> DataFrame:
     """Resize plumbing over an opaque image-like payload: downsample
-    the byte stream to a fixed ``out_dims``-bucket grid (byte j goes
-    to bucket ``j * out_dims // n``; bucket value = mean byte / 255).
+    the byte stream to a fixed :data:`_GRID_DIMS`-bucket grid (byte j
+    goes to bucket ``j * _GRID_DIMS // n``; bucket value = mean byte /
+    255).
     This is the mapInPandas shape a real image resize uses (fixed
     declared output width, Arrow batches, per-row vectorized kernel);
     the DECODE step is stubbed (no codec libraries), and
@@ -251,26 +243,23 @@ def resize_payload_grid(
 
     Row-faithful: one output row per input row, duplicates included.
     """
-    if out_dims < 1:
-        raise ValueError("out_dims must be >= 1")
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
         for pdf in batches:
             thumbs, sizes = [], []
-            for p in pdf[payload_col]:
+            for p in pdf["payload"]:
                 b = b"" if p is None else bytes(p)
                 n = len(b)
                 sizes.append(n)
                 if n == 0:
-                    thumbs.append([0.0] * out_dims)
+                    thumbs.append([0.0] * _GRID_DIMS)
                     continue
                 a = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
                 # byte j -> bucket j*m//n: j*m stays far inside int64
-                buckets = (np.arange(n, dtype=np.int64) * out_dims) // n
-                sums = np.bincount(buckets, weights=a, minlength=out_dims)
-                counts = np.bincount(buckets, minlength=out_dims)
+                buckets = (np.arange(n, dtype=np.int64) * _GRID_DIMS) // n
+                sums = np.bincount(buckets, weights=a, minlength=_GRID_DIMS)
+                counts = np.bincount(buckets, minlength=_GRID_DIMS)
                 # float sums of ints < 2^53 are exact; one division
                 thumbs.append(
                     [
@@ -282,10 +271,10 @@ def resize_payload_grid(
                 {
                     # nullable Int64: NULL ids must degrade to NULL
                     # output rows, not an astype crash (r14 advisor)
-                    "doc_id": pdf[id_col].astype("Int64"),
+                    "doc_id": pdf["doc_id"].astype("Int64"),
                     "n_bytes": pd.array(sizes, dtype="int64"),
                     "thumb": thumbs,
                 }
             )
 
-    return df.select(id_col, payload_col).mapInPandas(run, THUMB_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(run, THUMB_SCHEMA)

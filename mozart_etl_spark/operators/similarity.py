@@ -1,5 +1,8 @@
 """Embedding similarity search over array<float> columns.
 
+Every operator reads the bank's embedding columns: ``vec_id`` and
+``embedding``, plus the IVF cell ``label``.
+
 Two strategies:
 
 - **brute_force_knn** — exact: broadcast the (small) query set against
@@ -160,15 +163,7 @@ def _score_is_sane(score: Column) -> Column:
     return F.coalesce(~F.isnan(score) & (F.abs(score) != F.lit(_INF)), F.lit(True))
 
 
-def _vectors(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    out_id: str,
-    out_vec: str,
-    out_norm: str,
-    *keep: Column,
-) -> DataFrame:
+def _vectors(df: DataFrame, out_id: str, out_vec: str, out_norm: str, *keep: Column) -> DataFrame:
     """One row per non-NULL vector: ``out_id``, the components cast to
     DOUBLE as ``out_vec``, any ``keep`` columns, and the L2 norm as
     ``out_norm``, folded once per vector so no pair folds it again.
@@ -176,8 +171,8 @@ def _vectors(
     the scan as a pushed filter. Corrupt norms are not filtered here:
     :func:`_top_k` ranks a pair only when both norms are clean."""
     return (
-        df.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias(out_id), _as_double(F.col(vec_col)).alias(out_vec), *keep)
+        df.filter(F.col("embedding").isNotNull())
+        .select(F.col("vec_id").alias(out_id), _as_double(F.col("embedding")).alias(out_vec), *keep)
         .withColumn(out_norm, F.sqrt(_dot(F.col(out_vec), F.col(out_vec))))
     )
 
@@ -266,8 +261,6 @@ def drop_corrupt_vectors(df: DataFrame, vec_col: str) -> DataFrame:
 def brute_force_knn(
     queries: DataFrame,
     candidates: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     dim: int | None = None,
 ) -> DataFrame:
@@ -289,10 +282,10 @@ def brute_force_knn(
     declare the model dimension wherever the source can be ragged.
     """
     if dim is not None:
-        queries = drop_ragged_vectors(queries, vec_col, dim)
-        candidates = drop_ragged_vectors(candidates, vec_col, dim)
-    q = _vectors(queries, id_col, vec_col, "query_id", "qv", "qn")
-    c = _vectors(candidates, id_col, vec_col, "neighbor_id", "cv", "cn")
+        queries = drop_ragged_vectors(queries, "embedding", dim)
+        candidates = drop_ragged_vectors(candidates, "embedding", dim)
+    q = _vectors(queries, "query_id", "qv", "qn")
+    c = _vectors(candidates, "neighbor_id", "cv", "cn")
     joined = c.crossJoin(F.broadcast(q)).filter(F.col("neighbor_id") != F.col("query_id"))
     return _rank_neighbors(joined, k)
 
@@ -302,18 +295,12 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def ivf_centroids(
-    candidates: DataFrame,
-    cell_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
+def ivf_centroids(candidates: DataFrame, dim: int | None = None) -> DataFrame:
     """Coarse-quantizer centroids per cell: (cell, centroid array).
 
     Position-wise mean via posexplode + two grouped aggregations — one
     shuffle keyed (cell, dim), one tiny shuffle keyed cell. The cell
-    assignment is the ``cell_col`` value (a prior clustering — labels
+    assignment is the ``label`` value (a prior clustering — labels
     here; a k-means pass would produce the same shape). Corrupt
     (NaN/±Inf-poisoned) vectors are excluded from the mean (module
     corrupt-vector policy): one corrupt vector would otherwise turn
@@ -328,10 +315,10 @@ def ivf_centroids(
     vector widens the centroid past the model dimension.
     """
     if dim is not None:
-        candidates = drop_ragged_vectors(candidates, vec_col, dim)
+        candidates = drop_ragged_vectors(candidates, "embedding", dim)
     per_dim = (
-        drop_corrupt_vectors(candidates, vec_col)
-        .select(F.col(cell_col).alias("cell"), F.posexplode(vec_col).alias("dim", "x"))
+        drop_corrupt_vectors(candidates, "embedding")
+        .select(F.col("label").alias("cell"), F.posexplode("embedding").alias("dim", "x"))
         .groupBy("cell", "dim")
         .agg(F.avg(F.col("x").cast("double")).alias("v"))
     )
@@ -345,9 +332,6 @@ def ivf_centroids(
 def ivf_knn(
     queries: DataFrame,
     candidates: DataFrame,
-    cell_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     nprobe: int = 2,
     dim: int | None = None,
@@ -376,10 +360,10 @@ def ivf_knn(
     # ``dim`` (r12 ragged axis) excludes wrong-length vectors from the
     # centroids, both scoring sides, and the probe routing.
     if dim is not None:
-        queries = drop_ragged_vectors(queries, vec_col, dim)
-        candidates = drop_ragged_vectors(candidates, vec_col, dim)
-    cents = ivf_centroids(candidates, cell_col, id_col, vec_col, dim=dim)
-    q = _vectors(queries, id_col, vec_col, "query_id", "qv", "qn")
+        queries = drop_ragged_vectors(queries, "embedding", dim)
+        candidates = drop_ragged_vectors(candidates, "embedding", dim)
+    cents = ivf_centroids(candidates, dim=dim)
+    q = _vectors(queries, "query_id", "qv", "qn")
     # probe: rank centroids per query by cosine, keep top nprobe
     cents = cents.withColumn("cent_n", F.sqrt(_dot(F.col("centroid"), F.col("centroid"))))
     qc = q.crossJoin(F.broadcast(cents)).select(
@@ -388,9 +372,7 @@ def ivf_knn(
     probes = _top_k(qc, "query_id", "cent_cos", "cell", nprobe, ("qn",)).select(
         "query_id", "qv", "qn", "cell"
     )
-    c = _vectors(
-        candidates, id_col, vec_col, "neighbor_id", "cv", "cn", F.col(cell_col).alias("cell")
-    )
+    c = _vectors(candidates, "neighbor_id", "cv", "cn", F.col("label").alias("cell"))
     joined = c.join(F.broadcast(probes), "cell").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
@@ -402,8 +384,6 @@ def lsh_banded(
     dim: int,
     out_id: str,
     out_vec: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = 8,
     n_tables: int = 4,
     seed: int = 42,
@@ -431,8 +411,8 @@ def lsh_banded(
     ``base``), so the kernel's ``ValueError`` on a wrong-length vector
     is an unreachable-by-contract assertion.
     """
-    base = df.filter(_dim_ok(F.col(vec_col), dim)).select(
-        F.col(id_col).alias(out_id), _as_double(F.col(vec_col)).alias(out_vec)
+    base = df.filter(_dim_ok(F.col("embedding"), dim)).select(
+        F.col("vec_id").alias(out_id), _as_double(F.col("embedding")).alias(out_vec)
     )
     all_planes_np = [
         p for t in range(n_tables) for p in _hyperplanes(dim, n_planes, seed + t)
@@ -550,8 +530,6 @@ def lsh_knn(
     queries: DataFrame,
     candidates: DataFrame,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_planes: int = 8,
     n_tables: int = 4,
@@ -578,14 +556,16 @@ def lsh_knn(
     # bucket joins anyway, but dropping them here keeps the rescore
     # frames (qv/cv) consistent with the banded universe by
     # construction, not merely by join reachability.
-    queries = drop_ragged_vectors(drop_corrupt_vectors(queries, vec_col), vec_col, dim)
-    candidates = drop_ragged_vectors(drop_corrupt_vectors(candidates, vec_col), vec_col, dim)
-    qb = lsh_banded(
-        queries, dim, "query_id", "qv", id_col, vec_col, n_planes, n_tables, seed
-    ).select("query_id", "table_id", "bucket")
-    cb = lsh_banded(
-        candidates, dim, "neighbor_id", "cv", id_col, vec_col, n_planes, n_tables, seed
-    ).select("neighbor_id", "table_id", "bucket")
+    queries = drop_ragged_vectors(drop_corrupt_vectors(queries, "embedding"), "embedding", dim)
+    candidates = drop_ragged_vectors(
+        drop_corrupt_vectors(candidates, "embedding"), "embedding", dim
+    )
+    qb = lsh_banded(queries, dim, "query_id", "qv", n_planes, n_tables, seed).select(
+        "query_id", "table_id", "bucket"
+    )
+    cb = lsh_banded(candidates, dim, "neighbor_id", "cv", n_planes, n_tables, seed).select(
+        "neighbor_id", "table_id", "bucket"
+    )
     pairs = candidate_pairs(cb, qb)
     # norms precomputed per VECTOR (multi-referenced projection — no
     # CollapseProject inlining), never per candidate pair. The NORM
@@ -594,8 +574,8 @@ def lsh_knn(
     # accumulation-overflow vector (norm = +Inf, every component
     # finite), which would score a fake finite/Inf = 0.0 into top-k
     # slots past the _score_is_sane backstop.
-    qv = _vectors(queries, id_col, vec_col, "query_id", "qv", "qn")
-    cv = _vectors(candidates, id_col, vec_col, "neighbor_id", "cv", "cn")
+    qv = _vectors(queries, "query_id", "qv", "qn")
+    cv = _vectors(candidates, "neighbor_id", "cv", "cn")
     joined = pairs.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id")
     return _rank_neighbors(joined, k)
 
@@ -748,8 +728,6 @@ def _rescore_parallelism_rescue(
 def lsh_near_dup_pairs(
     df: DataFrame,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
     n_planes: int | str = 8,
     n_tables: int = 8,
@@ -816,9 +794,7 @@ def lsh_near_dup_pairs(
         raise ValueError("max_bucket_size must be >= 2 (a bucket of 2 is one pair)")
     star = None
     if collapse_identical:
-        base = df.select(
-            F.col(id_col).alias("_cid"), _as_double(F.col(vec_col)).alias("_cv")
-        )
+        base = df.select(F.col("vec_id").alias("_cid"), _as_double(F.col("embedding")).alias("_cv"))
         # zero-norm / NULL / NaN / Inf / ragged vectors never reach
         # the threshold filter on the band path (cosine is NULL or
         # NaN there — for Inf pairs the division is Inf/Inf = NaN;
@@ -847,7 +823,7 @@ def lsh_near_dup_pairs(
             F.lit(1.0).alias("cosine"),
         )
         df = base.filter(F.col("_rn") == 1).select(
-            F.col("_cid").alias(id_col), F.col("_cv").alias(vec_col)
+            F.col("_cid").alias("vec_id"), F.col("_cv").alias("embedding")
         )
     n_rows = None
     if n_planes == "auto":
@@ -862,7 +838,7 @@ def lsh_near_dup_pairs(
     # dominant fixed cost) being evaluated once per side. The
     # lineage-truncated blocks are released by the ContextCleaner when
     # the plan is GC'd — no session-lifetime memory pin (vs persist()).
-    b = lsh_banded(df, dim, "doc_id", "v", id_col, vec_col, n_planes, n_tables, seed).select(
+    b = lsh_banded(df, dim, "doc_id", "v", n_planes, n_tables, seed).select(
         "doc_id", "table_id", "bucket"
     )
     if max_bucket_size is not None:
@@ -875,7 +851,7 @@ def lsh_near_dup_pairs(
         ).drop("_bucket_n")
     cand = candidate_pairs(b.localCheckpoint(eager=False), None)
     cand = _rescore_parallelism_rescue(cand, n_rows, n_planes, n_tables)
-    vecs = _vectors(df, id_col, vec_col, "doc_id", "v", "n")
+    vecs = _vectors(df, "doc_id", "v", "n")
     va = vecs.select(F.col("doc_id").alias("doc_a"), F.col("v").alias("va"), F.col("n").alias("na"))
     vb = vecs.select(F.col("doc_id").alias("doc_b"), F.col("v").alias("vb"), F.col("n").alias("nb"))
     cos_raw = _cosine("va", "vb", "na", "nb")
@@ -902,12 +878,7 @@ def lsh_near_dup_pairs(
     return out
 
 
-def quantize_embeddings(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    bits: int = 8,
-) -> DataFrame:
+def quantize_embeddings(df: DataFrame) -> DataFrame:
     """Symmetric per-vector integer quantization (the int8 compression
     pass embedding stores run before serving): ``scale = max|x| / qmax``
     and ``q_i = round(x_i / scale)`` with ``q_i`` in [-qmax, qmax].
@@ -951,11 +922,11 @@ def quantize_embeddings(
     NULL-marked row. Validate upstream if the source can produce NULL
     elements.
     """
-    qmax = 2 ** (bits - 1) - 1
-    id_type = df.schema[id_col].dataType
+    qmax = 127  # int8: q in [-127, 127]
+    id_type = df.schema["vec_id"].dataType
     out_schema = T.StructType(
         [
-            T.StructField(id_col, id_type),
+            T.StructField("vec_id", id_type),
             T.StructField("scale", T.DoubleType()),
             T.StructField("qvec", T.ArrayType(T.IntegerType())),
             T.StructField("q_sum", T.LongType()),
@@ -977,7 +948,7 @@ def quantize_embeddings(
             ql1_out = np.full(n, None, dtype=object)
             vecs = [
                 (j, np.asarray(v, dtype=np.float64))
-                for j, v in enumerate(pdf[vec_col])
+                for j, v in enumerate(pdf["embedding"])
                 if v is not None and len(v) > 0
             ]
             if vecs:
@@ -1022,7 +993,7 @@ def quantize_embeddings(
                         ql1_out[j] = int(l1s[row])
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    "vec_id": pdf["vec_id"],
                     "scale": scale_out,
                     "qvec": qvec_out,
                     "q_sum": qsum_out,
@@ -1030,4 +1001,4 @@ def quantize_embeddings(
                 }
             )
 
-    return df.select(id_col, vec_col).mapInPandas(quantize, out_schema)
+    return df.select("vec_id", "embedding").mapInPandas(quantize, out_schema)

@@ -1,5 +1,8 @@
 """Text-analysis transformers for pre-training-corpus pipelines.
 
+The DataFrame operators read the bank's document columns: ``doc_id``
+and ``text``.
+
 Everything here is built from JVM-side ``pyspark.sql.functions``
 expressions (whole-stage-codegen friendly); nothing leaves the
 executors. The regex dialect used is the ASCII-safe common subset of
@@ -59,11 +62,11 @@ def _n_tokens(text: Column) -> Column:
     return F.size(split_words(text)).cast("bigint")
 
 
-def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Char + token counts per document (whitespace tokenization)."""
-    t = F.col(text_col)
+def token_stats(df: DataFrame) -> DataFrame:
+    """Char + token counts per ``doc_id`` (whitespace tokenization)."""
+    t = F.col("text")
     return df.select(
-        id_col,
+        "doc_id",
         F.length(t).cast("bigint").alias("n_chars"),
         _n_tokens(t).alias("n_tokens"),
     )
@@ -107,7 +110,7 @@ def rolling_hash(text: Column) -> Column:
     )
 
 
-def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Corpus-quality heuristics: alphabetic ratio, whitespace ratio,
     mean token length. The standard cheap filters applied before
     expensive model-based scoring.
@@ -120,13 +123,13 @@ def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     length-difference counts are value-identical to the stripped
     lengths (``\\s`` in Java regex is ASCII-only: the 6 chars below).
     """
-    t = F.col(text_col)
+    t = F.col("text")
     n_chars = F.length(t).cast("double")
     alpha = (F.length(t) - F.length(F.translate(t, _ASCII_ALPHA, ""))).cast("double")
     spaces = (F.length(t) - F.length(F.translate(t, " ", ""))).cast("double")
     nonspace = F.length(F.translate(t, " \t\n\x0b\f\r", "")).cast("double")
     return df.select(
-        id_col,
+        "doc_id",
         F.round(alpha / F.nullif(n_chars, F.lit(0.0)), 4).alias("alpha_ratio"),
         F.round(spaces / F.nullif(n_chars, F.lit(0.0)), 4).alias("space_ratio"),
         F.round(nonspace / F.nullif(_n_tokens(t).cast("double"), F.lit(0.0)), 4).alias(
@@ -153,12 +156,10 @@ def normalized_fp_col(text: Column) -> Column:
     )
 
 
-def normalized_fingerprint(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def normalized_fingerprint(df: DataFrame) -> DataFrame:
     """Case/punctuation-insensitive content fingerprint (md5 of the
-    lowercased alphanumeric skeleton)."""
-    return df.select(id_col, normalized_fp_col(F.col(text_col)).alias("norm_fp"))
+    lowercased alphanumeric skeleton) per ``doc_id``."""
+    return df.select("doc_id", normalized_fp_col(F.col("text")).alias("norm_fp"))
 
 
 #: (language, stopwords) pairs scored in order; first match wins.
@@ -170,12 +171,12 @@ _LANG_MARKERS: tuple[tuple[str, tuple[str, ...]], ...] = (
 )
 
 
-def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def language_id(df: DataFrame) -> DataFrame:
     """Deterministic stopword-marker language ID, added as
     ``predicted_lang``. A real pipeline would swap in an n-gram profile
     model (e.g. fastText via a Pandas UDF); the contract — text in, ISO
     code out, fully distributed — is the same."""
-    padded = F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
+    padded = F.concat(F.lit(" "), F.lower(F.col("text")), F.lit(" "))
     expr = F.lit("und")
     # build from the last marker backwards so evaluation order matches
     # the declared first-match-wins priority
@@ -209,9 +210,9 @@ def word_ngrams(tokens: Column, n: int) -> Column:
     return grams
 
 
-def ngram_phrase_counts(df: DataFrame, n: int = 2) -> DataFrame:
-    """Corpus n-gram (word) frequency over the ``text`` column: one row
-    per distinct n-word phrase with its corpus count.
+def ngram_phrase_counts(df: DataFrame) -> DataFrame:
+    """Corpus word-bigram frequency over the ``text`` column: one row
+    per distinct two-word phrase with its corpus count.
 
     The per-document phrase list is built shuffle-free
     (``word_ngrams``); the single shuffle is the partial-aggregable
@@ -221,18 +222,13 @@ def ngram_phrase_counts(df: DataFrame, n: int = 2) -> DataFrame:
     w = split_words(F.col("text"))
     base = df.select(w.alias("w"))
     return (
-        base.select(F.explode(word_ngrams(F.col("w"), n)).alias("phrase"))
+        base.select(F.explode(word_ngrams(F.col("w"), 2)).alias("phrase"))
         .groupBy("phrase")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
 
 
-def cooccurrence_pmi(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_vocab: int | None = None,
-) -> DataFrame:
+def cooccurrence_pmi(df: DataFrame, max_vocab: int | None = None) -> DataFrame:
     """Document-level token co-occurrence with pointwise mutual
     information — the association statistic behind embedding-training
     corpora (word2vec/GloVe co-occurrence matrices) and collocation
@@ -246,7 +242,7 @@ def cooccurrence_pmi(
     ``ln(P(a,b) / (P(a) P(b)))`` with probabilities over documents.
 
     Identity-keyed (r11 duplicate-key axis): "document" means a
-    DISTINCT ``id_col`` — presence is a property of the document, so
+    DISTINCT ``doc_id`` — presence is a property of the document, so
     replayed-CDC duplicate rows (bit-identical copies of an id) must
     not inflate marginals, pair counts, or N. The input is deduped
     per id BEFORE the explode: the dedup's exchange is on the same
@@ -283,7 +279,7 @@ def cooccurrence_pmi(
     the same capped universe; documents under the cap are unaffected.
     ``None`` keeps the exact unbounded semantics.
     """
-    arr = F.array_distinct(split_words(F.col(text_col)))
+    arr = F.array_distinct(split_words(F.col("text")))
     if max_vocab is not None:
         arr = F.transform(
             F.slice(
@@ -302,19 +298,19 @@ def cooccurrence_pmi(
     # marginal). The checkpointed frame is (id, tok) — the same rows
     # every downstream shuffle already carries.
     toks = (
-        df.select(F.col(id_col), F.col(text_col))
-        .filter(F.col(id_col).isNotNull())
-        .dropDuplicates([id_col])
-        .select(F.col(id_col), F.explode(arr).alias("tok"))
+        df.select("doc_id", "text")
+        .filter(F.col("doc_id").isNotNull())
+        .dropDuplicates(["doc_id"])
+        .select("doc_id", F.explode(arr).alias("tok"))
         .localCheckpoint(eager=False)
     )
-    n_docs = df.agg(F.count_distinct(F.col(id_col)).cast("double").alias("_nd"))
+    n_docs = df.agg(F.count_distinct(F.col("doc_id")).cast("double").alias("_nd"))
     # vocabulary-sized; tok_a and tok_b broadcast it through one
     # reused exchange, so it is aggregated once without a barrier
     marg = toks.groupBy("tok").agg(F.count(F.lit(1)).cast("double").alias("_c"))
     a, b = toks.alias("a"), toks.alias("b")
     pairs = (
-        a.join(b, (F.col(f"a.{id_col}") == F.col(f"b.{id_col}")) & (F.col("a.tok") < F.col("b.tok")))
+        a.join(b, (F.col("a.doc_id") == F.col("b.doc_id")) & (F.col("a.tok") < F.col("b.tok")))
         .groupBy(F.col("a.tok").alias("tok_a"), F.col("b.tok").alias("tok_b"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_ab"))
     )
@@ -393,8 +389,8 @@ def repetition_stats(df: DataFrame) -> DataFrame:
     )
 
 
-def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
-    """Top-``k`` TF-IDF terms per ``doc_id`` over the ``text`` column
+def tfidf_top_terms(df: DataFrame) -> DataFrame:
+    """Top-3 TF-IDF terms per ``doc_id`` over the ``text`` column
     (score = tf × ln(N/df)).
 
     Plan shape for scale: one explode + partial-aggregable (doc, term)
@@ -435,6 +431,6 @@ def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
     return (
         scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
+        .filter(F.col("_rn") <= 3)
         .drop("_rn")
     )

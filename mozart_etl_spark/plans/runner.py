@@ -94,9 +94,9 @@ class ModelRunner:
         ns = schema or self.mart_namespace
         return f"{ns}.{alias}"
 
-    def run(self, select: tuple[str, ...] | None = None) -> list[RunResult]:
-        """Render + execute all models (or ``select``); results in topo
-        order (module docstring: scheduling contract)."""
+    def run(self) -> list[RunResult]:
+        """Render + execute all models; results in topo order (module
+        docstring: scheduling contract)."""
         graph = ModelGraph.from_dir(
             self.models_dir, variables=self.variables, frozen_clock=self.frozen_clock
         )
@@ -122,17 +122,15 @@ class ModelRunner:
                 raise ValueError(f"ref() to unknown model {model!r}")
             return targets[model]
 
-        for ns in {self.raw_namespace, self.mart_namespace} | {
-            m.schema for m in graph.models.values() if m.schema
-        }:
+        # the namespaces the models write to; a view's CREATE needs its
+        # namespace, and no writer runs for it
+        for ns in {m.schema or self.mart_namespace for m in graph.models.values()}:
             self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {ns}")
 
-        selected = [n for n in graph.order if select is None or n in select]
-        # refs to models outside the selection are already materialized
-        waiting = {n: set(graph.models[n].refs).intersection(selected) for n in selected}
+        waiting = {n: set(graph.models[n].refs) for n in graph.order}
         done: dict[str, RunResult] = {}
         failed: dict[str, BaseException] = {}
-        with JobPool(self.spark, len(selected)) as pool:
+        with JobPool(self.spark, len(graph.order)) as pool:
             running: dict[Future, str] = {}
 
             def launch_ready() -> None:
@@ -161,10 +159,10 @@ class ModelRunner:
                 for name, num_rows in landed:
                     done[name] = RunResult(name, targets[name], num_rows,
                                            self._preview(targets[name]))
-        for name in selected:
+        for name in graph.order:
             if name in failed:
                 raise failed[name]
-        return [done[n] for n in selected]
+        return [done[n] for n in graph.order]
 
     def _render(
         self, name: str, graph: ModelGraph, target: str, resolve_ref

@@ -189,7 +189,7 @@ def corpus_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def corpus_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    return corpus_ops.chunk_documents(docs, id_col="doc_id", text_col="text", size=_CHUNK)
+    return corpus_ops.chunk_documents(docs, size=_CHUNK)
 
 
 _OV_SIZE, _OV_STRIDE = 120, 80
@@ -242,9 +242,7 @@ assert -(-_OV_SIZE // _OV_STRIDE) == 2, (
 )
 def corpus_chunks_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    return corpus_ops.chunk_documents(
-        docs, id_col="doc_id", text_col="text", size=_OV_SIZE, stride=_OV_STRIDE
-    )
+    return corpus_ops.chunk_documents(docs, size=_OV_SIZE, stride=_OV_STRIDE)
 
 
 @register(
@@ -600,7 +598,7 @@ def corpus_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 20000).alias("doc_id"), "lang", "n_chars", "text"
     )
     batch = new_docs.unionByName(replayed).unionByName(batch_copies)
-    novel = dedup_ops.novel_documents(batch, history, text_col="text", id_col="doc_id")
+    novel = dedup_ops.novel_documents(batch, history)
     return novel.select("doc_id", "lang", "n_chars")
 
 
@@ -649,9 +647,7 @@ def corpus_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (r14; the checkpoint holds the same ~30 B/row the exchange
     # shuffles anyway, so the barrier costs nothing extra at scale)
     keyed = keyed.localCheckpoint(eager=False)
-    cum = corpus_ops.global_running_sum(
-        keyed, order_cols=["k", "doc_id"], value_col="n_tokens", out_col="cum"
-    )
+    cum = corpus_ops.global_running_sum(keyed, order_cols=["k", "doc_id"], value_col="n_tokens")
     return cum.select(
         "doc_id",
         "n_tokens",
@@ -706,9 +702,7 @@ def corpus_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import dedup as dedup_ops
 
     docs = table(spark, sf_dir, "documents", fan_out=True)
-    return dedup_ops.repeated_spans(
-        docs, text_col="text", id_col="doc_id", n=10, min_df=2
-    )
+    return dedup_ops.repeated_spans(docs, n=10)
 
 
 @register(
@@ -794,6 +788,4 @@ def corpus_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import dedup as dedup_ops
 
     docs = table(spark, sf_dir, "documents", fan_out=True)
-    return dedup_ops.remove_repeated_spans(
-        docs, text_col="text", id_col="doc_id", n=10, min_df=2
-    )
+    return dedup_ops.remove_repeated_spans(docs, n=10)

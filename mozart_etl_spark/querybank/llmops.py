@@ -51,7 +51,7 @@ _EMBEDDING_DIM = 64
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    return dedup_ops.exact_dedup(docs, text_col="text", id_col="doc_id")
+    return dedup_ops.exact_dedup(docs)
 
 
 @register(
@@ -102,7 +102,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents", fan_out=True)
-    pairs = dedup_ops.ngram_jaccard_pairs(docs, text_col="text", id_col="doc_id", n=3)
+    pairs = dedup_ops.ngram_jaccard_pairs(docs, n=3)
     return pairs.orderBy(F.desc("_raw_jaccard"), F.asc("doc_a"), F.asc("doc_b")).limit(20).drop(
         "_raw_jaccard"
     )
@@ -193,8 +193,7 @@ _MINHASH_PERMS_SQL = ",\n            ".join(
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents", fan_out=True)
     return dedup_ops.minhash_lsh_pairs(
-        docs, text_col="text", id_col="doc_id", n=3, num_perm=64, bands=16,
-        hash_fn="portable_md5_60",
+        docs, n=3, num_perm=64, bands=16, hash_fn="portable_md5_60"
     )
 
 
@@ -240,9 +239,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents", fan_out=True)
-    return dedup_ops.simhash(
-        docs, text_col="text", id_col="doc_id", hash_fn="portable_md5_60"
-    )
+    return dedup_ops.simhash(docs, hash_fn="portable_md5_60")
 
 
 # ---------------------------------------------------------------------------
@@ -263,7 +260,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents", fan_out=True)
-    return text_ops.token_stats(docs, text_col="text", id_col="doc_id")
+    return text_ops.token_stats(docs)
 
 
 @register(
@@ -285,7 +282,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents", fan_out=True)
-    return text_ops.quality_score(docs, text_col="text", id_col="doc_id")
+    return text_ops.quality_score(docs)
 
 
 @register(
@@ -301,7 +298,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents", fan_out=True)
-    return text_ops.normalized_fingerprint(docs, text_col="text", id_col="doc_id")
+    return text_ops.normalized_fingerprint(docs)
 
 
 @register(
@@ -328,7 +325,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    pred = text_ops.language_id(docs, text_col="text")
+    pred = text_ops.language_id(docs)
     return (
         pred.groupBy(F.col("lang").alias("actual_lang"), F.col("predicted_lang"))
         .agg(F.count(F.lit(1)).alias("n"))
@@ -403,7 +400,7 @@ def text_stopword_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    counts = text_ops.ngram_phrase_counts(docs, n=2)
+    counts = text_ops.ngram_phrase_counts(docs)
     return (
         counts.orderBy(F.desc("n"), F.asc("phrase"))
         .limit(20)
@@ -468,9 +465,7 @@ def text_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    return text_ops.cooccurrence_pmi(
-        docs, text_col="text", id_col="doc_id", max_vocab=512
-    )
+    return text_ops.cooccurrence_pmi(docs, max_vocab=512)
 
 
 @register(
@@ -600,7 +595,7 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents", fan_out=True)
-    return text_ops.tfidf_top_terms(docs, k=3)
+    return text_ops.tfidf_top_terms(docs)
 
 
 # ---------------------------------------------------------------------------
@@ -667,9 +662,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def knn_bruteforce_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings", fan_out=True)
     queries = emb.filter(F.col("vec_id") < 10)
-    return sim_ops.brute_force_knn(
-        queries, emb, id_col="vec_id", vec_col="embedding", k=5, dim=_EMBEDDING_DIM,
-    )
+    return sim_ops.brute_force_knn(queries, emb, k=5, dim=_EMBEDDING_DIM)
 
 
 def _plane_values_sql(n_planes: int, n_tables: int, dim: int = 64, seed: int = 42) -> str:
@@ -775,10 +768,7 @@ _OVF = "1.3407807929942596e154"
 def knn_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return sim_ops.lsh_knn(
-        queries, emb, dim=_EMBEDDING_DIM, id_col="vec_id", vec_col="embedding", k=5,
-        n_planes=4, n_tables=8,
-    )
+    return sim_ops.lsh_knn(queries, emb, dim=_EMBEDDING_DIM, k=5, n_planes=4, n_tables=8)
 
 
 def _jaccard_edges(docs: DataFrame) -> DataFrame:
@@ -1171,8 +1161,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("embedding"),
     )
     return sim_ops.lsh_near_dup_pairs(
-        emb.unionByName(twins), dim=_EMBEDDING_DIM, id_col="vec_id",
-        vec_col="embedding", threshold=0.95, n_planes="auto",
+        emb.unionByName(twins), dim=_EMBEDDING_DIM, threshold=0.95, n_planes="auto",
         collapse_identical=True, max_bucket_size=256,
     )
 
@@ -1298,7 +1287,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    mm = mm_ops.attach_binary_payload(docs, text_col="text", kind="blob")
+    mm = mm_ops.attach_binary_payload(docs, kind="blob")
     return mm.select(
         "doc_id", F.col("media.kind").alias("kind"), F.col("media.n_bytes").alias("n_bytes")
     )
@@ -1361,8 +1350,8 @@ def multimodal_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    mm = mm_ops.attach_binary_payload(docs, text_col="text", kind="blob")
-    feats = mm_ops.extract_features(mm, id_col="doc_id", payload_col="payload", n_dims=8)
+    mm = mm_ops.attach_binary_payload(docs, kind="blob")
+    feats = mm_ops.extract_features(mm)
     # the driver canonicalizer sorts all columns through pandas, which
     # cannot factorize list values — project the array<double> to one
     # row per dimension (the values themselves are untouched doubles)
@@ -1427,10 +1416,8 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    mm = mm_ops.attach_binary_payload(docs, text_col="text", kind="video")
-    return mm_ops.sample_frames(
-        mm, id_col="doc_id", payload_col="payload", frame_bytes=256, every=3
-    )
+    mm = mm_ops.attach_binary_payload(docs, kind="video")
+    return mm_ops.sample_frames(mm)
 
 
 @register(
@@ -1485,10 +1472,8 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_resize_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents", fan_out=True)
-    mm = mm_ops.attach_binary_payload(docs, text_col="text", kind="image")
-    t = mm_ops.resize_payload_grid(
-        mm, id_col="doc_id", payload_col="payload", out_dims=16
-    )
+    mm = mm_ops.attach_binary_payload(docs, kind="image")
+    t = mm_ops.resize_payload_grid(mm)
     return t.select("doc_id", "n_bytes", F.posexplode("thumb").alias("dim", "thumb_val"))
 
 
@@ -1574,10 +1559,7 @@ def multimodal_resize_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 def knn_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return sim_ops.ivf_knn(
-        queries, emb, cell_col="label", id_col="vec_id", vec_col="embedding", k=5, nprobe=2,
-        dim=_EMBEDDING_DIM,
-    )
+    return sim_ops.ivf_knn(queries, emb, k=5, nprobe=2, dim=_EMBEDDING_DIM)
 
 
 @register(
@@ -1681,7 +1663,7 @@ def embedding_quantize_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the digests ride the same per-row Arrow kernel pass as the
     # quantization itself — the r9 three-interpreted-folds-per-row
     # shape was this round's one measured regression (AB_r10.json)
-    q = quantize_embeddings(emb, vec_col="embedding", id_col="vec_id", bits=8)
+    q = quantize_embeddings(emb)
     return q.select(
         "vec_id",
         F.round("scale", 6).alias("scale_r"),

@@ -87,7 +87,7 @@ _HOURLY_ORACLE = """
 )
 def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = events_stream(spark, sf_dir)
-    agg = hourly_counts_stream(stream, watermark="2 hours", window="1 hour")
+    agg = hourly_counts_stream(stream)
     return run_to_memory(agg, f"hourly_{uuid.uuid4().hex[:8]}")
 
 
@@ -105,7 +105,7 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = events_stream(spark, sf_dir)
-    sessions = sessionize_stream(stream, gap="30 minutes", watermark="2 hours")
+    sessions = sessionize_stream(stream, gap="30 minutes")
     out = run_to_memory(sessions, f"sessions_{uuid.uuid4().hex[:8]}")
     return out.select("user_id", "session_start_us", "last_event_us", "n_events")
 
@@ -177,7 +177,7 @@ def streaming_continuous_aggregate(spark: SparkSession, sf_dir: str) -> DataFram
     from ..streaming import stream_merge_to_table
 
     stream = events_stream(spark, sf_dir)
-    agg = hourly_counts_stream(stream, watermark="2 hours", window="1 hour")
+    agg = hourly_counts_stream(stream)
     run_id = uuid.uuid4().hex[:8]
     tbl = f"default.continuous_hourly_{run_id}"
     ckpt = tempfile.mkdtemp(prefix=f"ca_ckpt_{run_id}_")
@@ -232,7 +232,7 @@ def streaming_continuous_aggregate(spark: SparkSession, sf_dir: str) -> DataFram
 )
 def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = events_stream(spark, sf_dir)
-    pairs = click_view_interval_join(stream, lookback="1 hour", watermark="2 hours")
+    pairs = click_view_interval_join(stream)
     drained = run_to_memory(
         pairs,
         f"ssjoin_{uuid.uuid4().hex[:8]}",
@@ -267,4 +267,4 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # literally the streaming operator applied to a batch frame —
     # Catalyst drops the no-op watermark on batch plans, so parity is
     # one implementation, not two kept-in-sync copies
-    return sessionize_stream(ev, gap="30 minutes", watermark="2 hours")
+    return sessionize_stream(ev, gap="30 minutes")

@@ -43,6 +43,10 @@ from pyspark.sql.streaming import DataStreamWriter
 
 from ..io import events_raw_schema, local_path, normalize_ts_us
 
+#: Event-time watermark of every stateful operator here: how late an
+#: event may arrive before its window, session or join state expires.
+_WATERMARK = "2 hours"
+
 
 def events_stream(
     spark: SparkSession,
@@ -82,13 +86,8 @@ def events_stream(
     return raw.withColumn("ts", F.timestamp_micros(F.col("ts_us")))
 
 
-def hourly_counts_stream(
-    stream: DataFrame,
-    watermark: str = "2 hours",
-    window: str = "1 hour",
-    event_time_ceiling: str | None = None,
-) -> DataFrame:
-    """Watermarked tumbling-window counts per event type.
+def hourly_counts_stream(stream: DataFrame, event_time_ceiling: str | None = None) -> DataFrame:
+    """Watermarked one-hour tumbling-window counts per event type.
 
     Output: (window_start_us BIGINT, event_type, n, total_value) —
     window bounds as epoch-us so results are timezone-proof and
@@ -133,8 +132,8 @@ def hourly_counts_stream(
         cond = cond & (F.col("ts") <= F.lit(event_time_ceiling).cast("timestamp"))
     return (
         stream.filter(cond)
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        .withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("value"), 2).alias("total_value"),
@@ -148,9 +147,7 @@ def hourly_counts_stream(
     )
 
 
-def sessionize_stream(
-    stream: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
+def sessionize_stream(stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Session windows per user: consecutive events closer than ``gap``
     merge into one session (native ``session_window`` — state-store
     backed, watermark-bounded).
@@ -180,7 +177,7 @@ def sessionize_stream(
             & F.col("user_id").isNotNull()
             & (F.col("ts") >= F.timestamp_micros(F.lit(0)))
         )
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", _WATERMARK)
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
@@ -193,11 +190,9 @@ def sessionize_stream(
     )
 
 
-def click_view_interval_join(
-    stream: DataFrame, lookback: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
+def click_view_interval_join(stream: DataFrame) -> DataFrame:
     """Stream-stream interval join: each click pairs with the same
-    user's views in the preceding ``lookback`` window.
+    user's views in the preceding hour.
 
     Both sides carry a watermark and the join condition bounds the
     event-time distance, so Spark can expire join state — the two
@@ -233,7 +228,7 @@ def click_view_interval_join(
             F.col("user_id").alias("c_user"),
             F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", _WATERMARK)
     )
     views = (
         stream.filter(
@@ -245,13 +240,12 @@ def click_view_interval_join(
             F.col("user_id").alias("v_user"),
             F.col("ts").alias("view_ts"),
         )
-        .withWatermark("view_ts", watermark)
+        .withWatermark("view_ts", _WATERMARK)
     )
     return clicks.join(
         views,
         F.expr(
-            f"c_user = v_user AND view_ts > click_ts - INTERVAL {lookback} "
-            "AND view_ts <= click_ts"
+            "c_user = v_user AND view_ts > click_ts - INTERVAL 1 hour AND view_ts <= click_ts"
         ),
         "inner",
     )

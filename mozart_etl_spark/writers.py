@@ -87,15 +87,9 @@ def lakehouse_available(spark: SparkSession, fmt: str) -> bool:
     return False
 
 
-def _ensure_namespace(spark: SparkSession, table_ident: str) -> None:
-    if "." in table_ident:
-        ns = table_ident.rsplit(".", 1)[0]
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {ns}")
-    _drop_stale_location(spark, table_ident)
-
-
 def _drop_stale_location(spark: SparkSession, table_ident: str) -> None:
-    """Remove an orphaned managed-table directory.
+    """Remove the orphaned managed-table directory of ``table_ident``,
+    a table the catalog does not hold.
 
     The in-memory session catalog forgets table metadata between
     sessions while the warehouse directory persists, so a CREATE from
@@ -103,15 +97,13 @@ def _drop_stale_location(spark: SparkSession, table_ident: str) -> None:
     local-filesystem warehouse (a durable catalog — Iceberg/Delta/Hive
     — keeps metadata and never gets here).
 
-    Safety: called only immediately before this session writes that
+    Safety: called only immediately before this session creates that
     exact table, and the default warehouse is PID-scoped
     (``session.py``), so a concurrent session's live tables can't be
     hit. Pointing several concurrent sessions at one shared
     SPARK_GRAFT_WAREHOUSE with colliding table names remains unsafe —
     use a durable catalog for that.
     """
-    if spark.catalog.tableExists(table_ident):
-        return
     warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
     if not warehouse or "." not in table_ident:
         return
@@ -165,6 +157,11 @@ def _table_stats(spark: SparkSession, table_ident: str, watermark_col: str | Non
 def _create(
     spark: SparkSession, df: DataFrame, table_ident: str, fmt: str, watermark_col: str | None
 ) -> WriteResult:
+    """Create ``table_ident``, which does not exist, from ``df``: its
+    namespace first, then the table over any stale directory."""
+    if "." in table_ident:
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS {table_ident.rsplit('.', 1)[0]}")
+    _drop_stale_location(spark, table_ident)
     out, obs = _observed(df, watermark_col)
     out.write.format(fmt).saveAsTable(table_ident)
     return _result(obs)
@@ -174,7 +171,8 @@ def full_replace(spark: SparkSession, df: DataFrame, table_ident: str) -> WriteR
     """DROP + CTAS semantics (``_tenant_factory.py:300-307``). The count
     is observed by the write job; a full load keeps no watermark."""
     fmt = resolve_format()
-    _ensure_namespace(spark, table_ident)
+    if not spark.catalog.tableExists(table_ident):
+        return _create(spark, df, table_ident, fmt, None)
     out, obs = _observed(df, None)
     out.write.mode("overwrite").option("overwriteSchema", "true").format(fmt).saveAsTable(
         table_ident
@@ -201,7 +199,6 @@ def truncate_reload(
     the write job.
     """
     fmt = resolve_format()
-    _ensure_namespace(spark, table_ident)
     if not spark.catalog.tableExists(table_ident):
         return _create(spark, df, table_ident, fmt, watermark_col)
     target_cols = spark.table(table_ident).columns
@@ -225,7 +222,6 @@ def append(
     write sees only the new rows, so count and watermark come from one
     aggregate over the table afterwards."""
     fmt = resolve_format()
-    _ensure_namespace(spark, table_ident)
     if not spark.catalog.tableExists(table_ident):
         return _create(spark, df, table_ident, fmt, watermark_col)
     df.write.mode("append").format(fmt).saveAsTable(table_ident)
@@ -268,7 +264,6 @@ def merge_upsert(
     if not primary_key:
         raise ValueError("merge_upsert requires a primary_key")
     fmt = resolve_format()
-    _ensure_namespace(spark, table_ident)
     if not spark.catalog.tableExists(table_ident):
         return _create(spark, df, table_ident, fmt, watermark_col)
     if fmt in _MERGE_NATIVE:
@@ -330,7 +325,10 @@ def _duplicate_key_error(df: DataFrame, table_ident: str, keys: list[str]) -> Va
 def _stage(spark: SparkSession, df: DataFrame, table_ident: str) -> str:
     """Write ``df`` to the staging table of ``table_ident``; returns its name."""
     staged = f"{table_ident}__merge_staging"
-    _ensure_namespace(spark, staged)
+    # the target's namespace holds it; a merge that failed before its
+    # swap may have left the table or, across sessions, its directory
+    if not spark.catalog.tableExists(staged):
+        _drop_stale_location(spark, staged)
     df.write.mode("overwrite").format("parquet").saveAsTable(staged)
     return staged
 

@@ -155,10 +155,10 @@ def test_tfidf_corpus_wide_term_scores_zero(spark):
         [(1, "common alpha alpha"), (2, "common beta"), (3, "common gamma gamma gamma")],
         "doc_id long, text string",
     )
-    top1 = {
-        r["doc_id"]: r["term"]
-        for r in tfidf_top_terms(df, k=1).collect()
-    }
+    # each document's first term in the operator's own ranking order
+    top1 = {}
+    for r in sorted(tfidf_top_terms(df).collect(), key=lambda r: (-r["score"], r["term"])):
+        top1.setdefault(r["doc_id"], r["term"])
     assert top1 == {1: "alpha", 2: "beta", 3: "gamma"}
 
 
@@ -549,7 +549,7 @@ def test_ngram_phrases_skip_empty_tokens(spark):
     from mozart_etl_spark.operators.text import ngram_phrase_counts
 
     df = spark.createDataFrame([(1, "a b\n"), (2, "a b")], "doc_id LONG, text STRING")
-    phrases = {r["phrase"] for r in ngram_phrase_counts(df, n=2).collect()}
+    phrases = {r["phrase"] for r in ngram_phrase_counts(df).collect()}
     assert phrases == {"a b"}
 
 
@@ -577,10 +577,10 @@ def test_repeated_span_discovery_and_removal_semantics(spark):
         ],
         "doc_id LONG, text STRING",
     )
-    occ = {(r["doc_id"], r["pos"]) for r in repeated_spans(df, n=4, min_df=2).collect()}
+    occ = {(r["doc_id"], r["pos"]) for r in repeated_spans(df, n=4).collect()}
     assert (1, 2) in occ and (2, 2) in occ and (2, 6) in occ
 
-    out = {r["doc_id"]: r for r in remove_repeated_spans(df, n=4, min_df=2).collect()}
+    out = {r["doc_id"]: r for r in remove_repeated_spans(df, n=4).collect()}
     # doc 1 holds the first occurrence: nothing removed
     assert out[1]["n_removed"] == 0 and out[1]["n_kept"] == 6
     # doc 2 loses both later copies (8 covered words), keeps start/end
@@ -630,7 +630,7 @@ def test_repeated_span_removal_survives_pathological_hot_span(spark):
         .alias("text"),
     )
 
-    out = remove_repeated_spans(docs, n=5, min_df=2)
+    out = remove_repeated_spans(docs, n=5)
     buf = io.StringIO()
     with redirect_stdout(buf):
         out.explain("formatted")

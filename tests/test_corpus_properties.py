@@ -179,7 +179,7 @@ def test_remove_repeated_spans_matches_python_model(spark, texts, n):
     )
     got = {
         r["doc_id"]: (r["n_kept"], r["n_removed"], r["clean_fp"])
-        for r in remove_repeated_spans(df, n=n, min_df=2).collect()
+        for r in remove_repeated_spans(df, n=n).collect()
     }
     assert got == _span_model(texts, n, min_df=2)
 

@@ -335,12 +335,11 @@ def test_bench_compact_line_fits_tail_capture():
 
 def test_driver_priority_window():
     """The driver harness records CORRECTNESS rows for the first 50
-    queries() entries. Round-17 rotation: the 6 queries whose plan
-    changed this round lead (the driver must hash-certify every touched
-    query), then the 10 other r14-dated rows the round-16 rotation
-    deferred, then the oldest (r15-dated) rows in CORRECTNESS_r15.json
-    order. After this round no r14-dated row is left outside the
-    window. Every priority name must resolve (no typos against the
+    queries() entries. Round-18 rotation (no plan changed): the 9 rows
+    the round-17 window left out, last certified in round 15, lead;
+    then 41 of the rows round 16 certified and round 17 did not, in
+    round 16's window order; the other 8 stay outside and rotate first
+    next round. Every priority name must resolve (no typos against the
     registry)."""
     import json
 
@@ -353,27 +352,37 @@ def test_driver_priority_window():
     assert len(querybank.DRIVER_PRIORITY) == 50
     window = names[:50]
 
-    # (a) plan changed in r17 — certified first
-    assert window[:6] == [
-        "corpus_clean", "corpus_incremental_dedup", "customer_balance_deciles",
-        "corpus_shard_plan", "dedup_components", "dedup_canonical",
+    # (a) certified in round 15 (CORRECTNESS_r15.json), left out since
+    lead = [
+        "pricing_summary", "text_repetition_stats", "idle_rich_customers",
+        "segment_year_pivot", "order_priority_waiting", "events_retention_cohorts",
+        "revenue_rollup", "multimodal_manifest", "corpus_temperature_mix",
     ]
-    # (b) the 11 r14-dated rows the round-16 rotation deferred (its
-    # DRIVER_PRIORITY comment): certified in r14, not in r15
-    r14 = set(json.load(open("CORRECTNESS_r14.json")))
-    r15 = json.load(open("CORRECTNESS_r15.json"))
-    r14_deferred = {
-        "events_funnel", "corpus_clean", "large_order_customers",
-        "decimal_uplift_totals", "corpus_chunks_overlap", "part_name_typo_pairs",
-        "order_price_quantiles_approx", "orders_column_profile",
-        "regional_supplier_revenue", "etl_mart_customer", "distinct_parts_approx",
+    assert set(lead) <= set(json.load(open("CORRECTNESS_r15.json")))
+    assert window[:9] == lead
+    # (b) certified in round 16, left out of round 17, in round 16's order
+    assert window[9:] == [
+        "streaming_hourly_counts", "streaming_sessionize", "streaming_running_totals",
+        "streaming_continuous_aggregate", "streaming_interval_join", "event_props_json",
+        "events_sessionize", "revenue_cube", "big_spenders", "distinct_parts_per_flag",
+        "lineitem_stats", "dedup_simhash", "small_quantity_revenue", "top_orders_revenue",
+        "order_price_quantiles", "text_tfidf_top_terms", "text_bigram_cross_entropy",
+        "segment_nation_list", "text_token_stats", "dedup_exact", "incremental_range_scan",
+        "part_name_word_counts", "text_fingerprint", "events_hourly_histogram",
+        "party_nation_counts", "embedding_centroids", "customers_with_orders",
+        "customers_without_recent_orders", "text_quality_score", "corpus_pack_sequences",
+        "embedding_quantize_check", "multimodal_frame_sample", "events_intervisit_gaps",
+        "multimodal_features", "multimodal_resize_grid", "events_orphan_users",
+        "corpus_source_cap", "high_value_only_custkeys", "nation_revenue_rank",
+        "events_user_sketch_rollup", "text_top_bigrams",
+    ]
+    # the 8 that rotate first next round
+    deferred = {
+        "both_segments_nations", "events_markov_transitions", "nation_revenue_running_share",
+        "range_join_click_views", "customer_order_distribution", "nation_market_share",
+        "disjunctive_filter_revenue", "events_salted_enrich",
     }
-    assert r14_deferred <= r14 and not r14_deferred & set(r15)
-    assert set(window[6:16]) == r14_deferred - {"corpus_clean"}
-    # (c) r15-dated rows fill the rest, in CORRECTNESS_r15.json order
-    assert window[16:] == [n for n in r15 if n in set(window[16:])]
-    # no deferred r14-dated row is left outside the window
-    assert not set(names[50:]) & r14_deferred
+    assert deferred <= set(names[50:])
 
 
 def test_ntile_formula_matches_sql_ntile():

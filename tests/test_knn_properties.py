@@ -259,7 +259,7 @@ def test_nan_poisoned_vectors_excluded_from_knn(spark):
     lsh = S.lsh_knn(queries, df, dim=2, k=2, n_planes=2, n_tables=2)
     assert all(r["neighbor_id"] != 2 for r in lsh.collect())
 
-    ivf = S.ivf_knn(queries, df, cell_col="label", k=2, nprobe=2)
+    ivf = S.ivf_knn(queries, df, k=2, nprobe=2)
     assert all(r["neighbor_id"] != 2 for r in ivf.collect())
 
     # poisoned QUERY produces no output rows at all
@@ -314,7 +314,7 @@ def test_inf_poisoned_vectors_excluded_from_knn(spark):
     lsh = S.lsh_knn(queries, df, dim=2, k=3, n_planes=2, n_tables=2)
     assert all(r["neighbor_id"] not in (2, 4) for r in lsh.collect())
 
-    ivf = S.ivf_knn(queries, df, cell_col="label", k=3, nprobe=2)
+    ivf = S.ivf_knn(queries, df, k=3, nprobe=2)
     assert all(r["neighbor_id"] not in (2, 4) for r in ivf.collect())
 
     # poisoned QUERY produces no output rows at all
@@ -496,12 +496,12 @@ def test_finite_overflow_vectors_are_corrupt_everywhere(spark):
     assert all(r["neighbor_id"] != 2 for r in brute)
     lsh = S.lsh_knn(q, df, dim=2, k=3, n_planes=2, n_tables=2).collect()
     assert all(r["neighbor_id"] != 2 for r in lsh)
-    ivf = S.ivf_knn(q, df, cell_col="label", k=3, nprobe=2).collect()
+    ivf = S.ivf_knn(q, df, k=3, nprobe=2).collect()
     assert all(r["neighbor_id"] != 2 for r in ivf), "overflow vector surfaced in IVF"
 
     # overflow QUERY emits zero rows, on every scorer
     assert S.brute_force_knn(df.filter("vec_id = 2"), df, k=2).count() == 0
-    assert S.ivf_knn(df.filter("vec_id = 2"), df, cell_col="label", k=2).count() == 0
+    assert S.ivf_knn(df.filter("vec_id = 2"), df, k=2).count() == 0
 
     # centroid of cell 'a' is the mean of the two CLEAN vectors only
     cents = {r["cell"]: r["centroid"] for r in S.ivf_centroids(df).collect()}
@@ -541,14 +541,14 @@ def test_accumulation_overflow_vectors_excluded_from_ivf_lsh(spark):
     for label, out in (
         ("brute", S.brute_force_knn(q, df, k=1).collect()),
         ("lsh", S.lsh_knn(q, df, dim=2, k=1, n_planes=1, n_tables=2).collect()),
-        ("ivf", S.ivf_knn(q, df, cell_col="label", k=1, nprobe=2).collect()),
+        ("ivf", S.ivf_knn(q, df, k=1, nprobe=2).collect()),
     ):
         assert all(r["neighbor_id"] != 2 for r in out), (
             f"{label}: fake-finite-0 overflow candidate occupied a top-k slot"
         )
 
     # overflow QUERY emits zero rows on every scorer
-    assert S.ivf_knn(df.filter("vec_id = 2"), df, cell_col="label", k=2).count() == 0
+    assert S.ivf_knn(df.filter("vec_id = 2"), df, k=2).count() == 0
     assert S.lsh_knn(df.filter("vec_id = 2"), df, dim=2, k=2, n_planes=1, n_tables=2).count() == 0
 
 

@@ -202,9 +202,7 @@ def test_multimodal_frame_sample_windows_and_row_faithfulness(spark):
         (5, "b" * 600),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = mm.sample_frames(
-        mm.attach_binary_payload(docs), frame_bytes=256, every=3
-    ).collect()
+    out = mm.sample_frames(mm.attach_binary_payload(docs)).collect()
     got = sorted((r.doc_id, r.frame_idx, r.n_bytes) for r in out)
     assert got == [
         (1, 0, 256), (1, 3, 232), (2, 0, 2), (4, 0, 2), (4, 0, 2), (5, 0, 256),
@@ -229,13 +227,11 @@ def test_multimodal_resize_grid_bucket_means(spark):
     )
     out = {
         r.doc_id: r.thumb
-        for r in mm.resize_payload_grid(
-            mm.attach_binary_payload(docs), out_dims=4
-        ).collect()
+        for r in mm.resize_payload_grid(mm.attach_binary_payload(docs)).collect()
     }
-    # "ab" = bytes 97, 98; n=2, m=4: byte0 -> bucket 0, byte1 -> bucket 2
-    assert out[1][0] == 97 / 255.0
-    assert out[1][1] == 0.0
-    assert out[1][2] == 98 / 255.0
-    assert out[1][3] == 0.0
-    assert out[2] == [0.0, 0.0, 0.0, 0.0]
+    # "ab" = bytes 97, 98; n=2: byte0 -> bucket 0, byte1 -> bucket m//2
+    m = mm._GRID_DIMS
+    want = [0.0] * m
+    want[0], want[m // 2] = 97 / 255.0, 98 / 255.0
+    assert out[1] == want
+    assert out[2] == [0.0] * m

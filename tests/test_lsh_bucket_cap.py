@@ -207,8 +207,7 @@ def test_r8_candidate_config_matches_certified_on_driver_corpus(spark):
 
     def run(**kw):
         out = S.lsh_near_dup_pairs(
-            corpus, dim=_EMBEDDING_DIM, id_col="vec_id", vec_col="embedding",
-            threshold=0.95, n_planes="auto", **kw,
+            corpus, dim=_EMBEDDING_DIM, threshold=0.95, n_planes="auto", **kw,
         )
         return sorted((r["doc_a"], r["doc_b"], r["cosine"]) for r in out.collect())
 

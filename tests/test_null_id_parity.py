@@ -38,8 +38,8 @@ def _docs(spark):
 
 
 def test_sample_frames_null_id_degrades_to_null_rows(spark):
-    mm = mm_ops.attach_binary_payload(_docs(spark), text_col="text", kind="video")
-    out = mm_ops.sample_frames(mm, frame_bytes=256, every=3).collect()
+    mm = mm_ops.attach_binary_payload(_docs(spark), kind="video")
+    out = mm_ops.sample_frames(mm).collect()
     # the NULL-id row has a real payload: its frames come back with a
     # NULL id, not a crashed task; the NULL-text row emits zero frames
     null_rows = [r for r in out if r["doc_id"] is None]
@@ -49,16 +49,16 @@ def test_sample_frames_null_id_degrades_to_null_rows(spark):
 
 
 def test_resize_grid_null_id_degrades_to_null_rows(spark):
-    mm = mm_ops.attach_binary_payload(_docs(spark), text_col="text", kind="image")
-    out = mm_ops.resize_payload_grid(mm, out_dims=8).collect()
+    mm = mm_ops.attach_binary_payload(_docs(spark), kind="image")
+    out = mm_ops.resize_payload_grid(mm).collect()
     assert len(out) == 3  # row-faithful, NULL id included
     null_rows = [r for r in out if r["doc_id"] is None]
-    assert len(null_rows) == 1 and len(null_rows[0]["thumb"]) == 8
+    assert len(null_rows) == 1 and len(null_rows[0]["thumb"]) == mm_ops._GRID_DIMS
 
 
 def test_extract_features_null_id_degrades_to_null_rows(spark):
-    mm = mm_ops.attach_binary_payload(_docs(spark), text_col="text", kind="blob")
-    out = mm_ops.extract_features(mm, n_dims=4).collect()
+    mm = mm_ops.attach_binary_payload(_docs(spark), kind="blob")
+    out = mm_ops.extract_features(mm).collect()
     assert len(out) == 3
     assert sum(1 for r in out if r["doc_id"] is None) == 1
 

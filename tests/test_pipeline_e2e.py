@@ -6,7 +6,9 @@ segment column and a stable PK)."""
 
 from __future__ import annotations
 
+import sys
 import uuid
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -508,7 +510,9 @@ def _land_cycle(root, cycle: int) -> None:
         pq.write_table(part, root / name / f"part-{cycle:03d}.parquet")
 
 
-def test_tenant_cycle_job_ceilings(spark, spark_jobs, tmp_path):
+def _cycle_tenant(tmp_path):
+    """(pipeline, source directory) of a tenant whose cycles merge
+    ``orders``, append ``lineitem`` and rebuild ``fct_orders``."""
     models = tmp_path / "models"
     models.mkdir()
     (models / "fct_orders.sql").write_text(FCT_ORDERS)
@@ -526,6 +530,11 @@ def test_tenant_cycle_job_ceilings(spark, spark_jobs, tmp_path):
         }
     )
     pipe = TenantPipeline(spec=spec, cursor_store=CursorStore(str(tmp_path / "cursors.json")))
+    return pipe, src
+
+
+def test_tenant_cycle_job_ceilings(spark, spark_jobs, tmp_path):
+    pipe, src = _cycle_tenant(tmp_path)
     jobs = []
     try:
         for cycle in range(3):
@@ -544,3 +553,43 @@ def test_tenant_cycle_job_ceilings(spark, spark_jobs, tmp_path):
     finally:
         for ns in (pipe.raw_ns, pipe.mart_ns):
             spark.sql(f"DROP DATABASE IF EXISTS {ns} CASCADE")
+
+
+def test_tenant_cycle_catalog_calls(spark, tmp_path, monkeypatch):
+    """Writers create a namespace and clear a stale location only where
+    they create a table, so an incremental cycle, whose tables all
+    exist, issues no ``CREATE DATABASE`` from them; and the catalog
+    calls of one incremental cycle repeat exactly in the next."""
+    pipe, src = _cycle_tenant(tmp_path)
+    calls = Counter()
+    sql, table_exists = spark.sql, spark.catalog.tableExists
+
+    def caller() -> str:
+        return sys._getframe(2).f_globals["__name__"]
+
+    def counted_sql(query, *args, **kwargs):
+        if query.lstrip().upper().startswith("CREATE DATABASE"):
+            calls["CREATE DATABASE", caller()] += 1
+        return sql(query, *args, **kwargs)
+
+    def counted_table_exists(*args, **kwargs):
+        calls["tableExists", caller()] += 1
+        return table_exists(*args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", counted_sql)
+    monkeypatch.setattr(spark.catalog, "tableExists", counted_table_exists)
+    per_cycle = []
+    try:
+        for cycle in range(3):
+            _land_cycle(src, cycle)
+            calls.clear()
+            pipe.run(spark)
+            per_cycle.append(dict(calls))
+    finally:
+        monkeypatch.undo()
+        for ns in (pipe.raw_ns, pipe.mart_ns):
+            spark.sql(f"DROP DATABASE IF EXISTS {ns} CASCADE")
+    writer_creates = ("CREATE DATABASE", "mozart_etl_spark.writers")
+    assert per_cycle[0].get(writer_creates, 0) > 0, per_cycle[0]
+    assert [c.get(writer_creates, 0) for c in per_cycle[1:]] == [0, 0], per_cycle
+    assert per_cycle[1] == per_cycle[2], per_cycle

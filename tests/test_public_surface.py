@@ -23,13 +23,19 @@ the function's own body. A call passes a value by keyword, by
 position, or through ``*args`` / ``**kwargs``; a call names its
 callee by name (``f(...)``, ``obj.f(...)``, ``Class(...)`` for a
 dataclass field or an ``__init__`` parameter), and ``cls(...)`` inside
-a class body calls that class. A value no caller sets is a constant
-with a knob on it: it goes, with the branches it needed.
+a class body calls that class. Passing the default literal itself
+does not set a value: it spells out the constant. Any other argument
+does, a variable or an expression included. A callee name defined more
+than once in those files (``run``, say) may reach any of its
+definitions, so for it only a keyword pass counts. A value no caller
+sets is a constant with a knob on it: it goes, with the branches it
+needed.
 """
 
 from __future__ import annotations
 
 import ast
+from collections import Counter
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -63,13 +69,58 @@ SETTABLE_EXCEPTIONS = {
     # the reference's per-run dbt --vars with plan_ver
     # (``_tenant_factory.py:364-371``)
     "TenantPipeline.run_vars": "per-run model variables (COVERAGE O10)",
-    # values a property test samples: fixing them would narrow the test
+    # values a test samples or sets apart from the engine's: fixing them
+    # would narrow the test
     "global_running_sum(num_partitions)": "property test samples the partition count",
     "minhash_lsh_pairs(seed)": "property test samples the seed",
     "lsh_knn(seed)": "property test samples the seed",
     "lsh_near_dup_pairs(n_tables)": "property test samples the table count",
     "lsh_near_dup_pairs(seed)": "property test samples the seed",
     "jaccard_verify_pairs(n)": "property test samples the shingle width",
+    "salted_join(n_salts)": (
+        "test_plan_guards.py::test_salted_join_spreads_hot_key sets the salt count"
+    ),
+    "sample_temperature(tau)": (
+        "test_corpus.py::test_sample_temperature_keeps_null_stratum keeps every row at tau 1"
+    ),
+    "sample_temperature(budget_frac)": (
+        "test_corpus.py::test_sample_temperature_keeps_null_stratum keeps every row at budget 1"
+    ),
+    "ngram_jaccard_pairs(n)": (
+        "test_dedup_hash_properties.py::test_ngram_jaccard_pairs_match_python_sets samples the "
+        "shingle width"
+    ),
+    "repeated_spans(n)": (
+        "test_corpus.py::test_repeated_span_discovery_and_removal_semantics plants a 4-word span"
+    ),
+    "remove_repeated_spans(n)": (
+        "test_corpus_properties.py::test_remove_repeated_spans_matches_python_model samples the "
+        "span width"
+    ),
+    "minhash_lsh_pairs(n)": (
+        "test_knn_properties.py::test_minhash_lsh_pairs_match_python_model sets the shingle width"
+    ),
+    "minhash_lsh_pairs(num_perm)": (
+        "test_knn_properties.py::test_minhash_lsh_pairs_match_python_model sets the permutations"
+    ),
+    "minhash_lsh_pairs(bands)": (
+        "test_knn_properties.py::test_minhash_lsh_pairs_match_python_model sets the band count"
+    ),
+    "funnel_stage_times(stages)": (
+        "test_corpus.py::test_funnel_custom_stage_chains varies the stages"
+    ),
+    "brute_force_knn(k)": (
+        "test_knn_properties.py's corrupt-vector tests rank k = 1..3 over four-row inputs"
+    ),
+    "ivf_knn(k)": "test_knn_properties.py::test_ivf_knn_matches_python_model samples k",
+    "ivf_knn(nprobe)": "test_knn_properties.py::test_ivf_knn_matches_python_model samples nprobe",
+    "lsh_knn(k)": "test_knn_properties.py::test_lsh_knn_matches_python_model samples k",
+    "lsh_near_dup_pairs(threshold)": (
+        "test_knn_properties.py::test_lsh_near_dup_pairs_match_python_model scores at 0.9"
+    ),
+    "sessionize_stream(gap)": (
+        "test_backends.py::test_sessionize_last_event_is_the_session_max_ts samples the gap"
+    ),
 }
 
 
@@ -163,13 +214,13 @@ def _decorated(node: ast.AST, name: str) -> bool:
     return False
 
 
-def _settable(tree: ast.Module) -> list[tuple[str, str, int | None, str, ast.AST]]:
-    """(label, callee, position, name, owner) of every defaulted
-    parameter of a public function or method and every defaulted field
-    of a public dataclass. ``callee`` is the name a call uses;
-    ``position`` is the value's positional index in such a call (None
-    for keyword-only); ``owner`` is the function, or the class for a
-    field."""
+def _settable(tree: ast.Module) -> list[tuple[str, str, int | None, str, ast.AST, ast.AST]]:
+    """(label, callee, position, name, default, owner) of every
+    defaulted parameter of a public function or method and every
+    defaulted field of a public dataclass. ``callee`` is the name a call
+    uses; ``position`` is the value's positional index in such a call
+    (None for keyword-only); ``default`` is the default expression;
+    ``owner`` is the function, or the class for a field."""
     out = []
 
     def params(fn: ast.AST, callee: str, label: str, skip_first: bool) -> None:
@@ -179,10 +230,11 @@ def _settable(tree: ast.Module) -> list[tuple[str, str, int | None, str, ast.AST
         shift = 1 if skip_first else 0
         for i, arg in enumerate(positional):
             if i >= first_default:
-                out.append((f"{label}({arg.arg})", callee, i - shift, arg.arg, fn))
+                default = a.defaults[i - first_default]
+                out.append((f"{label}({arg.arg})", callee, i - shift, arg.arg, default, fn))
         for arg, default in zip(a.kwonlyargs, a.kw_defaults):
             if default is not None:
-                out.append((f"{label}({arg.arg})", callee, None, arg.arg, fn))
+                out.append((f"{label}({arg.arg})", callee, None, arg.arg, default, fn))
 
     for node in tree.body:
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
@@ -199,7 +251,8 @@ def _settable(tree: ast.Module) -> list[tuple[str, str, int | None, str, ast.AST
                 ]
                 for i, s in enumerate(fields):
                     if s.value is not None and not s.target.id.startswith("_"):
-                        out.append((f"{node.name}.{s.target.id}", node.name, i, s.target.id, node))
+                        label = f"{node.name}.{s.target.id}"
+                        out.append((label, node.name, i, s.target.id, s.value, node))
             for m in node.body:
                 if not isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)):
                     continue
@@ -233,35 +286,69 @@ def _calls(trees: dict[Path, ast.Module]) -> dict[str, list[tuple[Path, ast.Call
     return calls
 
 
-def _passes(call: ast.Call, position: int | None, name: str) -> bool:
-    """Whether ``call`` passes the value at ``position`` / ``name``: by
-    keyword, by position, or through ``*args`` / ``**kwargs``."""
-    if any(k.arg is None or k.arg == name for k in call.keywords):
-        return True
-    if position is None:
+def _literal(node: ast.AST) -> tuple[type, str] | None:
+    """(type, repr) of a literal expression's value; None if it is not
+    a literal."""
+    try:
+        value = ast.literal_eval(node)
+    except (ValueError, TypeError):
+        return None
+    return type(value), repr(value)
+
+
+def _sets(arg: ast.AST, default: ast.AST) -> bool:
+    """Whether passing ``arg`` sets a value whose default is ``default``:
+    anything but the default literal itself does."""
+    value = _literal(arg)
+    return value is None or value != _literal(default)
+
+
+def _passes(
+    call: ast.Call, position: int | None, name: str, default: ast.AST, by_keyword_only: bool
+) -> bool:
+    """Whether ``call`` sets the value at ``position`` / ``name`` whose
+    default is ``default``: by keyword, by position, or through
+    ``*args`` / ``**kwargs``, with anything but the default literal.
+    With ``by_keyword_only`` (a callee name defined more than once in the
+    caller files, so a call may reach another definition) only a keyword
+    pass counts."""
+    for k in call.keywords:
+        if k.arg is None or (k.arg == name and _sets(k.value, default)):
+            return True
+    if position is None or by_keyword_only:
         return False
     for i, arg in enumerate(call.args):
         if isinstance(arg, ast.Starred):
             return i <= position
         if i == position:
-            return True
+            return _sets(arg, default)
     return False
+
+
+def _definition_counts(trees: dict[Path, ast.Module]) -> Counter[str]:
+    """name -> number of functions, methods and classes of that name."""
+    defs = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    return Counter(
+        node.name for tree in trees.values() for node in ast.walk(tree) if isinstance(node, defs)
+    )
 
 
 def unpassed(files: list[Path], engine: Path) -> list[str]:
     """``module::label`` of every defaulted public parameter or dataclass
     field in ``engine`` that no call in ``files`` outside its own
-    function passes."""
+    function sets to anything but its default."""
     trees = {path: ast.parse(path.read_text(), str(path)) for path in files}
     calls = _calls(trees)
+    counts = _definition_counts(trees)
     dead = []
     for path, tree in trees.items():
         if engine not in path.parents:
             continue
-        for label, callee, position, name, owner in _settable(tree):
+        for label, callee, position, name, default, owner in _settable(tree):
             own_body = isinstance(owner, (ast.FunctionDef, ast.AsyncFunctionDef))
+            shared = counts[callee] > 1
             if not any(
-                _passes(call, position, name)
+                _passes(call, position, name, default, shared)
                 and not (own_body and p == path and owner.lineno <= call.lineno <= owner.end_lineno)
                 for p, call in calls.get(callee, [])
             ):
@@ -303,6 +390,22 @@ def by_star_kwargs(a, *, b=1):
     pass
 
 
+def default_by_keyword(a, b=1):
+    pass
+
+
+def default_by_position(a, b="x"):
+    pass
+
+
+def by_variable(a, b=1):
+    pass
+
+
+def by_other_literal(a, b=(1, 2)):
+    pass
+
+
 @dataclass
 class Spec:
     name: str
@@ -321,6 +424,16 @@ class Runner:
 
     def go(self, flag=False):
         pass
+
+
+class Models:
+    def run(self, select=None, dry=False):
+        pass
+
+
+class Pipeline:
+    def run(self, spark):
+        pass
 """
 
 _SYNTHETIC_CALLER = """
@@ -334,31 +447,52 @@ mod.by_star_kwargs(1, **{"b": 2})
 mod.Spec.build(1)
 mod.Spec("y", items=[])
 mod.Runner(None, 8).go(True)
+mod.default_by_keyword(1, b=1)
+mod.default_by_position(1, "x")
+mod.by_variable(1, b=width)
+mod.by_other_literal(1, (1, 3))
+mod.Pipeline().run(spark)
+mod.Models().run(dry=True)
 """
 
 
 def test_settable_scan_on_a_synthetic_module(tmp_path):
     """The scan flags a parameter no caller passes (a recursive call
-    inside the function does not count) and a dataclass field no caller
-    sets, and accepts a keyword, a positional, a ``*args``, a
-    ``**kwargs`` and a ``cls(...)`` call."""
+    inside the function does not count), a dataclass field no caller
+    sets, a keyword and a positional pass of the default literal, and a
+    positional pass to a method name two classes define; it accepts a
+    keyword, a positional, a ``*args``, a ``**kwargs`` and a
+    ``cls(...)`` call, a non-default literal, a variable, and a keyword
+    pass to a method name two classes define."""
     engine = tmp_path / "pkg"
     engine.mkdir()
     (engine / "mod.py").write_text(_SYNTHETIC_ENGINE)
     (tmp_path / "caller.py").write_text(_SYNTHETIC_CALLER)
     files = [engine / "mod.py", tmp_path / "caller.py"]
-    assert unpassed(files, engine) == ["pkg/mod.py::Spec.unset_field", "pkg/mod.py::unset(b)"]
+    assert unpassed(files, engine) == [
+        "pkg/mod.py::Models.run(select)",
+        "pkg/mod.py::Spec.unset_field",
+        "pkg/mod.py::default_by_keyword(b)",
+        "pkg/mod.py::default_by_position(b)",
+        "pkg/mod.py::unset(b)",
+    ]
     # without the caller, every defaulted value is flagged except the
     # one ``cls(...)`` sets
     assert unpassed(files[:1], engine) == [
+        "pkg/mod.py::Models.run(dry)",
+        "pkg/mod.py::Models.run(select)",
         "pkg/mod.py::Runner(width)",
         "pkg/mod.py::Runner.go(flag)",
         "pkg/mod.py::Spec.items",
         "pkg/mod.py::Spec.unset_field",
         "pkg/mod.py::by_keyword(b)",
+        "pkg/mod.py::by_other_literal(b)",
         "pkg/mod.py::by_position(b)",
         "pkg/mod.py::by_position(c)",
         "pkg/mod.py::by_star_args(b)",
         "pkg/mod.py::by_star_kwargs(b)",
+        "pkg/mod.py::by_variable(b)",
+        "pkg/mod.py::default_by_keyword(b)",
+        "pkg/mod.py::default_by_position(b)",
         "pkg/mod.py::unset(b)",
     ]

@@ -72,7 +72,7 @@ def test_lsh_banded_impls_agree_on_ragged(frame):
     excluded at entry, so the query runs and the ragged and empty
     vectors are simply absent."""
     kw = dict(n_planes=4, n_tables=2, seed=7)
-    out = S.lsh_banded(frame, DIM, "id", "v", "vec_id", "embedding", **kw)
+    out = S.lsh_banded(frame, DIM, "id", "v", **kw)
     a = sorted((r.id, r.table_id, r.bucket) for r in out.collect())
     assert {t[0] for t in a} == {1, 2, 3, 4, 13}  # NULL vec kept (NULL policy), ragged/empty gone
     assert [t[2] for t in a if t[0] == 13] == [0, 0]  # NULL vec: all-zero buckets

@@ -71,7 +71,7 @@ def test_ivf_knn_recall_vs_bruteforce(spark):
     emb = table(spark, SF, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     exact = sim_ops.brute_force_knn(queries, emb, k=5)
-    approx = sim_ops.ivf_knn(queries, emb, cell_col="label", k=5, nprobe=2)
+    approx = sim_ops.ivf_knn(queries, emb, k=5, nprobe=2)
     exact_pairs = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
     approx_pairs = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
     recall = len(exact_pairs & approx_pairs) / len(exact_pairs)
@@ -109,7 +109,7 @@ def test_multimodal_feature_values(spark):
     row = docs.select("text").first()
     mm = mm_ops.attach_binary_payload(docs)
     feat = mm_ops.extract_features(mm).collect()[0]
-    expected = mm_ops._fake_features(row["text"].encode("utf-8"), 8)
+    expected = mm_ops._fake_features(row["text"].encode("utf-8"))
     assert feat["feat"] == expected
     assert feat["n_bytes"] == len(row["text"].encode("utf-8"))
 
@@ -151,8 +151,7 @@ def test_embedding_lsh_dedup_recall_vs_exact(spark):
     )
     aug = casted.unionByName(twins)
     approx = sim_ops.lsh_near_dup_pairs(
-        aug, dim=64, id_col="vec_id", vec_col="embedding",
-        threshold=0.95, n_planes=6, n_tables=6,
+        aug, dim=64, threshold=0.95, n_planes=6, n_tables=6,
     )
     approx_pairs = {(r["doc_a"], r["doc_b"]) for r in approx.collect()}
     recall = len(exact_pairs & approx_pairs) / len(exact_pairs)
@@ -610,9 +609,7 @@ def test_future_event_poisons_watermark_and_ceiling_guards_it(spark, tmp_path):
 
         def drain():
             st = events_stream(spark, str(base))
-            agg = hourly_counts_stream(
-                st, watermark="2 hours", window="1 hour", event_time_ceiling=ceiling
-            )
+            agg = hourly_counts_stream(st, event_time_ceiling=ceiling)
             q = (
                 agg.writeStream.foreachBatch(
                     lambda df, _epoch: rows.extend(r.asDict() for r in df.collect())
