@@ -132,49 +132,44 @@ def cap_per_group(
     id_col: str,
     cap: int,
     seed: str = "cap0",
-    salt_buckets: int | None = None,
+    salt_buckets: int = 8,
 ) -> DataFrame:
     """Per-group document cap: keep at most ``cap`` rows per group, the
     members chosen by deterministic hash order (the per-domain cap every
     web-crawl pipeline applies so one hot domain cannot dominate the
     corpus).
 
-    Adds ``rn`` (1-based rank within the group's hash order). One
-    shuffle: the window on ``group_col``. A pathologically hot group
-    lands on one reducer but does only a sort + counter there; if even
-    that is too much, set ``salt_buckets``: a first window on
-    ``(group, xxhash64(id) % salt_buckets)`` keeps only each salt's
-    top-``cap`` in the SAME order before the global per-group window
-    runs on the <= cap * salt_buckets survivors. Output is identical
-    to the unsalted form, ``rn`` included: a row with global rank
-    g <= cap has per-salt rank <= g (rows ahead of it in its salt are
-    a subset of rows ahead of it globally), so every globally-kept row
-    survives the prune — and every row ahead of a kept row is itself
-    globally ranked < cap, hence also kept, so the final window sees
-    all of a kept row's predecessors and assigns the same ``rn``.
-    Equality is pinned (hot-key data included) in tests/test_corpus.py.
+    Adds ``rn`` (1-based rank within the group's hash order). Two
+    windows, so a pathologically hot group never sorts whole on one
+    reducer: a first window on ``(group, xxhash64(id) % salt_buckets)``
+    keeps only each salt's top-``cap`` in the SAME order before the
+    per-group window runs on the <= cap * salt_buckets survivors. The
+    output equals a single per-group window's, ``rn`` included: a row
+    with global rank g <= cap has per-salt rank <= g (rows ahead of it
+    in its salt are a subset of rows ahead of it globally), so every
+    globally-kept row survives the prune — and every row ahead of a
+    kept row is itself globally ranked < cap, hence also kept, so the
+    final window sees all of a kept row's predecessors and assigns the
+    same ``rn``. Equality with a plain window is pinned (hot-key data
+    included) in tests/test_corpus.py.
     """
     order = [hash_bucket_hex(F.col(id_col), seed), F.col(id_col)]
-    if salt_buckets is not None:
-        if salt_buckets < 1:
-            raise ValueError(f"salt_buckets must be >= 1, got {salt_buckets}")
-        if "_salt_rn" in df.columns:
-            # withColumn would silently clobber it and drop() would
-            # then delete the caller's data — violating the
-            # "output-identical to unsalted" contract
-            raise ValueError(
-                "cap_per_group(salt_buckets=...) uses '_salt_rn' as a "
-                "scratch column; rename the input's _salt_rn column first"
-            )
-        # salt on the id, not the order hash: any deterministic
-        # function of the row works, and xxhash64 stays JVM-side
-        salt = F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(salt_buckets))
-        ws = Window.partitionBy(F.col(group_col), salt).orderBy(*order)
-        df = (
-            df.withColumn("_salt_rn", F.row_number().over(ws))
-            .filter(F.col("_salt_rn") <= cap)
-            .drop("_salt_rn")
+    if "_salt_rn" in df.columns:
+        # withColumn would silently clobber it and drop() would then
+        # delete the caller's data
+        raise ValueError(
+            "cap_per_group uses '_salt_rn' as a scratch column; rename the "
+            "input's _salt_rn column first"
         )
+    # salt on the id, not the order hash: any deterministic function of
+    # the row works, and xxhash64 stays JVM-side
+    salt = F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(salt_buckets))
+    ws = Window.partitionBy(F.col(group_col), salt).orderBy(*order)
+    df = (
+        df.withColumn("_salt_rn", F.row_number().over(ws))
+        .filter(F.col("_salt_rn") <= cap)
+        .drop("_salt_rn")
+    )
     w = Window.partitionBy(group_col).orderBy(*order)
     return (
         df.withColumn("rn", F.row_number().over(w).cast("bigint"))
@@ -425,8 +420,8 @@ PII_PATTERNS: tuple[tuple[str, str], ...] = (
 )
 
 
-def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Redact PII-shaped spans and count what was redacted.
+def scrub_pii(df: DataFrame) -> DataFrame:
+    """Redact PII-shaped spans of ``text`` and count what was redacted.
 
     Adds ``clean_text`` (text with every :data:`PII_PATTERNS` pattern
     replaced by its tag, in declaration order — earlier patterns win
@@ -436,12 +431,12 @@ def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     linear per row — the C4-style scrub pass that runs over every byte
     of a 100 TB corpus, so it must stay inside whole-stage codegen.
     """
-    cleaned = F.col(text_col)
+    cleaned = F.col("text")
     counts = []
     for pat, tag in PII_PATTERNS:
         name = "n_" + tag.strip("<>").lower()
         counts.append(
-            F.size(F.regexp_extract_all(F.col(text_col), F.lit(pat), F.lit(0)))
+            F.size(F.regexp_extract_all(F.col("text"), F.lit(pat), F.lit(0)))
             .cast("bigint")
             .alias(name)
         )
@@ -478,11 +473,10 @@ def global_running_sum(
     return _prefix_sum(df, order_cols, F.col(value_col), "cum", num_partitions)[0]
 
 
-def global_row_number(
-    df: DataFrame, order_cols: list[str], out_col: str = "rn"
-) -> tuple[DataFrame, int]:
-    """Exact global row numbers WITHOUT the single-partition window:
-    the global running sum of a constant 1 (:func:`global_running_sum`).
+def global_row_number(df: DataFrame, order_cols: list[str]) -> tuple[DataFrame, int]:
+    """Exact global row numbers WITHOUT the single-partition window, as
+    column ``rank``: the global running sum of a constant 1
+    (:func:`global_running_sum`).
 
     ``order_cols`` must be a total order (include a tiebreaker) or
     numbering is nondeterministic across runs.
@@ -492,7 +486,7 @@ def global_row_number(
     guide §1.2), so a caller that needs n (e.g. an exact ntile)
     schedules no extra count() pass over the ranked table.
     """
-    return _prefix_sum(df, order_cols, F.lit(1), out_col, None)
+    return _prefix_sum(df, order_cols, F.lit(1), "rank", None)
 
 
 def _prefix_sum(

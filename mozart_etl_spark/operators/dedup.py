@@ -11,18 +11,18 @@ Design for 100 TB:
   it is the *verification* oracle, not the discovery path. At scale,
   MinHash-LSH candidates feed ``jaccard_verify_pairs`` instead: a
   document-frequency cap cannot bind without losing true pairs
-  (COVERAGE.md, sf1.0).
+  (measured at sf1.0).
 - **minhash_lsh_pairs** — the discovery path: constant-size signature
   per doc (num_perm minima), banded into LSH buckets; candidate pairs
   come only from shared buckets, so the join is equi-join-shaped and
   AQE-skew-splittable. Probability a pair with Jaccard s collides:
   1 - (1 - s^r)^b with r = num_perm/bands rows per band.
-- **simhash** — 64-bit fingerprint; near-dups differ in few bits.
+- **simhash** — 60-bit fingerprint; near-dups differ in few bits.
   Hamming-ball search is a band join on fingerprint chunks.
 
-All hashing uses Spark's xxhash64 (deterministic, seed pinned) and a
-fixed-seed affine permutation family, so results are reproducible
-across runs and cluster sizes.
+All hashing uses Spark's xxhash64 (deterministic, seed pinned) or the
+portable md5-60 hash, and a fixed-seed affine permutation family, so
+results are reproducible across runs and cluster sizes.
 
 Every operator reads the bank's document columns: ``doc_id`` and
 ``text``.
@@ -83,19 +83,11 @@ def _gram_sql(n: int) -> str:
 def _hash64_sql(arg_sql: str, hash_fn: str) -> str:
     """SQL-expression text for the 64-bit integer hash of ``arg_sql``.
 
-    - ``"xxhash64"`` (engine default): Spark's JVM-native xxhash64 —
-      fastest, but not computable by other engines' SQL.
-    - ``"portable_md5_60"``: the first 15 hex chars of md5 parsed as a
-      60-bit non-negative BIGINT — chosen because every mainstream SQL
-      engine can reproduce it exactly (DuckDB:
-      ``('0x' || substr(md5(s), 1, 15))::BIGINT``), so the ENTIRE
-      MinHash/SimHash signature+banding chain becomes value-checkable
-      cross-engine (pure integer math after the hash). 60 bits keeps
-      the parse inside signed-int64 range on every engine. The
-      registered ``dedup_minhash_lsh`` / ``dedup_simhash`` queries use
-      this so the driver's DuckDB oracle certifies them end-to-end;
-      the xxhash64 default stays pinned by the arrow/JVM bit-identity
-      and recall property tests.
+    - ``"xxhash64"``: Spark's JVM-native xxhash64 — fastest, but not
+      computable by other engines' SQL. The certified dedup edge chain
+      (``_jaccard_edges``) signs its shingles with it.
+    - ``"portable_md5_60"``: :func:`_hash64_col`'s hash, the first 15
+      hex chars of md5 parsed as a 60-bit non-negative BIGINT.
     """
     if hash_fn == "xxhash64":
         return f"xxhash64({arg_sql})"
@@ -104,13 +96,16 @@ def _hash64_sql(arg_sql: str, hash_fn: str) -> str:
     raise ValueError(f"hash_fn must be 'xxhash64' or 'portable_md5_60', got {hash_fn!r}")
 
 
-def _hash64_col(col, hash_fn: str):
-    """Column form of :func:`_hash64_sql`."""
-    if hash_fn == "xxhash64":
-        return F.xxhash64(col)
-    if hash_fn == "portable_md5_60":
-        return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-    raise ValueError(f"hash_fn must be 'xxhash64' or 'portable_md5_60', got {hash_fn!r}")
+def _hash64_col(col):
+    """The portable 64-bit hash of ``col``: the first 15 hex chars of
+    md5 parsed as a 60-bit non-negative BIGINT. Every mainstream SQL
+    engine reproduces it exactly (DuckDB:
+    ``('0x' || substr(md5(s), 1, 15))::BIGINT``), so a MinHash or
+    SimHash chain over it is value-checkable cross-engine (pure integer
+    math after the hash), and the driver's DuckDB oracle certifies
+    ``dedup_minhash_lsh`` and ``dedup_simhash`` end-to-end. 60 bits
+    keep the parse inside signed-int64 range on every engine."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
 
 def exact_dedup(df: DataFrame) -> DataFrame:
@@ -231,8 +226,8 @@ def jaccard_verify_pairs(df: DataFrame, candidates: DataFrame, n: int = 3) -> Da
     approaches all-pairs, and df-capping cannot bind without losing
     true pairs (measured on the sf1.0 stress corpus: ~29k distinct
     shingles over 50k docs put 99.99% of join mass at df>20, so a
-    df cap both misses the mass and would destroy the signal —
-    COVERAGE.md). Restricting to LSH candidates makes the cost
+    df cap both misses the mass and would destroy the signal).
+    Restricting to LSH candidates makes the cost
     Omega(sum |shingles(doc_a)| over candidate pairs): linear in the
     candidate volume the banding already bounded.
 
@@ -623,14 +618,13 @@ def minhash_lsh_pairs(
     num_perm: int = 64,
     bands: int = 16,
     seed: int = 42,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """LSH-banded near-duplicate candidate pairs with estimated
     Jaccard (fraction of matching signature components).
 
-    ``hash_fn`` selects the shingle AND band hash
-    (:func:`_hash64_sql`): the portable choice makes the whole chain
-    value-checkable by another engine's SQL.
+    The shingle AND band hash is the portable md5-60 hash
+    (:func:`_hash64_col`), so the whole chain is value-checkable by
+    another engine's SQL.
 
     Output: (doc_a, doc_b, est_jaccard) with doc_a < doc_b, one row
     per candidate pair (deduped across bands). The candidate join is
@@ -655,11 +649,11 @@ def minhash_lsh_pairs(
     # tiny fixed-width signature table (num_perm*8 B/doc), keyed by
     # the same doc_id the re-attach joins already need.
     sigs = (
-        minhash_signatures(df, n, num_perm, seed, hash_fn=hash_fn)
+        minhash_signatures(df, n, num_perm, seed, hash_fn="portable_md5_60")
         .dropDuplicates(["doc_id"])
         .localCheckpoint(eager=False)
     )
-    return signature_band_pairs(sigs, num_perm, bands, hash_fn=hash_fn)
+    return signature_band_pairs(sigs, num_perm, bands, hash_fn="portable_md5_60")
 
 
 def signature_band_pairs(
@@ -726,14 +720,11 @@ def signature_band_pairs(
     )
 
 
-def simhash(df: DataFrame, hash_fn: str = "xxhash64") -> DataFrame:
-    """64-bit SimHash fingerprint per document.
-
-    ``hash_fn`` selects the token hash (:func:`_hash64_sql`). With
-    ``"portable_md5_60"`` the hash is a 60-bit value, so fingerprint
-    bits 60-63 are always clear (every token votes -1 there) — the
-    fingerprint is then a 60-bit SimHash, reproducible by any SQL
-    engine with md5; Hamming-distance semantics are unchanged.
+def simhash(df: DataFrame) -> DataFrame:
+    """SimHash fingerprint per document over the portable md5-60 token
+    hash (:func:`_hash64_col`). The hash is a 60-bit value, so
+    fingerprint bits 60-63 are always clear (every token votes -1
+    there): a 60-bit SimHash, reproducible by any SQL engine with md5.
 
     Token hashes vote per bit (+1 if set, -1 if clear); every token
     OCCURRENCE votes, not every distinct token. The fingerprint sets
@@ -754,9 +745,7 @@ def simhash(df: DataFrame, hash_fn: str = "xxhash64") -> DataFrame:
     """
     words = split_words(F.col("text"))
     base = df.select("doc_id", words.alias("w"))
-    hdf = base.select(
-        "doc_id", F.transform("w", lambda t: _hash64_col(t, hash_fn)).alias("h")
-    )
+    hdf = base.select("doc_id", F.transform("w", _hash64_col).alias("h"))
     out_schema = T.StructType(
         [
             T.StructField("doc_id", hdf.schema["doc_id"].dataType),

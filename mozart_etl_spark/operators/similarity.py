@@ -526,23 +526,27 @@ def candidate_pairs(keys: DataFrame, probe: DataFrame | None) -> DataFrame:
     return pairs.select(*ids).dropDuplicates(ids)
 
 
+#: :func:`lsh_knn` banding: hyperplanes per table and tables.
+_KNN_PLANES = 4
+_KNN_TABLES = 8
+
+
 def lsh_knn(
     queries: DataFrame,
     candidates: DataFrame,
     dim: int,
     k: int = 5,
-    n_planes: int = 8,
-    n_tables: int = 4,
     seed: int = 42,
 ) -> DataFrame:
     """Approximate cosine top-k via shared LSH buckets (equi-joins).
 
-    Multi-table LSH: ``n_tables`` independent bucketings (different
-    hyperplane seeds); a pair is a candidate if it collides in ANY
-    table. Collision probability for angle θ is
-    1 - (1 - (1 - θ/π)^n_planes)^n_tables — tables buy recall, planes
-    buy precision. Each table is one equi-join on (table_id, bucket);
-    candidates dedup before exact scoring so every pair is scored once.
+    Multi-table LSH: :data:`_KNN_TABLES` independent bucketings of
+    :data:`_KNN_PLANES` hyperplanes each (different hyperplane seeds);
+    a pair is a candidate if it collides in ANY table. Collision
+    probability for angle θ is 1 - (1 - (1 - θ/π)^planes)^tables —
+    tables buy recall, planes buy precision. Each table is one
+    equi-join on (table_id, bucket); candidates dedup before exact
+    scoring so every pair is scored once.
     """
     # Corrupt (NaN/±Inf) vectors are dropped from both sides BEFORE
     # banding (module corrupt-vector policy): the banding kernel maps
@@ -560,10 +564,10 @@ def lsh_knn(
     candidates = drop_ragged_vectors(
         drop_corrupt_vectors(candidates, "embedding"), "embedding", dim
     )
-    qb = lsh_banded(queries, dim, "query_id", "qv", n_planes, n_tables, seed).select(
+    qb = lsh_banded(queries, dim, "query_id", "qv", _KNN_PLANES, _KNN_TABLES, seed).select(
         "query_id", "table_id", "bucket"
     )
-    cb = lsh_banded(candidates, dim, "neighbor_id", "cv", n_planes, n_tables, seed).select(
+    cb = lsh_banded(candidates, dim, "neighbor_id", "cv", _KNN_PLANES, _KNN_TABLES, seed).select(
         "neighbor_id", "table_id", "bucket"
     )
     pairs = candidate_pairs(cb, qb)
@@ -643,8 +647,7 @@ def auto_lsh_params(n_rows: int, threshold: float) -> tuple[int, int]:
     (min planes, max tables) misses the recall target the function
     raises ValueError naming the gap, because silently returning a
     configuration that is either unaffordable or under-recall would
-    hide exactly the failure this resolver exists to prevent. Pick
-    explicit parameters in that regime.
+    hide exactly the failure this resolver exists to prevent.
 
     At the driver corpus (~500-2k vectors, threshold 0.95) this
     resolves to ~(6, 4) — the certified explicit configuration's
@@ -667,8 +670,7 @@ def auto_lsh_params(n_rows: int, threshold: float) -> tuple[int, int]:
     raise ValueError(
         f"auto_lsh_params: recall target {_LSH_RECALL} at threshold {threshold} "
         f"needs more than max_tables={_LSH_MAX_TABLES} tables even at min_planes="
-        f"{lo} (per-table collision odds {p**lo:.3g}); pass "
-        "explicit (n_planes, n_tables)"
+        f"{lo} (per-table collision odds {p**lo:.3g})"
     )
 
 
@@ -683,7 +685,7 @@ _CAND_PAIR_BYTES = 48
 
 
 def _rescore_parallelism_rescue(
-    cand: DataFrame, n_rows: int | None, n_planes: int, n_tables: int
+    cand: DataFrame, n_rows: int, n_planes: int, n_tables: int
 ) -> DataFrame:
     """Repartition the id-only candidate pairs before the vector
     re-attach when AQE's BYTE-based partition coalescing would leave
@@ -703,12 +705,8 @@ def _rescore_parallelism_rescue(
     SKIPPED when AQE's own byte math already yields at least that
     many partitions — at cluster scale the candidate table is
     gigabytes and coalescing never under-shoots, so this inserts no
-    shuffle there. Only the auto-params path (which already counted
-    the corpus) can estimate volume; explicit-params callers are
-    unchanged.
+    shuffle there.
     """
-    if n_rows is None or n_rows <= 0:
-        return cand
     spark = cand.sparkSession
     est_pairs = int(n_tables * n_rows * (n_rows / 2**n_planes) / 2)
     justified = min(
@@ -725,15 +723,16 @@ def _rescore_parallelism_rescue(
     return cand
 
 
+#: Largest (table_id, bucket) :func:`lsh_near_dup_pairs` self-joins;
+#: a fuller bucket is dropped before the join.
+_MAX_BUCKET_SIZE = 256
+
+
 def lsh_near_dup_pairs(
     df: DataFrame,
     dim: int,
     threshold: float = 0.95,
-    n_planes: int | str = 8,
-    n_tables: int = 8,
     seed: int = 42,
-    max_bucket_size: int | None = None,
-    collapse_identical: bool = False,
 ) -> DataFrame:
     """Embedding near-duplicate pairs at scale: LSH-bucketed candidate
     generation + exact cosine rescoring — never an all-pairs join.
@@ -742,93 +741,74 @@ def lsh_near_dup_pairs(
     cosine >= ``threshold``. Self-join on (table_id, bucket): only
     vectors that collide in at least one LSH table are scored, so the
     join stays equi-join-shaped (AQE-skew-splittable) and the scored
-    fraction shrinks with bucket granularity. For cosine >= 0.95
-    (angle <= ~18 deg) a single 8-plane table collides with p ~= 0.43;
-    8 independent tables give pair recall ~= 1 - (1-0.43)^8 > 0.98 —
-    pinned against the exact all-pairs twin in tests.
+    fraction shrinks with bucket granularity.
 
-    ``n_planes="auto"`` resolves BOTH banding parameters from the
-    actual corpus size and ``threshold`` via :func:`auto_lsh_params`
-    (``n_tables`` is then ignored): bucket occupancy stays ~constant
-    as the corpus grows, so candidate volume grows linearly instead of
-    quadratically, and table count preserves the recall target. Costs
-    one ``count()`` of the input (parquet-metadata-cheap). "auto" is
-    the certified default of the registered ``dedup_embedding_lsh``
-    query since r7 — the sf1.0 stress decade measured the fixed 6x6
-    configuration at 10.7x/decade growth vs 1.8x under "auto", with
-    the identical 20-pair output (SCALING.md / COVERAGE.md); explicit
-    integers remain available where exact banding reproducibility
-    across differently-sized corpora matters more than scaling.
+    Three stages, in order:
 
-    ``max_bucket_size`` (default ``None`` = off, identical plan) is
-    the embedding twin of the MinHash band join's hot-bucket cap
-    (:func:`~mozart_etl_spark.operators.dedup.signature_band_pairs`):
-    a cluster of IDENTICAL embeddings (one document ingested k times)
-    lands in the same bucket of every table and pairs quadratically —
-    occupancy-tuned planes cannot damp true identical-vector
-    clusters. When set, any (table_id, bucket) with more than this
-    many members is dropped before the self-join, bounding worst-case
-    candidates at n_buckets·cap² per table. A pair lost with one hot
-    bucket still collides in its other ``n_tables-1`` tables
-    independently; the recall loss concentrates on clusters larger
-    than the cap, whose true pair set is quadratic.
-
-    ``collapse_identical`` (default ``False`` = exact current
-    behavior) stages the embedding analogue of the MinHash chain's
-    exact-duplicate collapse (:func:`label_representatives` holds the
-    rationale) — the companion that makes a cap safe under the
-    giant-identical-cluster adversary (one document embedded k times:
-    every bucket of every table is hot, so a cap alone would drop the
-    WHOLE cluster). Identical vectors — md5 of the STRING rendering of
-    the double array, so "identical" means value-identical after the
-    double cast; zero-norm, NULL, and NaN-containing vectors stay
-    singletons — collapse to their representative before banding;
-    members rejoin as (rep, member) star edges with cosine exactly
-    1.0. The output is then the SPANNING structure per identical-byte
-    cluster rather than all C(k,2) pairs (k-1 star edges; cross-cluster
-    pairs appear once at rep level). Distinct-byte vectors (e.g.
-    positively scaled copies) are NOT collapsed and flow through
-    banding as before.
+    - **Collapse identical vectors** — the embedding analogue of the
+      MinHash chain's exact-duplicate collapse
+      (:func:`label_representatives` holds the rationale). Identical
+      vectors — md5 of the STRING rendering of the double array, so
+      "identical" means value-identical after the double cast;
+      zero-norm, NULL, corrupt and ragged vectors stay singletons —
+      collapse to their representative before banding; members rejoin
+      as (rep, member) star edges with cosine exactly 1.0. The output
+      is the SPANNING structure per identical-byte cluster rather than
+      all C(k,2) pairs (k-1 star edges; cross-cluster pairs appear
+      once at rep level). Distinct-byte vectors (e.g. positively
+      scaled copies) are NOT collapsed and flow through banding.
+    - **Resolve the banding** from the representatives' count and
+      ``threshold`` via :func:`auto_lsh_params`: bucket occupancy
+      stays ~constant as the corpus grows, so candidate volume grows
+      linearly instead of quadratically, and the table count holds the
+      recall target. Costs one ``count()`` of the representatives. The
+      sf1.0 stress decade measured a fixed 6x6 configuration at
+      10.7x/decade growth vs 1.8x resolved, with the identical 20-pair
+      output (SCALING.md).
+    - **Cap hot buckets** — the embedding twin of the MinHash band
+      join's hot-bucket cap
+      (:func:`~mozart_etl_spark.operators.dedup.signature_band_pairs`):
+      any (table_id, bucket) with more than :data:`_MAX_BUCKET_SIZE`
+      members is dropped before the self-join, bounding worst-case
+      candidates at n_buckets·cap² per table. Occupancy-tuned planes
+      cannot damp a cluster of near-identical but byte-distinct
+      vectors; the collapse above keeps a cluster of identical ones
+      out of every bucket, so the cap never drops a whole identical
+      cluster. A pair lost with one hot bucket still collides in its
+      other tables independently; the recall loss concentrates on
+      clusters larger than the cap, whose true pair set is quadratic.
     """
-    if max_bucket_size is not None and max_bucket_size < 2:
-        raise ValueError("max_bucket_size must be >= 2 (a bucket of 2 is one pair)")
-    star = None
-    if collapse_identical:
-        base = df.select(F.col("vec_id").alias("_cid"), _as_double(F.col("embedding")).alias("_cv"))
-        # zero-norm / NULL / NaN / Inf / ragged vectors never reach
-        # the threshold filter on the band path (cosine is NULL or
-        # NaN there — for Inf pairs the division is Inf/Inf = NaN;
-        # ragged vectors are excluded by lsh_banded's dim guard), so
-        # a 1.0 star edge for them would be wrong — each stays its
-        # own singleton group. NaN and Inf each need the explicit
-        # guard: Spark sorts NaN greatest and +Inf above every
-        # finite, so a plain norm>0 test would collapse NaN- or
-        # Inf-identical vectors into cosine-1.0 star edges their true
-        # (NaN) cosine does not support (module corrupt-vector
-        # policy, norm form). Ragged needs its own guard here (r12):
-        # a truncated vector has a clean norm > 0, and two identical
-        # ragged vectors WOULD collapse into a star edge the band
-        # path never supports for them.
-        norm = F.sqrt(_dot(F.col("_cv"), F.col("_cv")))
-        key = F.when(
-            (norm > 0) & _norm_is_clean(norm) & _dim_ok(F.col("_cv"), dim),
-            F.md5(F.col("_cv").cast("string")),
-        ).otherwise(F.concat(F.lit("__solo__"), F.col("_cid").cast("string")))
-        base = label_representatives(base.withColumn("_vfp", key), "_cid", "_vfp").localCheckpoint(
-            eager=False
-        )
-        star = base.filter(F.col("_cid") != F.col("_rep_id")).select(
-            F.col("_rep_id").alias("doc_a"),
-            F.col("_cid").alias("doc_b"),
-            F.lit(1.0).alias("cosine"),
-        )
-        df = base.filter(F.col("_rn") == 1).select(
-            F.col("_cid").alias("vec_id"), F.col("_cv").alias("embedding")
-        )
-    n_rows = None
-    if n_planes == "auto":
-        n_rows = df.count()
-        n_planes, n_tables = auto_lsh_params(n_rows, threshold)
+    base = df.select(F.col("vec_id").alias("_cid"), _as_double(F.col("embedding")).alias("_cv"))
+    # zero-norm / NULL / NaN / Inf / ragged vectors never reach the
+    # threshold filter on the band path (cosine is NULL or NaN there —
+    # for Inf pairs the division is Inf/Inf = NaN; ragged vectors are
+    # excluded by lsh_banded's dim guard), so a 1.0 star edge for them
+    # would be wrong — each stays its own singleton group. NaN and Inf
+    # each need the explicit guard: Spark sorts NaN greatest and +Inf
+    # above every finite, so a plain norm>0 test would collapse NaN- or
+    # Inf-identical vectors into cosine-1.0 star edges their true (NaN)
+    # cosine does not support (module corrupt-vector policy, norm
+    # form). Ragged needs its own guard here (r12): a truncated vector
+    # has a clean norm > 0, and two identical ragged vectors WOULD
+    # collapse into a star edge the band path never supports for them.
+    norm = F.sqrt(_dot(F.col("_cv"), F.col("_cv")))
+    key = F.when(
+        (norm > 0) & _norm_is_clean(norm) & _dim_ok(F.col("_cv"), dim),
+        F.md5(F.col("_cv").cast("string")),
+    ).otherwise(F.concat(F.lit("__solo__"), F.col("_cid").cast("string")))
+    base = label_representatives(base.withColumn("_vfp", key), "_cid", "_vfp").localCheckpoint(
+        eager=False
+    )
+    star = base.filter(F.col("_cid") != F.col("_rep_id")).select(
+        F.col("_rep_id").alias("doc_a"),
+        F.col("_cid").alias("doc_b"),
+        F.lit(1.0).alias("cosine"),
+    )
+    df = base.filter(F.col("_rn") == 1).select(
+        F.col("_cid").alias("vec_id"), F.col("_cv").alias("embedding")
+    )
+    n_rows = df.count()
+    n_planes, n_tables = auto_lsh_params(n_rows, threshold)
     # Vectors (with norms precomputed once per doc, not once per pair)
     # re-attach to the id-only candidates for the exact rescoring; at
     # this table size AQE picks a broadcast for the vector side, at
@@ -841,14 +821,13 @@ def lsh_near_dup_pairs(
     b = lsh_banded(df, dim, "doc_id", "v", n_planes, n_tables, seed).select(
         "doc_id", "table_id", "bucket"
     )
-    if max_bucket_size is not None:
-        # applied BEFORE the checkpoint barrier so the occupancy window
-        # is evaluated once into the materialized blocks — after it,
-        # both self-join sides would recompute the count independently
-        bucket_n = F.count(F.lit(1)).over(Window.partitionBy("table_id", "bucket"))
-        b = b.withColumn("_bucket_n", bucket_n).filter(
-            F.col("_bucket_n") <= max_bucket_size
-        ).drop("_bucket_n")
+    # the cap applies BEFORE the checkpoint barrier so the occupancy
+    # window is evaluated once into the materialized blocks — after
+    # it, both self-join sides would recompute the count independently
+    bucket_n = F.count(F.lit(1)).over(Window.partitionBy("table_id", "bucket"))
+    b = b.withColumn("_bucket_n", bucket_n).filter(
+        F.col("_bucket_n") <= _MAX_BUCKET_SIZE
+    ).drop("_bucket_n")
     cand = candidate_pairs(b.localCheckpoint(eager=False), None)
     cand = _rescore_parallelism_rescue(cand, n_rows, n_planes, n_tables)
     vecs = _vectors(df, "doc_id", "v", "n")
@@ -867,15 +846,13 @@ def lsh_near_dup_pairs(
     # inlining the fold into each conjunct; `>=` comes first, so a
     # pair below the threshold folds once and only a pair past it
     # folds again.
-    out = (
+    return (
         cand.join(va, "doc_a")
         .join(vb, "doc_b")
         .filter((cos_raw >= threshold) & ~F.isnan(cos_raw))
         .select("doc_a", "doc_b", (F.round(cos_raw, 4) + F.lit(0.0)).alias("cosine"))
+        .unionByName(star)
     )
-    if star is not None:
-        out = out.unionByName(star)
-    return out
 
 
 def quantize_embeddings(df: DataFrame) -> DataFrame:

@@ -228,7 +228,11 @@ def ngram_phrase_counts(df: DataFrame) -> DataFrame:
     )
 
 
-def cooccurrence_pmi(df: DataFrame, max_vocab: int | None = None) -> DataFrame:
+#: :func:`cooccurrence_pmi`'s cap on each document's presence set.
+_MAX_VOCAB = 512
+
+
+def cooccurrence_pmi(df: DataFrame) -> DataFrame:
     """Document-level token co-occurrence with pointwise mutual
     information — the association statistic behind embedding-training
     corpora (word2vec/GloVe co-occurrence matrices) and collocation
@@ -261,10 +265,10 @@ def cooccurrence_pmi(df: DataFrame, max_vocab: int | None = None) -> DataFrame:
     Rows sharing an id with CONFLICTING text are upstream
     corruption, out of contract (an arbitrary copy wins).
 
-    Scale: cost is Σ_d |V_d|² on the pair join. ``max_vocab`` is the
-    bound (r12 giant-document axis — one 175k-distinct-token crawl
+    Scale: cost is Σ_d |V_d|² on the pair join. :data:`_MAX_VOCAB` is
+    the bound (r12 giant-document axis — one 175k-distinct-token crawl
     document is ~1.5e10 pairs, measured unbounded): each document's
-    presence set is capped to its ``max_vocab`` tokens with the
+    presence set is capped to its :data:`_MAX_VOCAB` tokens with the
     SMALLEST md5 — a deterministic uniform sample of the vocabulary
     that both engines order identically (md5 hex is pure ASCII).
     Raw-token order would ALSO agree on this engine — measured r13:
@@ -277,20 +281,18 @@ def cooccurrence_pmi(df: DataFrame, max_vocab: int | None = None) -> DataFrame:
     The cap is applied to the presence array per row (shuffle-free
     struct sort + slice), so marginals, pair counts, and PMI all see
     the same capped universe; documents under the cap are unaffected.
-    ``None`` keeps the exact unbounded semantics.
     """
     arr = F.array_distinct(split_words(F.col("text")))
-    if max_vocab is not None:
-        arr = F.transform(
-            F.slice(
-                F.array_sort(
-                    F.transform(arr, lambda t: F.struct(F.md5(t).alias("h"), t.alias("t")))
-                ),
-                1,
-                max_vocab,
+    arr = F.transform(
+        F.slice(
+            F.array_sort(
+                F.transform(arr, lambda t: F.struct(F.md5(t).alias("h"), t.alias("t")))
             ),
-            lambda s: s["t"],
-        )
+            1,
+            _MAX_VOCAB,
+        ),
+        lambda s: s["t"],
+    )
     # Materialization barrier (r15, guide §1.2): the presence table
     # feeds the marginal aggregation and BOTH self-join sides, and the
     # static plan re-ran the scan + id-dedup + explode for every

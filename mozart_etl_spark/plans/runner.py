@@ -76,15 +76,22 @@ class ModelRunner:
         # single-source tenants: every source group maps to the raw layer
         return f"{self.raw_namespace}.{tbl}"
 
-    def _drop_conflicting(self, target: str, want: str) -> None:
-        """Drop ``target`` only when it exists as the OTHER object
-        kind: DROP TABLE on a view (and saveAsTable onto a view) is
-        WRONG_COMMAND_FOR_OBJECT_TYPE, so materialization changes
-        (table <-> view) must clear the old object first. Same-kind
-        re-runs are left to CREATE OR REPLACE / overwrite."""
+    def _kind(self, target: str) -> str | None:
+        """``target``'s catalog object kind: None when it is absent,
+        else its upper-cased table type (``"VIEW"``, ``"MANAGED"``, …)."""
         if not self.spark.catalog.tableExists(target):
+            return None
+        return (self.spark.catalog.getTable(target).tableType or "").upper()
+
+    def _drop_conflicting(self, target: str, want: str, kind: str | None) -> None:
+        """Drop ``target`` (of catalog kind ``kind``) only when it exists
+        as the OTHER object kind: DROP TABLE on a view (and saveAsTable
+        onto a view) is WRONG_COMMAND_FOR_OBJECT_TYPE, so
+        materialization changes (table <-> view) must clear the old
+        object first. Same-kind re-runs are left to CREATE OR REPLACE /
+        overwrite."""
+        if kind is None:
             return
-        kind = (self.spark.catalog.getTable(target).tableType or "").upper()
         if want == "view" and kind != "VIEW":
             self.spark.sql(f"DROP TABLE IF EXISTS {target}")
         elif want != "view" and kind == "VIEW":
@@ -136,8 +143,8 @@ class ModelRunner:
             def launch_ready() -> None:
                 for name in [n for n, deps in waiting.items() if not deps]:
                     del waiting[name]
-                    incremental_run, model = self._render(name, graph, targets[name], resolve_ref)
-                    fut = pool.submit(self._materialize, model, targets[name], incremental_run)
+                    kind, model = self._render(name, graph, targets[name], resolve_ref)
+                    fut = pool.submit(self._materialize, model, targets[name], kind)
                     running[fut] = name
 
             launch_ready()
@@ -166,31 +173,37 @@ class ModelRunner:
 
     def _render(
         self, name: str, graph: ModelGraph, target: str, resolve_ref
-    ) -> tuple[bool, RenderedModel]:
-        # dbt semantics: is_incremental() is True only when the model
-        # is materialized 'incremental' AND the target already exists
-        incremental_run = graph.models[
-            name
-        ].materialized == "incremental" and self.spark.catalog.tableExists(target)
-        return incremental_run, render_model(
+    ) -> tuple[str | None, RenderedModel]:
+        """(``target``'s catalog kind, the rendered model). The one
+        catalog lookup of the target serves ``is_incremental()`` and
+        :meth:`_materialize`'s conflict drop."""
+        kind = self._kind(target)
+        return kind, render_model(
             os.path.join(self.models_dir, f"{name}.sql"),
             variables=self.variables,
             resolve_source=self._resolve_source,
             resolve_ref=resolve_ref,
             frozen_clock=self.frozen_clock,
-            is_incremental=incremental_run,
+            is_incremental=self._incremental_run(graph.models[name].materialized, kind),
             this=target,
         )
 
-    def _materialize(self, model: RenderedModel, target: str, incremental_run: bool) -> int:
-        """Run one rendered model into ``target``; returns its row count."""
+    @staticmethod
+    def _incremental_run(materialized: str, kind: str | None) -> bool:
+        # dbt semantics: is_incremental() is True only when the model
+        # is materialized 'incremental' AND the target already exists
+        return materialized == "incremental" and kind is not None
+
+    def _materialize(self, model: RenderedModel, target: str, kind: str | None) -> int:
+        """Run one rendered model into ``target``, whose catalog kind
+        was ``kind`` at render time; returns its row count."""
         df = self.spark.sql(model.sql)
-        self._drop_conflicting(target, model.materialized)
+        self._drop_conflicting(target, model.materialized, kind)
         if model.materialized == "view":
             self.spark.sql(f"CREATE OR REPLACE VIEW {target} AS {model.sql}")
             # nothing is written for a view, so counting is a query
             return self.spark.table(target).count()
-        if model.materialized == "incremental" and incremental_run:
+        if self._incremental_run(model.materialized, kind):
             # delta-only: merge on unique_key when configured
             # (dbt's incremental+unique_key), plain append otherwise
             unique_key = model.config.get("unique_key")

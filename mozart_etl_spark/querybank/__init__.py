@@ -74,70 +74,70 @@ def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = (), d
 #: rows for exactly the first 50 entries of ``queries()`` in dict
 #: order, so entry order decides which queries get certified each
 #: round.
-#: Round-18 rotation (no plan changed this round: a whole-bank plan
-#: capture at sf0.01 is identical to round 17's): (a) the 9 rows the
-#: round-17 window left out, last certified in round 15, lead in the
-#: order its comment named them; (b) 41 of the 49 rows round 16
-#: certified and round 17 did not fill the window, in round 16's
-#: window order. The 8 that don't fit — both_segments_nations,
-#: events_markov_transitions, nation_revenue_running_share,
-#: range_join_click_views, customer_order_distribution,
-#: nation_market_share, disjunctive_filter_revenue,
-#: events_salted_enrich — rotate first next round. COVERAGE.md
-#: carries the per-query round map.
+#: Round-19 rotation: (a) corpus_pii_scrub, the one query whose plan
+#: changed this round (its synthetic text column is now named text);
+#: (b) the 8 rows round 16 certified and rounds 17-18 did not, in the
+#: order the round-18 comment named them; (c) the 41 oldest rows,
+#: certified in round 17 and not since, in round 17's window order.
+#: The 8 round-17 rows that don't fit — order_price_buckets,
+#: text_lang_confusion, text_bpe_token_stats, events_key_skew_profile,
+#: events_by_type, latest_event_per_user, top_supplier_revenue,
+#: promo_revenue_ratio — rotate first next round. COVERAGE.md carries
+#: the per-query round map.
 DRIVER_PRIORITY: tuple[str, ...] = (
-    # (a) certified in round 15, left out of round 17
-    "pricing_summary",
-    "text_repetition_stats",
-    "idle_rich_customers",
-    "segment_year_pivot",
-    "order_priority_waiting",
-    "events_retention_cohorts",
-    "revenue_rollup",
-    "multimodal_manifest",
-    "corpus_temperature_mix",
-    # (b) certified in round 16, left out of round 17
-    "streaming_hourly_counts",
-    "streaming_sessionize",
-    "streaming_running_totals",
-    "streaming_continuous_aggregate",
-    "streaming_interval_join",
-    "event_props_json",
-    "events_sessionize",
-    "revenue_cube",
-    "big_spenders",
-    "distinct_parts_per_flag",
-    "lineitem_stats",
-    "dedup_simhash",
-    "small_quantity_revenue",
-    "top_orders_revenue",
-    "order_price_quantiles",
-    "text_tfidf_top_terms",
-    "text_bigram_cross_entropy",
-    "segment_nation_list",
-    "text_token_stats",
-    "dedup_exact",
-    "incremental_range_scan",
-    "part_name_word_counts",
-    "text_fingerprint",
-    "events_hourly_histogram",
-    "party_nation_counts",
-    "embedding_centroids",
-    "customers_with_orders",
-    "customers_without_recent_orders",
-    "text_quality_score",
-    "corpus_pack_sequences",
-    "embedding_quantize_check",
-    "multimodal_frame_sample",
-    "events_intervisit_gaps",
-    "multimodal_features",
-    "multimodal_resize_grid",
-    "events_orphan_users",
-    "corpus_source_cap",
-    "high_value_only_custkeys",
-    "nation_revenue_rank",
-    "events_user_sketch_rollup",
-    "text_top_bigrams",
+    # (a) plan changed this round
+    "corpus_pii_scrub",
+    # (b) certified in round 16, left out of rounds 17 and 18
+    "both_segments_nations",
+    "events_markov_transitions",
+    "nation_revenue_running_share",
+    "range_join_click_views",
+    "customer_order_distribution",
+    "nation_market_share",
+    "disjunctive_filter_revenue",
+    "events_salted_enrich",
+    # (c) certified in round 17, left out of round 18
+    "corpus_clean",
+    "corpus_incremental_dedup",
+    "customer_balance_deciles",
+    "corpus_shard_plan",
+    "dedup_components",
+    "dedup_canonical",
+    "regional_supplier_revenue",
+    "distinct_parts_approx",
+    "large_order_customers",
+    "order_price_quantiles_approx",
+    "events_funnel",
+    "part_name_typo_pairs",
+    "orders_column_profile",
+    "decimal_uplift_totals",
+    "etl_mart_customer",
+    "corpus_chunks_overlap",
+    "dedup_minhash_lsh",
+    "dedup_ngram_jaccard",
+    "corpus_span_scrub",
+    "corpus_repeated_spans",
+    "text_cooccurrence_pmi",
+    "knn_lsh_cosine",
+    "knn_ivf_cosine",
+    "knn_bruteforce_cosine",
+    "dedup_embedding_lsh",
+    "dedup_embedding_cosine",
+    "asof_click_view",
+    "corpus_chunks",
+    "corpus_decontaminate",
+    "cross_nation_trade",
+    "select_project_filter",
+    "string_functions",
+    "top_parts_by_price",
+    "part_catalog_enriched",
+    "corpus_sample_balanced",
+    "corpus_shuffle_slice",
+    "mart_item_master",
+    "text_rolling_hash",
+    "orders_by_year",
+    "corpus_weighted_sample",
+    "text_stopword_ratio",
 )
 
 

@@ -152,8 +152,7 @@ def corpus_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def corpus_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     capped = corpus_ops.cap_per_group(
-        docs, group_col="source", id_col="doc_id", cap=_SOURCE_CAP,
-        seed=_CAP_SEED, salt_buckets=8,
+        docs, group_col="source", id_col="doc_id", cap=_SOURCE_CAP, seed=_CAP_SEED
     )
     return capped.select("doc_id", "source", "rn")
 
@@ -409,9 +408,9 @@ def corpus_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id").cast("string"),
             F.lit("@example.com or call 555-"),
             F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-        ).alias("t"),
+        ).alias("text"),
     )
-    return corpus_ops.scrub_pii(synth, text_col="t").select(
+    return corpus_ops.scrub_pii(synth).select(
         "doc_id", "clean_text", "n_email", "n_phone"
     )
 

@@ -64,8 +64,8 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SMALL-CORPUS twin by design: scoring every co-shingled pair is "
     "inherently Omega(sum df^2) over the shingle df distribution "
     "(~13x/decade at the sf1.0 stress bench; df-capping cannot bind "
-    "on low-vocabulary corpora without destroying signal — "
-    "COVERAGE.md). At scale, generate candidates with MinHash-LSH and "
+    "on low-vocabulary corpora without destroying signal). At scale, "
+    "generate candidates with MinHash-LSH and "
     "verify exactly on candidates only (jaccard_verify_pairs) — the "
     "certified edge chain of dedup_components/dedup_canonical.",
     oracle=f"""
@@ -125,17 +125,16 @@ _MINHASH_PERMS_SQL = ",\n            ".join(
     tags=("dedup", "documents", "approx"),
     doc="MinHash + LSH banding near-dup candidates (the 100 TB path: "
     "no all-pairs join, candidates only from shared LSH buckets, "
-    "then exact-Jaccard verification of candidates). Registered with "
-    "hash_fn='portable_md5_60' (60-bit md5-prefix shingle/band hash) "
+    "then exact-Jaccard verification of candidates). The operator uses "
+    "the portable 60-bit md5-prefix shingle/band hash, "
     "so the ENTIRE chain is value-checked against the DuckDB oracle "
     "below — everything downstream of the hash is pure int64 math "
     "(affine permutation minima mod 2^31-1, band-hash equality, "
     "match-count ratio), so the comparison is bit-exact, no float "
-    "tolerance anywhere. The engine default stays xxhash64 "
-    "(JVM-native, faster); its arrow/JVM bit-identity and recall "
-    "floors remain pinned in tests/test_dedup_hash_properties.py and "
-    "tests/test_lsh_bucket_properties.py, and the certified "
-    "dedup_components/dedup_canonical chain runs it unchanged. "
+    "tolerance anywhere. The certified dedup_components/"
+    "dedup_canonical chain signs with xxhash64 (JVM-native, faster); "
+    "its arrow/JVM bit-identity stays pinned in "
+    "tests/test_dedup_hash_properties.py. "
     "est_jaccard = k/64 is exactly representable in binary (64 is a "
     "power of two), and both engines round doubles half-away-from-"
     "zero, so round(.,4) agrees even at the reachable exact 4dp "
@@ -192,9 +191,7 @@ _MINHASH_PERMS_SQL = ",\n            ".join(
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents", fan_out=True)
-    return dedup_ops.minhash_lsh_pairs(
-        docs, n=3, num_perm=64, bands=16, hash_fn="portable_md5_60"
-    )
+    return dedup_ops.minhash_lsh_pairs(docs, n=3, num_perm=64, bands=16)
 
 
 @register(
@@ -203,13 +200,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="SimHash fingerprint per document (token hashes vote per bit, "
     "every occurrence counts; the fingerprint sets each bit with a "
     "positive vote). Near-dups share fingerprints within small "
-    "Hamming distance. Registered with hash_fn='portable_md5_60': a "
-    "60-bit md5-prefix token hash both engines compute identically, "
+    "Hamming distance. Tokens hash with the portable 60-bit "
+    "md5-prefix hash both engines compute identically, "
     "so the fingerprint (bits 60-63 always clear — every token votes "
     "-1 there) is value-checked bit-exactly by the DuckDB oracle — "
-    "pure integer votes, no tolerance. The engine default stays "
-    "xxhash64 (64-bit, JVM-native), pinned by the arrow/JVM "
-    "bit-identity property tests. Vote ties (v=0) clear the bit on "
+    "pure integer votes, no tolerance. Vote ties (v=0) clear the bit on "
     "both sides (strictly-positive test: a bit is set iff "
     "2*count(bit set) > n_tokens); NULL text -> NULL fingerprint, "
     "empty token list -> 0. The oracle is ROW-FAITHFUL (list lambdas, "
@@ -239,7 +234,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents", fan_out=True)
-    return dedup_ops.simhash(docs, hash_fn="portable_md5_60")
+    return dedup_ops.simhash(docs)
 
 
 # ---------------------------------------------------------------------------
@@ -465,7 +460,7 @@ def text_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    return text_ops.cooccurrence_pmi(docs, max_vocab=512)
+    return text_ops.cooccurrence_pmi(docs)
 
 
 @register(
@@ -768,13 +763,13 @@ _OVF = "1.3407807929942596e154"
 def knn_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return sim_ops.lsh_knn(queries, emb, dim=_EMBEDDING_DIM, k=5, n_planes=4, n_tables=8)
+    return sim_ops.lsh_knn(queries, emb, dim=_EMBEDDING_DIM, k=5)
 
 
 def _jaccard_edges(docs: DataFrame) -> DataFrame:
     """The certified at-scale Jaccard>=0.5 edge generator shared by
     dedup_components / dedup_canonical (measured against the exact
-    edge set in r6, COVERAGE.md; banding re-resolved r7 after the sf10
+    edge set in r6; banding re-resolved r7 after the sf10
     second-decade probe): MinHash-LSH candidate pairs banded at
     minhash_lsh_params(0.5) -> (num_perm=90, bands=30, r=3) — a true
     j=0.5 pair collides in >=1 of the 30
@@ -1018,7 +1013,7 @@ def dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     "banding auto_lsh_params resolves for the DRIVER corpus: 520 "
     "post-collapse representatives (500 vectors + 20 scaled twins, "
     "zero identical-vector groups at both sf0.001 and sf0.01) -> "
-    "(n_planes=5, n_tables=4); any n in (512, 1024] resolves the "
+    "(5 planes, 4 tables); any n in (512, 1024] resolves the "
     "same, so the edge-variant corpora stay inside the plane count "
     "(pinned in tests/test_llmops_queries.py). Collapse identity is "
     "grouped on an injective rendering of the double vector on both "
@@ -1034,8 +1029,8 @@ def dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Previous doc (still the operator story): Embedding "
     "near-duplicate pairs at scale — the PRIMARY "
     "embedding-dedup entry: LSH-bucketed candidate generation with "
-    "n_planes='auto' (the certified default since r7: auto_lsh_params "
-    "resolves planes from corpus size so bucket occupancy stays "
+    "banding resolved by auto_lsh_params (since r7: planes from "
+    "corpus size so bucket occupancy stays "
     "~constant as the corpus grows, and tables from the threshold so "
     "pair recall >= 0.95 is preserved — the sf1.0 stress decade "
     "measured 1.8x/decade growth under auto vs 10.7x for the "
@@ -1043,8 +1038,8 @@ def dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exact cosine rescoring, unbounded input. Equi-join on (table_id, "
     "bucket); never an all-pairs join, so it survives 100x — the "
     "bounded all-pairs dedup_embedding_cosine is kept only as its "
-    "exact oracle twin. Since r8 the registered configuration also "
-    "runs collapse_identical=True + max_bucket_size=256 — the "
+    "exact oracle twin. Since r8 the chain also collapses identical "
+    "vectors and caps buckets at 256 members — the "
     "giant-identical-cluster defense measured at sf10 in r7: "
     "value-identical vectors collapse to a min-id representative "
     "before banding (members rejoin as cosine-1.0 star edges, "
@@ -1054,9 +1049,9 @@ def dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ZERO verified edges, and cap-only without collapse is the unsafe "
     "combination (one doc embedded 20k times: every bucket hot, "
     "cap-only silently loses the whole cluster, collapse+cap returns "
-    "all 20k star edges faster). Pre-certified in r7: "
-    "tests/test_lsh_bucket_cap.py pins this exact config bit-identical "
-    "to the r7-certified one on the driver corpus. The staging's "
+    "all 20k star edges faster). tests/test_lsh_bucket_cap.py pins "
+    "its output bit-identical to an uncollapsed, uncapped Python model "
+    "on the driver corpus. The staging's "
     "fixed cost is measured and accepted (AB_r09.json, config-level "
     "same-epoch A/B, both calib axes flat-or-favoring): 1.24x at "
     "sf0.1 (~0.55 s absolute), identical output — it amortizes with "
@@ -1161,8 +1156,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("embedding"),
     )
     return sim_ops.lsh_near_dup_pairs(
-        emb.unionByName(twins), dim=_EMBEDDING_DIM, threshold=0.95, n_planes="auto",
-        collapse_identical=True, max_bucket_size=256,
+        emb.unionByName(twins), dim=_EMBEDDING_DIM, threshold=0.95
     )
 
 

@@ -1063,7 +1063,7 @@ def customer_balance_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n comes from the per-partition counts the ranker already
     # collected (r15, guide §1.2): a ranked.count() would schedule a
     # whole extra pass over the ranked table for it
-    ranked, total = global_row_number(c, ["c_acctbal", "c_custkey"], out_col="rank")
+    ranked, total = global_row_number(c, ["c_acctbal", "c_custkey"])
     # EXACT SQL ntile(k): with n = qk + r, the FIRST r buckets get q+1
     # rows and the rest get q — ((rank-1)*k) div n spreads the
     # remainder evenly instead, which diverges whenever k does not

@@ -168,8 +168,8 @@ def test_global_row_number_dense_and_ordered(spark):
     from mozart_etl_spark.operators.corpus import global_row_number
 
     df = spark.range(0, 5000).selectExpr("id", "cast(id % 13 as double) as v")
-    ranked, total = global_row_number(df, ["v", "id"], out_col="rn")
-    rows = sorted((r["rn"], r["v"], r["id"]) for r in ranked.collect())
+    ranked, total = global_row_number(df, ["v", "id"])
+    rows = sorted((r["rank"], r["v"], r["id"]) for r in ranked.collect())
     assert total == 5000
     assert [r[0] for r in rows] == list(range(1, 5001))
     assert rows == sorted(rows, key=lambda r: (r[1], r[2]))
@@ -182,7 +182,7 @@ def test_global_row_number_window_holds_one_sum(spark):
     from mozart_etl_spark.operators.corpus import global_row_number
 
     df = spark.range(0, 100).selectExpr("id", "cast(id % 7 as double) as v")
-    ranked, _ = global_row_number(df, ["v", "id"], out_col="rn")
+    ranked, _ = global_row_number(df, ["v", "id"])
     plan = ranked._jdf.queryExecution().optimizedPlan()
     windows, stack = [], [plan]
     while stack:
@@ -371,16 +371,26 @@ def test_cap_per_group_bounds_and_determinism(spark):
 
 
 def test_cap_per_group_salted_prune_identical_on_hot_key(spark):
-    """``salt_buckets`` must not change the output AT ALL — rows, rn,
-    everything — including on pathologically hot groups (one group
+    """The salted prune must not change the output AT ALL — rows, rn,
+    everything — against a plain per-group window (a Python model of
+    it here), including on pathologically hot groups (one group
     holding 90% of the rows, the shape the salted prune exists for),
     and the plan must show the two-level window (salt window feeding
     the global one)."""
+    import hashlib
+
     rows = [(i, "hot" if i % 10 else f"cold{i}") for i in range(2000)]
     df = spark.createDataFrame(rows, "doc_id BIGINT, source STRING")
-    plain = C.cap_per_group(df, "source", "doc_id", cap=25, seed="s")
-    salted = C.cap_per_group(df, "source", "doc_id", cap=25, seed="s", salt_buckets=8)
-    want = {(r["doc_id"], r["source"], r["rn"]) for r in plain.collect()}
+    salted = C.cap_per_group(df, "source", "doc_id", cap=25, seed="s")
+    # the plain window: each group in (md5('s:'||id)[:8], id) order
+    groups: dict[str, list[tuple[str, int]]] = {}
+    for i, src in rows:
+        groups.setdefault(src, []).append((hashlib.md5(f"s:{i}".encode()).hexdigest()[:8], i))
+    want = {
+        (i, src, rn)
+        for src, members in groups.items()
+        for rn, (_, i) in enumerate(sorted(members)[:25], start=1)
+    }
     got = {(r["doc_id"], r["source"], r["rn"]) for r in salted.collect()}
     assert got == want and want
     # the hot group is actually capped (not vacuous)
@@ -446,7 +456,7 @@ def test_sample_temperature_rejects_scratch_column_collision(spark):
 
 
 def test_cap_per_group_rejects_salt_scratch_column_collision(spark):
-    """The salted path uses _salt_rn as a scratch column; an input
+    """The salted prune uses _salt_rn as a scratch column; an input
     already carrying one must be rejected, not silently clobbered
     and dropped."""
     import pytest
@@ -455,10 +465,7 @@ def test_cap_per_group_rejects_salt_scratch_column_collision(spark):
         [(1, "a", 9)], "doc_id BIGINT, source STRING, _salt_rn BIGINT"
     )
     with pytest.raises(ValueError, match="_salt_rn"):
-        C.cap_per_group(df, "source", "doc_id", cap=1, salt_buckets=2)
-    # the unsalted path has no scratch column and keeps the input's
-    got = C.cap_per_group(df, "source", "doc_id", cap=1).collect()
-    assert got[0]["_salt_rn"] == 9
+        C.cap_per_group(df, "source", "doc_id", cap=1)
 
 
 def test_cooccurrence_pmi_symmetry_and_independence(spark):

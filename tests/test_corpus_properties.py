@@ -436,14 +436,14 @@ def test_novel_documents_match_python_model(spark, hist_texts, batch_texts):
 @given(
     st.lists(st.integers(min_value=0, max_value=3), min_size=1, max_size=25),
     st.integers(min_value=1, max_value=4),
-    st.sampled_from([None, 1, 3]),
+    st.sampled_from([1, 3, 8]),
 )
 def test_cap_per_group_matches_python_model(spark, groups, cap, salt_buckets):
     """Per-group cap vs a Python replica of the deterministic hash
     order: members sort by (md5('cap0:'||id)[:8], id) within their
     group; at most cap survive, rn is the 1-based rank. The salted
-    pre-prune (salt_buckets set, including the degenerate 1-bucket
-    case) must be output-invisible — same replica, no changes."""
+    pre-prune must be output-invisible at any salt count, the
+    degenerate 1-bucket case included — same replica, no changes."""
     import hashlib
 
     rows = [(g, i) for i, g in enumerate(groups)]

@@ -5,10 +5,11 @@ shingle-join Jaccard are the operators whose correctness lives in
 hash arithmetic (affine maps mod 2^31-1, signed 64-bit bit votes,
 inverted-index set algebra) rather than in SQL-expressible relations,
 so the DuckDB oracle can't pin them. These tests pin them the other
-way: an independent pure-Python replica of the arithmetic, fed the
-same xxhash64 values (fetched once from Spark, since xxhash64 has no
-Python stdlib twin), must reproduce the operator output bit-for-bit
-on hypothesis-generated corpora.
+way: an independent pure-Python replica of the arithmetic must
+reproduce the operator output bit-for-bit on hypothesis-generated
+corpora. The replica computes the portable md5-60 hash itself and is
+fed the same xxhash64 values (fetched once from Spark, since xxhash64
+has no Python stdlib twin).
 
 Alphabet is restricted to 'a','b','x',' ' so Python ``str.split()``
 and Spark ``filter(split(trim(text), '\\s+'), t -> t != '')``
@@ -80,26 +81,24 @@ def test_minhash_signatures_match_python_fold(spark, texts, n, seed):
 @given(_texts)
 def test_simhash_matches_python_fold(spark, texts):
     """Property: the vote-fold kernel equals the classic per-bit tally
-    (every token OCCURRENCE votes, not every distinct token), with
-    Java's wrapping signed-64 fingerprint assembly."""
+    (every token OCCURRENCE votes, not every distinct token) over the
+    md5-60 token hash (the first 15 hex chars of md5), so bits 60-63
+    are never set."""
+    import hashlib
+
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id INT, text STRING"
     )
     got = {r["doc_id"]: r["simhash"] for r in D.simhash(df).collect()}
 
-    tokens_per_doc = {i: t.split() for i, t in enumerate(texts)}
-    hashes = _spark_xxhash64(
-        spark, [tok for toks in tokens_per_doc.values() for tok in toks]
-    )
     want = {}
-    for i, toks in tokens_per_doc.items():
+    for i, t in enumerate(texts):
+        hashes = [int(hashlib.md5(tok.encode()).hexdigest()[:15], 16) for tok in t.split()]
         fp = 0
         for k in range(64):
-            vote = sum(1 if (hashes[t] >> k) & 1 else -1 for t in toks)
+            vote = sum(1 if (h >> k) & 1 else -1 for h in hashes)
             if vote > 0:
                 fp |= 1 << k
-        if fp >= 1 << 63:  # Java long wrap-around
-            fp -= 1 << 64
         want[i] = fp
     assert got == want
 

@@ -335,14 +335,12 @@ def test_bench_compact_line_fits_tail_capture():
 
 def test_driver_priority_window():
     """The driver harness records CORRECTNESS rows for the first 50
-    queries() entries. Round-18 rotation (no plan changed): the 9 rows
-    the round-17 window left out, last certified in round 15, lead;
-    then 41 of the rows round 16 certified and round 17 did not, in
-    round 16's window order; the other 8 stay outside and rotate first
-    next round. Every priority name must resolve (no typos against the
-    registry)."""
-    import json
-
+    queries() entries. Round-19 rotation: corpus_pii_scrub, whose plan
+    changed, leads; then the 8 rows round 16 certified and rounds 17-18
+    did not; then the 41 oldest rows, certified in round 17 and not
+    since, in round 17's window order; the other 8 stay outside and
+    rotate first next round. Every priority name must resolve (no
+    typos against the registry)."""
     from mozart_etl_spark import querybank
 
     names = list(querybank.queries())
@@ -352,35 +350,33 @@ def test_driver_priority_window():
     assert len(querybank.DRIVER_PRIORITY) == 50
     window = names[:50]
 
-    # (a) certified in round 15 (CORRECTNESS_r15.json), left out since
-    lead = [
-        "pricing_summary", "text_repetition_stats", "idle_rich_customers",
-        "segment_year_pivot", "order_priority_waiting", "events_retention_cohorts",
-        "revenue_rollup", "multimodal_manifest", "corpus_temperature_mix",
-    ]
-    assert set(lead) <= set(json.load(open("CORRECTNESS_r15.json")))
-    assert window[:9] == lead
-    # (b) certified in round 16, left out of round 17, in round 16's order
-    assert window[9:] == [
-        "streaming_hourly_counts", "streaming_sessionize", "streaming_running_totals",
-        "streaming_continuous_aggregate", "streaming_interval_join", "event_props_json",
-        "events_sessionize", "revenue_cube", "big_spenders", "distinct_parts_per_flag",
-        "lineitem_stats", "dedup_simhash", "small_quantity_revenue", "top_orders_revenue",
-        "order_price_quantiles", "text_tfidf_top_terms", "text_bigram_cross_entropy",
-        "segment_nation_list", "text_token_stats", "dedup_exact", "incremental_range_scan",
-        "part_name_word_counts", "text_fingerprint", "events_hourly_histogram",
-        "party_nation_counts", "embedding_centroids", "customers_with_orders",
-        "customers_without_recent_orders", "text_quality_score", "corpus_pack_sequences",
-        "embedding_quantize_check", "multimodal_frame_sample", "events_intervisit_gaps",
-        "multimodal_features", "multimodal_resize_grid", "events_orphan_users",
-        "corpus_source_cap", "high_value_only_custkeys", "nation_revenue_rank",
-        "events_user_sketch_rollup", "text_top_bigrams",
-    ]
-    # the 8 that rotate first next round
-    deferred = {
+    # (a) the plan this round changes
+    assert window[0] == "corpus_pii_scrub"
+    # (b) certified in round 16, left out of rounds 17 and 18
+    assert window[1:9] == [
         "both_segments_nations", "events_markov_transitions", "nation_revenue_running_share",
         "range_join_click_views", "customer_order_distribution", "nation_market_share",
         "disjunctive_filter_revenue", "events_salted_enrich",
+    ]
+    # (c) certified in round 17, left out of round 18, in round 17's order
+    assert window[9:] == [
+        "corpus_clean", "corpus_incremental_dedup", "customer_balance_deciles", "corpus_shard_plan",
+        "dedup_components", "dedup_canonical", "regional_supplier_revenue", "distinct_parts_approx",
+        "large_order_customers", "order_price_quantiles_approx", "events_funnel",
+        "part_name_typo_pairs", "orders_column_profile", "decimal_uplift_totals",
+        "etl_mart_customer", "corpus_chunks_overlap", "dedup_minhash_lsh", "dedup_ngram_jaccard",
+        "corpus_span_scrub", "corpus_repeated_spans", "text_cooccurrence_pmi", "knn_lsh_cosine",
+        "knn_ivf_cosine", "knn_bruteforce_cosine", "dedup_embedding_lsh", "dedup_embedding_cosine",
+        "asof_click_view", "corpus_chunks", "corpus_decontaminate", "cross_nation_trade",
+        "select_project_filter", "string_functions", "top_parts_by_price", "part_catalog_enriched",
+        "corpus_sample_balanced", "corpus_shuffle_slice", "mart_item_master", "text_rolling_hash",
+        "orders_by_year", "corpus_weighted_sample", "text_stopword_ratio",
+    ]
+    # the 8 that rotate first next round
+    deferred = {
+        "order_price_buckets", "text_lang_confusion", "text_bpe_token_stats",
+        "events_key_skew_profile", "events_by_type", "latest_event_per_user",
+        "top_supplier_revenue", "promo_revenue_ratio",
     }
     assert deferred <= set(names[50:])
 

@@ -111,7 +111,7 @@ def test_ivf_knn_matches_python_model(spark, rows, k, nprobe):
     st.integers(min_value=0, max_value=2),
 )
 def test_lsh_knn_matches_python_model(spark, vecs, k, seed):
-    n_planes, n_tables = 4, 2
+    n_planes, n_tables = S._KNN_PLANES, S._KNN_TABLES
     cands = spark.createDataFrame(
         [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
         "vec_id INT, embedding ARRAY<DOUBLE>",
@@ -119,9 +119,7 @@ def test_lsh_knn_matches_python_model(spark, vecs, k, seed):
     queries = cands.filter("vec_id < 3")
     got = {
         (r["query_id"], r["neighbor_id"]): r["cosine"]
-        for r in S.lsh_knn(
-            queries, cands, _DIM, k=k, n_planes=n_planes, n_tables=n_tables, seed=seed
-        ).collect()
+        for r in S.lsh_knn(queries, cands, _DIM, k=k, seed=seed).collect()
     }
 
     # python model ------------------------------------------------------
@@ -153,21 +151,29 @@ def test_lsh_knn_matches_python_model(spark, vecs, k, seed):
 @settings(max_examples=8, deadline=None)
 @given(st.lists(_vec, min_size=2, max_size=10), st.integers(min_value=0, max_value=2))
 def test_lsh_near_dup_pairs_match_python_model(spark, vecs, seed):
-    """The embedding near-dup operator end-to-end: multi-table bucket
-    collision -> exact cosine -> threshold. Threshold 0.9 keeps the
-    check non-vacuous (all-positive integer vectors are often
-    similar)."""
-    n_planes, n_tables = 4, 2
+    """The embedding near-dup operator end-to-end: identical-vector
+    collapse -> banding resolved from the representatives' count ->
+    multi-table bucket collision -> exact cosine -> threshold.
+    Threshold 0.9 keeps the check non-vacuous (all-positive integer
+    vectors are often similar). The bucket cap cannot bind on ten
+    vectors."""
     df = spark.createDataFrame(
         [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
         "vec_id INT, embedding ARRAY<DOUBLE>",
     )
     got = {
         (r["doc_a"], r["doc_b"]): r["cosine"]
-        for r in S.lsh_near_dup_pairs(
-            df, _DIM, threshold=0.9, n_planes=n_planes, n_tables=n_tables, seed=seed
-        ).collect()
+        for r in S.lsh_near_dup_pairs(df, _DIM, threshold=0.9, seed=seed).collect()
     }
+
+    # identical vectors collapse to their smallest id; every other
+    # member rejoins as a cosine-1.0 star edge
+    rep = {}
+    for i, v in enumerate(vecs):
+        rep.setdefault(tuple(v), i)
+    want = {(rep[tuple(v)], i): 1.0 for i, v in enumerate(vecs) if rep[tuple(v)] != i}
+    reps = sorted(set(rep.values()))
+    n_planes, n_tables = S.auto_lsh_params(len(reps), 0.9)
 
     def buckets(v):
         out = []
@@ -180,10 +186,9 @@ def test_lsh_near_dup_pairs_match_python_model(spark, vecs, seed):
             out.append(b)
         return out
 
-    bks = [buckets(v) for v in vecs]
-    want = {}
-    for a in range(len(vecs)):
-        for b in range(a + 1, len(vecs)):
+    bks = {i: buckets(vecs[i]) for i in reps}
+    for ai, a in enumerate(reps):
+        for b in reps[ai + 1 :]:
             if any(bks[a][t] == bks[b][t] for t in range(n_tables)):
                 cos = _cos(vecs[a], vecs[b])
                 if cos >= 0.9:
@@ -199,8 +204,8 @@ def test_lsh_near_dup_pairs_match_python_model(spark, vecs, seed):
 def test_minhash_lsh_pairs_match_python_model(spark, texts, seed):
     """The MinHash-LSH operator end-to-end: banded signature collision
     -> estimated Jaccard. The replica compares signature band SLICES
-    directly — band-hash equality is slice equality up to an xxhash64
-    collision, which is unreachable on 8-element bands."""
+    directly — band-hash equality is slice equality up to a 60-bit
+    md5-prefix collision, which is unreachable on 8-element bands."""
     from mozart_etl_spark.operators import dedup as D
 
     n, num_perm, bands = 2, 8, 4
@@ -217,7 +222,9 @@ def test_minhash_lsh_pairs_match_python_model(spark, texts, seed):
 
     sigs = {
         row["doc_id"]: list(row["sig"])
-        for row in D.minhash_signatures(df, n=n, num_perm=num_perm, seed=seed).collect()
+        for row in D.minhash_signatures(
+            df, n=n, num_perm=num_perm, seed=seed, hash_fn="portable_md5_60"
+        ).collect()
     }  # the signature fold itself is pinned bit-for-bit elsewhere
     want = {}
     ids = sorted(sigs)
@@ -256,7 +263,7 @@ def test_nan_poisoned_vectors_excluded_from_knn(spark):
     assert (0, 2) not in got, "NaN candidate must never appear in top-k"
     assert got[0] == (0, 1), "real nearest neighbor must win"
 
-    lsh = S.lsh_knn(queries, df, dim=2, k=2, n_planes=2, n_tables=2)
+    lsh = S.lsh_knn(queries, df, dim=2, k=2)
     assert all(r["neighbor_id"] != 2 for r in lsh.collect())
 
     ivf = S.ivf_knn(queries, df, k=2, nprobe=2)
@@ -311,7 +318,7 @@ def test_inf_poisoned_vectors_excluded_from_knn(spark):
     assert all(n not in (2, 4) for _, n in got), "Inf candidates must never appear in top-k"
     assert got[0] == (0, 1), "real nearest neighbor must win"
 
-    lsh = S.lsh_knn(queries, df, dim=2, k=3, n_planes=2, n_tables=2)
+    lsh = S.lsh_knn(queries, df, dim=2, k=3)
     assert all(r["neighbor_id"] not in (2, 4) for r in lsh.collect())
 
     ivf = S.ivf_knn(queries, df, k=3, nprobe=2)
@@ -362,9 +369,7 @@ def test_inf_vectors_stay_singleton_in_lsh_near_dup(spark):
         (4, [float("nan"), 1.0]),
     ]
     df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    pairs = S.lsh_near_dup_pairs(
-        df, dim=2, threshold=0.95, n_planes=2, n_tables=2, collapse_identical=True
-    ).collect()
+    pairs = S.lsh_near_dup_pairs(df, dim=2, threshold=0.95).collect()
     got = {(r["doc_a"], r["doc_b"]) for r in pairs}
     assert (0, 1) in got, "clean identical pair must survive as the star edge"
     assert all(a not in (2, 3, 4) and b not in (2, 3, 4) for a, b in got), (
@@ -494,7 +499,7 @@ def test_finite_overflow_vectors_are_corrupt_everywhere(spark):
 
     brute = S.brute_force_knn(q, df, k=3).collect()
     assert all(r["neighbor_id"] != 2 for r in brute)
-    lsh = S.lsh_knn(q, df, dim=2, k=3, n_planes=2, n_tables=2).collect()
+    lsh = S.lsh_knn(q, df, dim=2, k=3).collect()
     assert all(r["neighbor_id"] != 2 for r in lsh)
     ivf = S.ivf_knn(q, df, k=3, nprobe=2).collect()
     assert all(r["neighbor_id"] != 2 for r in ivf), "overflow vector surfaced in IVF"
@@ -540,7 +545,7 @@ def test_accumulation_overflow_vectors_excluded_from_ivf_lsh(spark):
 
     for label, out in (
         ("brute", S.brute_force_knn(q, df, k=1).collect()),
-        ("lsh", S.lsh_knn(q, df, dim=2, k=1, n_planes=1, n_tables=2).collect()),
+        ("lsh", S.lsh_knn(q, df, dim=2, k=1).collect()),
         ("ivf", S.ivf_knn(q, df, k=1, nprobe=2).collect()),
     ):
         assert all(r["neighbor_id"] != 2 for r in out), (
@@ -549,7 +554,7 @@ def test_accumulation_overflow_vectors_excluded_from_ivf_lsh(spark):
 
     # overflow QUERY emits zero rows on every scorer
     assert S.ivf_knn(df.filter("vec_id = 2"), df, k=2).count() == 0
-    assert S.lsh_knn(df.filter("vec_id = 2"), df, dim=2, k=2, n_planes=1, n_tables=2).count() == 0
+    assert S.lsh_knn(df.filter("vec_id = 2"), df, dim=2, k=2).count() == 0
 
 
 def test_denormal_vector_quantizes_to_null_marked_row(spark):

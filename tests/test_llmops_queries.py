@@ -109,7 +109,7 @@ def test_jaccard_edges_exact_cluster_is_linear_and_components_exact(spark):
 
 def test_embedding_lsh_oracle_banding_params_pinned():
     """The dedup_embedding_lsh DuckDB oracle hard-codes the banding
-    that ``n_planes="auto"`` resolves for the DRIVER corpus (the
+    that ``lsh_near_dup_pairs`` resolves for the DRIVER corpus (the
     oracle is a static SQL string; the hyperplanes are literals). This
     pins the three facts that keep the hard-coding sound:
 

@@ -125,7 +125,7 @@ def test_auto_lsh_params_sawtooth_drift_is_bounded():
       recall >= 0.95 while planes lengthen, not drift);
     - regime boundary: past n = _LSH_TARGET_OCCUPANCY * 2^_LSH_MAX_PLANES the
       plane cap binds and occupancy grows linearly — the quadratic
-      term returns BY DESIGN there (docstring: pick explicit params);
+      term returns BY DESIGN there (the bucket cap bounds it);
       the drift bounds above only claim the uncapped regime.
     """
     from mozart_etl_spark.operators.similarity import auto_lsh_params
@@ -193,17 +193,15 @@ def test_auto_lsh_params_table_clamp_and_failure_modes(monkeypatch):
         auto_lsh_params(1_000, -1.0)
     # unreachable by clamp: even min planes needs more than max tables
     monkeypatch.setattr(similarity, "_LSH_MAX_TABLES", 2)
-    with pytest.raises(ValueError, match="explicit"):
+    with pytest.raises(ValueError, match="min_planes"):
         auto_lsh_params(1_000_000, 0.1)
 
 
 def test_lsh_near_dup_pairs_auto_keeps_twin_recall(spark):
-    """n_planes='auto' resolves real banding parameters and still
-    recovers every injected exact twin: a scaled twin has identical
-    hyperplane signs, so it collides in EVERY table regardless of the
-    resolved plane count — the guaranteed-recall floor of the
-    registered entry, which runs "auto" as its certified default
-    since r7."""
+    """The resolved banding still recovers every injected exact twin: a
+    scaled twin has identical hyperplane signs, so it collides in EVERY
+    table regardless of the resolved plane count — the
+    guaranteed-recall floor of the registered entry."""
     from pyspark.sql import functions as F
 
     from mozart_etl_spark.io import table
@@ -215,9 +213,7 @@ def test_lsh_near_dup_pairs_auto_keeps_twin_recall(spark):
             "embedding"
         ),
     )
-    pairs = S.lsh_near_dup_pairs(
-        emb.unionByName(twins), dim=64, threshold=0.95, n_planes="auto"
-    )
+    pairs = S.lsh_near_dup_pairs(emb.unionByName(twins), dim=64, threshold=0.95)
     got = {(r.doc_a, r.doc_b) for r in pairs.collect()}
     assert {(i, i + 100000) for i in range(20)} <= got
 
@@ -227,13 +223,9 @@ def test_rescore_parallelism_rescue_bounds(spark):
     repartitions the id-only candidate pairs only when AQE's
     byte-based coalescing would under-parallelize the CPU-heavy
     rescore, and it never fires where the candidate table's own bytes
-    already justify at least as many partitions (cluster scale), on
-    the explicit-params path (no corpus count available), or on a
-    corpus too small to fill one partition's pair floor."""
+    already justify at least as many partitions (cluster scale), or on
+    a corpus too small to fill one partition's pair floor."""
     cand = spark.range(10).selectExpr("id AS doc_a", "id + 1 AS doc_b")
-
-    # explicit-params path: no count, untouched
-    assert S._rescore_parallelism_rescue(cand, None, 6, 4) is cand
 
     # tiny corpus: est pairs below the per-partition floor, untouched
     assert S._rescore_parallelism_rescue(cand, 100, 6, 4) is cand

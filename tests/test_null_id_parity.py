@@ -85,9 +85,7 @@ def test_collapse_representative_skips_null_ids(spark):
         (21, [-1.0, 5.0, 0.5, 2.0]),
     ]
     df = spark.createDataFrame(rows, _VEC_SCHEMA)
-    pairs = lsh_near_dup_pairs(
-        df, dim=4, threshold=0.95, n_planes=4, n_tables=4, collapse_identical=True
-    ).collect()
+    pairs = lsh_near_dup_pairs(df, dim=4, threshold=0.95).collect()
     got = {(r["doc_a"], r["doc_b"]): r["cosine"] for r in pairs}
     assert got.get((5, 9)) == 1.0, f"star edge lost under NULL group member: {got}"
     assert all(a is not None and b is not None for a, b in got)

@@ -302,6 +302,45 @@ def test_incremental_model_merges_delta_only(spark, tmp_path):
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
 
+def test_runner_looks_up_each_target_once(spark, tmp_path, monkeypatch):
+    """The runner asks the catalog whether a model's target exists once
+    per model and run: the lookup that decides ``is_incremental()``
+    also serves the conflict drop. Counted for an incremental model
+    and a table model, on the first build and on an incremental run."""
+    from mozart_etl_spark.plans.runner import ModelRunner
+
+    ns = f"look_{uuid.uuid4().hex[:8]}"
+    raw_ns, mart_ns = f"{ns}_raw", f"{ns}_mart"
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {raw_ns}")
+    src = spark.createDataFrame([(1, "a", 100)], "id INT, v STRING, updated_at INT")
+    writers.full_replace(spark, src, f"{raw_ns}.events_src")
+    models = tmp_path / "models"
+    models.mkdir()
+    (models / "inc_model.sql").write_text(INC_MODEL)
+    (models / "snapshot.sql").write_text(
+        "{{ config(materialized='table') }}\nSELECT * FROM {{ ref('inc_model') }}\n"
+    )
+    runner = ModelRunner(spark, str(models), raw_ns, mart_ns)
+    calls = Counter()
+    table_exists = spark.catalog.tableExists
+
+    def counted(target, *args, **kwargs):
+        if sys._getframe(1).f_globals["__name__"] == "mozart_etl_spark.plans.runner":
+            calls[target] += 1
+        return table_exists(target, *args, **kwargs)
+
+    monkeypatch.setattr(spark.catalog, "tableExists", counted)
+    try:
+        for _ in range(2):  # the first build, then an incremental run
+            calls.clear()
+            runner.run()
+            assert dict(calls) == {f"{mart_ns}.inc_model": 1, f"{mart_ns}.snapshot": 1}
+    finally:
+        monkeypatch.undo()
+        for n in (raw_ns, mart_ns):
+            spark.sql(f"DROP DATABASE IF EXISTS {n} CASCADE")
+
+
 def test_aqe_splits_skewed_join_at_runtime(spark):
     """Runtime complement to the static salted_join: with a hot key
     holding ~90% of the fact side, AQE's skew-join rewrite splits the

@@ -30,6 +30,14 @@ than once in those files (``run``, say) may reach any of its
 definitions, so for it only a keyword pass counts. A value no caller
 sets is a constant with a knob on it: it goes, with the branches it
 needed.
+
+A value every such call pins to one and the same non-default literal
+fails too: its default selects a path no caller takes. The calls use
+the default when they omit the value or pass the default literal; a
+variable, an expression, ``*args`` or ``**kwargs`` varies; for a callee
+name defined more than once, a call without a keyword pass is no
+evidence either way. The pinned literal becomes the engine's constant
+and the default's branch goes.
 """
 
 from __future__ import annotations
@@ -69,12 +77,14 @@ SETTABLE_EXCEPTIONS = {
     # the reference's per-run dbt --vars with plan_ver
     # (``_tenant_factory.py:364-371``)
     "TenantPipeline.run_vars": "per-run model variables (COVERAGE O10)",
+    # every engine caller pins one clock, but a deployment runs on the
+    # wall clock (None); the querybank and perfbench freeze it
+    "TenantPipeline.frozen_clock": "a deployment runs on the wall clock",
     # values a test samples or sets apart from the engine's: fixing them
     # would narrow the test
     "global_running_sum(num_partitions)": "property test samples the partition count",
     "minhash_lsh_pairs(seed)": "property test samples the seed",
     "lsh_knn(seed)": "property test samples the seed",
-    "lsh_near_dup_pairs(n_tables)": "property test samples the table count",
     "lsh_near_dup_pairs(seed)": "property test samples the seed",
     "jaccard_verify_pairs(n)": "property test samples the shingle width",
     "salted_join(n_salts)": (
@@ -117,6 +127,10 @@ SETTABLE_EXCEPTIONS = {
     "lsh_knn(k)": "test_knn_properties.py::test_lsh_knn_matches_python_model samples k",
     "lsh_near_dup_pairs(threshold)": (
         "test_knn_properties.py::test_lsh_near_dup_pairs_match_python_model scores at 0.9"
+    ),
+    "cap_per_group(salt_buckets)": (
+        "test_corpus_properties.py::test_cap_per_group_matches_python_model samples the salt "
+        "count"
     ),
     "sessionize_stream(gap)": (
         "test_backends.py::test_sessionize_last_event_is_the_session_max_ts samples the gap"
@@ -296,33 +310,45 @@ def _literal(node: ast.AST) -> tuple[type, str] | None:
     return type(value), repr(value)
 
 
-def _sets(arg: ast.AST, default: ast.AST) -> bool:
-    """Whether passing ``arg`` sets a value whose default is ``default``:
-    anything but the default literal itself does."""
+#: A value passed through something other than a literal: a variable, an
+#: expression, ``*args`` or ``**kwargs``.
+_VARIES = "varies"
+#: The default: a call omits the value or passes the default literal.
+_DEFAULT = "default"
+
+
+def _passed(arg: ast.AST, default: ast.AST) -> object:
+    """The value that passing ``arg`` uses where the default is
+    ``default``."""
     value = _literal(arg)
-    return value is None or value != _literal(default)
+    if value is None:
+        return _VARIES
+    return _DEFAULT if value == _literal(default) else value
 
 
-def _passes(
+def _value(
     call: ast.Call, position: int | None, name: str, default: ast.AST, by_keyword_only: bool
-) -> bool:
-    """Whether ``call`` sets the value at ``position`` / ``name`` whose
-    default is ``default``: by keyword, by position, or through
-    ``*args`` / ``**kwargs``, with anything but the default literal.
-    With ``by_keyword_only`` (a callee name defined more than once in the
-    caller files, so a call may reach another definition) only a keyword
-    pass counts."""
+) -> object:
+    """The value ``call`` uses at ``position`` / ``name``: ``_DEFAULT``,
+    ``_VARIES``, or the ``_literal`` of a non-default literal. With
+    ``by_keyword_only`` (a callee name defined more than once in the
+    caller files, so a call may reach another definition) a call that
+    does not pass the value by keyword may reach another definition and
+    is no evidence: None."""
     for k in call.keywords:
-        if k.arg is None or (k.arg == name and _sets(k.value, default)):
-            return True
-    if position is None or by_keyword_only:
-        return False
-    for i, arg in enumerate(call.args):
-        if isinstance(arg, ast.Starred):
-            return i <= position
-        if i == position:
-            return _sets(arg, default)
-    return False
+        if k.arg is None:
+            return _VARIES
+        if k.arg == name:
+            return _passed(k.value, default)
+    if by_keyword_only:
+        return None
+    if position is not None:
+        for i, arg in enumerate(call.args):
+            if isinstance(arg, ast.Starred):
+                return _VARIES if i <= position else _DEFAULT
+            if i == position:
+                return _passed(arg, default)
+    return _DEFAULT
 
 
 def _definition_counts(trees: dict[Path, ast.Module]) -> Counter[str]:
@@ -333,37 +359,66 @@ def _definition_counts(trees: dict[Path, ast.Module]) -> Counter[str]:
     )
 
 
-def unpassed(files: list[Path], engine: Path) -> list[str]:
-    """``module::label`` of every defaulted public parameter or dataclass
-    field in ``engine`` that no call in ``files`` outside its own
-    function sets to anything but its default."""
+def used_values(files: list[Path], engine: Path) -> dict[str, set[object]]:
+    """``module::label`` -> the ``_value`` each call in ``files`` outside
+    its own function uses, for every defaulted public parameter or
+    dataclass field in ``engine``."""
     trees = {path: ast.parse(path.read_text(), str(path)) for path in files}
     calls = _calls(trees)
     counts = _definition_counts(trees)
-    dead = []
+    used = {}
     for path, tree in trees.items():
         if engine not in path.parents:
             continue
         for label, callee, position, name, default, owner in _settable(tree):
             own_body = isinstance(owner, (ast.FunctionDef, ast.AsyncFunctionDef))
-            shared = counts[callee] > 1
-            if not any(
-                _passes(call, position, name, default, shared)
-                and not (own_body and p == path and owner.lineno <= call.lineno <= owner.end_lineno)
+            values = {
+                _value(call, position, name, default, counts[callee] > 1)
                 for p, call in calls.get(callee, [])
-            ):
-                dead.append(f"{path.relative_to(engine.parent)}::{label}")
-    return sorted(dead)
+                if not (own_body and p == path and owner.lineno <= call.lineno <= owner.end_lineno)
+            }
+            used[f"{path.relative_to(engine.parent)}::{label}"] = values - {None}
+    return used
+
+
+def unpassed(files: list[Path], engine: Path) -> list[str]:
+    """``module::label`` of every defaulted public parameter or dataclass
+    field in ``engine`` that no call in ``files`` outside its own
+    function sets to anything but its default."""
+    return sorted(k for k, values in used_values(files, engine).items() if values <= {_DEFAULT})
+
+
+def pinned(files: list[Path], engine: Path) -> list[str]:
+    """``module::label`` of every defaulted public parameter or dataclass
+    field in ``engine`` whose calls in ``files`` outside its own function
+    all pass one and the same non-default literal: the default selects a
+    path no caller takes."""
+    return sorted(
+        k
+        for k, values in used_values(files, engine).items()
+        if len(values) == 1 and not values & {_DEFAULT, _VARIES}
+    )
+
+
+def _unexpected(flagged: list[str]) -> list[str]:
+    return [d for d in flagged if d.rsplit("::", 1)[1] not in SETTABLE_EXCEPTIONS]
 
 
 def test_every_defaulted_parameter_and_field_has_a_caller():
-    dead = unpassed(_caller_files(), ENGINE)
-    labels = {d.rsplit("::", 1)[1] for d in dead}
-    unexpected = [d for d in dead if d.rsplit("::", 1)[1] not in SETTABLE_EXCEPTIONS]
+    files = _caller_files()
+    dead = unpassed(files, ENGINE)
     header = "defaulted engine parameters and fields no caller outside the tests sets:\n"
-    assert not unexpected, header + "\n".join(unexpected)
-    # an exception that gained a caller, or whose code is gone, is stale
+    assert not _unexpected(dead), header + "\n".join(_unexpected(dead))
+    # an exception that gained a second value in use, or whose code is
+    # gone, is stale
+    labels = {d.rsplit("::", 1)[1] for d in dead + pinned(files, ENGINE)}
     assert set(SETTABLE_EXCEPTIONS) <= labels, sorted(set(SETTABLE_EXCEPTIONS) - labels)
+
+
+def test_no_defaulted_value_is_pinned_to_one_literal():
+    single = _unexpected(pinned(_caller_files(), ENGINE))
+    header = "defaulted engine parameters and fields every caller pins to one literal:\n"
+    assert not single, header + "\n".join(single)
 
 
 _SYNTHETIC_ENGINE = """
@@ -403,6 +458,22 @@ def by_variable(a, b=1):
 
 
 def by_other_literal(a, b=(1, 2)):
+    pass
+
+
+def one_literal(a, b=1):
+    pass
+
+
+def two_literals(a, b=1):
+    pass
+
+
+def literal_and_omitted(a, b=1):
+    pass
+
+
+def literal_and_variable(a, b=1):
     pass
 
 
@@ -453,6 +524,15 @@ mod.by_variable(1, b=width)
 mod.by_other_literal(1, (1, 3))
 mod.Pipeline().run(spark)
 mod.Models().run(dry=True)
+mod.Models().run(None, False)
+mod.one_literal(1, b=2)
+mod.one_literal(1, 2)
+mod.two_literals(1, b=2)
+mod.two_literals(1, b=3)
+mod.literal_and_omitted(1, b=2)
+mod.literal_and_omitted(1)
+mod.literal_and_variable(1, b=2)
+mod.literal_and_variable(1, b=width)
 """
 
 
@@ -476,6 +556,21 @@ def test_settable_scan_on_a_synthetic_module(tmp_path):
         "pkg/mod.py::default_by_position(b)",
         "pkg/mod.py::unset(b)",
     ]
+    # one non-default literal at every call is flagged; two literals, a
+    # literal plus an omitted value, a literal plus a variable, and a
+    # literal plus a passed default (``Spec.items``) are not; a
+    # positional pass to a method name two classes define decides
+    # nothing, so ``Models.run(dry)`` stays pinned to ``True``
+    assert pinned(files, engine) == [
+        "pkg/mod.py::Models.run(dry)",
+        "pkg/mod.py::Runner(width)",
+        "pkg/mod.py::Runner.go(flag)",
+        "pkg/mod.py::by_keyword(b)",
+        "pkg/mod.py::by_other_literal(b)",
+        "pkg/mod.py::by_position(b)",
+        "pkg/mod.py::by_position(c)",
+        "pkg/mod.py::one_literal(b)",
+    ]
     # without the caller, every defaulted value is flagged except the
     # one ``cls(...)`` sets
     assert unpassed(files[:1], engine) == [
@@ -494,5 +589,10 @@ def test_settable_scan_on_a_synthetic_module(tmp_path):
         "pkg/mod.py::by_variable(b)",
         "pkg/mod.py::default_by_keyword(b)",
         "pkg/mod.py::default_by_position(b)",
+        "pkg/mod.py::literal_and_omitted(b)",
+        "pkg/mod.py::literal_and_variable(b)",
+        "pkg/mod.py::one_literal(b)",
+        "pkg/mod.py::two_literals(b)",
         "pkg/mod.py::unset(b)",
     ]
+    assert pinned(files[:1], engine) == []

@@ -79,7 +79,7 @@ def test_lsh_banded_impls_agree_on_ragged(frame):
 
 
 def test_lsh_knn_never_scores_ragged(frame):
-    out = S.lsh_knn(frame, frame, dim=DIM, k=3, n_planes=2, n_tables=2).collect()
+    out = S.lsh_knn(frame, frame, dim=DIM, k=3).collect()
     ids = {r.query_id for r in out} | {r.neighbor_id for r in out}
     assert ids <= {1, 2, 3, 4}
 
@@ -109,9 +109,7 @@ def test_near_dup_keeps_identical_ragged_singleton(spark):
             (11, [0.5, 0.5], 0),
         ],
     )
-    out = S.lsh_near_dup_pairs(
-        df, dim=DIM, threshold=0.9, n_planes=2, n_tables=2, collapse_identical=True
-    ).collect()
+    out = S.lsh_near_dup_pairs(df, dim=DIM, threshold=0.9).collect()
     pairs = {(r.doc_a, r.doc_b) for r in out}
     assert (1, 2) in pairs
     assert all(10 not in p and 11 not in p for p in pairs)

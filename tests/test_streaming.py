@@ -24,7 +24,7 @@ def test_lsh_knn_recall_vs_bruteforce(spark):
     dim = len(emb.select("embedding").first()["embedding"])
     queries = emb.filter(F.col("vec_id") < 10)
     exact = sim_ops.brute_force_knn(queries, emb, k=5)
-    approx = sim_ops.lsh_knn(queries, emb, dim=dim, k=5, n_planes=4, n_tables=8)
+    approx = sim_ops.lsh_knn(queries, emb, dim=dim, k=5)
     exact_pairs = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
     approx_pairs = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
     recall = len(exact_pairs & approx_pairs) / len(exact_pairs)
@@ -150,9 +150,7 @@ def test_embedding_lsh_dedup_recall_vs_exact(spark):
         F.transform(F.col("embedding"), lambda x: x * F.lit(0.5)).alias("embedding"),
     )
     aug = casted.unionByName(twins)
-    approx = sim_ops.lsh_near_dup_pairs(
-        aug, dim=64, threshold=0.95, n_planes=6, n_tables=6,
-    )
+    approx = sim_ops.lsh_near_dup_pairs(aug, dim=64, threshold=0.95)
     approx_pairs = {(r["doc_a"], r["doc_b"]) for r in approx.collect()}
     recall = len(exact_pairs & approx_pairs) / len(exact_pairs)
     assert recall >= 0.9, f"embedding LSH dedup recall collapsed: {recall}"

@@ -47,7 +47,7 @@ BOUNDED = {
 #: knob-gated queries (dedup_components / dedup_canonical /
 #: dedup_embedding_lsh) now RUN their scale-safe configurations as the
 #: certified defaults (MinHash-LSH -> jaccard_verify_pairs edge chain;
-#: n_planes="auto"), so their growth rows are the real plan, no
+#: auto-resolved LSH banding), so their growth rows are the real plan, no
 #: annotation needed.
 KNOBBED = {
     "dedup_ngram_jaccard": (
@@ -171,14 +171,14 @@ def main(paths: list[str]) -> None:
     if knobbed:
         lines.append(
             "**Superlinear by design (exact small-corpus twin of a"
-            " certified scale-safe path, see COVERAGE.md):** "
+            " certified scale-safe path, named in the query's doc):** "
             + ", ".join(f"{n} ({r:.1f}x)" for n, r in knobbed)
         )
         lines.append("")
     if artifacts:
         lines.append(
             "**Measurement artifacts (plan verified linear — harness "
-            "collect() / input-layout effects, see COVERAGE.md):** "
+            "collect() / input-layout effects):** "
             + ", ".join(f"{n} ({r:.1f}x)" for n, r in artifacts)
         )
         lines.append("")

@@ -34,7 +34,7 @@ Round log (full-registry sweeps):
   O(offset) substr, Spark regexp_replace per-match overhead, DuckDB
   list-slice-in-lambda O(n²) in the shingle/span/byte oracles, and
   cooccurrence_pmi's Σ|V_d|² pair join — each fixed to a linear form
-  (COVERAGE.md Round-12); sweep runtime is now bounded (~9 min/SF
+  (round 12); sweep runtime is now bounded (~9 min/SF
   with two outsized docs in every text query, vs the pre-fix sweep
   that never finished).
 - r12, integer-overflow injections added to ``edges`` (near-int64-max
